@@ -26,7 +26,7 @@ object Bench {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
       // post-shuffle coalescing floor: the default 1 MB folds every
       // CPU-dense small shuffle (windows over traces, pair joins) onto
-      // ONE task at local fixture sizes. 64 KB keeps those parallel;
+      // ONE task at local fixture sizes. 256 KB keeps those parallel;
       // at scale partitions sit near the 64 MB advisory target and this
       // floor is never the binding constraint.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
@@ -48,14 +48,23 @@ object Bench {
     val sel = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => filters.exists(q._1.contains))
     val best = scala.collection.mutable.Map.empty[String, Double]
+    // a query that throws in any pass is failed, never timed: the time
+    // to an exception is not the query's time
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     for (pass <- 1 to iters; (name, fn) <- sel) {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val error = try { fn(spark, sfDir).count(); None } catch { case e: Throwable => Some(e) }
       val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] pass$pass $name%-28s $sec%8.2fs")
-      best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
+      error match {
+        case None =>
+          System.err.println(f"[bench] pass$pass $name%-28s $sec%8.2fs")
+          best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
+        case Some(e) =>
+          System.err.println(f"[bench] pass$pass $name%-28s FAILED ${e.toString.take(200)}")
+          failed += name
+      }
     }
-    val results = best.toMap
+    val results = (best -- failed).toMap
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Full per-query detail to stderr for local analysis.
     for ((k, v) <- results.toSeq.sortBy(_._1))
@@ -63,18 +72,25 @@ object Bench {
     // The driver captures only the LAST ~2000 chars of stdout (sbt's own
     // "[success] Total time" trailer included), so the single JSON line must
     // stay well under that or it is truncated and unparseable. Emit rounded
-    // values and pack the queries map slowest-first under a byte budget.
+    // values; the failed list first, then the queries map slowest-first,
+    // both packed under one byte budget (`n_failed` counts them all).
     def r3(v: Double): String = f"$v%.3f"
     val header =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},"sf":"$sfDir","queries":{"""
-    val budget = 1700 - header.length - 2
-    val entries = results.toSeq.sortBy(-_._2).map { case (k, v) => s"\"$k\":${r3(v)}" }
-    val packed = new StringBuilder
-    for (e <- entries if packed.length + e.length + 1 <= budget) {
-      if (packed.nonEmpty) packed.append(',')
-      packed.append(e)
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},""" +
+        s""""n_failed":${failed.size},"sf":"$sfDir","failed":["""
+    var budget = 1700 - header.length - "],\"queries\":{}}".length
+    def pack(entries: Seq[String]): String = {
+      val packed = new StringBuilder
+      for (e <- entries if packed.length + e.length + 1 <= budget) {
+        if (packed.nonEmpty) packed.append(',')
+        packed.append(e)
+      }
+      budget -= packed.length
+      packed.toString
     }
-    val line = header + packed.toString + "}}"
+    val failedList = pack(failed.toSeq.map(k => s"\"$k\""))
+    val timed = pack(results.toSeq.sortBy(-_._2).map { case (k, v) => s"\"$k\":${r3(v)}" })
+    val line = header + failedList + "],\"queries\":{" + timed + "}}"
     // the summary line must be UN-LOSABLE in the driver's ~2 KB stdout
     // tail: emit it before AND after spark.stop() (shutdown logging goes
     // to stderr, but a combined-stream capture would otherwise push a

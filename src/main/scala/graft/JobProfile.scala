@@ -28,7 +28,7 @@ object JobProfile {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
       // post-shuffle coalescing floor: the default 1 MB folds every
       // CPU-dense small shuffle (windows over traces, pair joins) onto
-      // ONE task at local fixture sizes. 64 KB keeps those parallel;
+      // ONE task at local fixture sizes. 256 KB keeps those parallel;
       // at scale partitions sit near the 64 MB advisory target and this
       // floor is never the binding constraint.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",

@@ -11,6 +11,10 @@ import graft.logql.Lowering.LogsTable
   *
   * The mapping is a pure function of the events columns, mirrored 1:1 in
   * the DuckDB oracle SQL (`logsViewSql`).
+  *
+  * The views served routes build on every request (`logsTable`,
+  * `metricsTable`, `logsGen2Df`, `tracesGen2Df`) are built once per data
+  * version of the events table (`Tables.perEventsVersion`).
   */
 object SignalViews {
 
@@ -73,11 +77,11 @@ object SignalViews {
       concat(lit("r"), pmod(col("id"), lit(3))).as("region"))
 
   def metricsTable(s: SparkSession, dir: String): graft.promql.Eval.MetricsTable =
-    graft.promql.Eval.MetricsTable(
+    Tables.perEventsVersion(s, dir, "metricsTable")(graft.promql.Eval.MetricsTable(
       df = metricsDf(s, dir),
       seriesLabels = Seq("service_name"),
       tieBreak = Seq("event_id"),
-      infoLabels = Some(targetInfoDf(s, dir)))
+      infoLabels = Some(targetInfoDf(s, dir))))
 
   /** events → cumulative histogram-bucket series: one row per (event, le)
     * with le ∈ {50,100,150,+Inf} and value<=le — the classic `_bucket`
@@ -139,7 +143,7 @@ object SignalViews {
   /** LogsTable wiring: promoted labels + series identity + total-order
     * tie-break (event_id exists in this view, so plans are deterministic). */
   def logsTable(s: SparkSession, dir: String): LogsTable =
-    LogsTable(
+    Tables.perEventsVersion(s, dir, "logsTable")(LogsTable(
       df = logsDf(s, dir),
       promoted = Map(
         "service_name" -> "service_name",
@@ -150,7 +154,7 @@ object SignalViews {
         "client_ip" -> "client_ip"),
       seriesLabels = Seq("service_name", "severity_text", "event_type"),
       hasAttrMap = false,
-      tieBreak = Seq("event_id"))
+      tieBreak = Seq("event_id")))
 
   // ---- generation-2 logs: map-typed attribute containers -----------------
 
@@ -183,7 +187,8 @@ object SignalViews {
     "env" -> when(pmod(col("user_id"), lit(2)) === 0, "prod").otherwise("dev"))
 
   def logsGen2Df(s: SparkSession, dir: String): DataFrame =
-    logsGen2DfInternal(s, dir, resolutionCols = false)
+    Tables.perEventsVersion(s, dir, "logsGen2Df")(
+      logsGen2DfInternal(s, dir, resolutionCols = false))
 
   private def logsGen2DfInternal(s: SparkSession, dir: String,
       resolutionCols: Boolean): DataFrame = {
@@ -266,14 +271,14 @@ object SignalViews {
     import org.apache.spark.sql.types.LongType
     val rawId = concat(lit("tr-"), col("user_id"), lit("-"),
       expr("(unix_micros(ts_us) div 1000000) div 86400"))
-    Tables.events(s, dir).select(
+    Tables.perEventsVersion(s, dir, "tracesGen2Df")(Tables.events(s, dir).select(
       (unix_micros(col("ts_us")) * 1000).as("timestamp"),
       col("event_id").cast("string").as("span_id"),
       md5(rawId).as("trace_id"),
       col("event_type").as("span_name"),
       concat(lit("svc-"), pmod(col("user_id"), lit(8))).as("service_name"),
       when(col("event_type") === "error", "ERROR").otherwise("OK").as("status_code"),
-      round(col("value") * 1000000).cast(LongType).as("duration_nanos"))
+      round(col("value") * 1000000).cast(LongType).as("duration_nanos")))
   }
 
   val tracesGen2ViewSql: String =

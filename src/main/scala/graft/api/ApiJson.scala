@@ -1,40 +1,75 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Result-envelope shaping: the JSON bodies Grafana consumes (reference:
   * src/router/src/endpoints/logql.rs Loki streams envelope,
   * promql.rs Prometheus matrix envelope, tempo.rs trace search envelope).
   *
-  * The heavy lifting — grouping rows into streams/series and ordering
-  * values — happens DISTRIBUTED (groupBy + sort_array + to_json); the
-  * driver only concatenates per-stream JSON fragments of the final,
-  * already-limited result set. That is the same materialization boundary
-  * the reference router sits on: envelopes are response-sized by
-  * construction (post-limit), never raw-scan-sized.
+  * Boundary: Spark runs the query and a narrow per-row projection that
+  * renders every JSON fragment (`to_json`, `cast(... as string)`), so
+  * the bytes are Spark's own; the driver collects those rows ONCE and
+  * groups, orders and concatenates them. Every row of a streams, matrix,
+  * vector, series, tag-values or profile-types input ends up in the
+  * response body, so a distributed groupBy + sort_array + orderBy would
+  * not shrink what reaches the driver — it would only add AQE query
+  * stages (one job and one codegen compile each) to every request.
+  * Driver-side ordering is Spark's: strings in UTF8String byte order,
+  * nulls first. The exception is [[tempoSearch]], whose aggregate
+  * reduces spans to traces before the limit and stays distributed.
+  * The inputs are response-sized by construction (post-limit or
+  * discovery-capped upstream), never raw-scan-sized.
   */
 object ApiJson {
 
-  /** Loki query_range "streams" envelope from line-query rows
-    * (timestamp Long nanos, label cols…, body). One stream per distinct
-    * label set; values newest-first as [ns-string, line] pairs. */
-  def lokiStreams(df: DataFrame, labelCols: Seq[String]): String = {
-    val streamObj = to_json(map_from_arrays(
+  /** Spark's string order: UTF8String byte order, nulls first. UTF-8
+    * byte order is code point order, which differs from UTF-16
+    * `compareTo` only where a surrogate (a character beyond the BMP)
+    * meets U+E000..U+FFFF: the fixup lifts surrogates above those. */
+  private[api] val utf8Order: Ordering[String] = new Ordering[String] {
+    private def unit(c: Char): Int =
+      if (c >= '\ue000') c - 0x800 else if (c >= '\ud800') c + 0x2000 else c
+    def compare(a: String, b: String): Int =
+      if (a eq b) 0 else if (a == null) -1 else if (b == null) 1 else {
+        val n = math.min(a.length, b.length)
+        var i = 0
+        while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+        if (i < n) unit(a.charAt(i)) - unit(b.charAt(i)) else a.length - b.length
+      }
+  }
+
+  /** the label-set object of a stream or series (`{"k":"v",…}`),
+    * rendered by Spark per row */
+  private def labelObject(labelCols: Seq[String]): Column =
+    to_json(map_from_arrays(
       array(labelCols.map(lit(_)): _*),
       array(labelCols.map(c => col(c).cast("string")): _*)))
-    val entries = df
-      .groupBy(streamObj.as("_stream"))
-      .agg(sort_array(collect_list(struct(
-        (lit(Long.MaxValue) - col("timestamp")).as("_ord"),
-        col("timestamp").cast("string").as("ts"),
-        col("body").as("line"))), asc = true).as("_vs"))
-      .select(col("_stream"),
-        to_json(expr("transform(_vs, v -> array(v.ts, v.line))")).as("_values"))
-      .orderBy(col("_stream"))
+
+  /** rows grouped by their string key (column 0), groups in key order */
+  private def groups(rows: Array[Row]): Seq[(String, Array[Row])] =
+    rows.groupBy(_.getString(0)).toSeq.sortBy(_._1)(utf8Order)
+
+  /** Spark's ascending order of a (long, string) struct held in
+    * columns 1 and 2: nulls first in each */
+  private val byLongThenString: Ordering[Row] =
+    Ordering.by((r: Row) => if (r.isNullAt(1)) None else Some(r.getLong(1)))
+      .orElse(Ordering.by((r: Row) => r.getString(2))(utf8Order))
+
+  /** Loki query_range "streams" envelope from line-query rows
+    * (timestamp Long nanos, label cols…, body). One stream per distinct
+    * label set; values newest-first as [ns-string, line] pairs (equal
+    * timestamps: lines in Spark string order). */
+  def lokiStreams(df: DataFrame, labelCols: Seq[String]): String = {
+    val rows = df.select(
+      labelObject(labelCols).as("_stream"),
+      (lit(Long.MaxValue) - col("timestamp")).as("_ord"),
+      col("body").cast("string").as("_line"),
+      to_json(array(col("timestamp").cast("string"), col("body"))).as("_value"))
       .collect()
-    val streams = entries.map { r =>
-      s"""{"stream":${r.getString(0)},"values":${r.getString(1)}}"""
+    val streams = groups(rows).map { case (stream, vs) =>
+      val values = vs.sorted(byLongThenString).map(_.getString(3))
+      s"""{"stream":$stream,"values":${values.mkString("[", ",", "]")}}"""
     }
     s"""{"status":"success","data":{"resultType":"streams","result":[${streams.mkString(",")}]}}"""
   }
@@ -55,40 +90,34 @@ object ApiJson {
     * (bucket_start, label cols…, value). Values are [sec, "v"] pairs in
     * time order; series ordered by metric label set. */
   def promMatrix(df: DataFrame, labelCols: Seq[String]): String = {
-    val metricObj = to_json(map_from_arrays(
-      array(labelCols.map(lit(_)): _*),
-      array(labelCols.map(c => col(c).cast("string")): _*)))
-    val entries = df
-      .groupBy(metricObj.as("_metric"))
-      .agg(sort_array(collect_list(struct(
-        col("bucket_start").cast("long").as("t"),
-        col("value").cast("string").as("v"))), asc = true).as("_vs"))
-      .select(col("_metric"),
-        to_json(expr("transform(_vs, x -> array(cast(x.t as string), x.v))")).as("_values"))
-      .orderBy(col("_metric"))
+    val t = col("bucket_start").cast("long")
+    val v = col("value").cast("string")
+    val rows = df.select(labelObject(labelCols).as("_metric"), t.as("_t"), v.as("_v"),
+      to_json(array(t.cast("string"), v)).as("_pair"))
       .collect()
-    val series = entries.map { r =>
+    val series = groups(rows).map { case (metric, vs) =>
       // prometheus value pairs are [number, "string"]: strip the quotes
       // the string-array detour added around the timestamp
-      val vals = r.getString(1).replaceAll("""\["(\-?\d+)",""", "[$1,")
-      s"""{"metric":${r.getString(0)},"values":$vals}"""
+      val vals = vs.sorted(byLongThenString).map(_.getString(3)).mkString("[", ",", "]")
+        .replaceAll("""\["(\-?\d+)",""", "[$1,")
+      s"""{"metric":$metric,"values":$vals}"""
     }
     s"""{"status":"success","data":{"resultType":"matrix","result":[${series.mkString(",")}]}}"""
   }
 
   /** Prometheus instant-query "vector" envelope: one sample per series
-    * at the evaluation time (the latest bucket when several arrive). */
+    * at the evaluation time — `max_by(value, bucket_start)` per series:
+    * the latest bucket when several arrive (the last row of a tie),
+    * rows without a bucket ignored, "null" when none has one. */
   def promVector(df: DataFrame, labelCols: Seq[String], timeSec: Long): String = {
-    val metricObj = to_json(map_from_arrays(
-      array(labelCols.map(lit(_)): _*),
-      array(labelCols.map(c => col(c).cast("string")): _*)))
-    val entries = df
-      .groupBy(metricObj.as("_metric"))
-      .agg(max_by(col("value").cast("string"), col("bucket_start")).as("_v"))
-      .orderBy(col("_metric"))
+    val rows = df.select(labelObject(labelCols).as("_metric"),
+      col("bucket_start").cast("long").as("_t"), col("value").cast("string").as("_v"))
       .collect()
-    val series = entries.map { r =>
-      s"""{"metric":${r.getString(0)},"value":[$timeSec,"${r.getString(1)}"]}"""
+    val series = groups(rows).map { case (metric, vs) =>
+      val dated = vs.filterNot(_.isNullAt(1))
+      val v = if (dated.isEmpty) null
+        else dated.reduceLeft((a, b) => if (a.getLong(1) > b.getLong(1)) a else b).getString(2)
+      s"""{"metric":$metric,"value":[$timeSec,"$v"]}"""
     }
     s"""{"status":"success","data":{"resultType":"vector","result":[${series.mkString(",")}]}}"""
   }
@@ -114,12 +143,11 @@ object ApiJson {
     s"""{"traces":[${entries.mkString(",")}]}"""
   }
 
-  /** Tempo tag-values envelope (`/api/search/tag/{tag}/values`): the
-    * distinct-values frame is already tiny (discovery caps apply
-    * upstream); emits `{"tagValues":[…]}`. */
+  /** Tempo tag-values envelope (`/api/search/tag/{tag}/values`) from a
+    * one-column distinct-values frame, already tiny (discovery caps
+    * apply upstream); emits `{"tagValues":[…]}` in value order. */
   def tempoTagValues(df: DataFrame): String = {
-    val vals = df.orderBy(df.columns.map(col): _*).collect()
-      .map(r => jstr(r.getString(0)))
+    val vals = df.collect().map(_.getString(0)).sorted(utf8Order).map(jstr)
     s"""{"tagValues":[${vals.mkString(",")}]}"""
   }
 
@@ -127,7 +155,7 @@ object ApiJson {
     * bounds, from the q147-shaped discovery frame
     * (profile_type, n_samples, min_ts, max_ts, n_services). */
   def profileTypes(df: DataFrame): String = {
-    val rows = df.orderBy(col("profile_type")).collect().map { r =>
+    val rows = df.collect().sortBy(_.getAs[String]("profile_type"))(utf8Order).map { r =>
       s"""{"id":${jstr(r.getString(0))},"samples":${r.getLong(1)},""" +
         s""""minTime":${r.getLong(2) / 1000000L},"maxTime":${r.getLong(3) / 1000000L}}"""
     }
@@ -142,14 +170,11 @@ object ApiJson {
     s"""{"status":"success","data":[${values.map(jstr).mkString(",")}]}"""
 
   /** Loki/Prometheus series envelope: `data` = one label-map object per
-    * distinct series. The distinct-series frame is discovery-capped
-    * upstream; shaping is distributed (to_json per row). */
+    * distinct series, rendered by Spark per row (`to_json`). The
+    * distinct-series frame is discovery-capped upstream. */
   def seriesResponse(df: DataFrame, labelCols: Seq[String]): String = {
-    val rows = df
-      .select(to_json(map_from_arrays(
-        array(labelCols.map(lit(_)): _*),
-        array(labelCols.map(c => col(c).cast("string")): _*))).as("m"))
-      .orderBy(col("m")).collect().map(_.getString(0))
+    val rows = df.select(labelObject(labelCols).as("m"))
+      .collect().map(_.getString(0)).sorted(utf8Order)
     s"""{"status":"success","data":[${rows.mkString(",")}]}"""
   }
 

@@ -653,7 +653,7 @@ object Endpoints {
     if (label != "service_name") throw HttpError(404, s"unknown label: $label")
     val vals = SignalViews.tracesGen2Df(spark, dir)
       .select(col("service_name").as("v")).distinct()
-      .orderBy(col("v")).collect().map(_.getString(0)).toSeq
+      .collect().map(_.getString(0)).sorted(ApiJson.utf8Order).toSeq
     ApiJson.labelsResponse(vals)
   }
 
@@ -674,7 +674,7 @@ object Endpoints {
     if (!spans.columns.contains(tag))
       throw HttpError(404, s"unknown tag: $tag")
     ApiJson.tempoTagValues(spans.select(col(tag).cast("string").as("value"))
-      .filter(col("value").isNotNull).distinct().orderBy(col("value")))
+      .filter(col("value").isNotNull).distinct())
   }
 
   /** GET /api/v2/search/tag/{scoped_tag}/values (reference

@@ -143,6 +143,10 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
   /** bind 127.0.0.1:port (0 = ephemeral) and start serving; returns the
     * bound port. */
   def start(port: Int = 0): Int = {
+    // the JDK server writes headers and body as two segments; without
+    // TCP_NODELAY the body waits out the client's delayed ACK (~40 ms
+    // per response). Read once, when the first server is created.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     // a SMALL pool, not serial dispatch: a live-tail exchange holds its

@@ -19,7 +19,7 @@ object IROps {
   private val NowNs = 1706745600L * 1000000000L
 
   private[graft] def irTable(s: SparkSession, dir: String): IrTable =
-    IrTable(
+    Tables.perEventsVersion(s, dir, "irTable")(IrTable(
       df = Tables.events(s, dir).select(
         (unix_micros(col("ts_us")) * 1000).as("ts"),
         col("event_id"), col("user_id"), col("event_type"),
@@ -28,7 +28,7 @@ object IROps {
       promoted = Map(
         "event_id" -> "event_id", "user_id" -> "user_id",
         "event_type" -> "event_type", "value" -> "value", "props" -> "props"),
-      attrSource = Some("props"))
+      attrSource = Some("props")))
 
   private def q(doc: String): Q = (s, dir) =>
     Lowering.lower(Json.parseDocument(doc, NowNs), irTable(s, dir))

@@ -22,7 +22,7 @@ object ProfileOps {
     * carrying the gen-2 trace_id (Schemas.profiles has trace_id/span_id —
     * the trace↔profile correlation key, reference profile.rs). */
   private def samplesDf(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir).select(
+    Tables.perEventsVersion(s, dir, "profileSamples")(Tables.events(s, dir).select(
       (unix_micros(col("ts_us")) * 1000).as("timestamp"),
       concat(lit("svc-"), pmod(col("user_id"), lit(8))).as("service_name"),
       md5(concat(lit("tr-"), col("user_id"), lit("-"),
@@ -32,7 +32,7 @@ object ProfileOps {
         col("event_type"),
         concat(lit("fn_"), pmod(get_json_object(col("props"), "$.k").cast("long"), lit(4))))
         .as("stack"),
-      lit(1L).as("value"))
+      lit(1L).as("value")))
 
   private val samplesViewSql: String =
     """SELECT epoch_ns(ts) AS timestamp,

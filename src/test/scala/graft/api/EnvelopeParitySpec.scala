@@ -1,0 +1,250 @@
+package graft.api
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The driver-side envelopes against the distributed shaping they
+  * replaced (kept here as a test-local reference): byte-identical bodies
+  * on hostile inputs, and a served request runs no more Spark jobs than
+  * collecting its lowered frame. */
+class EnvelopeParitySpec extends AnyFunSuite {
+
+  private lazy val spark = graft.TestSpark.session
+
+  private val dir = "/root/testdata/sf0.001"
+  private val T0 = 1704067200L
+
+  // ---- reference: the distributed shaping (groupBy + sort_array + orderBy)
+
+  private object Distributed {
+    private def labelObject(labelCols: Seq[String]) =
+      to_json(map_from_arrays(
+        array(labelCols.map(lit(_)): _*),
+        array(labelCols.map(c => col(c).cast("string")): _*)))
+
+    def lokiStreams(df: DataFrame, labelCols: Seq[String]): String = {
+      val entries = df
+        .groupBy(labelObject(labelCols).as("_stream"))
+        .agg(sort_array(collect_list(struct(
+          (lit(Long.MaxValue) - col("timestamp")).as("_ord"),
+          col("timestamp").cast("string").as("ts"),
+          col("body").as("line"))), asc = true).as("_vs"))
+        .select(col("_stream"),
+          to_json(expr("transform(_vs, v -> array(v.ts, v.line))")).as("_values"))
+        .orderBy(col("_stream"))
+        .collect()
+      val streams = entries.map(r => s"""{"stream":${r.getString(0)},"values":${r.getString(1)}}""")
+      s"""{"status":"success","data":{"resultType":"streams","result":[${streams.mkString(",")}]}}"""
+    }
+
+    def promMatrix(df: DataFrame, labelCols: Seq[String]): String = {
+      val entries = df
+        .groupBy(labelObject(labelCols).as("_metric"))
+        .agg(sort_array(collect_list(struct(
+          col("bucket_start").cast("long").as("t"),
+          col("value").cast("string").as("v"))), asc = true).as("_vs"))
+        .select(col("_metric"),
+          to_json(expr("transform(_vs, x -> array(cast(x.t as string), x.v))")).as("_values"))
+        .orderBy(col("_metric"))
+        .collect()
+      val series = entries.map { r =>
+        val vals = r.getString(1).replaceAll("""\["(\-?\d+)",""", "[$1,")
+        s"""{"metric":${r.getString(0)},"values":$vals}"""
+      }
+      s"""{"status":"success","data":{"resultType":"matrix","result":[${series.mkString(",")}]}}"""
+    }
+
+    def promVector(df: DataFrame, labelCols: Seq[String], timeSec: Long): String = {
+      val entries = df
+        .groupBy(labelObject(labelCols).as("_metric"))
+        .agg(max_by(col("value").cast("string"), col("bucket_start")).as("_v"))
+        .orderBy(col("_metric"))
+        .collect()
+      val series = entries.map { r =>
+        s"""{"metric":${r.getString(0)},"value":[$timeSec,"${r.getString(1)}"]}"""
+      }
+      s"""{"status":"success","data":{"resultType":"vector","result":[${series.mkString(",")}]}}"""
+    }
+
+    def seriesResponse(df: DataFrame, labelCols: Seq[String]): String = {
+      val rows = df.select(labelObject(labelCols).as("m"))
+        .orderBy(col("m")).collect().map(_.getString(0))
+      s"""{"status":"success","data":[${rows.mkString(",")}]}"""
+    }
+
+    def tempoTagValues(df: DataFrame): String = {
+      val vals = df.orderBy(df.columns.map(col): _*).collect()
+        .map(r => ApiJson.jstr(r.getString(0)))
+      s"""{"tagValues":[${vals.mkString(",")}]}"""
+    }
+
+    def profileTypes(df: DataFrame): String = {
+      val rows = df.orderBy(col("profile_type")).collect().map { r =>
+        s"""{"id":${ApiJson.jstr(r.getString(0))},"samples":${r.getLong(1)},""" +
+          s""""minTime":${r.getLong(2) / 1000000L},"maxTime":${r.getLong(3) / 1000000L}}"""
+      }
+      s"""{"profileTypes":[${rows.mkString(",")}]}"""
+    }
+  }
+
+  // ---- hostile strings: JSON escapes, control characters, characters
+  // beyond the BMP next to U+E000..U+FFFF (UTF-8 and UTF-16 order differ)
+  private val hostile = Seq(
+    "plain", "q\"uote", "back\\slash", "bs\b", "ff\f", "nl\n", "tab\t", "ctl\u0001\u001f",
+    "emoji\uD83D\uDE00", "pua\uE000", "full\uFF21", "\uFFFD", "\uD83D\uDE00", "\uE000", "",
+    "\u00e9", "z")
+
+  private def frame(schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+
+  private val logSchema = StructType(Seq(
+    StructField("timestamp", LongType), StructField("service_name", StringType),
+    StructField("severity_text", StringType), StructField("body", StringType)))
+
+  private val vecSchema = StructType(Seq(
+    StructField("bucket_start", LongType), StructField("service_name", StringType),
+    StructField("value", DoubleType)))
+
+  private val labels = Seq("service_name", "severity_text")
+
+  test("streams envelope matches the distributed shaping on hostile rows") {
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 400).map { i =>
+      // few timestamps, so many lines tie on time within a stream
+      Row(1000000000L * rnd.nextInt(6),
+        hostile(rnd.nextInt(hostile.size)),
+        if (i % 11 == 0) null else hostile(rnd.nextInt(4)),
+        if (i % 7 == 0) null else hostile(rnd.nextInt(hostile.size)) + (i % 3))
+    }
+    val df = frame(logSchema, rows)
+    assert(ApiJson.lokiStreams(df, labels) == Distributed.lokiStreams(df, labels))
+    assert(ApiJson.lokiStreams(df, Seq("body")) == Distributed.lokiStreams(df, Seq("body")))
+    val empty = frame(logSchema, Nil)
+    assert(ApiJson.lokiStreams(empty, labels) == Distributed.lokiStreams(empty, labels))
+    assert(ApiJson.lokiStreams(empty, labels).endsWith(""""result":[]}}"""))
+  }
+
+  test("matrix and vector envelopes match on hostile labels and non-finite values") {
+    val rnd = new scala.util.Random(11)
+    val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      -0.0, 0.0, 1e-300, 1.5e300, -2.5)
+    val rows = (0 until 300).map { i =>
+      Row(if (i % 13 == 0) null else java.lang.Long.valueOf(60L * rnd.nextInt(5) - 60),
+        if (i % 17 == 0) null else hostile(rnd.nextInt(hostile.size)),
+        if (i % 19 == 0) null else java.lang.Double.valueOf(
+          if (i % 2 == 0) special(rnd.nextInt(special.size)) else rnd.nextInt(100) / 4.0))
+    }
+    val df = frame(vecSchema, rows)
+    val by = Seq("service_name")
+    assert(ApiJson.promMatrix(df, by) == Distributed.promMatrix(df, by))
+    assert(ApiJson.promMatrix(df, Nil) == Distributed.promMatrix(df, Nil))
+    // one row per (series, bucket): max_by never meets a tie
+    val vec = frame(vecSchema, hostile.zipWithIndex.flatMap { case (s, i) =>
+      Seq(Row(0L, s, special(i % special.size)), Row(300L, s, i / 3.0),
+        Row(null, s, 9.0), Row(-300L, s, null))
+    } :+ Row(null, "undated", 1.0))
+    assert(ApiJson.promVector(vec, by, 42L) == Distributed.promVector(vec, by, 42L))
+    val empty = frame(vecSchema, Nil)
+    assert(ApiJson.promMatrix(empty, by) == Distributed.promMatrix(empty, by))
+    assert(ApiJson.promVector(empty, by, 42L) == Distributed.promVector(empty, by, 42L))
+  }
+
+  test("series, tag-values and profile-types envelopes match") {
+    val series = frame(logSchema, hostile.zipWithIndex.map { case (s, i) =>
+      Row(0L, s, if (i % 5 == 0) null else hostile((i * 7) % hostile.size), "b")
+    }).select("service_name", "severity_text").distinct()
+    assert(ApiJson.seriesResponse(series, labels) == Distributed.seriesResponse(series, labels))
+    val tags = frame(StructType(Seq(StructField("value", StringType))), hostile.map(Row(_)))
+    assert(ApiJson.tempoTagValues(tags) == Distributed.tempoTagValues(tags))
+    val types = frame(StructType(Seq(StructField("profile_type", StringType),
+      StructField("n_samples", LongType), StructField("min_ts", LongType),
+      StructField("max_ts", LongType), StructField("n_services", LongType))),
+      hostile.zipWithIndex.map { case (s, i) => Row(s, i.toLong, i * 1000000L, i * 2000000L, 1L) })
+    assert(ApiJson.profileTypes(types) == Distributed.profileTypes(types))
+  }
+
+  test("served envelopes over the signal views match the distributed shaping") {
+    val logs = graft.SignalViews.logsTable(spark, dir)
+    val range = Some((T0 * 1000000000L, (T0 + 86400L * 3) * 1000000000L))
+    val line = graft.logql.Lowering.lowerLineQuery(logs,
+      graft.logql.Parser.parseLogQuery("""{service_name=~"svc-[1-3]"} |= "k""""), 500,
+      newestFirst = true, timeRange = range)
+    assert(ApiJson.lokiStreams(line, labels) == Distributed.lokiStreams(line, labels))
+    val metric = graft.logql.Parser.parse(
+      """sum by (service_name) (count_over_time({severity_text="info"}[1h]))""") match {
+      case graft.logql.Ast.MetricQuery(e) => graft.logql.Lowering.lowerMetric(logs, e, timeRange = range)
+      case other => fail(s"not a metric query: $other")
+    }
+    val ml = metric.columns.toSeq.filterNot(Set("bucket_start", "value"))
+    assert(ApiJson.promMatrix(metric, ml) == Distributed.promMatrix(metric, ml))
+    val v = graft.promql.Eval.evalVector(
+      graft.promql.Parser.parse("""sum by (service_name) (rate(purchase[1h]))"""),
+      graft.SignalViews.metricsTable(spark, dir),
+      graft.promql.Eval.TimeRange(T0, T0 + 86400L * 2, 3600))
+    assert(ApiJson.promMatrix(v.df, v.labels) == Distributed.promMatrix(v.df, v.labels))
+    assert(ApiJson.promVector(v.df, v.labels, T0) == Distributed.promVector(v.df, v.labels, T0))
+  }
+
+  // ---- job guard ----------------------------------------------------------
+
+  /** Spark jobs started by `f`, bracketed by two marker jobs: the
+    * listener bus delivers in order, so once the closing marker is seen
+    * every job between them has been counted. */
+  private def jobsOf(f: => Unit): Int = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(e.jobId -> Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker("guard-open")
+      f
+      marker("guard-close")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      import scala.jdk.CollectionConverters._
+      def ids(name: String) = seen.asScala.collect { case (id, `name`) => id }
+      while (ids("guard-close").isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      val (open, close) = (ids("guard-open").head, ids("guard-close").head)
+      seen.asScala.count { case (id, _) => id > open && id < close }
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a served metric request runs no more jobs than collecting its lowered frame") {
+    val (s, e) = (T0 * 1000000000L, (T0 + 86400L * 2) * 1000000000L)
+    val text = """sum by (service_name) (count_over_time({service_name=~"svc-.*"} |= "k" [1h]))"""
+    val qs = s"query=${java.net.URLEncoder.encode(text, "UTF-8")}&start=$s&end=$e"
+    def served(): Unit = Endpoints.lokiQueryRange(spark, dir, qs, e)
+    def lowered(): Unit = graft.logql.Parser.parse(text) match {
+      case graft.logql.Ast.MetricQuery(m) =>
+        graft.logql.Lowering.lowerMetric(graft.SignalViews.logsTable(spark, dir), m,
+          timeRange = Some((s, e))).collect()
+      case other => fail(s"not a metric query: $other")
+    }
+    served(); lowered() // warm: schema and view builds
+    val (a, b) = (jobsOf(served()), jobsOf(lowered()))
+    assert(a <= b, s"served Loki metric request ran $a jobs, collecting its frame $b")
+  }
+
+  test("a served PromQL range request runs no more jobs than collecting its lowered frame") {
+    val text = "sum by (service_name) (rate(purchase[1h]))"
+    val (s, e) = (T0, T0 + 86400L * 2)
+    val qs = s"query=${java.net.URLEncoder.encode(text, "UTF-8")}&start=$s&end=$e&step=3600"
+    def served(): Unit = Endpoints.promQueryRange(spark, dir, qs)
+    def lowered(): Unit = graft.promql.Eval.evalVector(graft.promql.Parser.parse(text),
+      graft.SignalViews.metricsTable(spark, dir),
+      graft.promql.Eval.TimeRange(s, e + 1, 3600)).df.collect()
+    served(); lowered()
+    val (a, b) = (jobsOf(served()), jobsOf(lowered()))
+    assert(a <= b, s"served PromQL range request ran $a jobs, collecting its frame $b")
+  }
+}

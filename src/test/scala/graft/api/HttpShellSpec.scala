@@ -37,6 +37,18 @@ class HttpShellSpec extends AnyFunSuite {
     assert(r.statusCode() == 200 && r.body() == """{"status":"ok"}""")
   }
 
+  test("a keep-alive round trip does not wait out a delayed ACK") {
+    // headers and body leave as two segments; with Nagle on, the body
+    // waits for the client's delayed ACK (~40 ms) on every response
+    get("/health")
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      assert(get("/health").statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(ms.size / 2) < 20.0, s"median /health round trip ${ms(ms.size / 2)} ms: ${ms.mkString(", ")}")
+  }
+
   test("openapi document lists only routes the shell actually answers") {
     val r = get("/api/v1/openapi.json")
     assert(r.statusCode() == 200)
