@@ -14,7 +14,9 @@ import graft.logql.Lowering.LogsTable
   *
   * The views served routes build on every request (`logsTable`,
   * `metricsTable`, `logsGen2Df`, `tracesGen2Df`) are built once per data
-  * version of the events table (`Tables.perEventsVersion`).
+  * version of the events table (`Tables.perEventsVersion`); a
+  * per-request session builds them unmemoized (`buildLogsGen2Df`,
+  * `buildTracesGen2Df`).
   */
 object SignalViews {
 
@@ -187,8 +189,11 @@ object SignalViews {
     "env" -> when(pmod(col("user_id"), lit(2)) === 0, "prod").otherwise("dev"))
 
   def logsGen2Df(s: SparkSession, dir: String): DataFrame =
-    Tables.perEventsVersion(s, dir, "logsGen2Df")(
-      logsGen2DfInternal(s, dir, resolutionCols = false))
+    Tables.perEventsVersion(s, dir, "logsGen2Df")(buildLogsGen2Df(s, dir))
+
+  /** [[logsGen2Df]] built on every call, for a per-request session */
+  private[graft] def buildLogsGen2Df(s: SparkSession, dir: String): DataFrame =
+    logsGen2DfInternal(s, dir, resolutionCols = false)
 
   private def logsGen2DfInternal(s: SparkSession, dir: String,
       resolutionCols: Boolean): DataFrame = {
@@ -267,18 +272,22 @@ object SignalViews {
     * key), so the stored layout can shard on the first two hex chars —
     * the reference's 256-way `prefix=XX` point-lookup layout
     * (tests-integration/benches/trace_index_scaling.rs:1-10). */
-  def tracesGen2Df(s: SparkSession, dir: String): DataFrame = {
+  def tracesGen2Df(s: SparkSession, dir: String): DataFrame =
+    Tables.perEventsVersion(s, dir, "tracesGen2Df")(buildTracesGen2Df(s, dir))
+
+  /** [[tracesGen2Df]] built on every call, for a per-request session */
+  private[graft] def buildTracesGen2Df(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val rawId = concat(lit("tr-"), col("user_id"), lit("-"),
       expr("(unix_micros(ts_us) div 1000000) div 86400"))
-    Tables.perEventsVersion(s, dir, "tracesGen2Df")(Tables.events(s, dir).select(
+    Tables.events(s, dir).select(
       (unix_micros(col("ts_us")) * 1000).as("timestamp"),
       col("event_id").cast("string").as("span_id"),
       md5(rawId).as("trace_id"),
       col("event_type").as("span_name"),
       concat(lit("svc-"), pmod(col("user_id"), lit(8))).as("service_name"),
       when(col("event_type") === "error", "ERROR").otherwise("OK").as("status_code"),
-      round(col("value") * 1000000).cast(LongType).as("duration_nanos")))
+      round(col("value") * 1000000).cast(LongType).as("duration_nanos"))
   }
 
   val tracesGen2ViewSql: String =

@@ -37,29 +37,20 @@ object Tables {
     // oracle reads the same files as naive timestamps).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     val path = s"$dir/$name.parquet"
-    // keyed by the path's stamp: a path regenerated in-process (proof
-    // runs / tests rewriting fixture dirs) must not read with a stale
-    // schema; the stat is far cheaper than the footer
-    val sch = schemaCache.computeIfAbsent(stamp(path),
+    // keyed by (path, mtime, length) — ADVICE r15: a path regenerated
+    // in-process (proof runs / tests rewriting fixture dirs) must not
+    // read with a stale schema; the stat is far cheaper than the footer
+    val f = new java.io.File(path)
+    val key = s"$path@${f.lastModified}:${f.length}"
+    val sch = schemaCache.computeIfAbsent(key,
       _ => spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
 
-  /** data version of a table path, `path@mtime:length`; a directory
-    * (a Spark-written table) adds the same stamp of each file in it, so
-    * a rewrite shows even when the directory's own mtime repeats. */
-  private def stamp(path: String): String = {
-    val f = new java.io.File(path)
-    val own = s"$path@${f.lastModified}:${f.length}"
-    if (!f.isDirectory) own
-    else (own +: Option(f.listFiles).toSeq.flatten.sortBy(_.getName)
-      .map(c => s"${c.getName}@${c.lastModified}:${c.length}")).mkString("|")
-  }
-
   private final case class ViewKey(view: String, dir: String, session: SparkSession)
 
-  /** built views per (view, dir, session), with the events stamp they
-    * were built at */
+  /** built views per (view, dir, session), with the data version of
+    * `events.parquet` they were built at */
   private val viewMemo = new java.util.concurrent.ConcurrentHashMap[ViewKey, (String, AnyRef)]()
 
   /** a view over `dir`'s events table, built once per data version of
@@ -67,11 +58,13 @@ object Tables {
     * resolution and re-analysis of the view's projections before any
     * job runs. Memoize views only, never `load`/`events`:
     * queries that self-join two `Tables.*` frames through Dataset-bound
-    * column references need distinct expression ids. A miss drops the
-    * entries of stopped sessions and of deleted tables. */
+    * column references need distinct expression ids. Nor call it for a
+    * per-request session: its entries would never be hit again, and
+    * nothing would drop them before the SparkContext stops. A miss
+    * drops the entries of stopped sessions and of deleted tables. */
   private[graft] def perEventsVersion[T <: AnyRef](s: SparkSession, dir: String, view: String)(build: => T): T = {
     val key = ViewKey(view, dir, s)
-    val st = stamp(s"$dir/events.parquet")
+    val st = graft.storage.LocalCache.dataVersion(s"$dir/events.parquet")
     viewMemo.get(key) match {
       case (`st`, v) => v.asInstanceOf[T]
       case _ =>
@@ -82,6 +75,8 @@ object Tables {
         v
     }
   }
+
+  private[graft] def viewMemoSize: Int = viewMemo.size
 
   /** spread a one-split scan across the session's cores before heavy
     * per-row projections (r15; guide §2.5 input skew). The testdata

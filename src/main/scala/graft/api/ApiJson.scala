@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Result-envelope shaping: the JSON bodies Grafana consumes (reference:
   * src/router/src/endpoints/logql.rs Loki streams envelope,
@@ -23,21 +24,9 @@ import org.apache.spark.sql.functions._
   */
 object ApiJson {
 
-  /** Spark's string order: UTF8String byte order, nulls first. UTF-8
-    * byte order is code point order, which differs from UTF-16
-    * `compareTo` only where a surrogate (a character beyond the BMP)
-    * meets U+E000..U+FFFF: the fixup lifts surrogates above those. */
-  private[api] val utf8Order: Ordering[String] = new Ordering[String] {
-    private def unit(c: Char): Int =
-      if (c >= '\ue000') c - 0x800 else if (c >= '\ud800') c + 0x2000 else c
-    def compare(a: String, b: String): Int =
-      if (a eq b) 0 else if (a == null) -1 else if (b == null) 1 else {
-        val n = math.min(a.length, b.length)
-        var i = 0
-        while (i < n && a.charAt(i) == b.charAt(i)) i += 1
-        if (i < n) unit(a.charAt(i)) - unit(b.charAt(i)) else a.length - b.length
-      }
-  }
+  /** Spark's string order: UTF8String byte order, nulls first */
+  private[api] val utf8Order: Ordering[String] =
+    Ordering.Option[UTF8String](_ compareTo _).on(s => Option(s).map(UTF8String.fromString))
 
   /** the label-set object of a stream or series (`{"k":"v",…}`),
     * rendered by Spark per row */

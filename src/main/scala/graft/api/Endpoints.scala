@@ -1161,8 +1161,10 @@ object Endpoints {
         // session: no SQL-on-files, and reject reflective calls after
         // analysis (covers subqueries).
         sess.conf.set("spark.sql.runSQLOnFiles", "false")
-        SignalViews.logsGen2Df(sess, dir).createOrReplaceTempView("logs")
-        SignalViews.tracesGen2Df(sess, dir).createOrReplaceTempView("traces")
+        // unmemoized: the per-version view memo would pin every
+        // per-request session for the life of the SparkContext
+        SignalViews.buildLogsGen2Df(sess, dir).createOrReplaceTempView("logs")
+        SignalViews.buildTracesGen2Df(sess, dir).createOrReplaceTempView("traces")
         SignalViews.metricsGaugeDf(sess, dir)
           .createOrReplaceTempView("metrics_gauge")
         SignalViews.metricsSumDf(sess, dir)

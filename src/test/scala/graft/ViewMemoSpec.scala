@@ -54,4 +54,15 @@ class ViewMemoSpec extends AnyFunSuite {
         Endpoints.lokiQueryRange(spark, fresh, loki, e * 1000000000L)))
     } finally raw.unpersist()
   }
+
+  test("per-request arrow SQL sessions add nothing to the view memo") {
+    // each SQL ticket runs in its own newSession(); memoizing its views
+    // would pin that session for the life of the SparkContext
+    def serve() = Endpoints.arrowTicket(spark, src,
+      "SELECT (SELECT count(*) FROM logs) + (SELECT count(*) FROM traces) AS n")
+    serve()
+    val n = Tables.viewMemoSize
+    (1 to 5).foreach(_ => serve())
+    assert(Tables.viewMemoSize == n)
+  }
 }

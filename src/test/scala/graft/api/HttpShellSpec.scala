@@ -41,12 +41,16 @@ class HttpShellSpec extends AnyFunSuite {
     // headers and body leave as two segments; with Nagle on, the body
     // waits for the client's delayed ACK (~40 ms) on every response
     get("/health")
+    assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
     val ms = (1 to 20).map { _ =>
       val t0 = System.nanoTime()
       assert(get("/health").statusCode() == 200)
       (System.nanoTime() - t0) / 1e6
     }.sorted
-    assert(ms(ms.size / 2) < 20.0, s"median /health round trip ${ms(ms.size / 2)} ms: ${ms.mkString(", ")}")
+    // a quarter of the round trips, not the median: load on the machine
+    // can slow some of them, but with Nagle on none gets under ~40 ms
+    assert(ms(ms.size / 4) < 20.0,
+      s"25th-percentile /health round trip ${ms(ms.size / 4)} ms: ${ms.mkString(", ")}")
   }
 
   test("openapi document lists only routes the shell actually answers") {
