@@ -5,34 +5,31 @@ import org.apache.spark.sql.functions._
 
 import graft.storage.Storage
 
-/** Materialized signal tables: the gen-2 views written once per (sf dir)
-  * through the REAL storage path — hour-partitioned Hive layout, zstd,
-  * bloom filters (reference storage-layout.md:43-57) — then read back, so
-  * queries over them exercise partition pruning and bloom row-group
-  * skipping exactly as a 100 TB deployment would.
+/** Materialized signal tables: the gen-2 views written once per (sf dir,
+  * data version) through the REAL storage path — hour-partitioned Hive
+  * layout, zstd, bloom filters (reference storage-layout.md:43-57) — then
+  * read back, so queries over them exercise partition pruning and bloom
+  * row-group skipping exactly as a 100 TB deployment would.
   *
-  * Write-once semantics: the path cache is keyed by sf dir; Verify/Bench
-  * run queries sequentially in one JVM, so each table materializes once
-  * per run and every later query reads parquet.
+  * Each table is a [[graft.storage.LocalCache.stored]] entry of its sf
+  * dir: it materializes once per data version, and every later query
+  * reads parquet.
   */
 object SignalTables {
 
-  private val cache = scala.collection.concurrent.TrieMap[(String, String), String]()
-
   private def materialize(s: SparkSession, dir: String, table: String,
       df: => DataFrame,
-      partitionCols: Seq[String] = Seq("date_day", "hour")): String =
-    cache.getOrElseUpdate((dir, table), {
-      val base = graft.storage.LocalCache.dir(s"store|$dir|$table")
-      val layout = Storage.TableLayout(base, "tenant0", "default")
+      partitionCols: Seq[String] = Seq("date_day", "hour")): String = {
+    def layout(base: String) = Storage.TableLayout(base, "tenant0", "default")
+    layout(graft.storage.LocalCache.stored(s"store|$table", dir) { base =>
       // one file per partition: repartition by the partition keys so each
       // directory gets a single file — the compacted shape, not a
       // small-files spray
       Storage.append(
         df.repartition(partitionCols.map(col): _*),
-        layout, table, alreadyPartitioned = true, partitionCols = partitionCols)
-      layout.path(table)
-    })
+        layout(base), table, alreadyPartitioned = true, partitionCols = partitionCols)
+    }).path(table)
+  }
 
   /** stored gen-2 logs (full Schemas.logs layout incl. partition cols). */
   def storedLogsPath(s: SparkSession, dir: String): String =
@@ -139,8 +136,8 @@ object SignalTables {
     * writer. Readers must go through SchemaVersions.resolveRead — this is
     * the un-rewritten-history fixture for schema evolution. */
   def storedMixedVersionTracesPath(s: SparkSession, dir: String): String =
-    cache.getOrElseUpdate((dir, "traces_vmix"), {
-      val base = graft.storage.LocalCache.dir(s"store|$dir|traces_vmix") + "/traces_vmix"
+    graft.storage.LocalCache.stored("store|traces_vmix", dir) { d =>
+      val base = s"$d/traces_vmix"
       val dur = floor(col("value") * 1000).cast("long")
       // µs-truncated nanos (unix_micros(ts_us)*1000) — what the DuckDB
       // oracle sees (TESTDATA gotcha)
@@ -161,8 +158,7 @@ object SignalTables {
       graft.schema.SchemaVersions.upgrade(
           ev.filter(col("_day") >= cutDay).drop("_day"), "traces", fromVersion = 1)
         .write.mode("append").parquet(base)
-      base
-    })
+    } + "/traces_vmix"
 
   /** MetricsTable over the stored union. `dayBounds` is the partition-bound
     * mirror of the query time window: a filter on the Hive partition column

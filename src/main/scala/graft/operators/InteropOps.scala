@@ -25,59 +25,55 @@ import graft.storage.{IcebergExport, Snapshots}
 object InteropOps {
   type Q = (SparkSession, String) => DataFrame
 
-  /** export once per (process, sf dir); re-running is idempotent but
-    * re-reads parquet footers, which bench passes need not repeat. The
+  /** the table layout every fixture below commits its tables into. */
+  private def fixtureLayout(base: String) =
+    graft.storage.Storage.TableLayout(base, "tenant0", "default")
+
+  /** the layout of the bucketed indexes built over those fixtures. */
+  private def indexLayout(base: String) =
+    graft.storage.Storage.TableLayout(base, "tenant0", "idx")
+
+  /** exported once per (sf dir, data version): exporting re-reads
+    * parquet footers, which bench passes need not repeat. The
     * table is this query's OWN stored layout (same Storage.append
     * path), not the shared storedLogs fixture — exporting writes a
     * `metadata/` dir under the table root, and a shared fixture's plain
     * root reads must never have to know about it. */
-  private val exported = scala.collection.concurrent.TrieMap[String, String]()
   private def icebergLogsLocation(s: SparkSession, dir: String): String =
-    exported.getOrElseUpdate(dir, {
-      val base = graft.storage.LocalCache.dir(s"iceberg_logs|$dir")
-      val layout = graft.storage.Storage.TableLayout(base, "tenant0", "default")
-      if (Snapshots.current(s, layout, "logs").isEmpty) {
-        graft.storage.Storage.append(
-          graft.storage.Storage.withPartitionCols(
-            graft.SignalViews.logsGen2Df(s, dir))
-            .repartition(org.apache.spark.sql.functions.col("date_day"),
-              org.apache.spark.sql.functions.col("hour")),
-          layout, "logs", alreadyPartitioned = true)
-        Snapshots.commit(s, layout, "logs")
-      }
-      IcebergExport.export(s, layout, "logs")
-      layout.path("logs")
-    })
+    fixtureLayout(graft.storage.LocalCache.stored("iceberg_logs", dir) { base =>
+      graft.storage.Storage.append(
+        graft.storage.Storage.withPartitionCols(
+          graft.SignalViews.logsGen2Df(s, dir))
+          .repartition(col("date_day"), col("hour")),
+        fixtureLayout(base), "logs", alreadyPartitioned = true)
+      Snapshots.commit(s, fixtureLayout(base), "logs")
+      IcebergExport.export(s, fixtureLayout(base), "logs")
+    }).path("logs")
 
   /** two-version stored-logs fixture for q330, built once per
-    * (process, sf dir) through the REAL storage ops: v1 = days ≤ 29
+    * (sf dir, data version) through the REAL storage ops: v1 = days ≤ 29
     * committed; v2 adds the Jan 30 day AND a Jan 10 error-rows backfill
     * (two appends, one commit). */
-  private val diffFixture = scala.collection.concurrent.TrieMap[String, String]()
   private def snapshotDiffFixture(s: SparkSession, dir: String): String =
-    diffFixture.getOrElseUpdate(dir, {
-      val base = graft.storage.LocalCache.dir(s"snapdiff|$dir")
-      val layout = graft.storage.Storage.TableLayout(base, "tenant0", "default")
-      if (Snapshots.current(s, layout, "logs").isEmpty) {
-        val logs = graft.storage.Storage.withPartitionCols(
-          graft.SignalViews.logsGen2Df(s, dir))
-        graft.storage.Storage.append(
-          logs.filter(col("date_day") <= "2024-01-29")
-            .repartition(col("date_day"), col("hour")),
-          layout, "logs", alreadyPartitioned = true)
-        require(Snapshots.commit(s, layout, "logs") == 1)
-        graft.storage.Storage.append(
-          logs.filter(col("date_day") === "2024-01-30" ||
-            (col("date_day") === "2024-01-10" && col("severity_text") === "error"))
-            .repartition(col("date_day"), col("hour")),
-          layout, "logs", alreadyPartitioned = true)
-        require(Snapshots.commit(s, layout, "logs") == 2)
-      }
-      base
-    })
+    graft.storage.LocalCache.stored("snapdiff", dir) { base =>
+      val layout = fixtureLayout(base)
+      val logs = graft.storage.Storage.withPartitionCols(
+        graft.SignalViews.logsGen2Df(s, dir))
+      graft.storage.Storage.append(
+        logs.filter(col("date_day") <= "2024-01-29")
+          .repartition(col("date_day"), col("hour")),
+        layout, "logs", alreadyPartitioned = true)
+      require(Snapshots.commit(s, layout, "logs") == 1)
+      graft.storage.Storage.append(
+        logs.filter(col("date_day") === "2024-01-30" ||
+          (col("date_day") === "2024-01-10" && col("severity_text") === "error"))
+          .repartition(col("date_day"), col("hour")),
+        layout, "logs", alreadyPartitioned = true)
+      require(Snapshots.commit(s, layout, "logs") == 2)
+    }
 
   /** two-commit documents fixture for q370 (VERDICT r10 #1), built once
-    * per (process, sf dir, data version) through the REAL storage ops:
+    * per (sf dir, data version) through the REAL storage ops:
     *   v1 = the base corpus (docs with doc_id % 3 ≠ 0) committed;
     *   v2 = a delta append carrying, by construction, every dedup class:
     *     fresh rows           doc_id % 3 = 0, own text
@@ -87,39 +83,33 @@ object InteropOps {
     * Ingest timestamps are deterministic (fixed epoch + doc_id nanos;
     * the delta lands one day later) — the layout machinery is the real
     * sink, the wall clock is not part of the fixture. */
-  private val deltaFixture = scala.collection.concurrent.TrieMap[String, String]()
   private def dedupDeltaFixture(s: SparkSession, dir: String): String =
-    deltaFixture.getOrElseUpdate(dir, {
-      val base = graft.storage.LocalCache.dir(
-        s"deltadedup|$dir@${graft.storage.LocalCache.dataVersion(dir)}")
-      val layout = graft.storage.Storage.TableLayout(base, "tenant0", "default")
-      if (Snapshots.current(s, layout, "docs").isEmpty) {
-        val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val epoch = 1706745600L * 1000000000L
-        graft.storage.Storage.append(
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-            .withColumn("timestamp", lit(epoch) + col("doc_id")),
-          layout, "docs")
-        require(Snapshots.commit(s, layout, "docs") == 1)
-        val fresh = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-        val dupVsBase = docs
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0 && pmod(col("doc_id"), lit(10)) === 1)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-        val dupIntra = docs
-          .filter(pmod(col("doc_id"), lit(3)) === 0 && pmod(col("doc_id"), lit(5)) === 0)
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
-        val nearVsBase = docs
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0 && pmod(col("doc_id"), lit(10)) === 3)
-          .select((col("doc_id") + 30000000L).as("doc_id"),
-            concat(col("text"), lit(" zulu yankee xray")).as("text"))
-        graft.storage.Storage.append(
-          fresh.unionByName(dupVsBase).unionByName(dupIntra).unionByName(nearVsBase)
-            .withColumn("timestamp", lit(epoch + 86400L * 1000000000L) + col("doc_id")),
-          layout, "docs")
-        require(Snapshots.commit(s, layout, "docs") == 2)
-      }
-      base
-    })
+    graft.storage.LocalCache.stored("deltadedup", dir) { base =>
+      val layout = fixtureLayout(base)
+      val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
+      val epoch = 1706745600L * 1000000000L
+      graft.storage.Storage.append(
+        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
+          .withColumn("timestamp", lit(epoch) + col("doc_id")),
+        layout, "docs")
+      require(Snapshots.commit(s, layout, "docs") == 1)
+      val fresh = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
+      val dupVsBase = docs
+        .filter(pmod(col("doc_id"), lit(3)) =!= 0 && pmod(col("doc_id"), lit(10)) === 1)
+        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
+      val dupIntra = docs
+        .filter(pmod(col("doc_id"), lit(3)) === 0 && pmod(col("doc_id"), lit(5)) === 0)
+        .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
+      val nearVsBase = docs
+        .filter(pmod(col("doc_id"), lit(3)) =!= 0 && pmod(col("doc_id"), lit(10)) === 3)
+        .select((col("doc_id") + 30000000L).as("doc_id"),
+          concat(col("text"), lit(" zulu yankee xray")).as("text"))
+      graft.storage.Storage.append(
+        fresh.unionByName(dupVsBase).unionByName(dupIntra).unionByName(nearVsBase)
+          .withColumn("timestamp", lit(epoch + 86400L * 1000000000L) + col("doc_id")),
+        layout, "docs")
+      require(Snapshots.commit(s, layout, "docs") == 2)
+    }
 
   /** q379's BUCKETED corpus indexes, materialized once per fixture from
     * the v1 snapshot through [[graft.storage.Storage.writeBucketed]]:
@@ -128,41 +118,31 @@ object InteropOps {
     * every row (so probe-time candidate aggregation carries it via
     * first() — no corpus-sized sizes join at probe time, ever). Bucketed
     * writes hash-cluster + sort at INGEST time; a probe then shuffles
-    * only its own (delta) side. Catalog registration is per process
-    * (in-memory catalog) — re-running writeBucketed over an existing
-    * fixture rewrites the same deterministic content. */
-  private val deltaIndexLock = new Object
-  private def ensureDeltaIndex(s: SparkSession, loc: String): (String, String) = {
-    val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "idx")
-    val suffix = Integer.toHexString(loc.hashCode)
-    val ledger = s"hash_ledger_$suffix"
-    val index = s"shingle_idx_$suffix"
-    deltaIndexLock.synchronized {
-      if (!s.catalog.tableExists(s"tenant0_idx_$ledger")) {
-        // an index already on disk re-registers WITHOUT re-derivation —
-        // it may outlive the snapshot it was built from (retention)
-        if (new java.io.File(layout.path(ledger), "_SUCCESS").exists()) {
-          graft.storage.Storage.registerBucketed(
-            s, layout, ledger, "h STRING", "h", 8)
-          graft.storage.Storage.registerBucketed(
-            s, layout, index, "b_id BIGINT, sh STRING, n_b BIGINT", "sh", 8)
-        } else {
-          val base = Snapshots.read(s, graft.storage.Storage.TableLayout(
-            loc, "tenant0", "default"), "docs", Some(1))
-            .select(col("doc_id"), col("text"))
-          val bSh = PipelineOps.deltaShingles(base)
-          val bSize = bSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-          graft.storage.Storage.writeBucketed(
-            base.select(md5(col("text")).as("h")).distinct(),
-            layout, ledger, "h", 8)
-          graft.storage.Storage.writeBucketed(
-            bSh.join(bSize, "doc_id")
-              .select(col("doc_id").as("b_id"), col("sh"), col("n_sh").as("n_b")),
-            layout, index, "sh", 8)
-        }
-      }
+    * only its own (delta) side. Stored once per (fixture, sf dir data
+    * version), so an index outlives the snapshot it was built from
+    * (retention); a session that lacks the catalog tables re-registers
+    * the stored files WITHOUT re-derivation. */
+  private def ensureDeltaIndex(s: SparkSession, dir: String, loc: String)
+      : (String, String) = {
+    def ledger(base: String) = s"hash_ledger_${Integer.toHexString(base.hashCode)}"
+    def index(base: String) = s"shingle_idx_${Integer.toHexString(base.hashCode)}"
+    val base = graft.storage.LocalCache.stored(s"delta_idx|$loc", dir) { base =>
+      val docs = Snapshots.read(s, fixtureLayout(loc), "docs", Some(1))
+        .select(col("doc_id"), col("text"))
+      val bSh = PipelineOps.deltaShingles(docs)
+      val bSize = bSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+      graft.storage.Storage.writeBucketed(
+        docs.select(md5(col("text")).as("h")).distinct(),
+        indexLayout(base), ledger(base), "h", 8)
+      graft.storage.Storage.writeBucketed(
+        bSh.join(bSize, "doc_id")
+          .select(col("doc_id").as("b_id"), col("sh"), col("n_sh").as("n_b")),
+        indexLayout(base), index(base), "sh", 8)
     }
-    (s"tenant0_idx_$ledger", s"tenant0_idx_$index")
+    (graft.storage.Storage.registerBucketed(
+        s, indexLayout(base), ledger(base), "h STRING", "h", 8),
+      graft.storage.Storage.registerBucketed(
+        s, indexLayout(base), index(base), "b_id BIGINT, sh STRING, n_b BIGINT", "sh", 8))
   }
 
   /** q403's STREAM-BUILT twins of [[ensureDeltaIndex]]'s two corpus
@@ -171,42 +151,35 @@ object InteropOps {
     * the stream — hash ledger and shingle index stay in lockstep), then
     * compact. The q370/q379 classification over these stores must be
     * row-identical — batch ≡ stream for the whole delta-dedup probe. */
-  private val streamIdxCache =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private def streamedDeltaIndexes(s: SparkSession, loc: String)
-      : (String, String) =
-    streamIdxCache.getOrElseUpdate(loc, {
-      val base = graft.storage.LocalCache.dir(s"delta_idx_stream|$loc")
-      val marker = new java.io.File(base, "_done")
+  private def streamedDeltaIndexes(s: SparkSession, dir: String, loc: String)
+      : (String, String) = {
+    val base = graft.storage.LocalCache.stored(s"delta_idx_stream|$loc", dir) { base =>
       val hdir = s"$base/hash"; val sdir = s"$base/shingle"
-      if (!marker.exists()) {
-        import org.apache.spark.sql.types._
-        val stage = s"$base/stage"
-        Snapshots.read(s, graft.storage.Storage.TableLayout(
-            loc, "tenant0", "default"), "docs", Some(1))
-          .select(col("doc_id"), col("text"))
-          .repartition(2, pmod(col("doc_id"), lit(2)))
-          .write.mode("overwrite").parquet(stage)
-        val stream = s.readStream
-          .schema(StructType(Seq(StructField("doc_id", LongType),
-            StructField("text", StringType))))
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        // lockstep dual-store feed — crash between the two appends is
-        // covered by the multi-store feed law (LockstepFeed scaladoc /
-        // README law 10): torn window per-store consistent, replay heals
-        val body = graft.streaming.LockstepFeed.body(
-          graft.streaming.LedgerMaintain.maintainBatch(hdir) _,
-          graft.streaming.ShingleMaintain.maintainBatch(sdir) _) _
-        val q = stream.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch(body).start()
-        q.awaitTermination()
-        graft.streaming.LedgerMaintain.compact(s, hdir)
-        graft.streaming.ShingleMaintain.compact(s, sdir)
-        marker.createNewFile()
-      }
-      (hdir, sdir)
-    })
+      import org.apache.spark.sql.types._
+      val stage = s"$base/stage"
+      Snapshots.read(s, fixtureLayout(loc), "docs", Some(1))
+        .select(col("doc_id"), col("text"))
+        .repartition(2, pmod(col("doc_id"), lit(2)))
+        .write.mode("overwrite").parquet(stage)
+      val stream = s.readStream
+        .schema(StructType(Seq(StructField("doc_id", LongType),
+          StructField("text", StringType))))
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+      // lockstep dual-store feed — crash between the two appends is
+      // covered by the multi-store feed law (LockstepFeed scaladoc /
+      // README law 10): torn window per-store consistent, replay heals
+      val body = graft.streaming.LockstepFeed.body(
+        graft.streaming.LedgerMaintain.maintainBatch(hdir) _,
+        graft.streaming.ShingleMaintain.maintainBatch(sdir) _) _
+      val q = stream.writeStream.outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch(body).start()
+      q.awaitTermination()
+      graft.streaming.LedgerMaintain.compact(s, hdir)
+      graft.streaming.ShingleMaintain.compact(s, sdir)
+    }
+    (s"$base/hash", s"$base/shingle")
+  }
 
   /** q389's retired-key sidecars for the bucketed dedup indexes: when
     * retention expires corpus rows, the write-time-clustered indexes
@@ -219,40 +192,32 @@ object InteropOps {
     *   hash_ledger_dead (h)     — hashes whose EVERY holder retired (a
     *                              hash also held by a survivor stays)
     *   shingle_idx_dead (b_id, sh) — the retired docs' index rows.
-    * Re-registration in a fresh session recomputes from the persisted
-    * audit (deterministic), never from the retired rows. */
-  private def ensureRetentionDead(s: SparkSession, loc: String): (String, String) = {
-    val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "idx")
-    val suffix = Integer.toHexString(loc.hashCode)
-    val deadH = s"hash_ledger_dead_$suffix"
-    val deadSh = s"shingle_idx_dead_$suffix"
-    deltaIndexLock.synchronized {
-      if (!s.catalog.tableExists(s"tenant0_idx_$deadH")) {
-        if (new java.io.File(layout.path(deadH), "_SUCCESS").exists()) {
-          graft.storage.Storage.registerBucketed(
-            s, layout, deadH, "h STRING", "h", 8)
-          graft.storage.Storage.registerBucketed(
-            s, layout, deadSh, "b_id BIGINT, sh STRING", "sh", 8)
-        } else {
-          val doomed = s.read.parquet(s"$loc/retired_docs")
-          // survivors = the LIVE table (retention already dropped the
-          // doomed partitions; the audit holds what they contained)
-          val survivors = s.read.parquet(graft.storage.Storage
-              .TableLayout(loc, "tenant0", "default").path("docs"))
-            .select(col("doc_id"), col("text"))
-          graft.storage.Storage.writeBucketed(
-            doomed.select(md5(col("text")).as("h")).distinct()
-              .join(survivors.select(md5(col("text")).as("h")).distinct(),
-                Seq("h"), "left_anti"),
-            layout, deadH, "h", 8)
-          graft.storage.Storage.writeBucketed(
-            PipelineOps.deltaShingles(doomed)
-              .select(col("doc_id").as("b_id"), col("sh")),
-            layout, deadSh, "sh", 8)
-        }
-      }
+    * Stored like [[ensureDeltaIndex]]'s indexes; re-registration in a
+    * fresh session binds the stored files, never the retired rows. */
+  private def ensureRetentionDead(s: SparkSession, dir: String, loc: String)
+      : (String, String) = {
+    def deadH(base: String) = s"hash_ledger_dead_${Integer.toHexString(base.hashCode)}"
+    def deadSh(base: String) = s"shingle_idx_dead_${Integer.toHexString(base.hashCode)}"
+    val base = graft.storage.LocalCache.stored(s"delta_dead|$loc", dir) { base =>
+      val doomed = s.read.parquet(s"$loc/retired_docs")
+      // survivors = the LIVE table (retention already dropped the
+      // doomed partitions; the audit holds what they contained)
+      val survivors = s.read.parquet(fixtureLayout(loc).path("docs"))
+        .select(col("doc_id"), col("text"))
+      graft.storage.Storage.writeBucketed(
+        doomed.select(md5(col("text")).as("h")).distinct()
+          .join(survivors.select(md5(col("text")).as("h")).distinct(),
+            Seq("h"), "left_anti"),
+        indexLayout(base), deadH(base), "h", 8)
+      graft.storage.Storage.writeBucketed(
+        PipelineOps.deltaShingles(doomed)
+          .select(col("doc_id").as("b_id"), col("sh")),
+        indexLayout(base), deadSh(base), "sh", 8)
     }
-    (s"tenant0_idx_$deadH", s"tenant0_idx_$deadSh")
+    (graft.storage.Storage.registerBucketed(
+        s, indexLayout(base), deadH(base), "h STRING", "h", 8),
+      graft.storage.Storage.registerBucketed(
+        s, indexLayout(base), deadSh(base), "b_id BIGINT, sh STRING", "sh", 8))
   }
 
   /** minimal JSON string escaper for the drop shards — the decoded text
@@ -274,7 +239,7 @@ object InteropOps {
 
   /** q388's END-TO-END incremental corpus-drop pipeline — the operation
     * a training-data team runs weekly, composed from the round-11
-    * primitives and executed ONCE per (process, dir, data version):
+    * primitives and executed ONCE per (dir, data version):
     *
     *   commit 1   the base corpus (doc_id % 3 ≠ 0) lands through
     *              `Storage.append` + `Snapshots.commit`; its bucketed
@@ -299,124 +264,118 @@ object InteropOps {
     * maintained index: new docs must be searchable, gated/dropped docs
     * absent — the oracle rebuilds the whole pipeline relationally from
     * raw documents. */
-  private val dropFixture = scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private def corpusDropFixture(s: SparkSession, dir: String): (String, String) =
-    dropFixture.getOrElseUpdate(dir, {
-      val loc = graft.storage.LocalCache.dir(
-        s"corpusdrop|$dir@${graft.storage.LocalCache.dataVersion(dir)}")
-      val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "default")
+  private def corpusDropFixture(s: SparkSession, dir: String): (String, String) = {
+    val loc = graft.storage.LocalCache.stored("corpusdrop", dir) { loc =>
+      val layout = fixtureLayout(loc)
       val idx = s"$loc/bm25_idx"
-      val marker = new java.io.File(loc, "_pipeline_done")
-      if (!marker.exists()) {
-        import s.implicits._
-        val epoch = 1706745600L * 1000000000L
-        val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        // ---- commit 1: the corpus
-        graft.storage.Storage.append(
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-            .withColumn("timestamp", lit(epoch) + col("doc_id")),
-          layout, "docs")
-        require(Snapshots.commit(s, layout, "docs") == 1)
-        val (ledger, index) = ensureDeltaIndex(s, loc)
-        val base = Snapshots.read(s, layout, "docs", Some(1))
-          .select(col("doc_id"), col("text"))
-        graft.streaming.IndexMaintain.maintainBatch(idx)(base, 0L)
-        // ---- the drop: q370's four membership classes, landed as
-        // stored jsonl.gz shards
-        val fresh = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-        val dupVsBase = docs
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0 && pmod(col("doc_id"), lit(10)) === 1)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-        val dupIntra = docs
-          .filter(pmod(col("doc_id"), lit(3)) === 0 && pmod(col("doc_id"), lit(5)) === 0)
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
-        val nearVsBase = docs
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0 && pmod(col("doc_id"), lit(10)) === 3)
-          .select((col("doc_id") + 30000000L).as("doc_id"),
-            concat(col("text"), lit(" zulu yankee xray")).as("text"))
-        // the fifth class: GENUINELY novel texts at ANY replication
-        // factor — the id is baked into the text, so an id-shifted 10×
-        // replica is a new document, not a dup of its source copy. The
-        // `stream` token makes the accepted ones findable by the probe:
-        // both weekly outcomes (all-dup AND new-docs-appended) are
-        // proven at every scale, where the replica-built 10× fixture
-        // previously degenerated to the all-dup outcome alone.
-        val salted = docs
-          .filter(pmod(col("doc_id"), lit(10)) === 4)
-          .select((col("doc_id") + 40000000L).as("doc_id"),
-            concat(lit("fresh stream arrival notice number "),
-              md5(col("doc_id").cast("string").cast("binary")),
-              lit(" batch "), col("doc_id").cast("string")).as("text"))
-        val delta = fresh.unionByName(dupVsBase).unionByName(dupIntra)
-          .unionByName(nearVsBase).unionByName(salted)
-        val shards = delta
-          .withColumn("shard_id", pmod(col("doc_id"), lit(32)))
-          .groupBy(col("shard_id"))
-          .agg(sort_array(collect_list(struct(col("doc_id"), col("text"))))
-            .as("rows"))
-          .as[(Long, Seq[(Long, String)])]
-          .map { case (sid, rows) =>
-            val lines = rows.map { case (did, text) =>
-              val sb = new StringBuilder
-              sb ++= s"""{"id":$did,"text":"${jesc(text)}""""
-              if (did % 7 != 0) sb ++= s""","quality":${(did % 8) * 0.25}"""
-              if (did % 5 == 0) sb ++= ""","extra_field":"future schema""""
-              sb ++= "}"
-              sb.toString
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            val gz = new java.util.zip.GZIPOutputStream(bos)
-            gz.write(lines.mkString("\n").getBytes("UTF-8")); gz.close()
-            (sid, bos.toByteArray)
-          }.toDF("shard_id", "shard")
-        graft.storage.Storage.append(
-          shards.withColumn("timestamp",
-            lit(epoch + 86400L * 1000000000L) + col("shard_id")),
-          layout, "drop_shards")
-        // ---- the pipeline run: decode → gate → dedup → commit 2 → index
-        val recSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("quality",
-            org.apache.spark.sql.types.DoubleType)))
-        val recs = s.read.parquet(layout.path("drop_shards"))
-          .select(col("shard_id"), col("shard"))
-          .as[(Long, Array[Byte])]
-          .map { case (sid, gz) =>
-            val in = new java.util.zip.GZIPInputStream(
-              new java.io.ByteArrayInputStream(gz))
-            (sid, new String(in.readAllBytes(), "UTF-8"))
-          }.toDF("shard_id", "txt")
-          .select(explode(split(col("txt"), "\n")).as("line"))
-          .select(from_json(col("line"), recSchema).as("r"))
-          .select(col("r.id").as("doc_id"), col("r.text").as("text"),
-            col("r.quality").as("quality"))
-        val gated = recs.filter(
-          coalesce(col("quality"), lit(-1.0)) >= 0.5 &&
-            size(split(col("text"), " ")) >= 5)
-        val status = PipelineOps.dedupDeltaFrom(
-          gated.select(col("doc_id"), col("text")),
-          s.table(ledger), s.table(index))
-        val surv = gated
-          .join(status.filter(col("status") === "survivor"), Seq("doc_id"))
-          .select(col("doc_id"), col("text"))
-        graft.storage.Storage.append(
-          surv.withColumn("timestamp",
-            lit(epoch + 86400L * 1000000000L) + col("doc_id")),
-          layout, "docs")
-        require(Snapshots.commit(s, layout, "docs") == 2)
-        graft.streaming.IndexMaintain.maintainBatch(idx)(surv, 1L)
-        // the pipeline's own counters — what the weekly run reports
-        recs.agg(count(lit(1)).as("n_delta"))
-          .crossJoin(gated.agg(count(lit(1)).as("n_gated")))
-          .crossJoin(surv.agg(count(lit(1)).as("n_new_docs")))
-          .write.mode("overwrite").parquet(s"$loc/pipeline_stats")
-        marker.createNewFile()
-      }
-      (loc, idx)
-    })
+      import s.implicits._
+      val epoch = 1706745600L * 1000000000L
+      val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
+      // ---- commit 1: the corpus
+      graft.storage.Storage.append(
+        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
+          .withColumn("timestamp", lit(epoch) + col("doc_id")),
+        layout, "docs")
+      require(Snapshots.commit(s, layout, "docs") == 1)
+      val (ledger, index) = ensureDeltaIndex(s, dir, loc)
+      val base = Snapshots.read(s, layout, "docs", Some(1))
+        .select(col("doc_id"), col("text"))
+      graft.streaming.IndexMaintain.maintainBatch(idx)(base, 0L)
+      // ---- the drop: q370's four membership classes, landed as
+      // stored jsonl.gz shards
+      val fresh = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
+      val dupVsBase = docs
+        .filter(pmod(col("doc_id"), lit(3)) =!= 0 && pmod(col("doc_id"), lit(10)) === 1)
+        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
+      val dupIntra = docs
+        .filter(pmod(col("doc_id"), lit(3)) === 0 && pmod(col("doc_id"), lit(5)) === 0)
+        .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
+      val nearVsBase = docs
+        .filter(pmod(col("doc_id"), lit(3)) =!= 0 && pmod(col("doc_id"), lit(10)) === 3)
+        .select((col("doc_id") + 30000000L).as("doc_id"),
+          concat(col("text"), lit(" zulu yankee xray")).as("text"))
+      // the fifth class: GENUINELY novel texts at ANY replication
+      // factor — the id is baked into the text, so an id-shifted 10×
+      // replica is a new document, not a dup of its source copy. The
+      // `stream` token makes the accepted ones findable by the probe:
+      // both weekly outcomes (all-dup AND new-docs-appended) are
+      // proven at every scale, where the replica-built 10× fixture
+      // previously degenerated to the all-dup outcome alone.
+      val salted = docs
+        .filter(pmod(col("doc_id"), lit(10)) === 4)
+        .select((col("doc_id") + 40000000L).as("doc_id"),
+          concat(lit("fresh stream arrival notice number "),
+            md5(col("doc_id").cast("string").cast("binary")),
+            lit(" batch "), col("doc_id").cast("string")).as("text"))
+      val delta = fresh.unionByName(dupVsBase).unionByName(dupIntra)
+        .unionByName(nearVsBase).unionByName(salted)
+      val shards = delta
+        .withColumn("shard_id", pmod(col("doc_id"), lit(32)))
+        .groupBy(col("shard_id"))
+        .agg(sort_array(collect_list(struct(col("doc_id"), col("text"))))
+          .as("rows"))
+        .as[(Long, Seq[(Long, String)])]
+        .map { case (sid, rows) =>
+          val lines = rows.map { case (did, text) =>
+            val sb = new StringBuilder
+            sb ++= s"""{"id":$did,"text":"${jesc(text)}""""
+            if (did % 7 != 0) sb ++= s""","quality":${(did % 8) * 0.25}"""
+            if (did % 5 == 0) sb ++= ""","extra_field":"future schema""""
+            sb ++= "}"
+            sb.toString
+          }
+          val bos = new java.io.ByteArrayOutputStream()
+          val gz = new java.util.zip.GZIPOutputStream(bos)
+          gz.write(lines.mkString("\n").getBytes("UTF-8")); gz.close()
+          (sid, bos.toByteArray)
+        }.toDF("shard_id", "shard")
+      graft.storage.Storage.append(
+        shards.withColumn("timestamp",
+          lit(epoch + 86400L * 1000000000L) + col("shard_id")),
+        layout, "drop_shards")
+      // ---- the pipeline run: decode → gate → dedup → commit 2 → index
+      val recSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("quality",
+          org.apache.spark.sql.types.DoubleType)))
+      val recs = s.read.parquet(layout.path("drop_shards"))
+        .select(col("shard_id"), col("shard"))
+        .as[(Long, Array[Byte])]
+        .map { case (sid, gz) =>
+          val in = new java.util.zip.GZIPInputStream(
+            new java.io.ByteArrayInputStream(gz))
+          (sid, new String(in.readAllBytes(), "UTF-8"))
+        }.toDF("shard_id", "txt")
+        .select(explode(split(col("txt"), "\n")).as("line"))
+        .select(from_json(col("line"), recSchema).as("r"))
+        .select(col("r.id").as("doc_id"), col("r.text").as("text"),
+          col("r.quality").as("quality"))
+      val gated = recs.filter(
+        coalesce(col("quality"), lit(-1.0)) >= 0.5 &&
+          size(split(col("text"), " ")) >= 5)
+      val status = PipelineOps.dedupDeltaFrom(
+        gated.select(col("doc_id"), col("text")),
+        s.table(ledger), s.table(index))
+      val surv = gated
+        .join(status.filter(col("status") === "survivor"), Seq("doc_id"))
+        .select(col("doc_id"), col("text"))
+      graft.storage.Storage.append(
+        surv.withColumn("timestamp",
+          lit(epoch + 86400L * 1000000000L) + col("doc_id")),
+        layout, "docs")
+      require(Snapshots.commit(s, layout, "docs") == 2)
+      graft.streaming.IndexMaintain.maintainBatch(idx)(surv, 1L)
+      // the pipeline's own counters — what the weekly run reports
+      recs.agg(count(lit(1)).as("n_delta"))
+        .crossJoin(gated.agg(count(lit(1)).as("n_gated")))
+        .crossJoin(surv.agg(count(lit(1)).as("n_new_docs")))
+        .write.mode("overwrite").parquet(s"$loc/pipeline_stats")
+    }
+    (loc, s"$loc/bm25_idx")
+  }
 
   /** q389's fixture: the base corpus lands across two days (even
     * doc_id → 2024-02-01, odd → 2024-02-02) and commits; its bucketed
@@ -424,39 +383,31 @@ object InteropOps {
     * PATH — the job audits the doomed partitions' rows first (the
     * read executes before the drop), derives the dead-key sidecars,
     * and only then deletes the partitions. */
-  private val retFixture = scala.collection.concurrent.TrieMap[String, String]()
   private def retentionIndexFixture(s: SparkSession, dir: String): String =
-    retFixture.getOrElseUpdate(dir, {
-      val loc = graft.storage.LocalCache.dir(
-        s"dropret|$dir@${graft.storage.LocalCache.dataVersion(dir)}")
-      val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "default")
-      val marker = new java.io.File(loc, "_retention_done")
-      if (!marker.exists()) {
-        val epoch = 1706745600L * 1000000000L // 2024-02-01T00:00Z
-        val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        graft.storage.Storage.append(
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-            .withColumn("timestamp", lit(epoch) +
-              pmod(col("doc_id"), lit(2)) * lit(86400L * 1000000000L) +
-              col("doc_id")),
-          layout, "docs")
-        require(Snapshots.commit(s, layout, "docs") == 1)
-        ensureDeltaIndex(s, loc)
-        // the retention job: audit the doomed rows, derive the dead-key
-        // sidecars, THEN drop the partitions
-        s.read.parquet(layout.path("docs"))
-          .filter(col("date_day") < "2024-02-02")
-          .select(col("doc_id"), col("text"))
-          .write.mode("overwrite").parquet(s"$loc/retired_docs")
-        val dropped = graft.storage.Storage.applyRetention(
-          s, layout, "docs", "2024-02-02")
-        require(dropped == Seq("2024-02-01"),
-          s"retention dropped $dropped, expected exactly 2024-02-01")
-        ensureRetentionDead(s, loc)
-        marker.createNewFile()
-      }
-      loc
-    })
+    graft.storage.LocalCache.stored("dropret", dir) { loc =>
+      val layout = fixtureLayout(loc)
+      val epoch = 1706745600L * 1000000000L // 2024-02-01T00:00Z
+      val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
+      graft.storage.Storage.append(
+        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
+          .withColumn("timestamp", lit(epoch) +
+            pmod(col("doc_id"), lit(2)) * lit(86400L * 1000000000L) +
+            col("doc_id")),
+        layout, "docs")
+      require(Snapshots.commit(s, layout, "docs") == 1)
+      ensureDeltaIndex(s, dir, loc)
+      // the retention job: audit the doomed rows, derive the dead-key
+      // sidecars, THEN drop the partitions
+      s.read.parquet(layout.path("docs"))
+        .filter(col("date_day") < "2024-02-02")
+        .select(col("doc_id"), col("text"))
+        .write.mode("overwrite").parquet(s"$loc/retired_docs")
+      val dropped = graft.storage.Storage.applyRetention(
+        s, layout, "docs", "2024-02-02")
+      require(dropped == Seq("2024-02-01"),
+        s"retention dropped $dropped, expected exactly 2024-02-01")
+      ensureRetentionDead(s, dir, loc)
+    }
 
   /** q393's fixture — the NIGHTLY RETENTION SWEEP composed end to end
     * (q388's drop-side twin): documents AND vectors land through the
@@ -471,75 +422,69 @@ object InteropOps {
     * derives the bucketed dead-key sidecars from the audit, and
     * compacts both maintained stores so the tombstones apply
     * physically. */
-  private val sweepFixture = scala.collection.concurrent.TrieMap[String, (String, String, String, String)]()
   private def retentionSweepFixture(s: SparkSession, dir: String)
-      : (String, String, String, String) =
-    sweepFixture.getOrElseUpdate(dir, {
-      val loc = graft.storage.LocalCache.dir(
-        s"retsweep|$dir@${graft.storage.LocalCache.dataVersion(dir)}")
-      val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "default")
+      : (String, String, String, String) = {
+    val loc = graft.storage.LocalCache.stored("retsweep", dir) { loc =>
+      val layout = fixtureLayout(loc)
       val idx = s"$loc/bm25_idx"; val ann = s"$loc/ann_idx"
       val boot = s"$loc/centroids0"
-      val marker = new java.io.File(loc, "_sweep_done")
-      if (!marker.exists()) {
-        val epoch = 1706745600L * 1000000000L // 2024-02-01T00:00Z
-        val dayNs = 86400L * 1000000000L
-        val docs = graft.Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0)
-          .select(col("doc_id"), col("text"))
-        graft.storage.Storage.append(
-          docs.withColumn("timestamp", lit(epoch) +
-            pmod(col("doc_id"), lit(2)) * lit(dayNs) + col("doc_id")),
-          layout, "docs")
-        require(Snapshots.commit(s, layout, "docs") == 1)
-        ensureDeltaIndex(s, loc) // bucketed dedup indexes over commit 1
-        // BM25 maintained as the days arrived
-        graft.streaming.IndexMaintain.maintainBatch(idx)(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0), 0L)
-        graft.streaming.IndexMaintain.maintainBatch(idx)(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1), 1L)
-        // ANN: quantized vectors land + maintain per day against
-        // centroids trained over every arrival (training precedes the
-        // sweep, exactly like q391)
-        val e = graft.Tables.embeddings(s, dir)
-          .select(col("vec_id"), transform(col("embedding"),
-            v => round(v.cast("double") * 1000000).cast("long")).as("vq"))
-          .withColumn("nrm",
-            expr("aggregate(vq, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
-        graft.storage.Storage.append(
-          e.withColumn("timestamp", lit(epoch) +
-            pmod(col("vec_id"), lit(2)) * lit(dayNs) + col("vec_id")),
-          layout, "vecs")
-        PipelineOps.ivfCentroids(e).write.mode("overwrite").parquet(boot)
-        graft.streaming.AnnMaintain.maintainBatch(ann, boot)(
-          e.filter(pmod(col("vec_id"), lit(2)) === 0), 0L)
-        graft.streaming.AnnMaintain.maintainBatch(ann, boot)(
-          e.filter(pmod(col("vec_id"), lit(2)) === 1), 1L)
-        // ---- the sweep: audit → tombstone every index → drop → compact
-        s.read.parquet(layout.path("docs"))
+      val epoch = 1706745600L * 1000000000L // 2024-02-01T00:00Z
+      val dayNs = 86400L * 1000000000L
+      val docs = graft.Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(3)) =!= 0)
+        .select(col("doc_id"), col("text"))
+      graft.storage.Storage.append(
+        docs.withColumn("timestamp", lit(epoch) +
+          pmod(col("doc_id"), lit(2)) * lit(dayNs) + col("doc_id")),
+        layout, "docs")
+      require(Snapshots.commit(s, layout, "docs") == 1)
+      ensureDeltaIndex(s, dir, loc) // bucketed dedup indexes over commit 1
+      // BM25 maintained as the days arrived
+      graft.streaming.IndexMaintain.maintainBatch(idx)(
+        docs.filter(pmod(col("doc_id"), lit(2)) === 0), 0L)
+      graft.streaming.IndexMaintain.maintainBatch(idx)(
+        docs.filter(pmod(col("doc_id"), lit(2)) === 1), 1L)
+      // ANN: quantized vectors land + maintain per day against
+      // centroids trained over every arrival (training precedes the
+      // sweep, exactly like q391)
+      val e = graft.Tables.embeddings(s, dir)
+        .select(col("vec_id"), transform(col("embedding"),
+          v => round(v.cast("double") * 1000000).cast("long")).as("vq"))
+        .withColumn("nrm",
+          expr("aggregate(vq, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
+      graft.storage.Storage.append(
+        e.withColumn("timestamp", lit(epoch) +
+          pmod(col("vec_id"), lit(2)) * lit(dayNs) + col("vec_id")),
+        layout, "vecs")
+      PipelineOps.ivfCentroids(e).write.mode("overwrite").parquet(boot)
+      graft.streaming.AnnMaintain.maintainBatch(ann, boot)(
+        e.filter(pmod(col("vec_id"), lit(2)) === 0), 0L)
+      graft.streaming.AnnMaintain.maintainBatch(ann, boot)(
+        e.filter(pmod(col("vec_id"), lit(2)) === 1), 1L)
+      // ---- the sweep: audit → tombstone every index → drop → compact
+      s.read.parquet(layout.path("docs"))
+        .filter(col("date_day") < "2024-02-02")
+        .select(col("doc_id"), col("text"))
+        .write.mode("overwrite").parquet(s"$loc/retired_docs")
+      graft.streaming.IndexMaintain.deleteDocs(s, idx,
+        s.read.parquet(s"$loc/retired_docs").select(col("doc_id")), 0L)
+      graft.streaming.AnnMaintain.deleteVecs(s, ann,
+        s.read.parquet(layout.path("vecs"))
           .filter(col("date_day") < "2024-02-02")
-          .select(col("doc_id"), col("text"))
-          .write.mode("overwrite").parquet(s"$loc/retired_docs")
-        graft.streaming.IndexMaintain.deleteDocs(s, idx,
-          s.read.parquet(s"$loc/retired_docs").select(col("doc_id")), 0L)
-        graft.streaming.AnnMaintain.deleteVecs(s, ann,
-          s.read.parquet(layout.path("vecs"))
-            .filter(col("date_day") < "2024-02-02")
-            .select(col("vec_id").as("n_id")), 0L)
-        val droppedDocs = graft.storage.Storage.applyRetention(
-          s, layout, "docs", "2024-02-02")
-        val droppedVecs = graft.storage.Storage.applyRetention(
-          s, layout, "vecs", "2024-02-02")
-        require(droppedDocs == Seq("2024-02-01") &&
-          droppedVecs == Seq("2024-02-01"),
-          s"sweep dropped $droppedDocs / $droppedVecs, expected 2024-02-01")
-        ensureRetentionDead(s, loc) // bucketed dead-key sidecars
-        graft.streaming.IndexMaintain.compact(s, idx)
-        graft.streaming.AnnMaintain.compact(s, ann)
-        marker.createNewFile()
-      }
-      (loc, idx, ann, boot)
-    })
+          .select(col("vec_id").as("n_id")), 0L)
+      val droppedDocs = graft.storage.Storage.applyRetention(
+        s, layout, "docs", "2024-02-02")
+      val droppedVecs = graft.storage.Storage.applyRetention(
+        s, layout, "vecs", "2024-02-02")
+      require(droppedDocs == Seq("2024-02-01") &&
+        droppedVecs == Seq("2024-02-01"),
+        s"sweep dropped $droppedDocs / $droppedVecs, expected 2024-02-01")
+      ensureRetentionDead(s, dir, loc) // bucketed dead-key sidecars
+      graft.streaming.IndexMaintain.compact(s, idx)
+      graft.streaming.AnnMaintain.compact(s, ann)
+    }
+    (loc, s"$loc/bm25_idx", s"$loc/ann_idx", s"$loc/centroids0")
+  }
 
   val queries: Map[String, Q] = Map(
     // RETENTION-AWARE BUCKETED-INDEX DELETES (the q385 lifecycle for
@@ -553,8 +498,8 @@ object InteropOps {
     // corpus only.
     "q389_dedup_index_retention" -> ((s, dir) => {
       val loc = retentionIndexFixture(s, dir)
-      val (ledger, index) = ensureDeltaIndex(s, loc)
-      val (deadH, deadSh) = ensureRetentionDead(s, loc)
+      val (ledger, index) = ensureDeltaIndex(s, dir, loc)
+      val (deadH, deadSh) = ensureRetentionDead(s, dir, loc)
       val ledgerLive = s.table(ledger)
         .join(s.table(deadH), Seq("h"), "left_anti")
       val indexLive = s.table(index)
@@ -584,7 +529,7 @@ object InteropOps {
     // indexed duplicate shifts df/stats and hash-mismatches.
     "q388_corpus_drop_pipeline" -> ((s, dir) => {
       val (loc, idx) = corpusDropFixture(s, dir)
-      val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "default")
+      val layout = fixtureLayout(loc)
       val root = layout.path("docs")
       val v1set = Snapshots.files(s, layout, "docs", 1).toSet
       val newFiles = Snapshots.files(s, layout, "docs", 2)
@@ -623,8 +568,8 @@ object InteropOps {
     // 1-row totals the oracle restates relationally.
     "q393_retention_sweep" -> ((s, dir) => {
       val (loc, idx, ann, _) = retentionSweepFixture(s, dir)
-      val (deadH, _) = ensureRetentionDead(s, loc)
-      val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "default")
+      val (deadH, _) = ensureRetentionDead(s, dir, loc)
+      val layout = fixtureLayout(loc)
       val counters = s.read.parquet(layout.path("docs"))
         .agg(count(lit(1)).as("n_surviving"))
         .crossJoin(s.read.parquet(s"$loc/retired_docs")
@@ -645,8 +590,8 @@ object InteropOps {
     // q370's verbatim.
     "q379_dedup_delta_indexed" -> ((s, dir) => {
       val loc = dedupDeltaFixture(s, dir)
-      val (ledger, index) = ensureDeltaIndex(s, loc)
-      val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "default")
+      val (ledger, index) = ensureDeltaIndex(s, dir, loc)
+      val layout = fixtureLayout(loc)
       val root = layout.path("docs")
       val v1set = Snapshots.files(s, layout, "docs", 1).toSet
       val newFiles = Snapshots.files(s, layout, "docs", 2)
@@ -665,8 +610,8 @@ object InteropOps {
     // the always-current twin with the identical answers.
     "q403_dedup_delta_stream_indexed" -> ((s, dir) => {
       val loc = dedupDeltaFixture(s, dir)
-      val (hdir, sdir) = streamedDeltaIndexes(s, loc)
-      val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "default")
+      val (hdir, sdir) = streamedDeltaIndexes(s, dir, loc)
+      val layout = fixtureLayout(loc)
       val root = layout.path("docs")
       val v1set = Snapshots.files(s, layout, "docs", 1).toSet
       val newFiles = Snapshots.files(s, layout, "docs", 2)
@@ -692,7 +637,7 @@ object InteropOps {
     // calculus in SQL.
     "q370_dedup_delta" -> ((s, dir) => {
       val loc = dedupDeltaFixture(s, dir)
-      val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "default")
+      val layout = fixtureLayout(loc)
       val root = layout.path("docs")
       val v1 = Snapshots.files(s, layout, "docs", 1)
       val v1set = v1.toSet
@@ -752,7 +697,7 @@ object InteropOps {
     // diff would surface one loudly.
     "q330_snapshot_diff" -> ((s, dir) => {
       val loc = snapshotDiffFixture(s, dir)
-      val layout = graft.storage.Storage.TableLayout(loc, "tenant0", "default")
+      val layout = fixtureLayout(loc)
       val root = layout.path("logs")
       val v1 = Snapshots.files(s, layout, "logs", 1).toSet
       val v2 = Snapshots.files(s, layout, "logs", 2)

@@ -17,24 +17,6 @@ import graft.multimodal.Multimodal.MediaRow
 object MultimodalOps {
   type Q = (SparkSession, String) => DataFrame
 
-  /** spread a small scan across the session's cores before per-row codec
-    * work — a tiny parquet file is ONE split, and a map with no exchange
-    * below it runs the whole encode/decode pass on a single task (r15;
-    * the stored-media layouts solve this at WRITE time via the derived
-    * file count, in-plan synthesis must spread at READ time; guide §2.5
-    * input skew). Hash on the dense id, not round-robin — a keyless
-    * repartition pays a local sort (SPARK-23207), and the id has far
-    * more distinct values than partitions so the hash spreads evenly. */
-  private[operators] def spread(s: SparkSession, df: DataFrame): DataFrame = {
-    // split-aware (r16, VERDICT #3): a many-split scan (the 100 TB case)
-    // already parallelizes — repartitioning it again would be a pure-
-    // overhead full shuffle, so this no-ops unless the scan has fewer
-    // splits than cores. Partition-count probe is plan metadata, no job.
-    val cores = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= cores) df
-    else df.repartition(cores, col("doc_id"))
-  }
-
   private def mediaDs(s: SparkSession, dir: String) = {
     import s.implicits._
     Tables.documents(s, dir).select(
@@ -102,6 +84,16 @@ object MultimodalOps {
       }
   }
 
+  /** `table` in the media layout of the stored entry `name` of `dir`:
+    * `df` lands once per data version of `dir` through the partitioned
+    * append sink (zstd, sorted, date_day/hour layout). */
+  private[operators] def storedMediaTable(name: String, dir: String, table: String)
+      (df: => DataFrame): String = {
+    def layout(base: String) = graft.storage.Storage.TableLayout(base, "default", "media")
+    layout(graft.storage.LocalCache.stored(name, dir)(base =>
+      graft.storage.Storage.append(df, layout(base), table))).path(table)
+  }
+
   /** the STORED media table: [[realMediaDs]]'s encoded payloads written
     * ONCE per (source dir, data version) through the partitioned append
     * sink ([[graft.storage.Storage.append]]: zstd, sorted, date_day/hour
@@ -113,24 +105,12 @@ object MultimodalOps {
     * a shared fixture root. Ingest timestamps are deterministic (media_id
     * nanos past a fixed epoch) — the layout machinery is the real sink,
     * the wall clock is not part of the fixture. */
-  private val mediaStoreLock = new Object
-  private def storedMediaPath(s: SparkSession, dir: String): String = {
-    val key = "media_store:" + dir + "@" +
-      graft.storage.LocalCache.dataVersion(dir)
-    val base = graft.storage.LocalCache.dir(key)
-    val layout = graft.storage.Storage.TableLayout(base, "default", "media")
-    mediaStoreLock.synchronized {
-      val marker = new java.io.File(base, "_stored")
-      if (!marker.exists()) {
-        val df = realMediaDs(s, dir).toDF()
-          .withColumn("timestamp",
-            lit(1706745600L * 1000000000L) + col("media_id"))
-        graft.storage.Storage.append(df, layout, "media")
-        marker.createNewFile()
-      }
+  private def storedMediaPath(s: SparkSession, dir: String): String =
+    storedMediaTable("media_store", dir, "media") {
+      realMediaDs(s, dir).toDF()
+        .withColumn("timestamp",
+          lit(1706745600L * 1000000000L) + col("media_id"))
     }
-    layout.path("media")
-  }
 
   private def storedMediaDs(s: SparkSession, dir: String) = {
     import s.implicits._
@@ -156,95 +136,83 @@ object MultimodalOps {
     * before any payload reaches a decoder task) and reuse the in-plan
     * queries' oracles verbatim — the storage path (binary footer stats,
     * pushdown, decode from disk) is what's under test. */
-  private val rawStoreLock = new Object
-  private def storedRawPath(s: SparkSession, dir: String): String = {
-    val key = "media_raw_store:" + dir + "@" +
-      graft.storage.LocalCache.dataVersion(dir)
-    val base = graft.storage.LocalCache.dir(key)
-    val layout = graft.storage.Storage.TableLayout(base, "default", "media")
-    rawStoreLock.synchronized {
-      val marker = new java.io.File(base, "_stored")
-      if (!marker.exists()) {
-        import s.implicits._
-        val df = Tables.documents(s, dir)
-          .select(col("doc_id"), col("text"), col("lang"), col("source"))
-          .as[(Long, String, String, String)]
-          .flatMap { case (id, text, lang, source) =>
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[(Long, String, Array[Byte])]
-            if (id % 3 == 1) {
-              // q358's FLAC synthesis, byte-identical
-              val ch = 1 + (id % 2).toInt
-              val n = 600 + (id % 5).toInt * 500
-              def l(i: Int): Int = (i % 50) * 80 - 1960 + ((id + i) % 9).toInt
-              val inter = new Array[Int](n * ch)
-              var i = 0
-              while (i < n) {
-                if (ch == 1) inter(i) = l(i)
-                else { inter(2 * i) = l(i); inter(2 * i + 1) = l(i) + (i % 7) - 3 }
-                i += 1
-              }
-              out += ((id, "flac",
-                graft.multimodal.Flac.encode(inter, 16000, ch, 512)))
-              // q369's MP3 framing, byte-identical
-              val nf = 20 + (id % 10).toInt
-              val frames = (0 until nf).map(f =>
-                (((id + f) % 14).toInt + 1, (id + 3 * f) % 4 == 0))
-              val id3 = s"artist=a$id".getBytes("US-ASCII")
-              out += ((id, "mp3", graft.sources.Mp3Frames.encode(
-                frames, (id % 3).toInt, id3, id3v1 = id % 2 == 0)))
+  private def storedRawPath(s: SparkSession, dir: String): String =
+    storedMediaTable("media_raw_store", dir, "media_raw") {
+      import s.implicits._
+      Tables.documents(s, dir)
+        .select(col("doc_id"), col("text"), col("lang"), col("source"))
+        .as[(Long, String, String, String)]
+        .flatMap { case (id, text, lang, source) =>
+          val out = scala.collection.mutable.ArrayBuffer
+            .empty[(Long, String, Array[Byte])]
+          if (id % 3 == 1) {
+            // q358's FLAC synthesis, byte-identical
+            val ch = 1 + (id % 2).toInt
+            val n = 600 + (id % 5).toInt * 500
+            def l(i: Int): Int = (i % 50) * 80 - 1960 + ((id + i) % 9).toInt
+            val inter = new Array[Int](n * ch)
+            var i = 0
+            while (i < n) {
+              if (ch == 1) inter(i) = l(i)
+              else { inter(2 * i) = l(i); inter(2 * i + 1) = l(i) + (i % 7) - 3 }
+              i += 1
             }
-            if (id % 3 == 0) {
-              // q368's Avro OCF, byte-identical
-              val fields = Seq(graft.sources.AvroOcf.Field("id", "long"),
-                graft.sources.AvroOcf.Field("title", "string"),
-                graft.sources.AvroOcf.Field("score", "double"),
-                graft.sources.AvroOcf.Field("kept", "boolean"))
-              val recs = (0 until 3).map(r => Seq[Any](3 * id + r,
-                s"Doc $id r$r", (id % 7) * 0.25 + r, (id + r) % 2 == 0))
-              val codec = if (id % 2 == 0) "null" else "deflate"
-              out += ((id, "avro",
-                graft.sources.AvroOcf.encode("Doc", fields, recs, codec, 2)))
-              // the q351 waveform family, FLAC-encoded (lossless — the
-              // stored decode reproduces the exact PCM the WAV path sees)
-              val g = id / 9 * 9; val role = (id / 3) % 3
-              val amp = if (role == 1) 3 else 1
-              val samples = Array.tabulate(80) { j =>
-                (amp * (((g * 7 + (g % 101) * j + j * 13 + (j * j) % 17) % 201) - 100) +
-                  (if (role == 2 && j >= 32) (g + j) % 5 - 2 else 0L)).toInt
-              }
-              out += ((id, "flacfp",
-                graft.multimodal.Flac.encode(samples, 8000, 1, 512)))
+            out += ((id, "flac",
+              graft.multimodal.Flac.encode(inter, 16000, ch, 512)))
+            // q369's MP3 framing, byte-identical
+            val nf = 20 + (id % 10).toInt
+            val frames = (0 until nf).map(f =>
+              (((id + f) % 14).toInt + 1, (id + 3 * f) % 4 == 0))
+            val id3 = s"artist=a$id".getBytes("US-ASCII")
+            out += ((id, "mp3", graft.sources.Mp3Frames.encode(
+              frames, (id % 3).toInt, id3, id3v1 = id % 2 == 0)))
+          }
+          if (id % 3 == 0) {
+            // q368's Avro OCF, byte-identical
+            val fields = Seq(graft.sources.AvroOcf.Field("id", "long"),
+              graft.sources.AvroOcf.Field("title", "string"),
+              graft.sources.AvroOcf.Field("score", "double"),
+              graft.sources.AvroOcf.Field("kept", "boolean"))
+            val recs = (0 until 3).map(r => Seq[Any](3 * id + r,
+              s"Doc $id r$r", (id % 7) * 0.25 + r, (id + r) % 2 == 0))
+            val codec = if (id % 2 == 0) "null" else "deflate"
+            out += ((id, "avro",
+              graft.sources.AvroOcf.encode("Doc", fields, recs, codec, 2)))
+            // the q351 waveform family, FLAC-encoded (lossless — the
+            // stored decode reproduces the exact PCM the WAV path sees)
+            val g = id / 9 * 9; val role = (id / 3) % 3
+            val amp = if (role == 1) 3 else 1
+            val samples = Array.tabulate(80) { j =>
+              (amp * (((g * 7 + (g % 101) * j + j * 13 + (j * j) % 17) % 201) - 100) +
+                (if (role == 2 && j >= 32) (g + j) % 5 - 2 else 0L)).toInt
             }
-            // q355's TAR synthesis, byte-identical (every doc)
-            val meta = s"id=$id\nlang=$lang\nsource=$source\n"
-            out += ((id, "tar", graft.sources.Tar.encode(Seq(
-              ("corpus/", Array.emptyByteArray, true),
-              (s"corpus/doc$id.txt", text.getBytes("UTF-8"), false),
-              (s"corpus/doc$id.meta", meta.getBytes("UTF-8"), false)))))
-            // q365's bzip2 MediaWiki dump, byte-identical
-            val t = text.replaceAll("[^ -~]", "").take(300)
-            if (t.nonEmpty) {
-              val esc = t.replace("&", "&amp;").replace("<", "&lt;")
-                .replace(">", "&gt;")
-              val xml =
-                s"""<mediawiki>
-                   |  <page><title>Doc $id</title><ns>0</ns><id>$id</id><revision><id>${2 * id + 1}</id><text bytes="${t.length}">$esc</text></revision></page>
-                   |  <page><title>Talk:Doc $id</title><ns>1</ns><id>${id + 1}</id><revision><id>${2 * id + 2}</id><text>reply &amp; ack $id</text></revision></page>
-                   |</mediawiki>""".stripMargin
-              out += ((id, "wiki",
-                graft.sources.Bzip2.compress(xml.getBytes("UTF-8"), 1)))
-            }
-            out.toSeq
-          }.toDF("media_id", "kind", "bytes")
-          .withColumn("timestamp",
-            lit(1706745600L * 1000000000L) + col("media_id"))
-        graft.storage.Storage.append(df, layout, "media_raw")
-        marker.createNewFile()
-      }
+            out += ((id, "flacfp",
+              graft.multimodal.Flac.encode(samples, 8000, 1, 512)))
+          }
+          // q355's TAR synthesis, byte-identical (every doc)
+          val meta = s"id=$id\nlang=$lang\nsource=$source\n"
+          out += ((id, "tar", graft.sources.Tar.encode(Seq(
+            ("corpus/", Array.emptyByteArray, true),
+            (s"corpus/doc$id.txt", text.getBytes("UTF-8"), false),
+            (s"corpus/doc$id.meta", meta.getBytes("UTF-8"), false)))))
+          // q365's bzip2 MediaWiki dump, byte-identical
+          val t = text.replaceAll("[^ -~]", "").take(300)
+          if (t.nonEmpty) {
+            val esc = t.replace("&", "&amp;").replace("<", "&lt;")
+              .replace(">", "&gt;")
+            val xml =
+              s"""<mediawiki>
+                 |  <page><title>Doc $id</title><ns>0</ns><id>$id</id><revision><id>${2 * id + 1}</id><text bytes="${t.length}">$esc</text></revision></page>
+                 |  <page><title>Talk:Doc $id</title><ns>1</ns><id>${id + 1}</id><revision><id>${2 * id + 2}</id><text>reply &amp; ack $id</text></revision></page>
+                 |</mediawiki>""".stripMargin
+            out += ((id, "wiki",
+              graft.sources.Bzip2.compress(xml.getBytes("UTF-8"), 1)))
+          }
+          out.toSeq
+        }.toDF("media_id", "kind", "bytes")
+        .withColumn("timestamp",
+          lit(1706745600L * 1000000000L) + col("media_id"))
     }
-    layout.path("media_raw")
-  }
 
   /** one stored-scan kind, pruned relationally: only (media_id, bytes)
     * of the requested `kind` ever cross the encoder boundary. */
@@ -334,31 +302,19 @@ object MultimodalOps {
     * inter-frame codec): every lane doc's MPEG-1 bytes land ONCE per
     * (source dir, data version) through the partitioned append sink as
     * a parquet BINARY column; q390 scans them back off disk. */
-  private val videoStoreLock = new Object
-  private def storedVideoPath(s: SparkSession, dir: String): String = {
-    val key = "media_video_store:" + dir + "@" +
-      graft.storage.LocalCache.dataVersion(dir)
-    val base = graft.storage.LocalCache.dir(key)
-    val layout = graft.storage.Storage.TableLayout(base, "default", "media")
-    videoStoreLock.synchronized {
-      val marker = new java.io.File(base, "_stored")
-      if (!marker.exists()) {
-        import s.implicits._
-        val df = Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(3)) === 1)
-          .select(col("doc_id")).as[Long]
-          .map { id =>
-            val (w, h, frames) = videoPlan(id)
-            (id, "mpeg", graft.multimodal.Mpeg1.encode(w, h, frames))
-          }.toDF("media_id", "kind", "bytes")
-          .withColumn("timestamp",
-            lit(1706745600L * 1000000000L) + col("media_id"))
-        graft.storage.Storage.append(df, layout, "media_video")
-        marker.createNewFile()
-      }
+  private def storedVideoPath(s: SparkSession, dir: String): String =
+    storedMediaTable("media_video_store", dir, "media_video") {
+      import s.implicits._
+      Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(3)) === 1)
+        .select(col("doc_id")).as[Long]
+        .map { id =>
+          val (w, h, frames) = videoPlan(id)
+          (id, "mpeg", graft.multimodal.Mpeg1.encode(w, h, frames))
+        }.toDF("media_id", "kind", "bytes")
+        .withColumn("timestamp",
+          lit(1706745600L * 1000000000L) + col("media_id"))
     }
-    layout.path("media_video")
-  }
 
   /** H.264 intra-only encode plan (the q390 group/role structure for the
     * %3==0 cohort): 64×48, 4 IDR frames, per-MB flat luma from a closed
@@ -411,35 +367,23 @@ object MultimodalOps {
     math.max(1L, math.min(nRows, math.max(par, bySize))).toInt
   }
 
-  private val h264StoreLock = new Object
-  private def storedH264Path(s: SparkSession, dir: String): String = {
-    val key = "media_h264_store:" + dir + "@" +
-      graft.storage.LocalCache.dataVersion(dir)
-    val base = graft.storage.LocalCache.dir(key)
-    val layout = graft.storage.Storage.TableLayout(base, "default", "media")
-    h264StoreLock.synchronized {
-      val marker = new java.io.File(base, "_stored")
-      if (!marker.exists()) {
-        import s.implicits._
-        val ids = Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(3)) === 0)
-          .select(col("doc_id"))
-        val k = mediaSplits(s, ids.count())
-        val df = ids.as[Long]
-          .map { id =>
-            val (w, h, frames) = h264Plan(id)
-            (id, "h264", graft.multimodal.H264.encode(w, h, frames))
-          }.toDF("media_id", "kind", "bytes")
-          .withColumn("timestamp",
-            lit(1706745600L * 1000000000L) + col("media_id"))
-          // the stored-bytes scan is the decode's split source
-          .repartition(k, pmod(col("media_id"), lit(k)))
-        graft.storage.Storage.append(df, layout, "media_h264")
-        marker.createNewFile()
-      }
+  private def storedH264Path(s: SparkSession, dir: String): String =
+    storedMediaTable("media_h264_store", dir, "media_h264") {
+      import s.implicits._
+      val ids = Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(3)) === 0)
+        .select(col("doc_id"))
+      val k = mediaSplits(s, ids.count())
+      ids.as[Long]
+        .map { id =>
+          val (w, h, frames) = h264Plan(id)
+          (id, "h264", graft.multimodal.H264.encode(w, h, frames))
+        }.toDF("media_id", "kind", "bytes")
+        .withColumn("timestamp",
+          lit(1706745600L * 1000000000L) + col("media_id"))
+        // the stored-bytes scan is the decode's split source
+        .repartition(k, pmod(col("media_id"), lit(k)))
     }
-    layout.path("media_h264")
-  }
 
   /** H.264 MOTION encode plan (the %3==2 cohort): a MOVING scene — the
     * top MB row static, lower rows sliding right one MB per frame (the
@@ -511,66 +455,42 @@ object MultimodalOps {
     (64, 48, frames)
   }
 
-  private val h264CabacLock = new Object
-  private def storedH264CabacPath(s: SparkSession, dir: String): String = {
-    val key = "media_h264c_store:" + dir + "@" +
-      graft.storage.LocalCache.dataVersion(dir)
-    val base = graft.storage.LocalCache.dir(key)
-    val layout = graft.storage.Storage.TableLayout(base, "default", "media")
-    h264CabacLock.synchronized {
-      val marker = new java.io.File(base, "_stored")
-      if (!marker.exists()) {
-        import s.implicits._
-        val ids = Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(9)) === 0)
-          .select(col("doc_id"))
-        val k = mediaSplits(s, ids.count())
-        val df = ids.as[Long]
-          .map { id =>
-            val (w, h, frames) = h264CabacPlan(id)
-            (id, "h264",
-              graft.multimodal.H264.encode(w, h, frames, cabac = true))
-          }.toDF("media_id", "kind", "bytes")
-          .withColumn("timestamp",
-            lit(1706745600L * 1000000000L) + col("media_id"))
-          // the stored-bytes scan is the decode's split source
-          .repartition(k, pmod(col("media_id"), lit(k)))
-        graft.storage.Storage.append(df, layout, "media_h264c")
-        marker.createNewFile()
-      }
+  private def storedH264CabacPath(s: SparkSession, dir: String): String =
+    storedMediaTable("media_h264c_store", dir, "media_h264c") {
+      import s.implicits._
+      val ids = Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(9)) === 0)
+        .select(col("doc_id"))
+      val k = mediaSplits(s, ids.count())
+      ids.as[Long]
+        .map { id =>
+          val (w, h, frames) = h264CabacPlan(id)
+          (id, "h264",
+            graft.multimodal.H264.encode(w, h, frames, cabac = true))
+        }.toDF("media_id", "kind", "bytes")
+        .withColumn("timestamp",
+          lit(1706745600L * 1000000000L) + col("media_id"))
+        // the stored-bytes scan is the decode's split source
+        .repartition(k, pmod(col("media_id"), lit(k)))
     }
-    layout.path("media_h264c")
-  }
 
-  private val h264MotionLock = new Object
-  private def storedH264MotionPath(s: SparkSession, dir: String): String = {
-    val key = "media_h264p_store:" + dir + "@" +
-      graft.storage.LocalCache.dataVersion(dir)
-    val base = graft.storage.LocalCache.dir(key)
-    val layout = graft.storage.Storage.TableLayout(base, "default", "media")
-    h264MotionLock.synchronized {
-      val marker = new java.io.File(base, "_stored")
-      if (!marker.exists()) {
-        import s.implicits._
-        val ids = Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(3)) === 2)
-          .select(col("doc_id"))
-        val k = mediaSplits(s, ids.count())
-        val df = ids.as[Long]
-          .map { id =>
-            val (w, h, frames) = h264MotionPlan(id)
-            (id, "h264", graft.multimodal.H264.encode(w, h, frames))
-          }.toDF("media_id", "kind", "bytes")
-          .withColumn("timestamp",
-            lit(1706745600L * 1000000000L) + col("media_id"))
-          // the stored-bytes scan is the decode's split source
-          .repartition(k, pmod(col("media_id"), lit(k)))
-        graft.storage.Storage.append(df, layout, "media_h264p")
-        marker.createNewFile()
-      }
+  private def storedH264MotionPath(s: SparkSession, dir: String): String =
+    storedMediaTable("media_h264p_store", dir, "media_h264p") {
+      import s.implicits._
+      val ids = Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(3)) === 2)
+        .select(col("doc_id"))
+      val k = mediaSplits(s, ids.count())
+      ids.as[Long]
+        .map { id =>
+          val (w, h, frames) = h264MotionPlan(id)
+          (id, "h264", graft.multimodal.H264.encode(w, h, frames))
+        }.toDF("media_id", "kind", "bytes")
+        .withColumn("timestamp",
+          lit(1706745600L * 1000000000L) + col("media_id"))
+        // the stored-bytes scan is the decode's split source
+        .repartition(k, pmod(col("media_id"), lit(k)))
     }
-    layout.path("media_h264p")
-  }
 
   /** q400's CROSS-CODEC store: the same flat-MB scene planes land once
     * as MPEG-1 (role 0) and once as H.264 (role 1) — byte streams from
@@ -589,46 +509,34 @@ object MultimodalOps {
       f * (7 + (g % 9))) % 216).toInt
   }
 
-  private val crossCodecLock = new Object
-  private def storedCrossCodecPath(s: SparkSession, dir: String): String = {
-    val key = "media_xcodec_store:" + dir + "@" +
-      graft.storage.LocalCache.dataVersion(dir)
-    val base = graft.storage.LocalCache.dir(key)
-    val layout = graft.storage.Storage.TableLayout(base, "default", "media")
-    crossCodecLock.synchronized {
-      val marker = new java.io.File(base, "_stored")
-      if (!marker.exists()) {
-        import s.implicits._
-        val ids = Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(3)) === 0)
-          .select(col("doc_id"))
-        val k = mediaSplits(s, ids.count())
-        val df = ids.as[Long]
-          .map { id =>
-            val role = (id / 3) % 3
-            val v = crossCodecPlane(id) _
-            if (role == 0) {
-              val frames = (0 until 4).map(f =>
-                graft.multimodal.Mpeg1.FramePlan(intra = true,
-                  (bx, by) => graft.multimodal.Mpeg1.MbIntra(v(f, bx, by))))
-              (id, "mpeg", graft.multimodal.Mpeg1.encode(64, 48, frames))
-            } else {
-              val frames = (0 until 4).map(f =>
-                graft.multimodal.H264.FramePlan((bx, by) =>
-                  graft.multimodal.H264.MbI16(v(f, bx, by))))
-              (id, "h264", graft.multimodal.H264.encode(64, 48, frames))
-            }
-          }.toDF("media_id", "kind", "bytes")
-          .withColumn("timestamp",
-            lit(1706745600L * 1000000000L) + col("media_id"))
-          // the stored-bytes scan is the decode's split source
-          .repartition(k, pmod(col("media_id"), lit(k)))
-        graft.storage.Storage.append(df, layout, "media_xcodec")
-        marker.createNewFile()
-      }
+  private def storedCrossCodecPath(s: SparkSession, dir: String): String =
+    storedMediaTable("media_xcodec_store", dir, "media_xcodec") {
+      import s.implicits._
+      val ids = Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(3)) === 0)
+        .select(col("doc_id"))
+      val k = mediaSplits(s, ids.count())
+      ids.as[Long]
+        .map { id =>
+          val role = (id / 3) % 3
+          val v = crossCodecPlane(id) _
+          if (role == 0) {
+            val frames = (0 until 4).map(f =>
+              graft.multimodal.Mpeg1.FramePlan(intra = true,
+                (bx, by) => graft.multimodal.Mpeg1.MbIntra(v(f, bx, by))))
+            (id, "mpeg", graft.multimodal.Mpeg1.encode(64, 48, frames))
+          } else {
+            val frames = (0 until 4).map(f =>
+              graft.multimodal.H264.FramePlan((bx, by) =>
+                graft.multimodal.H264.MbI16(v(f, bx, by))))
+            (id, "h264", graft.multimodal.H264.encode(64, 48, frames))
+          }
+        }.toDF("media_id", "kind", "bytes")
+        .withColumn("timestamp",
+          lit(1706745600L * 1000000000L) + col("media_id"))
+        // the stored-bytes scan is the decode's split source
+        .repartition(k, pmod(col("media_id"), lit(k)))
     }
-    layout.path("media_xcodec")
-  }
 
   /** codec-dispatching luma decode for the cross-codec fingerprint. */
   private def lumaFrames(kind: String, bytes: Array[Byte])
@@ -661,49 +569,36 @@ object MultimodalOps {
     * via coverage-bounded tombstones, applied physically by compaction.
     * Dedup continuity must hold: content whose MPEG encoding was
     * deleted still dedups through its H.264 twin. */
-  private val xcodecIdxLock = new Object
-  private val xcodecIdxCache =
-    scala.collection.concurrent.TrieMap[String, String]()
-  private def crossCodecIndexStore(s: SparkSession, dir: String): String = {
-    val key = dir + "@" + graft.storage.LocalCache.dataVersion(dir)
-    xcodecIdxCache.getOrElseUpdate(key, {
-      val base = graft.storage.LocalCache.dir(s"xcodec_idx|$key")
-      val marker = new java.io.File(base, "_done")
+  private def crossCodecIndexStore(s: SparkSession, dir: String): String =
+    graft.storage.LocalCache.stored("xcodec_idx", dir) { base =>
       val store = s"$base/store"
-      if (!marker.exists()) xcodecIdxLock.synchronized {
-        if (!marker.exists()) {
-          import s.implicits._
-          val fps = s.read.parquet(storedCrossCodecPath(s, dir))
-            .select(col("media_id"), col("kind"), col("bytes"))
-            .as[(Long, String, Array[Byte])]
-            .map { case (id, kind, bytes) =>
-              val (width, frames) = lumaFrames(kind, bytes)
-              val bands = Array.tabulate(4) { f =>
-                val y = frames(f)
-                var band = 0L
-                for (by <- 0 until 3; c <- 0 until 3) {
-                  val l = y((by * 16 + 8) * width + c * 16 + 8)
-                  val r = y((by * 16 + 8) * width + (c + 1) * 16 + 8)
-                  if (r > l) band |= 1L << (by * 3 + c)
-                }
-                band
-              }
-              (id, bands(0), bands(1), bands(2), bands(3),
-                bands.zipWithIndex.map { case (b, f) => b << (f * 15) }
-                  .reduce(_ | _))
-            }.toDF("doc_id", "b1", "b2", "b3", "b4", "fp")
-          graft.streaming.BandMaintain.maintainBatch(store)(fps, 0L)
-          // the migration: retire every MPEG original (role 0 ⇔ id%9==0)
-          graft.streaming.BandMaintain.deleteDocs(s, store,
-            fps.filter(pmod(col("doc_id"), lit(9)) === 0)
-              .select(col("doc_id")), 0L)
-          graft.streaming.BandMaintain.compact(s, store)
-          marker.createNewFile()
-        }
-      }
-      store
-    })
-  }
+      import s.implicits._
+      val fps = s.read.parquet(storedCrossCodecPath(s, dir))
+        .select(col("media_id"), col("kind"), col("bytes"))
+        .as[(Long, String, Array[Byte])]
+        .map { case (id, kind, bytes) =>
+          val (width, frames) = lumaFrames(kind, bytes)
+          val bands = Array.tabulate(4) { f =>
+            val y = frames(f)
+            var band = 0L
+            for (by <- 0 until 3; c <- 0 until 3) {
+              val l = y((by * 16 + 8) * width + c * 16 + 8)
+              val r = y((by * 16 + 8) * width + (c + 1) * 16 + 8)
+              if (r > l) band |= 1L << (by * 3 + c)
+            }
+            band
+          }
+          (id, bands(0), bands(1), bands(2), bands(3),
+            bands.zipWithIndex.map { case (b, f) => b << (f * 15) }
+              .reduce(_ | _))
+        }.toDF("doc_id", "b1", "b2", "b3", "b4", "fp")
+      graft.streaming.BandMaintain.maintainBatch(store)(fps, 0L)
+      // the migration: retire every MPEG original (role 0 ⇔ id%9==0)
+      graft.streaming.BandMaintain.deleteDocs(s, store,
+        fps.filter(pmod(col("doc_id"), lit(9)) === 0)
+          .select(col("doc_id")), 0L)
+      graft.streaming.BandMaintain.compact(s, store)
+    } + "/store"
 
   /** decode a stored H.264 payload and hash each reconstructed frame's
     * MB grid into a 9-bit gradient-sign band (center-sampled 16×16
@@ -844,33 +739,23 @@ object MultimodalOps {
     * only the delta's rows shuffle. Corpus videos are decoded at index
     * BUILD time only; re-registration in a fresh session binds the
     * on-disk bucketed layout without re-deriving a byte. */
-  private val videoIdxLock = new Object
   private def videoBandIndex(s: SparkSession, dir: String): DataFrame = {
-    val key = "video_band_idx:" + dir + "@" +
-      graft.storage.LocalCache.dataVersion(dir)
-    val base = graft.storage.LocalCache.dir(key)
-    val layout = graft.storage.Storage.TableLayout(base, "tenant0", "vidx")
-    val suffix = Integer.toHexString(base.hashCode & 0x7fffffff)
-    val table = s"video_band_idx_$suffix"
-    videoIdxLock.synchronized {
-      if (!s.catalog.tableExists(s"tenant0_vidx_$table")) {
-        if (new java.io.File(layout.path(table), "_SUCCESS").exists()) {
-          graft.storage.Storage.registerBucketed(s, layout, table,
-            "bk BIGINT, doc_id BIGINT, fp BIGINT", "bk", 8)
-        } else {
-          val fps = videoFingerprints(s, dir)
-          val bands = fps.select(col("doc_id"), col("fp"), explode(array(
-              struct(lit(0L).as("f"), col("b1").as("band")),
-              struct(lit(1L).as("f"), col("b2").as("band")),
-              struct(lit(2L).as("f"), col("b3").as("band")),
-              struct(lit(3L).as("f"), col("b4").as("band")))).as("e"))
-            .select((col("e.f") * 32768 + col("e.band")).as("bk"),
-              col("doc_id"), col("fp"))
-          graft.storage.Storage.writeBucketed(bands, layout, table, "bk", 8)
-        }
-      }
+    def layout(base: String) = graft.storage.Storage.TableLayout(base, "tenant0", "vidx")
+    def table(base: String) =
+      s"video_band_idx_${Integer.toHexString(base.hashCode & 0x7fffffff)}"
+    val base = graft.storage.LocalCache.stored("video_band_idx", dir) { base =>
+      val fps = videoFingerprints(s, dir)
+      val bands = fps.select(col("doc_id"), col("fp"), explode(array(
+          struct(lit(0L).as("f"), col("b1").as("band")),
+          struct(lit(1L).as("f"), col("b2").as("band")),
+          struct(lit(2L).as("f"), col("b3").as("band")),
+          struct(lit(3L).as("f"), col("b4").as("band")))).as("e"))
+        .select((col("e.f") * 32768 + col("e.band")).as("bk"),
+          col("doc_id"), col("fp"))
+      graft.storage.Storage.writeBucketed(bands, layout(base), table(base), "bk", 8)
     }
-    s.table(s"tenant0_vidx_$table")
+    s.table(graft.storage.Storage.registerBucketed(s, layout(base), table(base),
+      "bk BIGINT, doc_id BIGINT, fp BIGINT", "bk", 8))
   }
 
   /** q394's MAINTAINED video band index — the full lifecycle the text
@@ -894,57 +779,42 @@ object MultimodalOps {
     * Probes read (corpus ⟕anti dead) ∪ delta; drop-1 appends are new
     * arrivals, not part of the expired cohort, so they stay live.
     * Returns (corpus, delta, dead) as catalog-bucketed tables. */
-  private val videoLxLock = new Object
   private def videoLifecycleIndex(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val key = "video_idx_lifecycle:" + dir + "@" +
-      graft.storage.LocalCache.dataVersion(dir)
-    val base = graft.storage.LocalCache.dir(key)
-    val layout = graft.storage.Storage.TableLayout(base, "tenant0", "vlx")
-    val suffix = Integer.toHexString(base.hashCode & 0x7fffffff)
-    val corpus = s"video_lx_corpus_$suffix"
-    val delta = s"video_lx_delta_$suffix"
-    val dead = s"video_lx_dead_$suffix"
-    def t(n: String) = s"tenant0_vlx_$n"
-    videoLxLock.synchronized {
-      if (!s.catalog.tableExists(t(corpus))) {
-        // `dead` is written LAST, so its _SUCCESS marks the whole
-        // lifecycle fixture committed — registration never sees a
-        // half-built store
-        if (new java.io.File(layout.path(dead), "_SUCCESS").exists()) {
-          graft.storage.Storage.registerBucketed(s, layout, corpus,
-            "bk BIGINT, doc_id BIGINT, fp BIGINT", "bk", 8)
-          graft.storage.Storage.registerBucketed(s, layout, delta,
-            "bk BIGINT, doc_id BIGINT, fp BIGINT", "bk", 8)
-          graft.storage.Storage.registerBucketed(s, layout, dead,
-            "bk BIGINT, doc_id BIGINT", "bk", 8)
-        } else {
-          // build: decode the corpus ONCE
-          val cbands = bandRows(videoFingerprints(s, dir), "doc_id")
-            .select(col("bk"), col("did").as("doc_id"), col("dfp").as("fp"))
-          graft.storage.Storage.writeBucketed(cbands, layout, corpus, "bk", 8)
-          val idx = s.table(t(corpus))
-          // drop 1: classify against the fresh index; survivors append
-          val d1 = deltaVideoFingerprints(s, dir)
-          val d1bands = bandRows(d1, "did")
-          val matched = d1bands.join(idx, Seq("bk"))
-            .select(col("did"), col("dfp"), col("fp")).distinct()
-            .filter(expr("bit_count(dfp ^ fp)").cast("long") <= 2)
-            .select(col("did")).distinct()
-          val survivors = d1.join(matched, Seq("did"), "left_anti")
-          graft.storage.Storage.writeBucketed(
-            bandRows(survivors, "did")
-              .select(col("bk"), col("did").as("doc_id"), col("dfp").as("fp")),
-            layout, delta, "bk", 8)
-          // retention: the expired cohort's audit rows mask the index
-          graft.storage.Storage.writeBucketed(
-            idx.filter(pmod(expr("doc_id div 9"), lit(3)) === 0)
-              .select(col("bk"), col("doc_id")),
-            layout, dead, "bk", 8)
-        }
-      }
+    def layout(base: String) = graft.storage.Storage.TableLayout(base, "tenant0", "vlx")
+    def table(base: String, part: String) =
+      s"video_lx_${part}_${Integer.toHexString(base.hashCode & 0x7fffffff)}"
+    val base = graft.storage.LocalCache.stored("video_idx_lifecycle", dir) { base =>
+      // build: decode the corpus ONCE
+      val cbands = bandRows(videoFingerprints(s, dir), "doc_id")
+        .select(col("bk"), col("did").as("doc_id"), col("dfp").as("fp"))
+      graft.storage.Storage.writeBucketed(cbands, layout(base),
+        table(base, "corpus"), "bk", 8)
+      val idx = s.table(s"tenant0_vlx_${table(base, "corpus")}")
+      // drop 1: classify against the fresh index; survivors append
+      val d1 = deltaVideoFingerprints(s, dir)
+      val d1bands = bandRows(d1, "did")
+      val matched = d1bands.join(idx, Seq("bk"))
+        .select(col("did"), col("dfp"), col("fp")).distinct()
+        .filter(expr("bit_count(dfp ^ fp)").cast("long") <= 2)
+        .select(col("did")).distinct()
+      val survivors = d1.join(matched, Seq("did"), "left_anti")
+      graft.storage.Storage.writeBucketed(
+        bandRows(survivors, "did")
+          .select(col("bk"), col("did").as("doc_id"), col("dfp").as("fp")),
+        layout(base), table(base, "delta"), "bk", 8)
+      // retention: the expired cohort's audit rows mask the index
+      graft.storage.Storage.writeBucketed(
+        idx.filter(pmod(expr("doc_id div 9"), lit(3)) === 0)
+          .select(col("bk"), col("doc_id")),
+        layout(base), table(base, "dead"), "bk", 8)
     }
-    (s.table(t(corpus)), s.table(t(delta)), s.table(t(dead)))
+    def registered(part: String, ddl: String) =
+      s.table(graft.storage.Storage.registerBucketed(s, layout(base),
+        table(base, part), ddl, "bk", 8))
+    (registered("corpus", "bk BIGINT, doc_id BIGINT, fp BIGINT"),
+      registered("delta", "bk BIGINT, doc_id BIGINT, fp BIGINT"),
+      registered("dead", "bk BIGINT, doc_id BIGINT"))
   }
 
   /** q397's STREAM-BUILT video band index: q394's lifecycle replayed
@@ -956,53 +826,43 @@ object MultimodalOps {
     * applies it physically. The probe must then serve q394's answers
     * verbatim (the oracle IS q394's) — batch ≡ stream for the video
     * index, the law text (q383) and vectors (q384) already carry. */
-  private val videoStreamCache =
-    scala.collection.concurrent.TrieMap[String, String]()
-  private def streamedVideoStore(s: SparkSession, dir: String): String = {
-    val key = dir + "@" + graft.storage.LocalCache.dataVersion(dir)
-    videoStreamCache.getOrElseUpdate(key, {
-      val base = graft.storage.LocalCache.dir(s"video_stream|$key")
-      val marker = new java.io.File(base, "_done")
+  private def streamedVideoStore(s: SparkSession, dir: String): String =
+    graft.storage.LocalCache.stored("video_stream", dir) { base =>
       val store = s"$base/store"
-      if (!marker.exists()) {
-        import org.apache.spark.sql.types._
-        val stage = s"$base/stage"
-        // fingerprint the corpus ONCE (the expensive decode), stage as
-        // two files so the store provably assembles across micro-batches
-        videoFingerprints(s, dir)
-          .repartition(2, pmod(col("doc_id"), lit(2)))
-          .write.mode("overwrite").parquet(stage)
-        val stream = s.readStream
-          .schema(StructType(Seq(StructField("doc_id", LongType),
-            StructField("b1", LongType), StructField("b2", LongType),
-            StructField("b3", LongType), StructField("b4", LongType),
-            StructField("fp", LongType))))
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.BandMaintain.start(stream, store,
-          org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        // drop 1: classify against the MAINTAINED store; survivors
-        // append as the next batch (ids are +50M — never in the corpus)
-        val d1 = deltaVideoFingerprints(s, dir)
-        val matched = bandRows(d1, "did")
-          .join(graft.streaming.BandMaintain.bands(s, store), Seq("bk"))
-          .select(col("did"), col("dfp"), col("fp")).distinct()
-          .filter(expr("bit_count(dfp ^ fp)").cast("long") <= 2)
-          .select(col("did")).distinct()
-        graft.streaming.BandMaintain.maintainBatch(store)(
-          d1.join(matched, Seq("did"), "left_anti")
-            .withColumnRenamed("did", "doc_id"), 2L)
-        // retention: the expired corpus cohort tombstones the index
-        graft.streaming.BandMaintain.deleteDocs(s, store,
-          s.read.parquet(stage)
-            .filter(pmod(expr("doc_id div 9"), lit(3)) === 0)
-            .select(col("doc_id")), 0L)
-        graft.streaming.BandMaintain.compact(s, store)
-        marker.createNewFile()
-      }
-      store
-    })
-  }
+      import org.apache.spark.sql.types._
+      val stage = s"$base/stage"
+      // fingerprint the corpus ONCE (the expensive decode), stage as
+      // two files so the store provably assembles across micro-batches
+      videoFingerprints(s, dir)
+        .repartition(2, pmod(col("doc_id"), lit(2)))
+        .write.mode("overwrite").parquet(stage)
+      val stream = s.readStream
+        .schema(StructType(Seq(StructField("doc_id", LongType),
+          StructField("b1", LongType), StructField("b2", LongType),
+          StructField("b3", LongType), StructField("b4", LongType),
+          StructField("fp", LongType))))
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+      val q = graft.streaming.BandMaintain.start(stream, store,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      // drop 1: classify against the MAINTAINED store; survivors
+      // append as the next batch (ids are +50M — never in the corpus)
+      val d1 = deltaVideoFingerprints(s, dir)
+      val matched = bandRows(d1, "did")
+        .join(graft.streaming.BandMaintain.bands(s, store), Seq("bk"))
+        .select(col("did"), col("dfp"), col("fp")).distinct()
+        .filter(expr("bit_count(dfp ^ fp)").cast("long") <= 2)
+        .select(col("did")).distinct()
+      graft.streaming.BandMaintain.maintainBatch(store)(
+        d1.join(matched, Seq("did"), "left_anti")
+          .withColumnRenamed("did", "doc_id"), 2L)
+      // retention: the expired corpus cohort tombstones the index
+      graft.streaming.BandMaintain.deleteDocs(s, store,
+        s.read.parquet(stage)
+          .filter(pmod(expr("doc_id div 9"), lit(3)) === 0)
+          .select(col("doc_id")), 0L)
+      graft.streaming.BandMaintain.compact(s, store)
+    } + "/store"
 
   /** the DuckDB twin of [[audioFingerprints]] + [[audioFpEdges]]: ends in
     * `fps(doc_id, fp)` and `aedges(a, b, hd)` with a < b, hd ≤ 6. Shared
@@ -1741,9 +1601,9 @@ object MultimodalOps {
     // image container fully decoded (PNG q292, GIF q296).
     "q298_jpeg_pixel_stats" -> ((s, dir) => {
       import s.implicits._
-      spread(s, Tables.documents(s, dir)
+      Tables.spread(s, Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 0)
-        .select(col("doc_id"))).as[Long]
+        .select(col("doc_id")), "doc_id").as[Long]
         .map { id =>
           val w = (id % 24 + 8).toInt; val h = (id % 16 + 8).toInt
           val jpg = graft.multimodal.Jpeg.encodeGray(w, h,
@@ -1766,9 +1626,9 @@ object MultimodalOps {
     // floor((blocks-1)/ri).
     "q348_jpeg_restart" -> ((s, dir) => {
       import s.implicits._
-      spread(s, Tables.documents(s, dir)
+      Tables.spread(s, Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 0)
-        .select(col("doc_id"))).as[Long]
+        .select(col("doc_id")), "doc_id").as[Long]
         .map { id =>
           val w = (id % 24 + 8).toInt; val h = (id % 16 + 8).toInt
           val ri = (id % 5 + 1).toInt
@@ -1802,9 +1662,9 @@ object MultimodalOps {
     // sequential/progressive here).
     "q350_jpeg_arith" -> ((s, dir) => {
       import s.implicits._
-      spread(s, Tables.documents(s, dir)
+      Tables.spread(s, Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 0)
-        .select(col("doc_id"))).as[Long]
+        .select(col("doc_id")), "doc_id").as[Long]
         .map { id =>
           val progressive = ((id / 3) % 2) == 0
           val w = (id % 24 + 8).toInt; val h = (id % 16 + 8).toInt
@@ -2434,9 +2294,9 @@ object MultimodalOps {
     // scan-bound, zero shuffles (the audio-corpus ingest shape).
     "q358_flac_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      spread(s, Tables.documents(s, dir)
+      Tables.spread(s, Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 1)
-        .select(col("doc_id"))).as[Long]
+        .select(col("doc_id")), "doc_id").as[Long]
         .map { id =>
           val ch = 1 + (id % 2).toInt
           val n = 600 + (id % 5).toInt * 500
@@ -2543,7 +2403,7 @@ object MultimodalOps {
       import s.implicits._
       Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 1)
-        .select(col("doc_id")).transform(df => spread(s, df)).as[Long]
+        .select(col("doc_id")).transform(Tables.spread(s, _, "doc_id")).as[Long]
         .map { id =>
           val n = 20 + (id % 10).toInt
           val frames = (0 until n).map(f =>
@@ -2725,9 +2585,9 @@ object MultimodalOps {
     // share VERDICT r7 #3 flagged now decodes instead of rejecting.
     "q324_jpeg_progressive_stats" -> ((s, dir) => {
       import s.implicits._
-      spread(s, Tables.documents(s, dir)
+      Tables.spread(s, Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 0)
-        .select(col("doc_id"))).as[Long]
+        .select(col("doc_id")), "doc_id").as[Long]
         .map { id =>
           val progressive = ((id / 3) % 2) == 0
           val w = (id % 24 + 8).toInt; val h = (id % 16 + 8).toInt
@@ -2753,9 +2613,9 @@ object MultimodalOps {
     // 4:2:0 path (16×16 flat MCUs) and the 4:4:4 path (8×8 tiles).
     "q312_jpeg_color_pixel_stats" -> ((s, dir) => {
       import s.implicits._
-      spread(s, Tables.documents(s, dir)
+      Tables.spread(s, Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 0)
-        .select(col("doc_id"))).as[Long]
+        .select(col("doc_id")), "doc_id").as[Long]
         .map { id =>
           val c420 = ((id / 3) % 2) == 0
           val t = if (c420) 16 else 8
@@ -2784,9 +2644,9 @@ object MultimodalOps {
     // (H.264/VP9) remain out.
     "q302_mjpeg_video_stats" -> ((s, dir) => {
       import s.implicits._
-      spread(s, Tables.documents(s, dir)
+      Tables.spread(s, Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 2)
-        .select(col("doc_id"))).as[Long]
+        .select(col("doc_id")), "doc_id").as[Long]
         .map { id =>
           val w = (id % 16 + 8).toInt; val h = (id % 8 + 8).toInt
           val nf = (id % 4 + 2).toInt

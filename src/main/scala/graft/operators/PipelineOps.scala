@@ -399,30 +399,18 @@ object PipelineOps {
       .distinct()
 
   /** the shingle set is reused many times within q21/q22 (sizes, bands,
-    * both probe sides). Materialize it ONCE per (session, dir) to parquet
-    * and read it back: disk-backed and partition-parallel instead of
+    * both probe sides). Stored ONCE per (dir, data version) as parquet
+    * and read back: disk-backed and partition-parallel instead of
     * executor-memory-pinned — the .cache() it replaces leaked across
     * queries and would evict at 100 TB (VERDICT r1). */
-  private val shingleCache = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** trained-state cache key: (dir, data version). A rewrite of the
-    * underlying tables changes the version, so every stored-state cache
-    * below retrains instead of serving a model fit on vanished data. */
-  private def vdir(dir: String): String =
-    dir + "@" + graft.storage.LocalCache.dataVersion(dir)
-
-  private def docShinglesStored(s: SparkSession, dir: String): DataFrame = {
-    val path = shingleCache.getOrElseUpdate(vdir(dir), {
-      val p = graft.storage.LocalCache.dir(s"shingles|${vdir(dir)}")
+  private def docShinglesStored(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(graft.storage.LocalCache.stored("shingles", dir) { p =>
       // the stored layout is every reader's split source (the media-store
       // lesson): one file = one scan task for every shingle self-join
       // (r15; spread by doc_id so a doc's shingles stay co-located)
       Tables.spread(s, docShingles(s, dir), "doc_id")
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
 
   private val docShinglesSql =
     s"""SELECT DISTINCT doc_id, unnest($shinglesSql) AS sh FROM documents"""
@@ -474,35 +462,25 @@ object PipelineOps {
     * the result 2^rounds times in one plan, and without materialization
     * each reference re-executes the full shingle join (measured 108 s at
     * sf0.1 vs ~2 s materialized). Same pattern as `docShinglesStored`. */
-  private val pairCache = scala.collection.concurrent.TrieMap[String, String]()
-  private[graft] def jaccardEdgesStored(s: SparkSession, dir: String, threshold: Double): DataFrame = {
-    val path = pairCache.getOrElseUpdate(s"${vdir(dir)}|$threshold", {
-      val p = graft.storage.LocalCache.dir(s"dup_edges|${vdir(dir)}|$threshold")
+  private[graft] def jaccardEdgesStored(s: SparkSession, dir: String, threshold: Double): DataFrame =
+    s.read.parquet(graft.storage.LocalCache.stored(s"dup_edges|$threshold", dir) { p =>
       jaccardPairs(s, dir, threshold).select(col("doc_a"), col("doc_b"))
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
 
   /** component LABELS materialized once per (dir, threshold), like the
     * edge set above: q234/q266/q267 all fold the same pointer-jump
     * closure, and the iterative rounds (localCheckpoint actions) are the
     * expensive part — computing them once and reading (id, lab) parquet
     * after is the same plan-reuse discipline, one level up. */
-  private val labelCache = scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def componentLabelsStored(s: SparkSession, dir: String,
-      threshold: Double): DataFrame = {
-    val path = labelCache.getOrElseUpdate(s"${vdir(dir)}|$threshold", {
-      val p = graft.storage.LocalCache.dir(s"dup_labels|${vdir(dir)}|$threshold")
+      threshold: Double): DataFrame =
+    s.read.parquet(graft.storage.LocalCache.stored(s"dup_labels|$threshold", dir) { p =>
       val e0 = jaccardEdgesStored(s, dir, threshold)
       val sym = e0.union(e0.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       pointerJumpComponents(sym, rounds = 4)
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
 
   /** one-Lloyd-round IVF index (q122's construction, shared with the
     * stored build): centroids (c_id, cv, cn) and postings
@@ -559,16 +537,15 @@ object PipelineOps {
     * prunes the cells DYNAMICALLY at runtime (DPP), the same mechanism
     * that keeps a fact-table scan proportional to the dims that survive
     * filtering. */
-  private val annIdxCache = scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private def storedIvfIndex(s: SparkSession, dir: String): (String, String) =
-    annIdxCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"ann_idx|${vdir(dir)}")
+  private def storedIvfIndex(s: SparkSession, dir: String): (String, String) = {
+    val base = graft.storage.LocalCache.stored("ann_idx", dir) { base =>
       val (cents, assigned) = ivfIndex(embArr(s, dir))
       cents.write.mode("overwrite").parquet(s"$base/centroids")
       assigned.write.mode("overwrite").partitionBy("cell")
         .parquet(s"$base/postings")
-      (s"$base/centroids", s"$base/postings")
-    })
+    }
+    (s"$base/centroids", s"$base/postings")
+  }
 
   /** q380's incremental index lifecycle, materialized once per (dir,
     * data version): the IVF index is BUILT over the base vectors only
@@ -578,10 +555,8 @@ object PipelineOps {
     * own cell-partitioned dir. The ANN twin of q370's delta dedup: when
     * new data arrives at 100 TB, the index absorbs it without touching
     * the corpus. */
-  private val annDeltaCache = scala.collection.concurrent.TrieMap[String, (String, String, String)]()
-  private def storedIvfDelta(s: SparkSession, dir: String): (String, String, String) =
-    annDeltaCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"ann_idx_delta|${vdir(dir)}")
+  private def storedIvfDelta(s: SparkSession, dir: String): (String, String, String) = {
+    val base = graft.storage.LocalCache.stored("ann_idx_delta", dir) { base =>
       val e = embArr(s, dir)
       val (cents, basePost) = ivfIndex(e.filter(pmod(col("vec_id"), lit(5)) =!= 0))
       cents.write.mode("overwrite").parquet(s"$base/centroids")
@@ -595,8 +570,9 @@ object PipelineOps {
           col("vq").as("nv"), col("nrm").as("nn"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$base/postings_delta")
-      (s"$base/centroids", s"$base/postings", s"$base/postings_delta")
-    })
+    }
+    (s"$base/centroids", s"$base/postings", s"$base/postings_delta")
+  }
 
   /** q381's incremental LEXICAL index lifecycle: full-vocabulary
     * postings (tok, doc_id, tf, dl) and corpus stats (n_docs, tot_tok)
@@ -606,10 +582,8 @@ object PipelineOps {
     * two-row stats add and a postings union, never a rebuild. Postings
     * sort by `tok` inside each file so a probe's IN-list prunes row
     * groups via min/max stats before any row decodes. */
-  private val bm25Cache = scala.collection.concurrent.TrieMap[String, String]()
   private def storedBm25Index(s: SparkSession, dir: String): String =
-    bm25Cache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"bm25_idx|${vdir(dir)}")
+    graft.storage.LocalCache.stored("bm25_idx", dir) { base =>
       def half(delta: Boolean) = {
         val docs = Tables.documents(s, dir)
           .filter(if (delta) pmod(col("doc_id"), lit(4)) === 0
@@ -627,8 +601,7 @@ object PipelineOps {
       }
       half(delta = false)
       half(delta = true)
-      base
-    })
+    }
 
   /** q385's retention-delete lifecycle: the documents land through the
     * REAL storage path with deterministic timestamps splitting them
@@ -641,78 +614,64 @@ object PipelineOps {
     * compaction physically purges the dead postings. Ranking afterwards
     * must equal a from-scratch build over the SURVIVING table — the
     * q381 append≡rebuild law extended to deletes. */
-  private val bm25TombCache = scala.collection.concurrent.TrieMap[String, String]()
   private def storedBm25Retention(s: SparkSession, dir: String): String =
-    bm25TombCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"bm25_tomb|${vdir(dir)}")
-      val marker = new java.io.File(base, "_done")
+    graft.storage.LocalCache.stored("bm25_tomb", dir) { base =>
       val idx = s"$base/index"
-      if (!marker.exists()) {
-        val layout = graft.storage.Storage.TableLayout(
-          s"$base/store", "tenant0", "default")
-        val epoch = 1706745600L * 1000000000L // 2024-02-01T00:00Z
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-          .withColumn("timestamp", lit(epoch) +
-            pmod(col("doc_id"), lit(2)) * lit(86400L * 1000000000L) +
-            col("doc_id"))
-        graft.storage.Storage.append(docs, layout, "docs")
-        // maintain the index as the days arrived (one batch per day)
-        graft.streaming.IndexMaintain.maintainBatch(idx)(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-            .select(col("doc_id"), col("text")), 0L)
-        graft.streaming.IndexMaintain.maintainBatch(idx)(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-            .select(col("doc_id"), col("text")), 1L)
-        // REAL retention: the doomed partitions name their doc_ids (read
-        // executes inside deleteDocs, before the physical drop)
-        val doomed = s.read.parquet(layout.path("docs"))
-          .filter(col("date_day") < "2024-02-02").select(col("doc_id"))
-        graft.streaming.IndexMaintain.deleteDocs(s, idx, doomed, 0L)
-        val dropped = graft.storage.Storage.applyRetention(
-          s, layout, "docs", "2024-02-02")
-        require(dropped == Seq("2024-02-01"),
-          s"retention dropped $dropped, expected exactly 2024-02-01")
-        // physical removal: the compaction applies the tombstones
-        graft.streaming.IndexMaintain.compact(s, idx)
-        marker.createNewFile()
-      }
-      idx
-    })
+      val layout = graft.storage.Storage.TableLayout(
+        s"$base/store", "tenant0", "default")
+      val epoch = 1706745600L * 1000000000L // 2024-02-01T00:00Z
+      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+        .withColumn("timestamp", lit(epoch) +
+          pmod(col("doc_id"), lit(2)) * lit(86400L * 1000000000L) +
+          col("doc_id"))
+      graft.storage.Storage.append(docs, layout, "docs")
+      // maintain the index as the days arrived (one batch per day)
+      graft.streaming.IndexMaintain.maintainBatch(idx)(
+        docs.filter(pmod(col("doc_id"), lit(2)) === 0)
+          .select(col("doc_id"), col("text")), 0L)
+      graft.streaming.IndexMaintain.maintainBatch(idx)(
+        docs.filter(pmod(col("doc_id"), lit(2)) === 1)
+          .select(col("doc_id"), col("text")), 1L)
+      // REAL retention: the doomed partitions name their doc_ids (read
+      // executes inside deleteDocs, before the physical drop)
+      val doomed = s.read.parquet(layout.path("docs"))
+        .filter(col("date_day") < "2024-02-02").select(col("doc_id"))
+      graft.streaming.IndexMaintain.deleteDocs(s, idx, doomed, 0L)
+      val dropped = graft.storage.Storage.applyRetention(
+        s, layout, "docs", "2024-02-02")
+      require(dropped == Seq("2024-02-01"),
+        s"retention dropped $dropped, expected exactly 2024-02-01")
+      // physical removal: the compaction applies the tombstones
+      graft.streaming.IndexMaintain.compact(s, idx)
+    } + "/index"
 
   /** q402's stream-built EXACT-DEDUP LEDGER: the documents fed through
     * a 3-micro-batch file stream into
     * [[graft.streaming.LedgerMaintain]], then a retention cohort
     * (doc_id % 7 == 3) tombstoned and physically compacted — the
     * always-current twin of q379's bucketed batch ledger. */
-  private val ledgerStreamCache = scala.collection.concurrent.TrieMap[String, String]()
   private def streamedLedgerStore(s: SparkSession, dir: String): String =
-    ledgerStreamCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"ledger_stream|${vdir(dir)}")
-      val marker = new java.io.File(base, "_done")
+    graft.storage.LocalCache.stored("ledger_stream", dir) { base =>
       val store = s"$base/store"
-      if (!marker.exists()) {
-        val stage = s"$base/stage"
-        Tables.documents(s, dir).select(col("doc_id"), col("text"))
-          .repartition(3, pmod(col("doc_id"), lit(3)))
-          .write.mode("overwrite").parquet(stage)
-        val stream = s.readStream
-          .schema(StructType(Seq(StructField("doc_id", LongType),
-            StructField("text", StringType))))
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.LedgerMaintain.start(stream, store,
-          org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        // retention: an age cohort expires; its hashes stop serving
-        // unless another live doc carries the same content
-        graft.streaming.LedgerMaintain.deleteDocs(s, store,
-          Tables.documents(s, dir)
-            .filter(pmod(col("doc_id"), lit(7)) === 3)
-            .select(col("doc_id")), 0L)
-        graft.streaming.LedgerMaintain.compact(s, store)
-        marker.createNewFile()
-      }
-      store
-    })
+      val stage = s"$base/stage"
+      Tables.documents(s, dir).select(col("doc_id"), col("text"))
+        .repartition(3, pmod(col("doc_id"), lit(3)))
+        .write.mode("overwrite").parquet(stage)
+      val stream = s.readStream
+        .schema(StructType(Seq(StructField("doc_id", LongType),
+          StructField("text", StringType))))
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+      val q = graft.streaming.LedgerMaintain.start(stream, store,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      // retention: an age cohort expires; its hashes stop serving
+      // unless another live doc carries the same content
+      graft.streaming.LedgerMaintain.deleteDocs(s, store,
+        Tables.documents(s, dir)
+          .filter(pmod(col("doc_id"), lit(7)) === 3)
+          .select(col("doc_id")), 0L)
+      graft.streaming.LedgerMaintain.compact(s, store)
+    } + "/store"
 
   /** q383's stream-built BM25 store: the real documents fed through a
     * 4-micro-batch file stream into [[graft.streaming.IndexMaintain]],
@@ -720,60 +679,46 @@ object PipelineOps {
     * maintainer + compaction produce exactly the batch index's ranking
     * (BM25's stats are associative sums; IndexMaintainSpec pins the law,
     * this pins it against DuckDB at every SF). */
-  private val bm25StreamCache = scala.collection.concurrent.TrieMap[String, String]()
   private def streamedBm25Store(s: SparkSession, dir: String): String =
-    bm25StreamCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"bm25_stream|${vdir(dir)}")
-      val marker = new java.io.File(base, "_done")
+    graft.storage.LocalCache.stored("bm25_stream", dir) { base =>
       val store = s"$base/store"
-      if (!marker.exists()) {
-        val stage = s"$base/stage"
-        Tables.documents(s, dir).select(col("doc_id"), col("text"))
-          .repartition(4, pmod(col("doc_id"), lit(4)))
-          .write.mode("overwrite").parquet(stage)
-        val stream = s.readStream
-          .schema(StructType(Seq(StructField("doc_id", LongType),
-            StructField("text", StringType))))
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.IndexMaintain.start(stream, store,
-          org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        graft.streaming.IndexMaintain.compact(s, store)
-        marker.createNewFile()
-      }
-      store
-    })
+      val stage = s"$base/stage"
+      Tables.documents(s, dir).select(col("doc_id"), col("text"))
+        .repartition(4, pmod(col("doc_id"), lit(4)))
+        .write.mode("overwrite").parquet(stage)
+      val stream = s.readStream
+        .schema(StructType(Seq(StructField("doc_id", LongType),
+          StructField("text", StringType))))
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+      val q = graft.streaming.IndexMaintain.start(stream, store,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      graft.streaming.IndexMaintain.compact(s, store)
+    } + "/store"
 
   /** q384's stream-built ANN delta: the base IVF index is q380's stored
     * build; the DELTA vectors arrive through a 2-micro-batch file stream
     * into [[graft.streaming.AnnMaintain]] (frozen-centroid assignment),
     * then compact — probes over base ∪ stream-built postings must equal
     * q380's batch lifecycle row for row. */
-  private val annStreamCache = scala.collection.concurrent.TrieMap[String, String]()
   private def streamedAnnDelta(s: SparkSession, dir: String): String =
-    annStreamCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"ann_stream|${vdir(dir)}")
-      val marker = new java.io.File(base, "_done")
+    graft.storage.LocalCache.stored("ann_stream", dir) { base =>
       val store = s"$base/store"
-      if (!marker.exists()) {
-        val (cp, _, _) = storedIvfDelta(s, dir)
-        val stage = s"$base/stage"
-        embArr(s, dir).filter(pmod(col("vec_id"), lit(5)) === 0)
-          .repartition(2, pmod(col("vec_id"), lit(2)))
-          .write.mode("overwrite").parquet(stage)
-        val stream = s.readStream
-          .schema(StructType(Seq(StructField("vec_id", LongType),
-            StructField("vq", ArrayType(LongType)),
-            StructField("nrm", LongType))))
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.AnnMaintain.start(stream, store, cp,
-          org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        graft.streaming.AnnMaintain.compact(s, store)
-        marker.createNewFile()
-      }
-      store
-    })
+      val (cp, _, _) = storedIvfDelta(s, dir)
+      val stage = s"$base/stage"
+      embArr(s, dir).filter(pmod(col("vec_id"), lit(5)) === 0)
+        .repartition(2, pmod(col("vec_id"), lit(2)))
+        .write.mode("overwrite").parquet(stage)
+      val stream = s.readStream
+        .schema(StructType(Seq(StructField("vec_id", LongType),
+          StructField("vq", ArrayType(LongType)),
+          StructField("nrm", LongType))))
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+      val q = graft.streaming.AnnMaintain.start(stream, store, cp,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      graft.streaming.AnnMaintain.compact(s, store)
+    } + "/store"
 
   /** q386's refreshed ANN store: the index was BUILT incrementally under
     * STALE centroids (base assigned batch 0, delta appended batch 1,
@@ -784,26 +729,21 @@ object PipelineOps {
     * trainer is deterministic in the vector set alone, the refreshed
     * store must be INDISTINGUISHABLE from a from-scratch build over all
     * vectors — the oracle is q122/q260's verbatim. */
-  private val annRefreshCache = scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private def refreshedAnnStore(s: SparkSession, dir: String): (String, String) =
-    annRefreshCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"ann_refresh|${vdir(dir)}")
-      val marker = new java.io.File(base, "_done")
+  private def refreshedAnnStore(s: SparkSession, dir: String): (String, String) = {
+    val base = graft.storage.LocalCache.stored("ann_refresh", dir) { base =>
       val store = s"$base/store"
       val boot = s"$base/centroids0"
-      if (!marker.exists()) {
-        val e = embArr(s, dir)
-        val (cents0, _) = ivfIndex(e.filter(pmod(col("vec_id"), lit(5)) =!= 0))
-        cents0.write.mode("overwrite").parquet(boot)
-        graft.streaming.AnnMaintain.maintainBatch(store, boot)(
-          e.filter(pmod(col("vec_id"), lit(5)) =!= 0), 0L)
-        graft.streaming.AnnMaintain.maintainBatch(store, boot)(
-          e.filter(pmod(col("vec_id"), lit(5)) === 0), 1L)
-        graft.streaming.AnnMaintain.refresh(s, store, boot, ivfCentroids)
-        marker.createNewFile()
-      }
-      (boot, store)
-    })
+      val e = embArr(s, dir)
+      val (cents0, _) = ivfIndex(e.filter(pmod(col("vec_id"), lit(5)) =!= 0))
+      cents0.write.mode("overwrite").parquet(boot)
+      graft.streaming.AnnMaintain.maintainBatch(store, boot)(
+        e.filter(pmod(col("vec_id"), lit(5)) =!= 0), 0L)
+      graft.streaming.AnnMaintain.maintainBatch(store, boot)(
+        e.filter(pmod(col("vec_id"), lit(5)) === 0), 1L)
+      graft.streaming.AnnMaintain.refresh(s, store, boot, ivfCentroids)
+    }
+    (s"$base/centroids0", s"$base/store")
+  }
 
   /** q396's GROWN-k refreshed store: the q386 lifecycle, except the
     * refresh passes a LARGER k than bootstrap (32 vs 16 — the
@@ -811,26 +751,21 @@ object PipelineOps {
     * cost stays O(N/√N), RefreshProof's 100× measurement). The refresh
     * must equal a from-scratch k=32 build — the oracle is the q122
     * construction with k as a literal. */
-  private val annGrownCache = scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private def grownAnnStore(s: SparkSession, dir: String): (String, String) =
-    annGrownCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"ann_grown|${vdir(dir)}")
-      val marker = new java.io.File(base, "_done")
+  private def grownAnnStore(s: SparkSession, dir: String): (String, String) = {
+    val base = graft.storage.LocalCache.stored("ann_grown", dir) { base =>
       val store = s"$base/store"
       val boot = s"$base/centroids0"
-      if (!marker.exists()) {
-        val e = embArr(s, dir)
-        val (cents0, _) = ivfIndex(e.filter(pmod(col("vec_id"), lit(5)) =!= 0))
-        cents0.write.mode("overwrite").parquet(boot)
-        graft.streaming.AnnMaintain.maintainBatch(store, boot)(
-          e.filter(pmod(col("vec_id"), lit(5)) =!= 0), 0L)
-        graft.streaming.AnnMaintain.maintainBatch(store, boot)(
-          e.filter(pmod(col("vec_id"), lit(5)) === 0), 1L)
-        graft.streaming.AnnMaintain.refresh(s, store, boot, ivfCentroidsK(32))
-        marker.createNewFile()
-      }
-      (boot, store)
-    })
+      val e = embArr(s, dir)
+      val (cents0, _) = ivfIndex(e.filter(pmod(col("vec_id"), lit(5)) =!= 0))
+      cents0.write.mode("overwrite").parquet(boot)
+      graft.streaming.AnnMaintain.maintainBatch(store, boot)(
+        e.filter(pmod(col("vec_id"), lit(5)) =!= 0), 0L)
+      graft.streaming.AnnMaintain.maintainBatch(store, boot)(
+        e.filter(pmod(col("vec_id"), lit(5)) === 0), 1L)
+      graft.streaming.AnnMaintain.refresh(s, store, boot, ivfCentroidsK(32))
+    }
+    (s"$base/centroids0", s"$base/store")
+  }
 
   /** q391's ANN retention-delete lifecycle (q385's law for vector
     * search): the quantized vectors land through the REAL storage path
@@ -843,43 +778,38 @@ object PipelineOps {
     * tombstone the store (probes anti-join), and compaction purges the
     * dead postings physically. Probing afterwards must rank exactly as
     * an index whose postings never held day 1 at all. */
-  private val annTombCache = scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private def storedAnnRetention(s: SparkSession, dir: String): (String, String) =
-    annTombCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"ann_tomb|${vdir(dir)}")
-      val marker = new java.io.File(base, "_done")
+  private def storedAnnRetention(s: SparkSession, dir: String): (String, String) = {
+    val base = graft.storage.LocalCache.stored("ann_tomb", dir) { base =>
       val store = s"$base/store"; val boot = s"$base/centroids0"
-      if (!marker.exists()) {
-        val layout = graft.storage.Storage.TableLayout(
-          s"$base/tbl", "tenant0", "default")
-        val epoch = 1706745600L * 1000000000L // 2024-02-01T00:00Z
-        val e = embArr(s, dir)
-        graft.storage.Storage.append(
-          e.withColumn("timestamp", lit(epoch) +
-            pmod(col("vec_id"), lit(2)) * lit(86400L * 1000000000L) +
-            col("vec_id")),
-          layout, "vecs")
-        ivfCentroids(e).write.mode("overwrite").parquet(boot)
-        graft.streaming.AnnMaintain.maintainBatch(store, boot)(
-          e.filter(pmod(col("vec_id"), lit(2)) === 0), 0L)
-        graft.streaming.AnnMaintain.maintainBatch(store, boot)(
-          e.filter(pmod(col("vec_id"), lit(2)) === 1), 1L)
-        // REAL retention: the doomed partitions name their vec_ids (the
-        // read executes inside deleteVecs, before the physical drop)
-        val doomed = s.read.parquet(layout.path("vecs"))
-          .filter(col("date_day") < "2024-02-02")
-          .select(col("vec_id").as("n_id"))
-        graft.streaming.AnnMaintain.deleteVecs(s, store, doomed, 0L)
-        val dropped = graft.storage.Storage.applyRetention(
-          s, layout, "vecs", "2024-02-02")
-        require(dropped == Seq("2024-02-01"),
-          s"retention dropped $dropped, expected exactly 2024-02-01")
-        // physical removal: compaction applies the tombstones
-        graft.streaming.AnnMaintain.compact(s, store)
-        marker.createNewFile()
-      }
-      (boot, store)
-    })
+      val layout = graft.storage.Storage.TableLayout(
+        s"$base/tbl", "tenant0", "default")
+      val epoch = 1706745600L * 1000000000L // 2024-02-01T00:00Z
+      val e = embArr(s, dir)
+      graft.storage.Storage.append(
+        e.withColumn("timestamp", lit(epoch) +
+          pmod(col("vec_id"), lit(2)) * lit(86400L * 1000000000L) +
+          col("vec_id")),
+        layout, "vecs")
+      ivfCentroids(e).write.mode("overwrite").parquet(boot)
+      graft.streaming.AnnMaintain.maintainBatch(store, boot)(
+        e.filter(pmod(col("vec_id"), lit(2)) === 0), 0L)
+      graft.streaming.AnnMaintain.maintainBatch(store, boot)(
+        e.filter(pmod(col("vec_id"), lit(2)) === 1), 1L)
+      // REAL retention: the doomed partitions name their vec_ids (the
+      // read executes inside deleteVecs, before the physical drop)
+      val doomed = s.read.parquet(layout.path("vecs"))
+        .filter(col("date_day") < "2024-02-02")
+        .select(col("vec_id").as("n_id"))
+      graft.streaming.AnnMaintain.deleteVecs(s, store, doomed, 0L)
+      val dropped = graft.storage.Storage.applyRetention(
+        s, layout, "vecs", "2024-02-02")
+      require(dropped == Seq("2024-02-01"),
+        s"retention dropped $dropped, expected exactly 2024-02-01")
+      // physical removal: compaction applies the tombstones
+      graft.streaming.AnnMaintain.compact(s, store)
+    }
+    (s"$base/centroids0", s"$base/store")
+  }
 
   /** q382/q387's shard ENCODE half: each doc becomes one REAL gzipped
     * multi-record jsonl shard whose records DRIFT (records missing
@@ -952,21 +882,10 @@ object PipelineOps {
     * data version) through the partitioned append sink (zstd, date_day/
     * hour layout, deterministic timestamps) — the shard bytes a corpus
     * distribution actually ships, landed as a binary column. */
-  private val jsonlStoreCache = scala.collection.concurrent.TrieMap[String, String]()
   private def storedJsonlShards(s: SparkSession, dir: String): String =
-    jsonlStoreCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"jsonl_store|${vdir(dir)}")
-      val layout = graft.storage.Storage.TableLayout(base, "default", "media")
-      val marker = new java.io.File(base, "_stored")
-      if (!marker.exists()) {
-        graft.storage.Storage.append(
-          jsonlGzShards(s, dir).withColumn("timestamp",
-            lit(1706745600L * 1000000000L) + col("doc_id")),
-          layout, "shards")
-        marker.createNewFile()
-      }
-      layout.path("shards")
-    })
+    MultimodalOps.storedMediaTable("jsonl_store", dir, "shards")(
+      jsonlGzShards(s, dir).withColumn("timestamp",
+        lit(1706745600L * 1000000000L) + col("doc_id")))
 
   /** Achlioptas ±1 JL sign matrix (16×64), md5-derived at plan build —
     * ONE construction shared by the q318 projection filter and the q322
@@ -3523,8 +3442,8 @@ object PipelineOps {
     // not SQL-expressible (the q347 split). Scan-bound, zero shuffles.
     "q357_zstd_frames" -> ((s, dir) => {
       import s.implicits._
-      MultimodalOps.spread(s, Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("lang")))
+      Tables.spread(s, Tables.documents(s, dir)
+        .select(col("doc_id"), col("text"), col("lang")), "doc_id")
         .as[(Long, String, String)]
         .map { case (id, text, lang) =>
           val half = text.length / 2
@@ -3954,9 +3873,9 @@ object PipelineOps {
       // spread: the GIF decode is per-row work over a one-split scan
       // (r15; guide §2.5); checkpoint: `hashes` feeds FOUR consumers
       // (both band-join sides + both attach-backs), so the decode ran 4×
-      val hashes = MultimodalOps.spread(s, Tables.documents(s, dir)
+      val hashes = Tables.spread(s, Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 0)
-        .select(col("doc_id"))).as[Long]
+        .select(col("doc_id")), "doc_id").as[Long]
         .map { id =>
           val j = id / 3; val g = j / 3; val r = (j % 3).toInt
           val w = (g % 7 + 12).toInt; val h = (g % 5 + 10).toInt
@@ -4692,10 +4611,9 @@ object PipelineOps {
     * (dir, rounds) to temp parquet (the `jaccardEdgesStored`
     * discipline): q304/q305/q308 all consume the same trained state,
     * and re-deriving the chain per consumer tripled the bench cost. */
-  private val bpeCache = scala.collection.concurrent.TrieMap[String, (String, String)]()
   private def bpeTrain(s: SparkSession, dir: String,
       rounds: Int = BpeRounds): (DataFrame, DataFrame) = {
-    val (mp, wp) = bpeCache.getOrElseUpdate(s"${vdir(dir)}#$rounds", {
+    val base = graft.storage.LocalCache.stored(s"bpe|$rounds", dir) { base =>
       var words = bpeWords(s, dir)
       var merges: DataFrame = null
       for (r <- 1 to rounds) {
@@ -4703,13 +4621,10 @@ object PipelineOps {
         words = w2
         merges = if (merges == null) m else merges.unionByName(m)
       }
-      val mdir = graft.storage.LocalCache.dir(s"bpe_merges|${vdir(dir)}|$rounds")
-      val wdir = graft.storage.LocalCache.dir(s"bpe_words|${vdir(dir)}|$rounds")
-      merges.write.mode("overwrite").parquet(mdir)
-      words.write.mode("overwrite").parquet(wdir)
-      (mdir, wdir)
-    })
-    (s.read.parquet(mp), s.read.parquet(wp))
+      merges.write.mode("overwrite").parquet(s"$base/merges")
+      words.write.mode("overwrite").parquet(s"$base/words")
+    }
+    (s.read.parquet(s"$base/merges"), s.read.parquet(s"$base/words"))
   }
 
   /** Cramer's-rule strings for the 3×3 normal equations (first-column
@@ -4904,38 +4819,31 @@ object PipelineOps {
     * staging copy) into [[graft.streaming.GorillaStream.maintainBatch]].
     * Any micro-batching folds to the same final blocks (the maintainer's
     * stable-merge law), so the staging split only has to be A split. */
-  private val gorillaStreamCache = scala.collection.concurrent.TrieMap[String, String]()
   private def gorillaStreamBlocks(s: SparkSession, dir: String): String =
-    gorillaStreamCache.getOrElseUpdate(vdir(dir), {
-      val base = graft.storage.LocalCache.dir(s"gorilla_stream|${vdir(dir)}")
-      val marker = new java.io.File(base, "_done")
+    graft.storage.LocalCache.stored("gorilla_stream", dir) { base =>
       val blocks = s"$base/blocks"
-      if (!marker.exists()) {
-        val stage = s"$base/stage"
-        Tables.events(s, dir)
-          .select(col("event_type"), expr("ts div 1000").as("us"),
-            col("event_id"), col("value"))
-          .repartition(4, pmod(col("event_id"), lit(4)))
-          .write.mode("overwrite").parquet(stage)
-        val stream = s.readStream
-          .schema(StructType(Seq(
-            StructField("event_type", StringType),
-            StructField("us", LongType),
-            StructField("event_id", LongType),
-            StructField("value", DoubleType))))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage)
-        val q = graft.streaming.GorillaStream.start(stream, blocks,
-          org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        // AvailableNow terminated ⇒ every batch is committed; fold the
-        // store to its latest revisions (the maintenance pass a
-        // long-running deployment runs continuously)
-        graft.streaming.GorillaStream.compact(s, blocks, Long.MaxValue)
-        marker.createNewFile()
-      }
-      blocks
-    })
+      val stage = s"$base/stage"
+      Tables.events(s, dir)
+        .select(col("event_type"), expr("ts div 1000").as("us"),
+          col("event_id"), col("value"))
+        .repartition(4, pmod(col("event_id"), lit(4)))
+        .write.mode("overwrite").parquet(stage)
+      val stream = s.readStream
+        .schema(StructType(Seq(
+          StructField("event_type", StringType),
+          StructField("us", LongType),
+          StructField("event_id", LongType),
+          StructField("value", DoubleType))))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage)
+      val q = graft.streaming.GorillaStream.start(stream, blocks,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      // AvailableNow terminated ⇒ every batch is committed; fold the
+      // store to its latest revisions (the maintenance pass a
+      // long-running deployment runs continuously)
+      graft.streaming.GorillaStream.compact(s, blocks, Long.MaxValue)
+    } + "/blocks"
 
   /** INCREMENTAL delta-vs-corpus dedup: classify every DELTA row against
     * an already-committed corpus WITHOUT re-deduplicating the corpus
@@ -7971,10 +7879,9 @@ object PipelineOps {
     * parquet per (dir, data version, i) — the bpeTrain discipline; q317
     * (i=1), q319 (i=1), and q321 (i=2) share the chain. See q317's
     * comment for the arithmetic ceilings. */
-  private val pcaCache = scala.collection.concurrent.TrieMap[String, String]()
   private def pcaComponentsStored(s: SparkSession, dir: String, i: Int): DataFrame = {
     require(i >= 1, s"component index must be >= 1, got $i")
-    val path = pcaCache.getOrElseUpdate(s"${vdir(dir)}#$i", {
+    s.read.parquet(graft.storage.LocalCache.stored(s"pca|$i", dir) { p =>
       val centered = pcaCentered(s, dir).localCheckpoint()
       val prev = (1 until i).map(j =>
         pcaComponentsStored(s, dir, j).select(col("xa").as("xp")))
@@ -8024,11 +7931,8 @@ object PipelineOps {
           "ya")
         z = deflate(v).localCheckpoint()
       }
-      val p = graft.storage.LocalCache.dir(s"pca|${vdir(dir)}|$i")
       z.write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
   }
 
   /** the q317/q319 dominant component — component 1 of the family. */

@@ -113,16 +113,24 @@ object Storage {
     * SOURCE data has since been retired (a retention-maintained dedup
     * index outlives the rows it was derived from, so re-registration
     * can never require re-derivation). The DDL restates the bucketing
-    * spec; the files' bucket layout is what writeBucketed produced. */
+    * spec; the files' bucket layout is what writeBucketed produced.
+    * Returns the catalog name. */
   def registerBucketed(spark: SparkSession, layout: TableLayout,
       table: String, schemaDdl: String, bucketKey: String,
-      buckets: Int): Unit = {
+      buckets: Int): String = {
     val name = s"${layout.tenant}_${layout.dataset}_$table"
       .replaceAll("[^A-Za-z0-9_]", "_")
-    spark.sql(
-      s"CREATE TABLE IF NOT EXISTS $name ($schemaDdl) USING parquet " +
-        s"CLUSTERED BY ($bucketKey) SORTED BY ($bucketKey) " +
-        s"INTO $buckets BUCKETS LOCATION '${layout.path(table)}'")
+    if (!spark.catalog.tableExists(name))
+      try spark.sql(
+        s"CREATE TABLE IF NOT EXISTS $name ($schemaDdl) USING parquet " +
+          s"CLUSTERED BY ($bucketKey) SORTED BY ($bucketKey) " +
+          s"INTO $buckets BUCKETS LOCATION '${layout.path(table)}'")
+      catch {
+        // IF NOT EXISTS checks, then creates: a concurrent registration
+        // of the same table can land in between
+        case _: org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException => ()
+      }
+    name
   }
 
   /** Compactor-side downsampling: raw samples → one pre-aggregated cell

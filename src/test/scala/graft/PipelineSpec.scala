@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.PipelineOps
+import graft.operators.{InteropOps, PipelineOps}
 
 /** Pipeline-operator invariants that the oracle gate can't see directly:
   * the connected-components loop must converge past diameter 1 (the
@@ -405,6 +405,16 @@ class PipelineSpec extends AnyFunSuite {
 
   test("trained-state caches retrain when the underlying data is rewritten") {
     import spark.implicits._
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
+    }
+    def q370(d: String): Seq[String] =
+      InteropOps.queries("q370_dedup_delta")(spark, d)
+        .collect().map(_.toString).toSeq.sorted
+    val corpusB = Seq((0L, (0 until 12).map(i => s"alpha$i").mkString(" ")),
+        (1L, (0 until 12).map(i => s"beta$i").mkString(" ")),
+        (2L, (0 until 12).map(i => s"gamma$i").mkString(" ")))
+      .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft_retrain_").toString
     try {
       // corpus A: docs 0 and 1 are exact near-dups (same 12-word text)
@@ -415,21 +425,25 @@ class PipelineSpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val e1 = PipelineOps.jaccardEdgesStored(spark, dir, 0.5).count()
       assert(e1 >= 1, "corpus A must produce at least one near-dup edge")
+      val before = q370(dir)
       // rewrite IN PLACE with a corpus that has no near-dups: the cache
       // key carries the data version, so the next call must retrain
       // against the new files instead of serving corpus A's edges
-      Seq((0L, (0 until 12).map(i => s"alpha$i").mkString(" ")),
-          (1L, (0 until 12).map(i => s"beta$i").mkString(" ")),
-          (2L, (0 until 12).map(i => s"gamma$i").mkString(" ")))
-        .toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      corpusB.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val e2 = PipelineOps.jaccardEdgesStored(spark, dir, 0.5).count()
       assert(e2 == 0, s"stale trained state served after a data rewrite: $e2 edges")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+      // a stored FIXTURE follows the rewrite too: q370 classifies a delta
+      // committed into a two-snapshot fixture built from documents.parquet,
+      // so after the rewrite it must answer as on a fresh dir holding only
+      // the new corpus
+      val rewritten = q370(dir)
+      val fresh = java.nio.file.Files.createTempDirectory("graft_retrain_fresh_").toString
+      try {
+        corpusB.write.mode("overwrite").parquet(s"$fresh/documents.parquet")
+        assert(rewritten == q370(fresh),
+          "stale stored fixture served after a data rewrite")
+      } finally rm(new java.io.File(fresh))
+      assert(rewritten != before, "corpus B must classify its delta differently")
+    } finally rm(new java.io.File(dir))
   }
 }
