@@ -76,6 +76,12 @@ object Tables {
     }
   }
 
+  /** drop every view built for `s`: a session that serves no more
+    * requests would otherwise pin them until its SparkContext stops */
+  private[graft] def dropViews(s: SparkSession): Unit = {
+    viewMemo.keySet.removeIf(_.session eq s); ()
+  }
+
   private[graft] def viewMemoSize: Int = viewMemo.size
 
   /** spread a one-split scan across the session's cores before heavy

@@ -32,6 +32,28 @@ import org.apache.spark.sql.SparkSession
   * executors through the existing wire parsers and lands through the
   * idempotent batch sink into the stored hour layout, so a request is
   * queryable by the GET routes immediately after the 200.
+  *
+  * Sessions: every READ route runs in one served session the shell
+  * owns — the query, metadata and render routes of [[route]], the POST
+  * `/api/v1/query` IR route, the POST form variants of the Prometheus
+  * query routes, and the landed logs table the Loki routes read. It is
+  * a clone of the caller's session as of construction (its runtime
+  * confs, temp views and functions then; the caller's session is never
+  * changed) with whole-stage codegen off and expression codegen set to
+  * interpret. Codegen puts literals into the generated source, so every
+  * request with a fresh time window would compile new classes: a Janino
+  * compile per plan and per task-side projection, each costing more
+  * than interpreting the few thousand rows a served window holds.
+  * Everything else stays on the caller's session: ingest, the
+  * `/api/v1/ops` routes, live tail, Arrow and Flight SQL tickets
+  * (arbitrary-size SQL), and the demand and self-monitoring flushes —
+  * writes, streams and plans whose size a request does not bound.
+  * Served data far beyond these row counts would want codegen with the
+  * window literals turned into parameters instead. The copy is not
+  * live: confs, temp views and query execution listeners added to the
+  * caller's session after construction do not reach the read routes (a
+  * listener registered later, such as the perfbench tracer's, sees none
+  * of their plans).
   */
 final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
     ingest: Option[graft.storage.Storage.TableLayout] = None,
@@ -75,6 +97,14 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
     ingest.map(l => java.nio.file.Path.of(
       l.basePath, "_system", "catalog.json")))
   private def authEnabled: Boolean = apiKeys.isDefined || adminApiKeys.nonEmpty
+
+  /** the session of every read route (see the class header) */
+  private[api] val served: SparkSession = {
+    val s = org.apache.spark.sql.GraftShim.cloneSession(spark)
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    s
+  }
 
   /** token bucket: `rate` tokens/s, holding at most max(1, rate) —
     * the burst equals one second of budget (ratelimit.rs TokenBucket,
@@ -180,6 +210,7 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
     if (pool != null) { pool.shutdownNow(); pool = null }
     if (flight != null) { flight.stop(); flight = null }
     flushSelfMetrics() // drain buffered self-monitoring points
+    graft.Tables.dropViews(served)
   }
 
   /** Reference auth subset over the request headers (middleware.rs
@@ -474,7 +505,7 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
             val body = ex.getRequestBody.readAllBytes()
             path match {
               case "/api/v1/query" => // native Query IR (read via POST)
-                Some(Endpoints.queryIr(spark, dir,
+                Some(Endpoints.queryIr(served, dir,
                   new String(body, StandardCharsets.UTF_8), nowNs))
               case "/api/v1/ops/compact" =>
                 Some(Endpoints.opsCompact(spark, opsLayout))
@@ -494,9 +525,9 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
                 val merged = if (qs.isEmpty) form
                   else if (form.isEmpty) qs else s"$qs&$form"
                 if (path == "/prometheus/api/v1/query")
-                  Some(Endpoints.promInstantQuery(spark, dir, merged,
+                  Some(Endpoints.promInstantQuery(served, dir, merged,
                     nowNs / 1000000000L))
-                else Some(Endpoints.promQueryRange(spark, dir, merged))
+                else Some(Endpoints.promQueryRange(served, dir, merged))
               case _ =>
                 // ingest byte-rate limit (ratelimit.rs Bytes dimension):
                 // the request body's size is the token cost
@@ -860,32 +891,32 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
     // the read-only dir otherwise — so a shell that ingests also answers
     // for what it ingested, promoted columns resolving live
     case "/loki/api/v1/query_range" =>
-      Some(Endpoints.lokiQueryRange(spark, dir, qs, nowNs, landedLogsTable))
+      Some(Endpoints.lokiQueryRange(served, dir, qs, nowNs, landedLogsTable))
     case "/loki/api/v1/query" =>
-      Some(Endpoints.lokiInstantQuery(spark, dir, qs, nowNs, landedLogsTable))
+      Some(Endpoints.lokiInstantQuery(served, dir, qs, nowNs, landedLogsTable))
     case "/loki/api/v1/labels" =>
-      Some(Endpoints.lokiLabels(spark, dir, qs, nowNs))
+      Some(Endpoints.lokiLabels(served, dir, qs, nowNs))
     case LokiLabelValues(name) =>
-      Some(Endpoints.lokiLabelValues(spark, dir, dec(name), qs, nowNs))
+      Some(Endpoints.lokiLabelValues(served, dir, dec(name), qs, nowNs))
     case "/loki/api/v1/series" =>
-      Some(Endpoints.lokiSeries(spark, dir, qs, nowNs))
+      Some(Endpoints.lokiSeries(served, dir, qs, nowNs))
     case "/loki/api/v1/index/volume" =>
-      Some(Endpoints.lokiIndexVolume(spark, dir, qs, nowNs))
+      Some(Endpoints.lokiIndexVolume(served, dir, qs, nowNs))
     case "/loki/api/v1/detected_fields" =>
-      Some(Endpoints.lokiDetectedFields(spark, dir, qs))
+      Some(Endpoints.lokiDetectedFields(served, dir, qs))
     // Prometheus (reference endpoints/promql.rs route table)
     case "/prometheus/api/v1/query_range" =>
-      Some(Endpoints.promQueryRange(spark, dir, qs))
+      Some(Endpoints.promQueryRange(served, dir, qs))
     case "/prometheus/api/v1/query" =>
-      Some(Endpoints.promInstantQuery(spark, dir, qs, nowNs / 1000000000L))
+      Some(Endpoints.promInstantQuery(served, dir, qs, nowNs / 1000000000L))
     case "/prometheus/api/v1/labels" =>
-      Some(Endpoints.promLabels(spark, dir, qs))
+      Some(Endpoints.promLabels(served, dir, qs))
     case PromLabelValues(name) =>
-      Some(Endpoints.promLabelValues(spark, dir, dec(name)))
+      Some(Endpoints.promLabelValues(served, dir, dec(name)))
     case "/prometheus/api/v1/series" =>
-      Some(Endpoints.promSeries(spark, dir, qs, nowNs / 1000000000L))
+      Some(Endpoints.promSeries(served, dir, qs, nowNs / 1000000000L))
     case "/prometheus/api/v1/label_stats" =>
-      Some(Endpoints.promLabelStats(spark, dir))
+      Some(Endpoints.promLabelStats(served, dir))
     // Tempo (reference endpoints/tempo.rs route table)
     case "/api/echo" => Some("echo")
     case "/ready" => Some("ready")
@@ -894,33 +925,33 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
     case "/prometheus/api/v1/status/buildinfo" =>
       Some(Endpoints.promBuildinfo())
     case "/api/metrics/query" =>
-      Some(Endpoints.tempoMetricsInstant(spark, dir, qs, nowNs))
+      Some(Endpoints.tempoMetricsInstant(served, dir, qs, nowNs))
     case "/api/metrics/query_range" =>
-      Some(Endpoints.tempoMetricsQueryRange(spark, dir, qs))
+      Some(Endpoints.tempoMetricsQueryRange(served, dir, qs))
     case "/api/search" =>
-      Some(Endpoints.tempoSearch(spark, dir, qs))
+      Some(Endpoints.tempoSearch(served, dir, qs))
     case "/api/search/tags" | "/api/v2/search/tags" =>
-      Some(Endpoints.tempoSearchTags(spark, dir))
+      Some(Endpoints.tempoSearchTags(served, dir))
     case TagValues(tag) =>
-      Some(Endpoints.tempoTagValues(spark, dir, dec(tag)))
+      Some(Endpoints.tempoTagValues(served, dir, dec(tag)))
     case TagValuesV2(tag) =>
-      Some(Endpoints.tempoTagValuesV2(spark, dir, dec(tag)))
+      Some(Endpoints.tempoTagValuesV2(served, dir, dec(tag)))
     case TraceById(id) =>
-      Some(Endpoints.tempoTraceById(spark, dir, dec(id)))
+      Some(Endpoints.tempoTraceById(served, dir, dec(id)))
     // Pyroscope (reference endpoints/pyroscope.rs route table)
     case "/pyroscope/render" =>
-      Some(Endpoints.pyroscopeRender(spark, dir, qs))
+      Some(Endpoints.pyroscopeRender(served, dir, qs))
     case "/pyroscope/render-diff" =>
-      Some(Endpoints.pyroscopeRenderDiff(spark, dir, qs))
+      Some(Endpoints.pyroscopeRenderDiff(served, dir, qs))
     case "/pyroscope/profile-types" =>
-      Some(Endpoints.pyroscopeProfileTypes(spark, dir))
+      Some(Endpoints.pyroscopeProfileTypes(served, dir))
     case "/pyroscope/label-names" =>
       Some(Endpoints.pyroscopeLabelNames())
     case "/pyroscope/label-values" =>
-      Some(Endpoints.pyroscopeLabelValues(spark, dir,
+      Some(Endpoints.pyroscopeLabelValues(served, dir,
         Endpoints.parseQuery(qs).getOrElse("label", "")))
     case ProfilesByTrace(id) =>
-      Some(Endpoints.profilesByTrace(spark, dir, dec(id)))
+      Some(Endpoints.profilesByTrace(served, dir, dec(id)))
     // ops (reference endpoints/ops.rs — compactor control surface)
     case "/api/v1/ops/compact/status" =>
       Some(Endpoints.opsCompactStatus(spark, opsLayout))
@@ -942,19 +973,33 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
     * failure never fails the serve — and self-quieting: once a key is
     * promoted (a `label_<key>` column exists on the stored logs table),
     * the same query stops counting demand for it, which is how the
-    * loop converges. Long-lived services would cache the schema probe;
-    * the per-request read is one parquet footer. */
-  private def recordDemand(path: String, qs: String): Unit =
+    * loop converges. The demand is worked out on the driver against the
+    * memoized landed table's columns; a query that demands nothing runs
+    * no Spark job and reads no schema. */
+  private[api] def recordDemand(path: String, qs: String): Unit =
     if (ingest.isDefined &&
       (path == "/loki/api/v1/query_range" || path == "/loki/api/v1/query"))
       try {
         Endpoints.parseQuery(qs).get("query").foreach { text =>
-          val layout = ingest.get
-          val promoted = promotedSet(layout)
-          val df = graft.logql.QueryDemand.demand(spark, promoted, Seq(text))
-          if (df.limit(1).count() > 0) graft.logql.QueryDemand.flush(df, layout)
+          val demanded = graft.logql.QueryDemand.demandedLabels(promotedSet,
+            graft.logql.Parser.parse(text))
+          if (demanded.nonEmpty) graft.logql.QueryDemand.flush(
+            graft.logql.QueryDemand.counts(spark, demanded), ingest.get)
         }
       } catch { case _: Throwable => () }
+
+  private val BaseLabels = Set("service_name", "severity_text")
+
+  /** columns already served without a map probe: the landed logs
+    * table's real columns plus the keys behind its `label_<key>`
+    * materializations (base labels if nothing has landed yet). */
+  private def promotedSet: Set[String] =
+    landedLogsTable.fold(BaseLabels) { t =>
+      val cols = t.df.columns.toSet
+      cols ++ cols.collect {
+        case c if c.startsWith("label_") => c.stripPrefix("label_")
+      }
+    }
 
   /** the acceptor-landed gen-2 logs table; a promotion rewrite (or any
     * append) between two requests changes resolution LIVE — the table
@@ -972,7 +1017,7 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
         landedCache.get(p) match {
           case Some((v, t)) if v == ver => Some(t)
           case _ =>
-            val df = spark.read.parquet(p)
+            val df = served.read.parquet(p)
             val promotedCols = df.columns.filter(_.startsWith("label_"))
               .map(c => c.stripPrefix("label_") -> c).toMap
             val t = graft.logql.Lowering.LogsTable(
@@ -988,22 +1033,6 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
         }
       } catch { case _: Throwable => None }
     }
-
-  /** columns already served without a map probe: the stored logs
-    * table's real columns plus the keys behind its `label_<key>`
-    * materializations (base labels if nothing has landed yet). */
-  private def promotedSet(layout: graft.storage.Storage.TableLayout): Set[String] =
-    try {
-      val p = layout.path("logs")
-      if (!new java.io.File(p).isDirectory)
-        Set("service_name", "severity_text")
-      else {
-        val cols = spark.read.parquet(p).schema.fieldNames.toSet
-        cols ++ cols.collect {
-          case c if c.startsWith("label_") => c.stripPrefix("label_")
-        }
-      }
-    } catch { case _: Throwable => Set("service_name", "severity_text") }
 
   /** the ops routes act on the INGEST layout (there is no compactor for
     * the read-only testdata dir). */

@@ -64,12 +64,14 @@ object QueryDemand {
   /** fold a query log into advisory rows: (attr, n_queries), distributed
     * as a tiny aggregate so the flush composes with any sink. */
   def demand(spark: SparkSession, promoted: Set[String],
-      queries: Seq[String]): DataFrame = {
+      queries: Seq[String]): DataFrame =
+    counts(spark, queries.flatMap(q => demandedLabels(promoted, Parser.parse(q))))
+
+  /** advisory rows of a demand list: one per label, counting the
+    * queries that demanded it (each query lists a label once). */
+  def counts(spark: SparkSession, demanded: Seq[String]): DataFrame = {
     import spark.implicits._
-    queries
-      .flatMap(q => demandedLabels(promoted, Parser.parse(q)).distinct)
-      .toDF("attr")
-      .groupBy("attr").agg(count(lit(1)).as("n_queries"))
+    demanded.toDF("attr").groupBy("attr").agg(count(lit(1)).as("n_queries"))
   }
 
   /** append to the advisory `attribute_stats` table (plain parquet — the

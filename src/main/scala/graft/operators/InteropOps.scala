@@ -172,6 +172,7 @@ object InteropOps {
         graft.streaming.LedgerMaintain.maintainBatch(hdir) _,
         graft.streaming.ShingleMaintain.maintainBatch(sdir) _) _
       val q = stream.writeStream.outputMode("append")
+        .option("checkpointLocation", s"$base/checkpoint")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch(body).start()
       q.awaitTermination()

@@ -842,9 +842,9 @@ object MultimodalOps {
           StructField("b3", LongType), StructField("b4", LongType),
           StructField("fp", LongType))))
         .option("maxFilesPerTrigger", "1").parquet(stage)
-      val q = graft.streaming.BandMaintain.start(stream, store,
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.BandMaintain.start(stream, store,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        checkpoint = Some(s"$base/checkpoint")).awaitTermination()
       // drop 1: classify against the MAINTAINED store; survivors
       // append as the next batch (ids are +50M — never in the corpus)
       val d1 = deltaVideoFingerprints(s, dir)

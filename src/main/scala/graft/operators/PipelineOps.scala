@@ -661,9 +661,9 @@ object PipelineOps {
         .schema(StructType(Seq(StructField("doc_id", LongType),
           StructField("text", StringType))))
         .option("maxFilesPerTrigger", "1").parquet(stage)
-      val q = graft.streaming.LedgerMaintain.start(stream, store,
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.LedgerMaintain.start(stream, store,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        checkpoint = Some(s"$base/checkpoint")).awaitTermination()
       // retention: an age cohort expires; its hashes stop serving
       // unless another live doc carries the same content
       graft.streaming.LedgerMaintain.deleteDocs(s, store,
@@ -690,9 +690,9 @@ object PipelineOps {
         .schema(StructType(Seq(StructField("doc_id", LongType),
           StructField("text", StringType))))
         .option("maxFilesPerTrigger", "1").parquet(stage)
-      val q = graft.streaming.IndexMaintain.start(stream, store,
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.IndexMaintain.start(stream, store,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        checkpoint = Some(s"$base/checkpoint")).awaitTermination()
       graft.streaming.IndexMaintain.compact(s, store)
     } + "/store"
 
@@ -714,9 +714,9 @@ object PipelineOps {
           StructField("vq", ArrayType(LongType)),
           StructField("nrm", LongType))))
         .option("maxFilesPerTrigger", "1").parquet(stage)
-      val q = graft.streaming.AnnMaintain.start(stream, store, cp,
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.AnnMaintain.start(stream, store, cp,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        checkpoint = Some(s"$base/checkpoint")).awaitTermination()
       graft.streaming.AnnMaintain.compact(s, store)
     } + "/store"
 
@@ -4836,9 +4836,9 @@ object PipelineOps {
           StructField("value", DoubleType))))
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
-      val q = graft.streaming.GorillaStream.start(stream, blocks,
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.GorillaStream.start(stream, blocks,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        checkpoint = Some(s"$base/checkpoint")).awaitTermination()
       // AvailableNow terminated ⇒ every batch is committed; fold the
       // store to its latest revisions (the maintenance pass a
       // long-running deployment runs continuously)

@@ -69,11 +69,16 @@ object AnnMaintain {
       .write.mode("overwrite").parquet(s"$dir/postings/batch-$batchId")
   }
 
+  /** `checkpoint`: where the query commits. A stored entry passes a
+    * directory inside itself, so a rebuild empties it too; without one,
+    * Spark makes a `temporary-*` checkpoint under the system temp dir. */
   def start(vectors: DataFrame, dir: String, centroidsPath: String,
       trigger: Trigger = Trigger.ProcessingTime(500),
-      compactEvery: Int = 0): StreamingQuery = {
+      compactEvery: Int = 0,
+      checkpoint: Option[String] = None): StreamingQuery = {
     require(vectors.isStreaming, "AnnMaintain needs a streaming source")
-    vectors.writeStream.outputMode("append").trigger(trigger)
+    val w = vectors.writeStream.outputMode("append").trigger(trigger)
+    checkpoint.fold(w)(w.option("checkpointLocation", _))
       .foreachBatch(maintainBatch(dir, centroidsPath, compactEvery) _).start()
   }
 

@@ -61,11 +61,16 @@ object BandMaintain {
       .write.mode("overwrite").parquet(s"$dir/bands/batch-$batchId")
   }
 
+  /** `checkpoint`: where the query commits. A stored entry passes a
+    * directory inside itself, so a rebuild empties it too; without one,
+    * Spark makes a `temporary-*` checkpoint under the system temp dir. */
   def start(fps: DataFrame, dir: String,
       trigger: Trigger = Trigger.ProcessingTime(500),
-      compactEvery: Int = 0): StreamingQuery = {
+      compactEvery: Int = 0,
+      checkpoint: Option[String] = None): StreamingQuery = {
     require(fps.isStreaming, "BandMaintain needs a streaming source")
-    fps.writeStream.outputMode("append").trigger(trigger)
+    val w = fps.writeStream.outputMode("append").trigger(trigger)
+    checkpoint.fold(w)(w.option("checkpointLocation", _))
       .foreachBatch(maintainBatch(dir, compactEvery) _).start()
   }
 

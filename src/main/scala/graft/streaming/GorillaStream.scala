@@ -161,14 +161,19 @@ object GorillaStream {
 
   /** start maintaining blocks from a streaming points frame (columns
     * event_type, us, event_id, value); `compactEvery` > 0 turns on
-    * in-stream self-compaction. */
+    * in-stream self-compaction. `checkpoint`: where the query commits.
+    * A stored entry passes a directory inside itself, so a rebuild
+    * empties it too; without one, Spark makes a `temporary-*`
+    * checkpoint under the system temp dir. */
   def start(points: DataFrame, dir: String,
       trigger: Trigger = Trigger.ProcessingTime(500),
-      compactEvery: Int = 0): StreamingQuery = {
+      compactEvery: Int = 0,
+      checkpoint: Option[String] = None): StreamingQuery = {
     require(points.isStreaming, "GorillaStream needs a streaming source")
-    points.writeStream
+    val w = points.writeStream
       .outputMode("append")
       .trigger(trigger)
+    checkpoint.fold(w)(w.option("checkpointLocation", _))
       .foreachBatch(maintainBatch(dir, compactEvery) _)
       .start()
   }

@@ -44,11 +44,16 @@ object LedgerMaintain {
       .write.mode("overwrite").parquet(s"$dir/ledger/batch-$batchId")
   }
 
+  /** `checkpoint`: where the query commits. A stored entry passes a
+    * directory inside itself, so a rebuild empties it too; without one,
+    * Spark makes a `temporary-*` checkpoint under the system temp dir. */
   def start(docs: DataFrame, dir: String,
       trigger: Trigger = Trigger.ProcessingTime(500),
-      compactEvery: Int = 0): StreamingQuery = {
+      compactEvery: Int = 0,
+      checkpoint: Option[String] = None): StreamingQuery = {
     require(docs.isStreaming, "LedgerMaintain needs a streaming source")
-    docs.writeStream.outputMode("append").trigger(trigger)
+    val w = docs.writeStream.outputMode("append").trigger(trigger)
+    checkpoint.fold(w)(w.option("checkpointLocation", _))
       .foreachBatch(maintainBatch(dir, compactEvery) _).start()
   }
 

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** SHINGLE-INDEX maintenance under streaming ingest — the online half
@@ -45,14 +44,6 @@ object ShingleMaintain {
       .withColumn("src", lit(batchId))
       .sortWithinPartitions(col("sh")) // row-group stats prune probes
       .write.mode("overwrite").parquet(s"$dir/shingles/batch-$batchId")
-  }
-
-  def start(docs: DataFrame, dir: String,
-      trigger: Trigger = Trigger.ProcessingTime(500),
-      compactEvery: Int = 0): StreamingQuery = {
-    require(docs.isStreaming, "ShingleMaintain needs a streaming source")
-    docs.writeStream.outputMode("append").trigger(trigger)
-      .foreachBatch(maintainBatch(dir, compactEvery) _).start()
   }
 
   /** delete documents from the index (the retention hook). */

@@ -55,6 +55,29 @@ class ViewMemoSpec extends AnyFunSuite {
     } finally raw.unpersist()
   }
 
+  test("a stopped shell leaves nothing of its served session in the view memo") {
+    // a miss first drops entries of stopped sessions and deleted tables,
+    // so the sizes below count this shell's entries alone
+    Tables.perEventsVersion(spark, src, "view-memo-prime")(new Object)
+    val n = Tables.viewMemoSize
+    val shell = new graft.api.HttpShell(spark, src, (T0 + 86400L * 31) * 1000000000L)
+    val port = shell.start()
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      for (q <- Seq(
+          s"/loki/api/v1/query_range?query=${java.net.URLEncoder.encode("""{service_name="svc-1"}""", "UTF-8")}" +
+            s"&start=${T0}000000000&end=${T0 + 86400L}000000000",
+          s"/prometheus/api/v1/query_range?query=purchase&start=$T0&end=${T0 + 86400L}&step=3600")) {
+        val r = client.send(java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:$port$q")).GET().build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200, r.body())
+      }
+      assert(Tables.viewMemoSize > n, "the served session built no views")
+    } finally shell.stop()
+    assert(Tables.viewMemoSize == n)
+  }
+
   test("per-request arrow SQL sessions add nothing to the view memo") {
     // each SQL ticket runs in its own newSession(); memoizing its views
     // would pin that session for the life of the SparkContext

@@ -1,15 +1,15 @@
 package graft.api
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver-side envelopes against the distributed shaping they
   * replaced (kept here as a test-local reference): byte-identical bodies
-  * on hostile inputs, and a served request runs no more Spark jobs than
-  * collecting its lowered frame. */
+  * on hostile inputs, also when shaped in the interpreted session the
+  * HTTP shell serves from, and a served request runs no more Spark jobs
+  * than collecting its lowered frame. */
 class EnvelopeParitySpec extends AnyFunSuite {
 
   private lazy val spark = graft.TestSpark.session
@@ -97,8 +97,8 @@ class EnvelopeParitySpec extends AnyFunSuite {
     "emoji\uD83D\uDE00", "pua\uE000", "full\uFF21", "\uFFFD", "\uD83D\uDE00", "\uE000", "",
     "\u00e9", "z")
 
-  private def frame(schema: StructType, rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  private def frame(schema: StructType, rows: Seq[Row], s: SparkSession): DataFrame =
+    s.createDataFrame(s.sparkContext.parallelize(rows, 3), schema)
 
   private val logSchema = StructType(Seq(
     StructField("timestamp", LongType), StructField("service_name", StringType),
@@ -110,7 +110,13 @@ class EnvelopeParitySpec extends AnyFunSuite {
 
   private val labels = Seq("service_name", "severity_text")
 
-  test("streams envelope matches the distributed shaping on hostile rows") {
+  /** the session an `HttpShell` answers its read routes from */
+  private lazy val servedSession = new HttpShell(spark, dir, 0L).served
+
+  // each hostile case shapes its envelopes from frames of session `s`
+  // and compares them with the reference on the test session
+
+  private def streamsCase(s: SparkSession): Unit = {
     val rnd = new scala.util.Random(7)
     val rows = (0 until 400).map { i =>
       // few timestamps, so many lines tie on time within a stream
@@ -119,15 +125,15 @@ class EnvelopeParitySpec extends AnyFunSuite {
         if (i % 11 == 0) null else hostile(rnd.nextInt(4)),
         if (i % 7 == 0) null else hostile(rnd.nextInt(hostile.size)) + (i % 3))
     }
-    val df = frame(logSchema, rows)
-    assert(ApiJson.lokiStreams(df, labels) == Distributed.lokiStreams(df, labels))
-    assert(ApiJson.lokiStreams(df, Seq("body")) == Distributed.lokiStreams(df, Seq("body")))
-    val empty = frame(logSchema, Nil)
-    assert(ApiJson.lokiStreams(empty, labels) == Distributed.lokiStreams(empty, labels))
+    val (df, ref) = (frame(logSchema, rows, s), frame(logSchema, rows, spark))
+    assert(ApiJson.lokiStreams(df, labels) == Distributed.lokiStreams(ref, labels))
+    assert(ApiJson.lokiStreams(df, Seq("body")) == Distributed.lokiStreams(ref, Seq("body")))
+    val empty = frame(logSchema, Nil, s)
+    assert(ApiJson.lokiStreams(empty, labels) == Distributed.lokiStreams(frame(logSchema, Nil, spark), labels))
     assert(ApiJson.lokiStreams(empty, labels).endsWith(""""result":[]}}"""))
   }
 
-  test("matrix and vector envelopes match on hostile labels and non-finite values") {
+  private def matrixCase(s: SparkSession): Unit = {
     val rnd = new scala.util.Random(11)
     val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
       -0.0, 0.0, 1e-300, 1.5e300, -2.5)
@@ -137,34 +143,45 @@ class EnvelopeParitySpec extends AnyFunSuite {
         if (i % 19 == 0) null else java.lang.Double.valueOf(
           if (i % 2 == 0) special(rnd.nextInt(special.size)) else rnd.nextInt(100) / 4.0))
     }
-    val df = frame(vecSchema, rows)
+    val (df, ref) = (frame(vecSchema, rows, s), frame(vecSchema, rows, spark))
     val by = Seq("service_name")
-    assert(ApiJson.promMatrix(df, by) == Distributed.promMatrix(df, by))
-    assert(ApiJson.promMatrix(df, Nil) == Distributed.promMatrix(df, Nil))
+    assert(ApiJson.promMatrix(df, by) == Distributed.promMatrix(ref, by))
+    assert(ApiJson.promMatrix(df, Nil) == Distributed.promMatrix(ref, Nil))
     // one row per (series, bucket): max_by never meets a tie
-    val vec = frame(vecSchema, hostile.zipWithIndex.flatMap { case (s, i) =>
-      Seq(Row(0L, s, special(i % special.size)), Row(300L, s, i / 3.0),
-        Row(null, s, 9.0), Row(-300L, s, null))
-    } :+ Row(null, "undated", 1.0))
-    assert(ApiJson.promVector(vec, by, 42L) == Distributed.promVector(vec, by, 42L))
-    val empty = frame(vecSchema, Nil)
-    assert(ApiJson.promMatrix(empty, by) == Distributed.promMatrix(empty, by))
-    assert(ApiJson.promVector(empty, by, 42L) == Distributed.promVector(empty, by, 42L))
+    val vecRows = hostile.zipWithIndex.flatMap { case (h, i) =>
+      Seq(Row(0L, h, special(i % special.size)), Row(300L, h, i / 3.0),
+        Row(null, h, 9.0), Row(-300L, h, null))
+    } :+ Row(null, "undated", 1.0)
+    assert(ApiJson.promVector(frame(vecSchema, vecRows, s), by, 42L) ==
+      Distributed.promVector(frame(vecSchema, vecRows, spark), by, 42L))
+    val (empty, emptyRef) = (frame(vecSchema, Nil, s), frame(vecSchema, Nil, spark))
+    assert(ApiJson.promMatrix(empty, by) == Distributed.promMatrix(emptyRef, by))
+    assert(ApiJson.promVector(empty, by, 42L) == Distributed.promVector(emptyRef, by, 42L))
   }
 
-  test("series, tag-values and profile-types envelopes match") {
-    val series = frame(logSchema, hostile.zipWithIndex.map { case (s, i) =>
-      Row(0L, s, if (i % 5 == 0) null else hostile((i * 7) % hostile.size), "b")
-    }).select("service_name", "severity_text").distinct()
-    assert(ApiJson.seriesResponse(series, labels) == Distributed.seriesResponse(series, labels))
-    val tags = frame(StructType(Seq(StructField("value", StringType))), hostile.map(Row(_)))
-    assert(ApiJson.tempoTagValues(tags) == Distributed.tempoTagValues(tags))
-    val types = frame(StructType(Seq(StructField("profile_type", StringType),
+  private def metadataCase(s: SparkSession): Unit = {
+    def series(in: SparkSession) = frame(logSchema, hostile.zipWithIndex.map { case (h, i) =>
+      Row(0L, h, if (i % 5 == 0) null else hostile((i * 7) % hostile.size), "b")
+    }, in).select("service_name", "severity_text").distinct()
+    assert(ApiJson.seriesResponse(series(s), labels) == Distributed.seriesResponse(series(spark), labels))
+    def tags(in: SparkSession) =
+      frame(StructType(Seq(StructField("value", StringType))), hostile.map(Row(_)), in)
+    assert(ApiJson.tempoTagValues(tags(s)) == Distributed.tempoTagValues(tags(spark)))
+    def types(in: SparkSession) = frame(StructType(Seq(StructField("profile_type", StringType),
       StructField("n_samples", LongType), StructField("min_ts", LongType),
       StructField("max_ts", LongType), StructField("n_services", LongType))),
-      hostile.zipWithIndex.map { case (s, i) => Row(s, i.toLong, i * 1000000L, i * 2000000L, 1L) })
-    assert(ApiJson.profileTypes(types) == Distributed.profileTypes(types))
+      hostile.zipWithIndex.map { case (h, i) => Row(h, i.toLong, i * 1000000L, i * 2000000L, 1L) }, in)
+    assert(ApiJson.profileTypes(types(s)) == Distributed.profileTypes(types(spark)))
   }
+
+  test("streams envelope matches the distributed shaping on hostile rows")(streamsCase(spark))
+  test("streams envelope from the served session matches on hostile rows")(streamsCase(servedSession))
+
+  test("matrix and vector envelopes match on hostile labels and non-finite values")(matrixCase(spark))
+  test("matrix and vector envelopes from the served session match on hostile inputs")(matrixCase(servedSession))
+
+  test("series, tag-values and profile-types envelopes match")(metadataCase(spark))
+  test("series, tag-values and profile-types envelopes from the served session match")(metadataCase(servedSession))
 
   test("served envelopes over the signal views match the distributed shaping") {
     val logs = graft.SignalViews.logsTable(spark, dir)
@@ -190,34 +207,7 @@ class EnvelopeParitySpec extends AnyFunSuite {
 
   // ---- job guard ----------------------------------------------------------
 
-  /** Spark jobs started by `f`, bracketed by two marker jobs: the
-    * listener bus delivers in order, so once the closing marker is seen
-    * every job between them has been counted. */
-  private def jobsOf(f: => Unit): Int = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(e.jobId -> Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(l)
-    try {
-      marker("guard-open")
-      f
-      marker("guard-close")
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      import scala.jdk.CollectionConverters._
-      def ids(name: String) = seen.asScala.collect { case (id, `name`) => id }
-      while (ids("guard-close").isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-      val (open, close) = (ids("guard-open").head, ids("guard-close").head)
-      seen.asScala.count { case (id, _) => id > open && id < close }
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsOf(f: => Unit): Int = graft.JobGuard.jobsOf(spark)(f)
 
   test("a served metric request runs no more jobs than collecting its lowered frame") {
     val (s, e) = (T0 * 1000000000L, (T0 + 86400L * 2) * 1000000000L)

@@ -878,6 +878,38 @@ class HttpShellSpec extends AnyFunSuite {
     } finally sh.stop()
   }
 
+  test("demand recording of a base-label query runs no Spark job") {
+    val base = java.nio.file.Files.createTempDirectory("graft-http-demand").toString
+    val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
+    val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
+    val p = sh.start()
+    try {
+      assert(post(p, "/v1/logs", logsPayload("svc-demand", T0 * 1000000000L, 6,
+        attrs = i => Seq("region" -> s"r${i % 3}"))).statusCode() == 200)
+      def qs(text: String) = s"query=${java.net.URLEncoder.encode(text, "UTF-8")}" +
+        s"&start=${T0}000000000&end=${T1}000000000&limit=100"
+      val baseOnly = qs("""sum by (severity_text) (count_over_time({service_name="svc-demand"}[1h]))""")
+      val demanding = qs("""{service_name="svc-demand"} | region != "r0"""")
+      for (q <- Seq(baseOnly, demanding)) {
+        val r = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:$p/loki/api/v1/query_range?$q")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200, r.body())
+      }
+      // served: the landed table is built; recording it again runs nothing
+      val path = "/loki/api/v1/query_range"
+      assert(graft.JobGuard.jobsOf(spark)(sh.recordDemand(path, baseOnly)) == 0)
+      // a query demanding an unpromoted label still flushes its demand
+      def regionDemand() = spark.read.parquet(layout.path("attribute_stats"))
+        .filter(col("attr") === "region").agg(sum("n_queries")).head().getLong(0)
+      val before = regionDemand()
+      sh.recordDemand(path, demanding)
+      assert(regionDemand() == before + 1)
+      assert(spark.read.parquet(layout.path("attribute_stats"))
+        .filter(col("attr") =!= "region").count() == 0)
+    } finally sh.stop()
+  }
+
   test("rewrites refresh exported Iceberg metadata: no dangling file paths") {
     val base = java.nio.file.Files.createTempDirectory("graft-http-icecoh").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
