@@ -17,7 +17,7 @@ import graft.storage.Storage
   */
 object SignalTables {
 
-  private def materialize(s: SparkSession, dir: String, table: String,
+  private def materialize(dir: String, table: String,
       df: => DataFrame,
       partitionCols: Seq[String] = Seq("date_day", "hour")): String = {
     def layout(base: String) = Storage.TableLayout(base, "tenant0", "default")
@@ -33,7 +33,7 @@ object SignalTables {
 
   /** stored gen-2 logs (full Schemas.logs layout incl. partition cols). */
   def storedLogsPath(s: SparkSession, dir: String): String =
-    materialize(s, dir, "logs",
+    materialize(dir, "logs",
       Storage.withPartitionCols(SignalViews.logsGen2Df(s, dir)))
 
   def storedLogs(s: SparkSession, dir: String): DataFrame =
@@ -52,7 +52,7 @@ object SignalTables {
     * materialized) — the table PromotedAttrRule resolves raw map probes
     * against. */
   def storedPromotedLogsPath(s: SparkSession, dir: String): String =
-    materialize(s, dir, "logs_promoted",
+    materialize(dir, "logs_promoted",
       graft.storage.AttrPromotion.promote(
         Storage.withPartitionCols(SignalViews.logsGen2Df(s, dir)), Seq("region"))
         .drop("hour"),
@@ -70,7 +70,7 @@ object SignalTables {
     * (tests-integration/benches/trace_index_scaling.rs:1-10). A lookup
     * prunes 255/256 directories, then bloom-skips row groups. */
   def storedTracesPath(s: SparkSession, dir: String): String =
-    materialize(s, dir, "traces",
+    materialize(dir, "traces",
       SignalViews.tracesGen2Df(s, dir)
         .withColumn("prefix", substring(col("trace_id"), 1, 2)),
       partitionCols = Seq("prefix"))
@@ -102,11 +102,11 @@ object SignalTables {
   // — day-level dirs keep the file count and the write shuffle 24×
   // smaller than the logs' hour layout, with identical pruning power
   def storedMetricsGaugePath(s: SparkSession, dir: String): String =
-    materialize(s, dir, "metrics_gauge",
+    materialize(dir, "metrics_gauge",
       promoted(SignalViews.metricsGaugeDf(s, dir)), partitionCols = Seq("date_day"))
 
   def storedMetricsSumPath(s: SparkSession, dir: String): String =
-    materialize(s, dir, "metrics_sum",
+    materialize(dir, "metrics_sum",
       promoted(SignalViews.metricsSumDf(s, dir)), partitionCols = Seq("date_day"))
 
   def storedMetricsUnion(s: SparkSession, dir: String): DataFrame = {
@@ -122,7 +122,7 @@ object SignalTables {
     * downsampling job writing through the same storage path (day
     * partitions). Dashboards re-aggregate cells instead of raw samples. */
   def storedRollupPath(s: SparkSession, dir: String): String =
-    materialize(s, dir, "metrics_rollup_1h",
+    materialize(dir, "metrics_rollup_1h",
       Storage.downsample(storedMetricsUnion(s, dir), 3600L,
         Seq("metric_name", "service_name"), "label_eid"),
       partitionCols = Seq("date_day"))

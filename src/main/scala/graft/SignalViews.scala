@@ -72,7 +72,7 @@ object SignalViews {
     * service target with its deterministic env/region data labels — the
     * mapping both engines restate as CASE arithmetic over the service
     * ordinal. */
-  def targetInfoDf(s: SparkSession, dir: String): DataFrame =
+  def targetInfoDf(s: SparkSession): DataFrame =
     s.range(8).select(
       concat(lit("svc-"), col("id")).as("service_name"),
       when(pmod(col("id"), lit(2)) === 0, "prod").otherwise("dev").as("env"),
@@ -83,7 +83,7 @@ object SignalViews {
       df = metricsDf(s, dir),
       seriesLabels = Seq("service_name"),
       tieBreak = Seq("event_id"),
-      infoLabels = Some(targetInfoDf(s, dir))))
+      infoLabels = Some(targetInfoDf(s))))
 
   /** events → cumulative histogram-bucket series: one row per (event, le)
     * with le ∈ {50,100,150,+Inf} and value<=le — the classic `_bucket`
@@ -197,7 +197,6 @@ object SignalViews {
 
   private def logsGen2DfInternal(s: SparkSession, dir: String,
       resolutionCols: Boolean): DataFrame = {
-    import org.apache.spark.sql.types.{MapType, StringType}
     val lv = gen2LabelExprs
     val ts = unix_micros(col("ts_us")) * 1000
     val traceId = md5(col("event_id").cast("string"))

@@ -117,6 +117,31 @@ object Tables {
   def documents(s: SparkSession, dir: String): DataFrame = load(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")
 
+  /** [first,last] epoch-day bounds of the events table, from parquet
+    * FOOTER statistics alone (storage.Footers — metadata I/O, no Spark
+    * job). This is how operators that need a dense day spine or a
+    * phantom-tail clamp derive it from the DATA rather than pinning a
+    * fixture literal: the same query is correct on any dataset, and at
+    * 100 TB the bounds probe stays O(files) footer reads. Cached per dir
+    * at the data version of `events.parquet`, so a rewrite in-process
+    * moves the bounds. */
+  private val dayBoundsCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, (Long, Long))]()
+  def eventsDayBounds(s: SparkSession, dir: String): (Long, Long) = {
+    val path = s"$dir/events.parquet"
+    val version = graft.storage.LocalCache.dataVersion(path)
+    dayBoundsCache.compute(dir, (_, cached) =>
+      if (cached != null && cached._1 == version) cached
+      else {
+        val (mnUs, mxUs) = graft.storage.Footers
+          .timestampMicrosRange(s, path, "ts")
+          .getOrElse(throw new IllegalStateException(
+            s"no footer stats for events.ts under $dir"))
+        version -> (Math.floorDiv(Math.floorDiv(mnUs, 1000000L), 86400L),
+          Math.floorDiv(Math.floorDiv(mxUs, 1000000L), 86400L))
+      })._2
+  }
+
   /** events with `ts` as Long nanos plus derived `ts_us` (µs timestamp,
     * identical to what DuckDB sees) and `ts_sec` (epoch seconds, Long).
     *
@@ -127,25 +152,6 @@ object Tables {
     * is invisible downstream. The NTZ wall time is interpreted as UTC
     * (session tz is pinned in `load`), matching DuckDB's naive-timestamp
     * reading of the same file. */
-  /** [first,last] epoch-day bounds of the events table, from parquet
-    * FOOTER statistics alone (storage.Footers — metadata I/O, no Spark
-    * job). This is how operators that need a dense day spine or a
-    * phantom-tail clamp derive it from the DATA rather than pinning a
-    * fixture literal: the same query is correct on any dataset, and at
-    * 100 TB the bounds probe stays O(files) footer reads. Cached per
-    * (dir) — the testdata is immutable within a run. */
-  private val dayBoundsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-  def eventsDayBounds(s: SparkSession, dir: String): (Long, Long) =
-    dayBoundsCache.computeIfAbsent(dir, { d =>
-      val (mnUs, mxUs) = graft.storage.Footers
-        .timestampMicrosRange(s, s"$d/events.parquet", "ts")
-        .getOrElse(throw new IllegalStateException(
-          s"no footer stats for events.ts under $d"))
-      (Math.floorDiv(Math.floorDiv(mnUs, 1000000L), 86400L),
-        Math.floorDiv(Math.floorDiv(mxUs, 1000000L), 86400L))
-    })
-
   def events(s: SparkSession, dir: String): DataFrame = {
     val raw = load(s, dir, "events")
     val nanos = raw.schema("ts").dataType match {

@@ -51,7 +51,6 @@ object WeekProof {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     // ---- scaled corpora (ScaleProof's replication rule) --------------
     val marker = new java.io.File(dst, s"_built_${copies}x_docs_vecs")

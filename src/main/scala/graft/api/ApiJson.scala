@@ -158,6 +158,12 @@ object ApiJson {
   def labelsResponse(values: Seq[String]): String =
     s"""{"status":"success","data":[${values.map(jstr).mkString(",")}]}"""
 
+  /** label-names envelope: the always-present names merged with the
+    * discovered ones, deduplicated, in Spark's string order (the order
+    * every other discovery route returns) */
+  def labelNamesResponse(fixed: Seq[String], found: Seq[String]): String =
+    labelsResponse((fixed ++ found).distinct.sorted(utf8Order))
+
   /** Loki/Prometheus series envelope: `data` = one label-map object per
     * distinct series, rendered by Spark per row (`to_json`). The
     * distinct-series frame is discovery-capped upstream. */

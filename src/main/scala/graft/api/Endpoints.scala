@@ -274,8 +274,7 @@ object Endpoints {
         map_keys(col("resource_attributes")))).as("label"))
       .distinct().orderBy(col("label")).limit(1000)
       .collect().map(_.getString(0)).toSeq
-    ApiJson.labelsResponse(
-      (Seq("service_name", "severity_text") ++ attrKeys).distinct.sorted)
+    ApiJson.labelNamesResponse(Seq("service_name", "severity_text"), attrKeys)
   }
 
   /** GET /loki/api/v1/label/{name}/values (reference logql.rs:306):
@@ -458,7 +457,7 @@ object Endpoints {
   }
 
   /** GET /prometheus/api/v1/labels (reference promql.rs:46). */
-  def promLabels(spark: SparkSession, dir: String, qs: String): String =
+  def promLabels: String =
     ApiJson.labelsResponse(Seq("__name__", "service_name"))
 
   /** GET /prometheus/api/v1/label/{name}/values. */

@@ -910,7 +910,7 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
     case "/prometheus/api/v1/query" =>
       Some(Endpoints.promInstantQuery(served, dir, qs, nowNs / 1000000000L))
     case "/prometheus/api/v1/labels" =>
-      Some(Endpoints.promLabels(served, dir, qs))
+      Some(Endpoints.promLabels)
     case PromLabelValues(name) =>
       Some(Endpoints.promLabelValues(served, dir, dec(name)))
     case "/prometheus/api/v1/series" =>
@@ -1050,7 +1050,7 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
     * acceptor, then lands via the idempotent batch sink (per-request
     * batch ids). */
   private def ingestRoute(path: String, qs: String,
-      body: Array[Byte], contentType: String = ""): Option[String] = {
+      body: Array[Byte], contentType: String): Option[String] = {
     def layout = ingest.getOrElse(
       throw Endpoints.HttpError(503, "ingest not configured"))
     def payloadDf = {
@@ -1625,7 +1625,7 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
   // the UI crate's SPA page (driver-scoped out); every endpoint it
   // calls is served here. --------------------------------------------
 
-  private def oauthErr(status: Int, error: String, desc: String): String =
+  private def oauthErr(error: String, desc: String): String =
     s"""{"error":${ApiJson.jstr(error)},""" +
       s""""error_description":${ApiJson.jstr(desc)}}"""
 
@@ -1648,14 +1648,14 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
       .map(_.asScala.toSeq).getOrElse(Seq.empty)
     AuthTokens.sessionTokenFromCookies(cookies) match {
       case None =>
-        Left(401 -> oauthErr(401, "login_required", "no active session"))
+        Left(401 -> oauthErr("login_required", "no active session"))
       case Some(tok) =>
         catalog.getValidSession(AuthTokens.hashToken(tok),
             System.currentTimeMillis()) match {
-          case None => Left(401 -> oauthErr(401, "login_required",
+          case None => Left(401 -> oauthErr("login_required",
             "session is invalid or expired"))
           case Some(s) => catalog.getUser(s.userId).toRight(
-            401 -> oauthErr(401, "login_required", "session user not found"))
+            401 -> oauthErr("login_required", "session user not found"))
         }
     }
   }
@@ -1732,28 +1732,28 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
           // anonymous-caller bounds (oauth.rs:216-220: the endpoint is
           // unauthenticated, so registration size is capped)
           if (uris.isEmpty)
-            return 400 -> oauthErr(400, "invalid_redirect_uri",
+            return 400 -> oauthErr("invalid_redirect_uri",
               "at least one redirect_uri is required")
           if (uris.length > 8)
-            return 400 -> oauthErr(400, "invalid_client_metadata",
+            return 400 -> oauthErr("invalid_client_metadata",
               "at most 8 redirect_uris are allowed")
           if (uris.exists(_.length > 2048))
-            return 400 -> oauthErr(400, "invalid_redirect_uri",
+            return 400 -> oauthErr("invalid_redirect_uri",
               "redirect_uri is too long")
           val name = optText(b, "client_name")
           if (name.exists(_.length > 256))
-            return 400 -> oauthErr(400, "invalid_client_metadata",
+            return 400 -> oauthErr("invalid_client_metadata",
               "client_name must be at most 256 characters")
           val badUri = uris.find(!validRedirectUri(_))
           if (badUri.isDefined)
-            return 400 -> oauthErr(400, "invalid_redirect_uri",
+            return 400 -> oauthErr("invalid_redirect_uri",
               s"redirect_uri is not a valid absolute http(s) URL: ${badUri.get}")
           val grants = Option(b.get("grant_types")).filter(_.isArray)
             .map(a => (0 until a.size()).map(a.get(_).asText))
           val c = catalog.registerOAuthClient(name, uris, grants,
             optText(b, "scope")) match {
             case Left((st, m)) =>
-              return st -> oauthErr(st, "invalid_client_metadata", m)
+              return st -> oauthErr("invalid_client_metadata", m)
             case Right(c0) => c0
           }
           // public PKCE client, never a secret (oauth.rs:266)
@@ -1775,13 +1775,13 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
           val p = Endpoints.parseQuery(
             Option(ex.getRequestURI.getRawQuery).getOrElse(""))
           val clientId = p.getOrElse("client_id",
-            return 400 -> oauthErr(400, "invalid_request", "missing client_id"))
+            return 400 -> oauthErr("invalid_request", "missing client_id"))
           val client = catalog.getOAuthClient(clientId).getOrElse(
-            return 400 -> oauthErr(400, "invalid_client", "unknown client_id"))
+            return 400 -> oauthErr("invalid_client", "unknown client_id"))
           val redirectUri = p.getOrElse("redirect_uri",
-            return 400 -> oauthErr(400, "invalid_request", "missing redirect_uri"))
+            return 400 -> oauthErr("invalid_request", "missing redirect_uri"))
           if (!client.redirectUris.contains(redirectUri))
-            return 400 -> oauthErr(400, "invalid_request",
+            return 400 -> oauthErr("invalid_request",
               "redirect_uri is not registered for this client")
           val stateParam = p.getOrElse("state", "")
           if (!p.get("response_type").contains("code")) {
@@ -1822,7 +1822,7 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
             Option(ex.getRequestURI.getRawQuery).getOrElse(""))
           val client = p.get("client_id").flatMap(catalog.getOAuthClient)
             .getOrElse(return 400 ->
-              oauthErr(400, "invalid_client", "unknown client_id"))
+              oauthErr("invalid_client", "unknown client_id"))
           val tenants =
             if (user.instanceAdmin)
               (catalog.configTenantIds.toSeq ++
@@ -1847,15 +1847,15 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
           val b = parseBody(ex)
           val clientId = optText(b, "client_id").getOrElse("")
           val client = catalog.getOAuthClient(clientId).getOrElse(
-            return 400 -> oauthErr(400, "invalid_client", "unknown client_id"))
+            return 400 -> oauthErr("invalid_client", "unknown client_id"))
           val redirectUri = optText(b, "redirect_uri").getOrElse("")
           if (!client.redirectUris.contains(redirectUri))
-            return 400 -> oauthErr(400, "invalid_request",
+            return 400 -> oauthErr("invalid_request",
               "redirect_uri is not registered for this client")
           val challenge = optText(b, "code_challenge").getOrElse("")
           if (challenge.isEmpty ||
               optText(b, "code_challenge_method").getOrElse("S256") != "S256")
-            return 400 -> oauthErr(400, "invalid_request",
+            return 400 -> oauthErr("invalid_request",
               "a S256 code_challenge is required")
           val stateParam = optText(b, "state").getOrElse("")
           val approved = Option(b.get("approved")).exists(_.asBoolean(false))
@@ -1870,16 +1870,16 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
             (catalog.getTenant(tenant).isDefined ||
               catalog.configTenantIds.contains(tenant)))
           if (!grantable)
-            return 403 -> oauthErr(403, "access_denied",
+            return 403 -> oauthErr("access_denied",
               "not a member of the selected tenant")
           // RFC 8707 audience binding: this shell serves no configured
           // MCP resource, so a client-supplied resource cannot choose
           // its own audience (oauth.rs:553 the (Some, None) arm)
           if (optText(b, "resource").isDefined)
-            return 400 -> oauthErr(400, "invalid_target",
+            return 400 -> oauthErr("invalid_target",
               "this server does not serve a configured MCP resource")
           val scopes = grantedReadScopes(optText(b, "scope")).getOrElse(
-            return 400 -> oauthErr(400, "invalid_scope",
+            return 400 -> oauthErr("invalid_scope",
               "requested scope contains no supported read scope"))
           val code = AuthTokens.generateAuthCode()
           catalog.createAuthCode(AuthTokens.hashToken(code), clientId,
@@ -1902,57 +1902,57 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
           form.getOrElse("grant_type", "") match {
             case "authorization_code" =>
               val code = form.getOrElse("code",
-                return 400 -> oauthErr(400, "invalid_request", "missing code"))
+                return 400 -> oauthErr("invalid_request", "missing code"))
               val verifier = form.getOrElse("code_verifier",
-                return 400 -> oauthErr(400, "invalid_request",
+                return 400 -> oauthErr("invalid_request",
                   "missing code_verifier"))
               val grant = catalog.consumeAuthCode(
                 AuthTokens.hashToken(code), nowMs).getOrElse(
-                return 400 -> oauthErr(400, "invalid_grant",
+                return 400 -> oauthErr("invalid_grant",
                   "authorization code is invalid or expired"))
               val clientId = form.getOrElse("client_id",
-                return 400 -> oauthErr(400, "invalid_request",
+                return 400 -> oauthErr("invalid_request",
                   "missing client_id"))
               if (clientId != grant.clientId)
-                return 400 -> oauthErr(400, "invalid_grant",
+                return 400 -> oauthErr("invalid_grant",
                   "client_id does not match the authorization code")
               val redirectUri = form.getOrElse("redirect_uri",
-                return 400 -> oauthErr(400, "invalid_request",
+                return 400 -> oauthErr("invalid_request",
                   "missing redirect_uri"))
               if (redirectUri != grant.redirectUri)
-                return 400 -> oauthErr(400, "invalid_grant",
+                return 400 -> oauthErr("invalid_grant",
                   "redirect_uri does not match the authorization code")
               if (!AuthTokens.verifyPkceS256(verifier, grant.codeChallenge))
-                return 400 -> oauthErr(400, "invalid_grant",
+                return 400 -> oauthErr("invalid_grant",
                   "PKCE verification failed")
               200 -> issueTokens(grant.clientId, grant.userId,
                 grant.tenant, grant.scopes, grant.resource, nowMs)
             case "refresh_token" =>
               val refresh = form.getOrElse("refresh_token",
-                return 400 -> oauthErr(400, "invalid_request",
+                return 400 -> oauthErr("invalid_request",
                   "missing refresh_token"))
               val grant = catalog.getValidRefreshToken(
                 AuthTokens.hashToken(refresh), nowMs).getOrElse(
-                return 400 -> oauthErr(400, "invalid_grant",
+                return 400 -> oauthErr("invalid_grant",
                   "refresh token is invalid or expired"))
               val clientId = form.getOrElse("client_id",
-                return 400 -> oauthErr(400, "invalid_request",
+                return 400 -> oauthErr("invalid_request",
                   "missing client_id"))
               if (clientId != grant.clientId)
-                return 400 -> oauthErr(400, "invalid_grant",
+                return 400 -> oauthErr("invalid_grant",
                   "client_id does not match the refresh token")
               // the user and their CURRENT membership are re-checked on
               // every rotation (authenticator.rs:214-238) — a deleted
               // user or revoked membership cannot keep access alive
               // indefinitely through the refresh chain
               tokenUserCheck(grant).foreach { case (_, m) =>
-                return 400 -> oauthErr(400, "invalid_grant", m) }
+                return 400 -> oauthErr("invalid_grant", m) }
               // rotate BEFORE issuing (OAuth 2.1 §4.3.1)
               catalog.revokeRefreshToken(AuthTokens.hashToken(refresh))
               200 -> issueTokens(grant.clientId, grant.userId,
                 grant.tenant, grant.scopes, grant.resource, nowMs)
             case other =>
-              400 -> oauthErr(400, "unsupported_grant_type",
+              400 -> oauthErr("unsupported_grant_type",
                 s"unsupported grant_type: $other")
           }
         case _ => 404 -> errJson("not found: " + path)
@@ -1963,9 +1963,9 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
       // masquerading as a 500
       case e: scala.runtime.NonLocalReturnControl[_] => throw e
       case e: Endpoints.HttpError =>
-        e.status -> oauthErr(e.status, "invalid_client_metadata", e.message)
+        e.status -> oauthErr("invalid_client_metadata", e.message)
       case e: Throwable =>
-        500 -> oauthErr(500, "server_error",
+        500 -> oauthErr("server_error",
           Option(e.getMessage).getOrElse(e.getClass.getName))
     }
 

@@ -628,7 +628,7 @@ object Lowering {
     * the reference shares its binary eval between the two languages the
     * same way (logs.rs:906-1100 ↔ metrics.rs:415-909). */
   private def lowerMetricVec(table: LogsTable, expr: MetricExpr,
-      timeRange: Option[(Long, Long)] = None): graft.promql.Eval.Vec = {
+      timeRange: Option[(Long, Long)]): graft.promql.Eval.Vec = {
     import graft.promql.Eval
     expr match {
       case RangeExpr(agg) =>
@@ -752,7 +752,7 @@ object Lowering {
     * `offset d` shifts the data window back and relabels buckets onto the
     * query grid (same model as the PromQL side). */
   private def lowerRange(table: LogsTable, agg: RangeAgg, groupLabels: Seq[String],
-      timeRange: Option[(Long, Long)] = None): DataFrame = {
+      timeRange: Option[(Long, Long)]): DataFrame = {
     val ctx = finalCtx(table, agg.inner.stages)
     val offNs = agg.offsetSec * 1000000000L
     val filtered = lowerFilter(table, agg.inner,
@@ -842,7 +842,7 @@ object Lowering {
     * — two chained groupBys, both shuffle on their keys (SURVEY §2.4).
     */
   private def lowerVector(table: LogsTable, vagg: VectorAgg,
-      timeRange: Option[(Long, Long)] = None): DataFrame = {
+      timeRange: Option[(Long, Long)]): DataFrame = {
     val by =
       if (vagg.by.nonEmpty) vagg.by
       else if (vagg.without.nonEmpty) table.seriesLabels.filterNot(vagg.without.contains)

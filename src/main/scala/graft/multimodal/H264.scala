@@ -1212,7 +1212,6 @@ object H264 {
     rej(r.ue() != 1) // deblocking MUST be disabled (subset)
     java.util.Arrays.fill(tc, 0)
     val rec = new Array[Int](width * height)
-    def clip(v: Int) = math.max(0, math.min(255, v))
     // nC per 9.2.1: average of available neighbor 4x4 TotalCoeffs
     def nCof(bx: Int, by: Int): Int = {
       val hasL = bx > 0; val hasT = by > 0

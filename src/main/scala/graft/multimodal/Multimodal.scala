@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -678,7 +678,7 @@ object Multimodal {
     if (bytes.length < 13 || new String(bytes.slice(0, 4), "ASCII") != "GIF8")
       return None
     var i = 6
-    val sw = le16(i); val sh = le16(i + 2); val flags = u8(i + 4)
+    val flags = u8(i + 4)
     i += 7
     var palette: Array[Int] = Array.empty // packed 0xRRGGBB
     if ((flags & 0x80) != 0) {

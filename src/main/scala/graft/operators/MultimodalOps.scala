@@ -1401,7 +1401,7 @@ object MultimodalOps {
   }
 
   /** cluster + survivor rollup over a fingerprint frame (doc_id, b1..b4,
-    * fp): band-join edges → pointer-jump connected components → one row
+    * fp): band-join edges → connected components → one row
     * per cluster (singletons labeled by their own id), survivor = min
     * member (== the cluster label by min-propagation), its fingerprint
     * carried via the doc_id == cluster_id pick. Shared by q371 (WAV
@@ -1708,7 +1708,7 @@ object MultimodalOps {
     // r10: PAIR-LIST near-dup reporting is quadratic within dup
     // clusters for ANY LSH — the operator a 100 TB pipeline exposes is
     // clusters). The q351 band-join edge set routes through the
-    // pointer-jump connected-components closure (q127's machinery);
+    // connected-components closure (q127's machinery);
     // every fingerprinted waveform lands in exactly one cluster
     // (singletons labeled by their own id), the survivor is the min
     // member (== the cluster label by min-propagation), and its

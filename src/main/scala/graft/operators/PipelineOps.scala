@@ -32,8 +32,6 @@ import graft.Tables
 object PipelineOps {
   type Q = (SparkSession, String) => DataFrame
 
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 18))).cast(DoubleType)
-
   // ---- shared embedding shapes (array-native, never per-dimension rows) --
 
   /** embeddings quantized to 1e-6 BIGINT arrays + the squared norm — one
@@ -274,10 +272,10 @@ object PipelineOps {
         .select(col("cell").as("c_id"), col("cv"), col("cn"), col("n_members"))
     val seeds = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("c_id"), col("vq").as("cv"), col("nrm").as("cn"))
-    var cents = seeds.withColumn("n_members", lit(1L))
-    for (_ <- 0 until iters)
-      cents = refine(assignTo(cents.drop("n_members")))
-    cents
+    Iterate.rounds(seeds.withColumn("n_members", lit(1L)), iters,
+        checkpointEvery = 0) { (cents, _) =>
+      refine(assignTo(cents.drop("n_members")))
+    }
   }
 
   /** each doc's DISTINCT winnowed min-hashes (the q29 fingerprint set
@@ -368,14 +366,9 @@ object PipelineOps {
   /** tokens = whitespace split; Spark array indexing is 0-based. */
   private val toksExpr = "split(text, ' ')"
 
-  /** word 3-shingles, joined by spaces; empty if <3 tokens. */
-  private val shinglesExpr =
-    s"""CASE WHEN size($toksExpr) >= 3 THEN
-       |  transform(sequence(0, size($toksExpr) - 3),
-       |            i -> concat_ws(' ', $toksExpr[i], $toksExpr[i+1], $toksExpr[i+2]))
-       |ELSE array() END""".stripMargin
-
-  /** DuckDB twin (1-based list indexing, range(a,b) exclusive). */
+  /** word 3-shingles, joined by spaces, empty if < 3 tokens, in DuckDB
+    * SQL (1-based list indexing, range(a,b) exclusive): the oracle twin
+    * of `shinglesFromToks`. */
   private val shinglesSql =
     """CASE WHEN len(string_split(text,' ')) >= 3 THEN
       |  [concat_ws(' ', string_split(text,' ')[i], string_split(text,' ')[i+1],
@@ -458,19 +451,19 @@ object PipelineOps {
   }
 
   /** verified near-dup edge set materialized ONCE per (dir, threshold) to
-    * temp parquet — iterative consumers (q234's pointer jumping) reference
-    * the result 2^rounds times in one plan, and without materialization
-    * each reference re-executes the full shingle join (measured 108 s at
-    * sf0.1 vs ~2 s materialized). Same pattern as `docShinglesStored`. */
+    * temp parquet: q127 and q234's labels both start from it, and the
+    * shingle join behind it is the expensive part (an iterative consumer
+    * that re-derived it every round measured 108 s at sf0.1 vs ~2 s
+    * materialized). Same pattern as `docShinglesStored`. */
   private[graft] def jaccardEdgesStored(s: SparkSession, dir: String, threshold: Double): DataFrame =
     s.read.parquet(graft.storage.LocalCache.stored(s"dup_edges|$threshold", dir) { p =>
       jaccardPairs(s, dir, threshold).select(col("doc_a"), col("doc_b"))
         .write.mode("overwrite").parquet(p)
     })
 
-  /** component LABELS materialized once per (dir, threshold), like the
-    * edge set above: q234/q266/q267 all fold the same pointer-jump
-    * closure, and the iterative rounds (localCheckpoint actions) are the
+  /** component LABELS materialized once per (dir, threshold, data
+    * version), like the edge set above: q234/q266/q267 all fold the same
+    * exact closure (`connectedComponents`), and its rounds are the
     * expensive part — computing them once and reading (id, lab) parquet
     * after is the same plan-reuse discipline, one level up. */
   private[graft] def componentLabelsStored(s: SparkSession, dir: String,
@@ -478,7 +471,8 @@ object PipelineOps {
     s.read.parquet(graft.storage.LocalCache.stored(s"dup_labels|$threshold", dir) { p =>
       val e0 = jaccardEdgesStored(s, dir, threshold)
       val sym = e0.union(e0.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      pointerJumpComponents(sym, rounds = 4)
+      connectedComponents(sym.toDF("u", "v"))
+        .select(col("id"), col("component").as("lab"))
         .write.mode("overwrite").parquet(p)
     })
 
@@ -487,25 +481,10 @@ object PipelineOps {
     * (cell, n_id, nv, nn). Deterministic integer centroids, so the index
     * content is identical on any engine/partitioning. */
   private def ivfIndex(e: DataFrame, k: Int = 16): (DataFrame, DataFrame) = {
-    val seeds = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("vq").as("cv"), col("nrm").as("cn"))
-    val members = e.crossJoin(broadcast(centsArr(seeds)))
-      .select(col("vec_id"), col("vq"),
-        element_at(scoreArr, 1).getField("c_id").as("cell"))
-    val refined = members
-      .select(col("cell"), posexplode(col("vq")).as(Seq("pos", "v")))
-      .groupBy(col("cell"), col("pos"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("cnt"))
-      .withColumn("cv_i", round(col("s").cast(DoubleType) / col("cnt")).cast(LongType))
-      .groupBy(col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv_i")))),
-        x => x.getField("cv_i")).as("cv"))
-      .withColumn("cn", aggregate(col("cv"), lit(0L), (a, x) => a + x * x))
-      .select(col("cell").as("c_id"), col("cv"), col("cn"))
-      // k tiny rows, but the lineage above is a full Lloyd round over
-      // the corpus — materialize once: every caller broadcasts the
-      // centroids into at least two joins (assignment + probe)
-      .localCheckpoint()
+    // k tiny rows, but their lineage is a full Lloyd round over the
+    // corpus — materialize once: every caller broadcasts the centroids
+    // into at least two joins (assignment + probe)
+    val refined = kmeansCentroids(e, k, 1).drop("n_members").localCheckpoint()
     val assigned = e.crossJoin(broadcast(centsArr(refined)))
       .select(col("vec_id").as("n_id"),
         element_at(scoreArr, 1).getField("c_id").as("cell"),
@@ -2179,15 +2158,12 @@ object PipelineOps {
           expr("(1000000 * n_docs) div (sum(n_docs) OVER (PARTITION BY lang))"))
     }),
 
-    // Near-dup CLUSTERS — same component semantics as q127, different
-    // mechanism: q127's `connectedComponents` is Pregel-style (driver
-    // loop + per-round convergence probe), while this is FIXED-ROUND
-    // pointer jumping — k rounds of (neighbor-min ∘ label-of-label)
-    // cover chains far beyond 2^k hops with a job graph known up front
-    // (no data-dependent control flow). The oracle's recursive CTE
-    // computes the true closure, so the fixed rounds are provably enough
-    // on this graph or the gate fails; PipelineSpec pins convergence on
-    // a diameter-12 path graph. Canonical doc = cluster min (q20's rule).
+    // Near-dup CLUSTERS — q127's components, read back from the labels
+    // stored once per data version (`componentLabelsStored`, shared with
+    // q266/q267). The labels are the exact closure, as the oracle's
+    // recursive CTE computes it; a graph too deep for the round cap
+    // fails loudly instead of under-merging. Canonical doc = cluster
+    // min (q20's rule).
     "q234_dup_clusters" -> ((s, dir) => {
       componentLabelsStored(s, dir, 0.5)
         .groupBy(col("lab").as("cluster_id"))
@@ -2198,7 +2174,7 @@ object PipelineOps {
     // tossed per near-dup CLUSTER, not per document, so an eval doc can
     // never have a near-duplicate in train — the contamination mode a
     // per-doc split (q166) cannot prevent. Composes the q234 component
-    // labels (banded candidate gen, pointer jumping) with the md5-
+    // labels (banded candidate gen, connected components) with the md5-
     // threshold coin; singletons are their own cluster. One label join on
     // doc_id — scales exactly as the dedup family does. PipelineSpec
     // proves the guarantee itself: zero near-dup edges cross the split.
@@ -2592,11 +2568,12 @@ object PipelineOps {
     // edge set (q21's pairs), via iterative min-label propagation. Each
     // round is one shuffle join + hash agg over only the docs that appear
     // in some near-dup pair — a vanishing fraction of the corpus — and
-    // localCheckpoint truncates the lineage so the plan does not grow
-    // with the iteration count. Rounds needed = component diameter;
+    // each round's checkpoint truncates the lineage so the plan does not
+    // grow with the iteration count. Rounds needed = component diameter;
     // near-dup components are clique-like, so a handful converge. The
-    // driver-side loop is Pregel-style orchestration (the convergence
-    // probe is an isEmpty on the tiny label frame, not a data collect).
+    // loop is `Iterate.untilStable`, Pregel-style orchestration: the
+    // convergence flag is observed inside each round's checkpoint job,
+    // never a separate job or a data collect.
     // 100 TB upgrade path: large-star/small-star two-hop contraction,
     // O(log n) rounds; the per-round join shape is identical.
     "q127_dedup_components" -> ((s, dir) => {
@@ -4119,10 +4096,11 @@ object PipelineOps {
           sqrt(col("an").cast(DoubleType) * col("bn").cast(DoubleType)))
         .select(col("a_id"), col("b_id"), col("sim")).localCheckpoint()
       val base = cand.select(col("n_id"), col("rel"))
-      var selected = base.orderBy(col("rel").desc, col("n_id").asc).limit(1)
+      val first = base.orderBy(col("rel").desc, col("n_id").asc).limit(1)
         .select(col("n_id"), col("rel"), lit(0.0).as("maxsim"),
           lit(1).as("rank"))
-      for (i <- 2 to 5) {
+      // round r picks rank r + 1
+      Iterate.rounds(first, 4, checkpointEvery = 1) { (selected, r) =>
         val selIds = selected.select(col("n_id").as("s_id"))
         val pick = base
           .join(selIds, col("n_id") === col("s_id"), "left_anti")
@@ -4130,10 +4108,9 @@ object PipelineOps {
             .select(col("a_id"), col("sim")), col("n_id") === col("a_id"))
           .groupBy(col("n_id"), col("rel")).agg(max(col("sim")).as("maxsim"))
           .orderBy((col("rel") - col("maxsim")).desc, col("n_id").asc).limit(1)
-          .select(col("n_id"), col("rel"), col("maxsim"), lit(i).as("rank"))
-        selected = selected.unionByName(pick).localCheckpoint()
-      }
-      selected.withColumn("mmr", (col("rel") - col("maxsim")) / lit(2.0))
+          .select(col("n_id"), col("rel"), col("maxsim"), lit(r + 1).as("rank"))
+        selected.unionByName(pick)
+      }.withColumn("mmr", (col("rel") - col("maxsim")) / lit(2.0))
         .select(col("rank"), col("n_id"), col("rel"), col("maxsim"),
           col("mmr"))
     }),
@@ -4427,25 +4404,23 @@ object PipelineOps {
         .union(edges.select(col("dst").as("node"))).distinct()
         .localCheckpoint()
       val nn = nodes.agg(count(lit(1)).as("n"))
-      var r = nodes.crossJoin(broadcast(nn))
+      val r0 = nodes.crossJoin(broadcast(nn))
         .select(col("node"), expr(s"$S div n").as("pr")).localCheckpoint()
-      for (i <- 1 to 8) {
+      // lineage cut every SECOND round: one checkpoint job buys two
+      // rounds of truncation (plans stay O(1); r15 — per-round
+      // checkpoints were half the round latency, and at 100 TB the
+      // same halving applies to the checkpoint I/O)
+      Iterate.rounds(r0, 8, checkpointEvery = 2) { (r, _) =>
         val inflow = edgesD
           .join(broadcast(r.withColumnRenamed("node", "src")), "src")
           .withColumn("c", expr("pr div outd"))
           .groupBy(col("dst").as("node")).agg(sum(col("c")).as("inflow"))
-        r = nodes.join(inflow, Seq("node"), "left_outer")
+        nodes.join(inflow, Seq("node"), "left_outer")
           .crossJoin(broadcast(nn))
           .select(col("node"),
             expr(s"($S div n) * 15 div 100 + " +
               "coalesce(inflow, 0L) * 85 div 100").as("pr"))
-        // lineage cut every SECOND round: one checkpoint job buys two
-        // rounds of truncation (plans stay O(1); r15 — per-round
-        // checkpoints were half the round latency, and at 100 TB the
-        // same halving applies to the checkpoint I/O)
-        if (i % 2 == 0) r = r.localCheckpoint()
-      }
-      r.withColumn("pr_ppm", expr(s"pr * 1000000 div $S"))
+      }.withColumn("pr_ppm", expr(s"pr * 1000000 div $S"))
     }),
 
     // MAIN-CONTENT EXTRACTION by LINK DENSITY (Kohlschuetter boilerpipe
@@ -4560,8 +4535,9 @@ object PipelineOps {
     * non-overlapping array fold (`aggregate`): a position merges iff
     * the previous output element is still the raw `a` — the merged
     * symbol a||b can never re-match `a`, so greedy-from-left needs no
-    * extra state. Returns (updated words, 1-row merge record). */
-  /** one BPE merge round, LINEAR in lineage: the winning pair is
+    * extra state. Returns (updated words, 1-row merge record).
+    *
+    * The round is LINEAR in lineage: the winning pair is
     * localCheckpoint-ed (one job — the weighted pair-count agg), then
     * the merge application reads THAT materialized 1-row frame and is
     * itself localCheckpoint-ed (one job — the broadcast array fold).
@@ -4614,14 +4590,16 @@ object PipelineOps {
   private def bpeTrain(s: SparkSession, dir: String,
       rounds: Int = BpeRounds): (DataFrame, DataFrame) = {
     val base = graft.storage.LocalCache.stored(s"bpe|$rounds", dir) { base =>
-      var words = bpeWords(s, dir)
-      var merges: DataFrame = null
-      for (r <- 1 to rounds) {
-        val (w2, m) = bpeRound(words, r)
-        words = w2
-        merges = if (merges == null) m else merges.unionByName(m)
+      val merges = Seq.newBuilder[DataFrame]
+      // bpeRound cuts the lineage of both its frames itself
+      val words = Iterate.rounds(bpeWords(s, dir), rounds,
+          checkpointEvery = 0) { (w, r) =>
+        val (next, m) = bpeRound(w, r)
+        merges += m
+        next
       }
-      merges.write.mode("overwrite").parquet(s"$base/merges")
+      merges.result().reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$base/merges")
       words.write.mode("overwrite").parquet(s"$base/words")
     }
     (s.read.parquet(s"$base/merges"), s.read.parquet(s"$base/words"))
@@ -4652,98 +4630,29 @@ object PipelineOps {
   /** Connected components by iterative min-label propagation over a
     * DIRECTED edge frame `(u, v)` (pass both directions for an undirected
     * graph): returns `(id, component)` with component = min vertex id
-    * reachable. Each round is one shuffle join + hash agg; localCheckpoint
-    * truncates lineage so the plan stays flat across rounds; the
-    * convergence probe is an isEmpty on the label frame (Pregel-style
-    * orchestration, not a data collect). Rounds = component diameter,
-    * capped defensively; near-dup graphs are clique-like so a handful
-    * converge. 100 TB upgrade path: large-star/small-star contraction. */
-  /** Fixed-round connected components by min-label propagation with
-    * POINTER JUMPING: each round takes the min label over {self} ∪
-    * neighbors, then re-resolves every label to that node's own label
-    * (label-of-label), roughly doubling the propagation distance per
-    * round — 4 rounds comfortably cover diameter-12 chains (PipelineSpec).
-    * Unlike `connectedComponents` below there is no data-dependent
-    * control flow: the round count is FIXED, so the job graph is known
-    * up front (exactly `rounds` barriers — schedulable, resumable,
-    * streaming-foreachBatch-safe) where Pregel-style CC must probe for
-    * convergence with a driver action per round. Each round's label
-    * frame is localCheckpoint-truncated: the label-of-label join triples
-    * the plan per round, and an untruncated 4-round plan re-executes the
-    * edge subplan ~3⁴ times (measured 100× slower). The trade-off is
-    * that under-provisioned rounds silently under-merge, so callers need
-    * an external ground truth (q234's recursive-CTE oracle) or a
-    * generous round count. Input: symmetric (doc_a, doc_b) edges;
-    * output: (id, lab) with lab = component min. */
-  def pointerJumpComponents(sym: DataFrame, rounds: Int): DataFrame = {
-    val nodes = sym.select(col("doc_a").as("id")).distinct()
-    var lab = nodes.withColumn("lab", col("id")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      // merge via join+least, NOT union: a Union over checkpointed frames
-      // trips constraint rewriting (LogicalRDD keeps constraints that
-      // reference pre-checkpoint attributes — key not found: id#N)
-      val nbrMin = sym.join(lab.select(col("id").as("doc_b"), col("lab").as("nl")), "doc_b")
-        .groupBy(col("doc_a").as("id")).agg(min(col("nl")).as("nbr_min"))
-      val merged = lab.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lab"), coalesce(col("nbr_min"), col("lab"))).as("lab"))
-      // pointer jump: every label is itself a node id, so re-resolving
-      // label -> that node's label doubles the propagation distance
-      lab = merged.as("x").join(merged.as("y"), col("x.lab") === col("y.id"))
-        .select(col("x.id").as("id"), col("y.lab").as("lab"))
-        .localCheckpoint()
-    }
-    lab
-  }
-
-  // r16 NEGATIVE RESULTS, measured and reverted — this loop keeps r15's
-  // exact shape on purpose:
-  //  - per-round LAZY localCheckpoint (materialized by the convergence
-  //    aggregate, one job/round instead of two): q127 floor 0.92 s vs
-  //    0.70 eager — caching during the agg stage loses whole-stage
-  //    codegen and the dedicated materialization job was never the cost;
-  //  - dropping the seed-label eager checkpoint (ReuseExchange covers
-  //    round 1's two references): same experiment, same outcome;
-  //  - per-round POINTER JUMP (label-of-label join): these graphs are
-  //    clique-like, the jump's two extra exchanges per round bought no
-  //    round reduction (q390 2.15 s with vs 1.46 without, q400 1.24 vs
-  //    0.92) — pointerJumpComponents above keeps the jump for the
-  //    fixed-round callers that need diameter coverage;
-  //  - union-into-one-groupBy rounds (self ∪ neighbor labels, single
-  //    aggregate): consistently worse (q127 1.00 vs 0.75, q309 2.49 vs
-  //    1.91);
-  //  - an up-front repartition(col("v")) of the edges (normalize
-  //    inherited partitioning): q371 1.17→1.52, q390 1.59→1.95.
+    * reachable — the exact closure. Each round is one shuffle join + hash
+    * agg, run by `Iterate.untilStable`: the round's checkpoint keeps the
+    * plan flat and carries the convergence flag, so no round pays a job
+    * for its check. Rounds = component diameter + 1; near-dup graphs are
+    * clique-like, so a handful converge. A graph that needs more than
+    * `maxRounds` throws rather than return partial labels, which would
+    * silently split real clusters (a diameter that large wants
+    * large-star/small-star contraction, not more rounds). */
   def connectedComponents(edgesIn: DataFrame, maxRounds: Int = 50): DataFrame = {
     val edges = edgesIn.localCheckpoint()
-    var lbl = edges.select(col("u").as("id")).distinct()
+    val seed = edges.select(col("u").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
+    Iterate.untilStable(seed, "_chg", maxRounds, "connectedComponents") { lbl =>
       val nbr = edges.join(lbl.select(col("id").as("v"), col("component").as("nc")), "v")
         .groupBy(col("u").as("id")).agg(min(col("nc")).as("nbr_min"))
-      // the convergence flag rides the SAME join that computes the next
-      // labels and materializes with the checkpoint — a separate
-      // next⋈prev check was one more join job per round, pure driver
-      // latency on an iteration whose data is small by then
-      val next = lbl.join(nbr, Seq("id"), "left")
+      // the change flag rides the SAME join that computes the next
+      // labels — a separate next⋈prev check was one more join job per
+      // round, pure scheduling latency on an iteration whose data is small
+      lbl.join(nbr, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component"),
           (coalesce(col("nbr_min"), col("component")) < col("component")).as("_chg"))
-        .localCheckpoint()
-      val anyChg = next.agg(max(col("_chg"))).first()
-      converged = anyChg.isNullAt(0) || !anyChg.getBoolean(0)
-      lbl = next.drop("_chg")
-      round += 1
     }
-    // partial labels masquerading as components would silently split real
-    // clusters — fail loudly instead (a diameter this large means the
-    // caller wants large-star/small-star contraction, not more rounds)
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxRounds rounds")
-    lbl
   }
 
   /** Generic as-of join: for each left row, the latest right row with
@@ -7913,8 +7822,8 @@ object PipelineOps {
               "THEN 1000000 ELSE -1000000 END AS BIGINT))").as("xa"))
             .localCheckpoint()
         }
-      var z = deflate(start).localCheckpoint()
-      for (_ <- 1 to 6) {
+      Iterate.rounds(deflate(start).localCheckpoint(), 6,
+          checkpointEvery = 1) { (z, _) =>
         val scored = centered.crossJoin(broadcast(z))
           .withColumn("sv", expr(
             "aggregate(zip_with(c, xa, (a, b) -> a * b), " +
@@ -7929,9 +7838,8 @@ object PipelineOps {
               "transform(array_sort(collect_list(struct(dim, yj))), p -> p.yj)")
               .as("ya")),
           "ya")
-        z = deflate(v).localCheckpoint()
-      }
-      z.write.mode("overwrite").parquet(p)
+        deflate(v)
+      }.write.mode("overwrite").parquet(p)
     })
   }
 

@@ -79,7 +79,7 @@ object ProfileOps {
     // and the q62 prefix fold produces node totals. Proves the decoder,
     // not just the fold: any drift in stack order, dedup, value columns,
     // or gzip handling breaks the hash.
-    "q288_pprof_flamegraph" -> ((s, dir) => {
+    "q288_pprof_flamegraph" -> ((s, _) => {
       import s.implicits._
       val payloads = (for (svc <- 0 until 3; up <- 0 until 2)
         yield (graft.sources.Pprof.fixtureUpload(svc, up), s"svc-$svc"))

@@ -76,7 +76,7 @@ object PromQLOps {
     * literal the plan inlines, so no cross-engine pow() ulp drift. */
   private def nhUb(i: Int): Double = math.pow(2.0, (i + 1) / 4.0)
   private def bkt(step: Long) = s"(timestamp//1000000000//$step)*$step"
-  private def win(step: Long) =
+  private def win =
     s"timestamp >= ${T0 * 1000000000L} AND timestamp < ${T1 * 1000000000L}"
 
   val queries: Map[String, Q] = Map(
@@ -479,7 +479,7 @@ object PromQLOps {
        |  SELECT ${bkt(step)} AS bucket_start, service_name, CAST(value AS DOUBLE) AS value,
        |    row_number() OVER (PARTITION BY ${bkt(step)}, service_name
        |      ORDER BY timestamp DESC, event_id DESC) AS rn
-       |  FROM m WHERE $metricFilter AND ${win(step)}) WHERE rn = 1""".stripMargin
+       |  FROM m WHERE $metricFilter AND $win) WHERE rn = 1""".stripMargin
 
   private def firstLast(metricFilter: String, step: Long): String =
     s"""SELECT ${bkt(step)} AS bucket_start, service_name,
@@ -490,7 +490,7 @@ object PromQLOps {
        |        ORDER BY timestamp DESC, event_id DESC) AS rnd,
        |      row_number() OVER (PARTITION BY ${bkt(step)}, service_name
        |        ORDER BY timestamp ASC, event_id ASC) AS rna
-       |    FROM m WHERE $metricFilter AND ${win(step)})
+       |    FROM m WHERE $metricFilter AND $win)
        |  GROUP BY 1, 2""".stripMargin
 
   val oracles: Map[String, String] = Map(
@@ -499,7 +499,7 @@ object PromQLOps {
          |rule AS (
          |  SELECT ${bkt(300)} AS b5, service_name,
          |    CAST(count(*) AS DOUBLE) AS value
-         |  FROM m WHERE metric_name = 'purchase' AND ${win(300)}
+         |  FROM m WHERE metric_name = 'purchase' AND $win
          |  GROUP BY 1, 2)
          |SELECT (b5//3600)*3600 AS bucket_start, service_name,
          |  MAX(value) AS value
@@ -589,7 +589,7 @@ object PromQLOps {
     "q284_promql_subsecond_range" ->
       s"""WITH m AS ($V),
          |f AS (SELECT *, ${bkt(86400)} AS bucket_start FROM m
-         |      WHERE metric_name = 'click' AND ${win(86400)}
+         |      WHERE metric_name = 'click' AND $win
          |        AND timestamp >= (${bkt(86400)} + 86400) * 1000000000
          |          - 21600500000000)
          |SELECT bucket_start, service_name,
@@ -618,7 +618,7 @@ object PromQLOps {
       s"""WITH m AS ($V),
          |i AS (SELECT DISTINCT (timestamp//1000//500000)*500000 AS bs,
          |        service_name
-         |      FROM m WHERE metric_name = 'click' AND ${win(86400)}),
+         |      FROM m WHERE metric_name = 'click' AND $win),
          |o AS (SELECT (bs // 86400000000) * 86400 AS bucket_start,
          |        service_name FROM i)
          |SELECT bucket_start, service_name,
@@ -721,7 +721,7 @@ object PromQLOps {
          |present AS (
          |  SELECT DISTINCT ${bkt(86400)} AS bucket_start FROM m
          |  WHERE metric_name = 'purchase' AND service_name = 'svc-1'
-         |    AND ${win(86400)})
+         |    AND $win)
          |SELECT s.bucket_start, 1.0 AS value FROM spine s
          |WHERE NOT EXISTS (SELECT 1 FROM present p
          |  WHERE p.bucket_start = s.bucket_start)""".stripMargin,
@@ -738,7 +738,7 @@ object PromQLOps {
          |agg AS (
          |  SELECT ${bkt(604800)} AS bucket_start, service_name, le,
          |    CAST(SUM(value) AS DOUBLE) AS cum
-         |  FROM h WHERE ${win(604800)} GROUP BY 1, 2, 3),
+         |  FROM h WHERE $win GROUP BY 1, 2, 3),
          |x AS (
          |  SELECT *,
          |    CASE WHEN le = '+Inf' THEN 'inf'::DOUBLE ELSE CAST(le AS DOUBLE) END AS le_n
@@ -770,7 +770,7 @@ object PromQLOps {
          |  SELECT ${bkt(86400)} AS bucket_start, service_name, value, timestamp,
          |    row_number() OVER (PARTITION BY ${bkt(86400)}, service_name
          |      ORDER BY timestamp DESC, event_id DESC) AS rn
-         |  FROM m WHERE metric_name = 'view' AND ${win(86400)}),
+         |  FROM m WHERE metric_name = 'view' AND $win),
          |g AS (
          |  SELECT bucket_start, service_name,
          |    MAX(CASE WHEN rn = 1 THEN value END) AS v1,
@@ -904,13 +904,13 @@ object PromQLOps {
          |SELECT ${bkt(86400)} AS bucket_start, service_name, 1.0 AS value
          |FROM m
          |WHERE metric_name = 'error' AND regexp_full_match(service_name, 'svc-[0-5]')
-         |  AND ${win(86400)}
+         |  AND $win
          |GROUP BY 1, 2""".stripMargin,
 
     "q117_promql_group" ->
       s"""WITH m AS ($V)
          |SELECT ${bkt(86400)} AS bucket_start, service_name, 1.0 AS value
-         |FROM m WHERE metric_name = 'click' AND ${win(86400)}
+         |FROM m WHERE metric_name = 'click' AND $win
          |GROUP BY 1, 2""".stripMargin,
 
     "q118_promql_scalar" ->
@@ -933,7 +933,7 @@ object PromQLOps {
          |  SELECT ${bkt(86400)} AS bucket_start, service_name, value,
          |    lag(value) OVER (PARTITION BY ${bkt(86400)}, service_name
          |      ORDER BY timestamp ASC, event_id ASC) AS prev
-         |  FROM m WHERE metric_name = 'click' AND ${win(86400)})
+         |  FROM m WHERE metric_name = 'click' AND $win)
          |SELECT bucket_start, service_name,
          |  CAST(SUM(CASE WHEN prev IS NOT NULL AND value <> prev THEN 1 ELSE 0 END) AS DOUBLE) AS value
          |FROM l GROUP BY 1, 2""".stripMargin,
@@ -944,7 +944,7 @@ object PromQLOps {
          |  SELECT ${bkt(86400)} AS bucket_start, service_name, value,
          |    lag(value) OVER (PARTITION BY ${bkt(86400)}, service_name
          |      ORDER BY timestamp ASC, event_id ASC) AS prev
-         |  FROM m WHERE metric_name = 'view' AND ${win(86400)})
+         |  FROM m WHERE metric_name = 'view' AND $win)
          |SELECT bucket_start, service_name,
          |  CAST(SUM(CASE WHEN prev IS NOT NULL AND value < prev THEN 1 ELSE 0 END) AS DOUBLE) AS value
          |FROM l GROUP BY 1, 2""".stripMargin,
@@ -991,7 +991,7 @@ object PromQLOps {
          |  CAST(MAX(timestamp//1000) AS DOUBLE) / 1000000.0 AS value
          |FROM m
          |WHERE metric_name = 'purchase' AND service_name SIMILAR TO 'svc-[0-3]'
-         |  AND ${win(86400)}
+         |  AND $win
          |GROUP BY 1, 2""".stripMargin,
 
     // exact least-squares slope from hugeint sums — the same closed form
@@ -1023,7 +1023,7 @@ object PromQLOps {
       s"""WITH m AS ($V),
          |w AS (SELECT ${bkt(86400)} AS bucket_start, service_name,
          |        CAST(value AS DOUBLE) AS value
-         |      FROM m WHERE metric_name = 'view' AND ${win(86400)}),
+         |      FROM m WHERE metric_name = 'view' AND $win),
          |md AS (SELECT bucket_start, service_name,
          |         quantile_cont(value, 0.5) AS med
          |       FROM w GROUP BY 1, 2)
@@ -1069,7 +1069,7 @@ object PromQLOps {
          |    row_number() OVER (PARTITION BY ${bkt(86400)}, service_name
          |      ORDER BY CAST(value AS DOUBLE) DESC, timestamp DESC,
          |        event_id DESC) AS rn
-         |  FROM m WHERE metric_name = 'view' AND ${win(86400)})
+         |  FROM m WHERE metric_name = 'view' AND $win)
          |SELECT bucket_start, service_name, ts AS value FROM r
          |WHERE rn = 1""".stripMargin,
 
@@ -1093,7 +1093,7 @@ object PromQLOps {
          |c AS (
          |  SELECT ${bkt(86400)} AS bucket_start, service_name,
          |    CAST(COUNT(*) AS DOUBLE) AS value
-         |  FROM m WHERE metric_name = 'click' AND ${win(86400)}
+         |  FROM m WHERE metric_name = 'click' AND $win
          |  GROUP BY 1, 2)
          |SELECT bucket_start, service_name,
          |  CASE WHEN value > 25 THEN 1.0 ELSE 0.0 END AS value
@@ -1103,7 +1103,7 @@ object PromQLOps {
       s"""WITH m AS ($V)
          |SELECT ${bkt(86400)} AS bucket_start, service_name,
          |  max(CAST(value AS DOUBLE)) AS value
-         |FROM m WHERE metric_name = 'view' AND ${win(86400)}
+         |FROM m WHERE metric_name = 'view' AND $win
          |GROUP BY 1, 2""".stripMargin,
 
     // rate over subquery: daily counts, then per 2-day outer bucket
@@ -1113,7 +1113,7 @@ object PromQLOps {
          |c AS (
          |  SELECT ${bkt(86400)} AS bucket_start, service_name,
          |    CAST(COUNT(*) AS DOUBLE) AS value
-         |  FROM m WHERE metric_name = 'click' AND ${win(86400)}
+         |  FROM m WHERE metric_name = 'click' AND $win
          |  GROUP BY 1, 2),
          |r AS (
          |  SELECT (bucket_start//172800)*172800 AS bucket_start, service_name,
@@ -1129,7 +1129,7 @@ object PromQLOps {
     s"""SELECT ${bkt(step)} AS bucket_start, service_name,
        |    timestamp//1000000 - (${bkt(step)})*1000 AS x,
        |    CAST(round(value*100) AS BIGINT) AS y
-       |  FROM m WHERE metric_name = '$metric' AND ${win(step)}""".stripMargin
+       |  FROM m WHERE metric_name = '$metric' AND $win""".stripMargin
 
   private def fitG: String =
     """SELECT bucket_start, service_name, CAST(COUNT(*) AS HUGEINT) AS n,

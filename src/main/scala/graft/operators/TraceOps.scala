@@ -512,19 +512,18 @@ object TraceOps {
         .union(edges.select(col("server"))).distinct().localCheckpoint()
       val nTot = nodes.agg(count(lit(1)).as("n"))
       val outw = edges.groupBy(col("client")).agg(sum(col("w")).as("outw"))
-      var rank = nodes.crossJoin(broadcast(nTot))
+      val rank0 = nodes.crossJoin(broadcast(nTot))
         .select(col("svc"), expr("1000000 div n").as("r"))
-      for (_ <- 1 to 3) {
+      Iterate.rounds(rank0, 3, checkpointEvery = 0) { (rank, _) =>
         val contrib = edges.join(outw, "client")
           .join(rank.select(col("svc").as("client"), col("r")), "client")
           .select(col("server").as("svc"),
             expr("(CAST(r AS DECIMAL(38,0)) * w) div outw").as("c"))
         val inflow = contrib.groupBy(col("svc")).agg(sum(col("c")).as("inflow"))
-        rank = nodes.join(inflow, Seq("svc"), "left").crossJoin(broadcast(nTot))
+        nodes.join(inflow, Seq("svc"), "left").crossJoin(broadcast(nTot))
           .select(col("svc"),
             expr("150000 div n + (85 * coalesce(inflow, 0)) div 100").as("r"))
-      }
-      rank.select(col("svc").as("service"), col("r").as("rank_ppm"))
+      }.select(col("svc").as("service"), col("r").as("rank_ppm"))
     }),
 
     "q209_service_graph" -> ((s, dir) => {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions.col
 
 /** OTLP ingest decode — the protobuf wire format parsed directly, no

@@ -60,7 +60,6 @@ object Snapshots {
       val st = it.next()
       val rel = st.getPath.toString.stripPrefix(
         f.makeQualified(new Path(root)).toString).stripPrefix("/")
-      val name = st.getPath.getName
       // any hidden path segment (_snapshots, _compactions staging, …)
       // keeps the whole file out of the manifest; `metadata/` is the
       // Iceberg metadata projection (IcebergExport) — spec-named, so not

@@ -65,7 +65,7 @@ object GorillaStream {
     * was bounded by, so a replayed batch `n` (> committed) still
     * reconstructs exactly the pre-`n` state. */
   private def revisions(spark: SparkSession, dir: String,
-      beforeBatch: Long = Long.MaxValue): DataFrame =
+      beforeBatch: Long): DataFrame =
     BatchStore.read(spark, s"$dir/batches", blockSchema, beforeBatch)
 
   /** fold the live batch dirs with id ≤ `upToBatch` into one compacted

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.storage.Storage
 import graft.storage.Storage.TableLayout
 
 /** Per-tenant ingest rate limiting + storage quotas (reference:

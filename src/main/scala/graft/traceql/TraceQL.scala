@@ -2,7 +2,7 @@ package graft.traceql
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.DoubleType
 
 /** TraceQL subset + Tempo `tags` logfmt parser (reference:
   * src/querier/src/query/search_filter.rs — selector enum :33-47,

@@ -1,10 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.util.chaining._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,7 +24,7 @@ class PartitionBoundRuleSpec extends AnyFunSuite {
 
   private lazy val tablePath: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-pbound").toString
+    val dir = graft.TestDirs.create("graft-pbound").toString
     val layout = TableLayout(dir, "acme", "prod")
     // 10 days × 4 rows
     (0 until 40).map { i =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -55,15 +54,15 @@ class PipelineSpec extends AnyFunSuite {
       got.toString)
   }
 
-  test("pointerJumpComponents merges a diameter-12 path in 4 fixed rounds") {
+  test("connectedComponents merges a diameter-12 path into one component") {
     import spark.implicits._
     // worst case for min-label propagation: a single long chain where the
-    // min sits at one end — plain per-round neighbor-min would need 12
-    // rounds; pointer jumping must do it in 4
+    // min sits at one end — 12 rounds that change labels, then one that
+    // changes nothing
     val und = (0L until 12L).map(i => (i, i + 1))
-    val sym = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      .toDF("doc_a", "doc_b")
-    val got = PipelineOps.pointerJumpComponents(sym, rounds = 4)
+    val edges = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .toDF("u", "v")
+    val got = PipelineOps.connectedComponents(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == 13)
     assert(got.forall(_._2 == 0L))
@@ -415,7 +414,7 @@ class PipelineSpec extends AnyFunSuite {
         (1L, (0 until 12).map(i => s"beta$i").mkString(" ")),
         (2L, (0 until 12).map(i => s"gamma$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_retrain_").toString
+    val dir = graft.TestDirs.create("graft_retrain_").toString
     try {
       // corpus A: docs 0 and 1 are exact near-dups (same 12-word text)
       val dup = (0 until 12).map(i => s"tok$i").mkString(" ")
@@ -437,7 +436,7 @@ class PipelineSpec extends AnyFunSuite {
       // so after the rewrite it must answer as on a fresh dir holding only
       // the new corpus
       val rewritten = q370(dir)
-      val fresh = java.nio.file.Files.createTempDirectory("graft_retrain_fresh_").toString
+      val fresh = graft.TestDirs.create("graft_retrain_fresh_").toString
       try {
         corpusB.write.mode("overwrite").parquet(s"$fresh/documents.parquet")
         assert(rewritten == q370(fresh),

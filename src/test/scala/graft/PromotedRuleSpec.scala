@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -41,7 +39,7 @@ class PromotedRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** small gen-2-shaped table with region promoted, env not. */
   private lazy val tablePath: String = {
-    val dir = Files.createTempDirectory("graft_promoted_rule").toString
+    val dir = graft.TestDirs.create("graft_promoted_rule").toString
     val base = spark.range(100).select(
       col("id"),
       concat(lit("line "), col("id")).as("body"),
@@ -89,7 +87,7 @@ class PromotedRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bare single-container probe rewrites only without shadowing containers") {
     // a table whose ONLY container is log_attributes → the bare probe IS
     // the canonical resolution and may promote
-    val soloDir = Files.createTempDirectory("graft_promoted_solo").toString + "/t"
+    val soloDir = graft.TestDirs.create("graft_promoted_solo").toString + "/t"
     AttrPromotion.promote(
       spark.range(30).select(col("id"),
         map(lit("region"), concat(lit("r"), pmod(col("id"), lit(3)))).as("log_attributes")),

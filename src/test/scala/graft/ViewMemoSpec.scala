@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +16,7 @@ class ViewMemoSpec extends AnyFunSuite {
   private val T0 = 1704067200L
 
   test("a served view is reused until events.parquet is rewritten") {
-    val dir = Files.createTempDirectory("view-memo").toString
+    val dir = graft.TestDirs.create("view-memo").toString
     val events = s"$dir/events.parquet"
     val raw = spark.read.parquet(s"$src/events.parquet").cache()
     try {
@@ -48,11 +46,25 @@ class ViewMemoSpec extends AnyFunSuite {
       assert(after._2 != before._2, "Loki answer served from the stale view")
 
       // and the rebuilt answer is the one a never-served copy gives
-      val fresh = Files.createTempDirectory("view-memo-fresh").toString
+      val fresh = graft.TestDirs.create("view-memo-fresh").toString
       spark.read.parquet(events).write.parquet(s"$fresh/events.parquet")
       assert(after == (Endpoints.promQueryRange(spark, fresh, prom),
         Endpoints.lokiQueryRange(spark, fresh, loki, e * 1000000000L)))
     } finally raw.unpersist()
+  }
+
+  test("the events day bounds move when events.parquet is rewritten") {
+    val events = s"${graft.TestDirs.create("day-bounds")}/events.parquet"
+    val dir = events.stripSuffix("/events.parquet")
+    // `ts` as bare INT64 epoch nanos, one row per day
+    def write(firstDay: Long, days: Int): Unit =
+      spark.range(days).select(((lit(firstDay) + col("id")) * 86400L * 1000000000L).as("ts"))
+        .write.mode("overwrite").parquet(events)
+    write(19800L, 3)
+    assert(Tables.eventsDayBounds(spark, dir) == ((19800L, 19802L)))
+    write(19810L, 5)
+    assert(Tables.eventsDayBounds(spark, dir) == ((19810L, 19814L)),
+      "day bounds served from before the rewrite")
   }
 
   test("a stopped shell leaves nothing of its served session in the view memo") {

@@ -1,6 +1,5 @@
 package graft.api
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Envelope-shaping tests (reference router endpoint bodies): exact JSON

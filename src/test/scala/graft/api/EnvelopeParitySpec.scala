@@ -81,6 +81,12 @@ class EnvelopeParitySpec extends AnyFunSuite {
       s"""{"tagValues":[${vals.mkString(",")}]}"""
     }
 
+    def labelNames(df: DataFrame, fixed: Seq[String]): String = {
+      val s = df.sparkSession
+      val all = df.union(s.createDataFrame(s.sparkContext.parallelize(fixed.map(Row(_))), df.schema))
+      ApiJson.labelsResponse(all.distinct().orderBy(col("label")).collect().map(_.getString(0)).toSeq)
+    }
+
     def profileTypes(df: DataFrame): String = {
       val rows = df.orderBy(col("profile_type")).collect().map { r =>
         s"""{"id":${ApiJson.jstr(r.getString(0))},"samples":${r.getLong(1)},""" +
@@ -172,6 +178,16 @@ class EnvelopeParitySpec extends AnyFunSuite {
       StructField("max_ts", LongType), StructField("n_services", LongType))),
       hostile.zipWithIndex.map { case (h, i) => Row(h, i.toLong, i * 1000000L, i * 2000000L, 1L) }, in)
     assert(ApiJson.profileTypes(types(s)) == Distributed.profileTypes(types(spark)))
+    // label names: fixed names merged with discovered keys, sorted as
+    // Spark sorts (U+E000 before a character beyond the BMP in UTF-8,
+    // after it in UTF-16)
+    def keys(in: SparkSession) =
+      frame(StructType(Seq(StructField("label", StringType))), hostile.map(Row(_)), in)
+    val fixed = Seq("service_name", "severity_text")
+    val found = keys(s).distinct().orderBy(col("label")).collect().map(_.getString(0)).toSeq
+    assert(ApiJson.labelNamesResponse(fixed, found) == Distributed.labelNames(keys(spark), fixed))
+    assert(ApiJson.labelNamesResponse(Nil, Seq("\uD83D\uDE00", "\uE000")) ==
+      ApiJson.labelsResponse(Seq("\uE000", "\uD83D\uDE00")))
   }
 
   test("streams envelope matches the distributed shaping on hostile rows")(streamsCase(spark))

@@ -13,7 +13,6 @@ import io.netty.handler.codec.http2.{DefaultHttp2DataFrame,
   DefaultHttp2Headers, DefaultHttp2HeadersFrame, Http2DataFrame,
   Http2FrameCodecBuilder, Http2HeadersFrame, Http2MultiplexHandler,
   Http2StreamChannelBootstrap}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Arrow Flight over real gRPC, proven over real sockets: an
@@ -409,8 +408,7 @@ class FlightGrpcSpec extends AnyFunSuite {
   }
 
   test("Flight RPCs dogfood rpc.server.duration rows into _system/_monitoring") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-flight-selfmon").toString
+    val base = graft.TestDirs.create("graft-flight-selfmon").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = 1706745600L * 1000000000L,
       ingest = Some(layout))
@@ -450,7 +448,6 @@ class FlightGrpcSpec extends AnyFunSuite {
   }
 
   test("IPC split/join round-trips byte-exactly on a multi-batch stream") {
-    import spark.implicits._
     val df = spark.range(0, 20000).select(
       org.apache.spark.sql.functions.col("id"),
       org.apache.spark.sql.functions.md5(

@@ -3,7 +3,6 @@ package graft.api
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** HTTP param-layer fuzz: every served route hit with randomized query

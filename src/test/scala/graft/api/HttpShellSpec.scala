@@ -3,7 +3,6 @@ package graft.api
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -281,7 +280,7 @@ class HttpShellSpec extends AnyFunSuite {
       HttpResponse.BodyHandlers.ofString())
 
   test("POST /v1/logs decodes, lands in the stored layout, and replays idempotently") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-ingest").toString
+    val base = graft.TestDirs.create("graft-http-ingest").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -299,7 +298,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("POST /v1/logs with application/json decodes protojson and lands") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-json").toString
+    val base = graft.TestDirs.create("graft-http-json").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -330,7 +329,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("POST /api/v1/write with the v2 content type decodes symbol-table refs") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-rw2").toString
+    val base = graft.TestDirs.create("graft-http-rw2").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -353,7 +352,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("a RESTARTED shell never reuses batch ids against old commit markers") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-restart").toString
+    val base = graft.TestDirs.create("graft-http-restart").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh1 = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p1 = sh1.start()
@@ -371,7 +370,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("POST /api/v1/write: snappy+proto remote_write lands in the metric tables") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-rw").toString
+    val base = graft.TestDirs.create("graft-http-rw").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -395,7 +394,7 @@ class HttpShellSpec extends AnyFunSuite {
   test("acceptor guardrails: 503 without ingest config, 400 on missing pprof name") {
     // the shared read-only shell has no ingest layout
     assert(post(port, "/v1/logs", Array[Byte](1, 2)).statusCode() == 503)
-    val base = java.nio.file.Files.createTempDirectory("graft-http-i2").toString
+    val base = graft.TestDirs.create("graft-http-i2").toString
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L,
       ingest = Some(graft.storage.Storage.TableLayout(base, "t", "d")))
     val p = sh.start()
@@ -445,7 +444,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("ops compaction routes: dry-run plans, compact executes, status drains") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-ops").toString
+    val base = graft.TestDirs.create("graft-http-ops").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -675,7 +674,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("live tail over the wire: a POSTed log arrives as a frame; disconnect stops the query") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-tail").toString
+    val base = graft.TestDirs.create("graft-http-tail").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -719,7 +718,7 @@ class HttpShellSpec extends AnyFunSuite {
     // the shared read-only shell has no ingest layout
     assert(get("/loki/api/v1/tail?query=%7Bservice_name%3D%22a%22%7D")
       .statusCode() == 503)
-    val base = java.nio.file.Files.createTempDirectory("graft-http-tail2").toString
+    val base = graft.TestDirs.create("graft-http-tail2").toString
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L,
       ingest = Some(graft.storage.Storage.TableLayout(base, "t", "d")))
     val p = sh.start()
@@ -800,7 +799,7 @@ class HttpShellSpec extends AnyFunSuite {
     // one live pass: served queries → demand stats flushed → promotion
     // decision → table rewrite → the SAME query resolving the promoted
     // column with identical results — and demand going quiet for it
-    val base = java.nio.file.Files.createTempDirectory("graft-http-promo").toString
+    val base = graft.TestDirs.create("graft-http-promo").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -879,7 +878,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("demand recording of a base-label query runs no Spark job") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-demand").toString
+    val base = graft.TestDirs.create("graft-http-demand").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -911,7 +910,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("rewrites refresh exported Iceberg metadata: no dangling file paths") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-icecoh").toString
+    val base = graft.TestDirs.create("graft-http-icecoh").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -941,7 +940,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("Iceberg REST catalog: export over the wire, then discover and load") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-iceberg").toString
+    val base = graft.TestDirs.create("graft-http-iceberg").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -987,7 +986,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("query results cache by data version; ingest invalidates") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-cache").toString
+    val base = graft.TestDirs.create("graft-http-cache").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()
@@ -1151,7 +1150,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("management surface: tenant lifecycle, scoped keys go live, revocation is immediate") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-manage").toString
+    val base = graft.TestDirs.create("graft-http-manage").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L,
       ingest = Some(layout),
@@ -1613,7 +1612,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("catalog state survives a shell restart (atomic snapshot under _system)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-persist").toString
+    val base = graft.TestDirs.create("graft-http-persist").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     def mk() = new HttpShell(spark, dir, nowNs = T1 * 1000000000L,
       ingest = Some(layout),
@@ -1687,7 +1686,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("ingest byte-rate limit: oversized burst answers 429, then refills") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-bytes").toString
+    val base = graft.TestDirs.create("graft-http-bytes").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val payload = logsPayload("svc-bytes", T0 * 1000000000L, 3)
     // budget: two payloads' worth per second
@@ -1713,7 +1712,7 @@ class HttpShellSpec extends AnyFunSuite {
   }
 
   test("self-monitoring: requests dogfood into _system/_monitoring; anti-loop holds") {
-    val base = java.nio.file.Files.createTempDirectory("graft-http-selfmon").toString
+    val base = graft.TestDirs.create("graft-http-selfmon").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val sh = new HttpShell(spark, dir, nowNs = T1 * 1000000000L, ingest = Some(layout))
     val p = sh.start()

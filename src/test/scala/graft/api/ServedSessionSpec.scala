@@ -176,7 +176,7 @@ class ServedSessionSpec extends AnyFunSuite {
   }
 
   test("a served Loki range query over the landed store still pushes both window bounds into the scan") {
-    val base = java.nio.file.Files.createTempDirectory("graft-served-push").toFile
+    val base = graft.TestDirs.create("graft-served-push").toFile
     val layout = graft.storage.Storage.TableLayout(base.toString, "acme", "prod")
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {

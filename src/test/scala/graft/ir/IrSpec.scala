@@ -1,9 +1,6 @@
 package graft.ir
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-import Ir._
 
 /** The denotational oracle test (reference method:
   * src/common/src/query_ir/mod.rs:10-16 — "the plan is correct iff it

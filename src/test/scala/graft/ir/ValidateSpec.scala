@@ -1,6 +1,5 @@
 package graft.ir
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import Ir._

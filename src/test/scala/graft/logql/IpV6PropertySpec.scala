@@ -1,6 +1,5 @@
 package graft.logql
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.logql.Lowering.LogsTable

@@ -1,8 +1,5 @@
 package graft.logql
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.storage.Storage.TableLayout
@@ -45,7 +42,7 @@ class QueryDemandSpec extends AnyFunSuite {
       """sum by (env) (count_over_time({service_name="a"}[1m]))"""))
     val got = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("region" -> 2L, "env" -> 2L))
-    val dir = Files.createTempDirectory("graft-qd").toString
+    val dir = graft.TestDirs.create("graft-qd").toString
     val layout = TableLayout(dir, "acme", "prod")
     QueryDemand.flush(df, layout)
     QueryDemand.flush(df, layout) // appends accumulate

@@ -112,7 +112,6 @@ class H264Spec extends AnyFunSuite {
       // EBSP never contains 00 00 00..03 unescaped
       for (i <- 0 to esc.length - 3 if esc(i) == 0 && esc(i + 1) == 0)
         assert((esc(i + 2) & 0xff) > 3 || (esc(i + 2) & 0xff) == 3)
-      val w = new H264.BW; // reuse decode path via a tiny NAL? direct check:
       val back = {
         // package-private unescape is exercised through decode; here the
         // law is checked structurally: dropping every 03 that follows

@@ -26,7 +26,6 @@ class Mpeg1Spec extends AnyFunSuite {
 
   test("P pictures: full-pel MC + intra refresh column = exact translation") {
     val w = 64; val h = 32
-    val mbW = w / 16
     def pattern(u: Int, v: Int) =
       16 + ((((u % 7) + 7) % 7) * 31 + v * 53) % 224
     val nP = 3

@@ -1,6 +1,5 @@
 package graft.promql
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SignalViews

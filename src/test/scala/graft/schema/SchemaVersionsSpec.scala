@@ -1,8 +1,5 @@
 package graft.schema
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,7 +48,7 @@ class SchemaVersionsSpec extends AnyFunSuite {
   }
 
   test("mixed-vintage directory answers a v2 query rename-invariantly") {
-    val dir = Files.createTempDirectory("graft-schemaver").toString
+    val dir = graft.TestDirs.create("graft-schemaver").toString
     // half the history written by a v1 writer, half by a v2 writer
     v1Rows(0 until 10).write.mode("append").parquet(dir)
     v2Rows(10 until 20).write.mode("append").parquet(dir)
@@ -78,7 +75,7 @@ class SchemaVersionsSpec extends AnyFunSuite {
   }
 
   test("pure-v1 directory reads through the v2 resolver") {
-    val dir = Files.createTempDirectory("graft-schemaver-v1").toString
+    val dir = graft.TestDirs.create("graft-schemaver-v1").toString
     v1Rows(0 until 8).write.mode("append").parquet(dir)
     val resolved = SchemaVersions.resolveRead(spark, dir, "traces")
     assert(resolved.columns.contains("span_name") && !resolved.columns.contains("name"))

@@ -76,7 +76,7 @@ class Bzip2Spec extends AnyFunSuite {
 
   test("system bzip2 round trips our streams and we read its") {
     val c = textish(6000)
-    val dir = java.nio.file.Files.createTempDirectory("bz2spec")
+    val dir = graft.TestDirs.create("bz2spec")
     val zf = dir.resolve("a.bz2")
     java.nio.file.Files.write(zf, Bzip2.compress(c, 1))
     val p1 = new ProcessBuilder("bzip2", "-t", zf.toString)

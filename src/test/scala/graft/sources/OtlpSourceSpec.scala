@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * correct decode, and column pruning pushed into the reader. */
 class OtlpSourceSpec extends AnyFunSuite {
 
-  import Pb.{kv, strVal}
+  import Pb.kv
 
   private lazy val spark = graft.TestSpark.session
 
@@ -34,7 +33,7 @@ class OtlpSourceSpec extends AnyFunSuite {
   }
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_otlp_src").toString
+    val d = graft.TestDirs.create("graft_otlp_src").toString
     Files.write(Paths.get(d, "req-a.pb"), logsRequest("svc-a", 3, 1704067200000000000L))
     Files.write(Paths.get(d, "req-b.pb"), logsRequest("svc-b", 2, 1704067300000000000L))
     Files.write(Paths.get(d, "_SUCCESS"), Array.emptyByteArray) // must be skipped

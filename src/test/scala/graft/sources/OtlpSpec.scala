@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** OTLP wire-decode tests: requests are hand-encoded with a minimal
@@ -12,7 +11,7 @@ class OtlpSpec extends AnyFunSuite {
 
   private lazy val spark = graft.TestSpark.session
 
-  import Pb.{kv, strVal}
+  import Pb.kv
 
   // ---- fixtures ----------------------------------------------------------
 

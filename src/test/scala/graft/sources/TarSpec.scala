@@ -35,7 +35,7 @@ class TarSpec extends AnyFunSuite {
   test("system tar lists and extracts our archive") {
     // independent reader: the coreutils tar on this host
     val ms = members(4)
-    val dir = java.nio.file.Files.createTempDirectory("tarspec")
+    val dir = graft.TestDirs.create("tarspec")
     val f = dir.resolve("a.tar")
     java.nio.file.Files.write(f, Tar.encode(ms))
     val proc = new ProcessBuilder("tar", "-tf", f.toString)
@@ -54,7 +54,7 @@ class TarSpec extends AnyFunSuite {
   }
 
   test("we parse a system-tar-produced archive") {
-    val dir = java.nio.file.Files.createTempDirectory("tarspec2")
+    val dir = graft.TestDirs.create("tarspec2")
     val sub = dir.resolve("d"); java.nio.file.Files.createDirectory(sub)
     java.nio.file.Files.write(sub.resolve("x.txt"),
       "independent payload".getBytes("UTF-8"))

@@ -1,8 +1,5 @@
 package graft.storage
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,7 +21,6 @@ class CompactionScheduleLawSpec extends AnyFunSuite {
   private val dayNs = 1704067200L * 1000000000L // 2024-01-01T00:00Z
 
   private def batch(hour: Int, seq: Int, n: Int) = {
-    import spark.implicits._
     val base = dayNs + hour * 3600L * 1000000000L + seq * 1000000000L
     spark.range(n).select(
       (lit(base) + col("id") * 1000000000L).as("timestamp"),
@@ -38,7 +34,7 @@ class CompactionScheduleLawSpec extends AnyFunSuite {
   test("random append/crash/recover schedules never lose or duplicate a row") {
     val rnd = new scala.util.Random(20260815L)
     for (trial <- 0 until 4) {
-      val dir = Files.createTempDirectory(s"graft-sched-$trial").toString
+      val dir = graft.TestDirs.create(s"graft-sched-$trial").toString
       val layout = TableLayout(dir, "acme", "prod")
       val model = scala.collection.mutable.Set.empty[Long]
       val seqByHour = scala.collection.mutable.Map(0 -> 0, 1 -> 0)

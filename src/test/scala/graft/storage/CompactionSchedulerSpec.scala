@@ -1,11 +1,7 @@
 package graft.storage
 
-import java.nio.file.Files
-
 import scala.util.chaining._
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.storage.CompactionScheduler.Candidate
@@ -45,7 +41,7 @@ class CompactionSchedulerSpec extends AnyFunSuite {
 
   test("planCycle over real directories honors closed-hour gating and fairness") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-fair").toString
+    val base = graft.TestDirs.create("graft-fair").toString
     val t0 = 1704067200L * 1000000000L
     def seed(tenant: String, hours: Int): TableLayout = {
       val layout = TableLayout(base, tenant, "prod")

@@ -1,8 +1,5 @@
 package graft.storage
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,13 +24,13 @@ class FootersSpec extends AnyFunSuite {
     // range-sampling boundaries would wobble with input parallelism)
 
     // layout L: split + sorted on `a` alone (the time-only sort)
-    val ldir = Files.createTempDirectory("graft-lin").toString + "/t"
+    val ldir = graft.TestDirs.create("graft-lin").toString + "/t"
     grid.withColumn("ag", expr("a div 8"))
       .repartition(2)
       .write.partitionBy("ag").parquet(ldir)
 
     // layout Z: split on the interleaved Morton key's 512-cell blocks
-    val zdir = Files.createTempDirectory("graft-zord").toString + "/t"
+    val zdir = graft.TestDirs.create("graft-zord").toString + "/t"
     grid.withColumn("zg",
         Storage.zorderKey(col("a"), col("b"), bits = 6).divide(512).cast("long"))
       .repartition(2)
@@ -59,7 +56,7 @@ class FootersSpec extends AnyFunSuite {
   test("partition report surfaces the planner's numbers; compaction heals them") {
     import scala.util.chaining._
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-preport").toString
+    val dir = graft.TestDirs.create("graft-preport").toString
     val layout = Storage.TableLayout(dir, "acme", "prod")
     val t0 = 1704067200L * 1000000000L
     // 3 small appends into ONE hour = 3 small files

@@ -2,7 +2,6 @@ package graft.storage
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,7 +21,7 @@ class IcebergExportSpec extends AnyFunSuite {
   /** two-snapshot fixture: day 1 appended + committed, then day 2
     * appended + committed, exported once. */
   private lazy val fixture: (Storage.TableLayout, String) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_iceberg_").toString
+    val base = graft.TestDirs.create("graft_iceberg_").toString
     val layout = Storage.TableLayout(base, "acme", "prod")
     val logs = graft.SignalViews.logsGen2Df(spark, dir)
     val d1 = Storage.withPartitionCols(logs).filter(col("date_day") === "2024-01-29")
@@ -193,7 +192,7 @@ class IcebergExportSpec extends AnyFunSuite {
     // partition, not date/hour) — the exporter must map it to an
     // identity field over a string source column with string partition
     // values in the manifests
-    val base = java.nio.file.Files.createTempDirectory("graft_iceberg_tr").toString
+    val base = graft.TestDirs.create("graft_iceberg_tr").toString
     val layout = Storage.TableLayout(base, "acme", "prod")
     val spans = graft.SignalViews.tracesGen2Df(spark, dir)
       .withColumn("prefix", substring(col("trace_id"), 1, 2))
@@ -249,7 +248,7 @@ class IcebergExportSpec extends AnyFunSuite {
   /** independent two-export fixture for the strict-mode rows (its own
     * layout — strict tests never mutate the shared fixture). */
   private lazy val strictFixture: String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_iceberg_strict_").toString
+    val base = graft.TestDirs.create("graft_iceberg_strict_").toString
     val layout = Storage.TableLayout(base, "acme", "prod")
     val logs = graft.SignalViews.logsGen2Df(spark, dir)
     Storage.append(Storage.withPartitionCols(logs)
@@ -311,7 +310,7 @@ class IcebergExportSpec extends AnyFunSuite {
     def corrupted(mutate: com.fasterxml.jackson.databind.node.ObjectNode => Unit): String = {
       // copy only the metadata dir; manifest-list paths inside are
       // absolute, so Avro-level checks still resolve to the originals
-      val copy = java.nio.file.Files.createTempDirectory("graft_iceberg_bad_").toString
+      val copy = graft.TestDirs.create("graft_iceberg_bad_").toString
       val mdir = new java.io.File(copy, "metadata"); mdir.mkdirs()
       for (f <- new java.io.File(strictFixture, "metadata").listFiles())
         java.nio.file.Files.copy(f.toPath,

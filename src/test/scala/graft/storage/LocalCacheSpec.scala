@@ -12,7 +12,7 @@ class LocalCacheSpec extends AnyFunSuite {
 
   /** run `f` over a fresh source directory holding one table file. */
   private def withSource[T](content: String)(f: String => T): T = {
-    val d = Files.createTempDirectory("graft-src").toFile
+    val d = graft.TestDirs.create("graft-src").toFile
     rewrite(d.toString, content)
     try f(d.toString)
     finally { d.listFiles().foreach(_.delete()); d.delete() }
@@ -55,7 +55,7 @@ class LocalCacheSpec extends AnyFunSuite {
   }
 
   test("dataVersion excludes named directories: side-channel writes do not bump it") {
-    val base = java.nio.file.Files.createTempDirectory("graft-dv").toFile
+    val base = graft.TestDirs.create("graft-dv").toFile
     def write(rel: String, bytes: Int): Unit = {
       val f = new java.io.File(base, rel)
       f.getParentFile.mkdirs()

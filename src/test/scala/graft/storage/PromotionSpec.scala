@@ -1,8 +1,5 @@
 package graft.storage
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +20,6 @@ class PromotionSpec extends AnyFunSuite {
   private val t0 = 1704067200L * 1000000000L
 
   private def logsBatch(n: Int) = {
-    import spark.implicits._
     spark.range(n).select(
       (lit(t0) + col("id") * 60L * 1000000000L).as("timestamp"),
       lit("svc-0").as("service_name"),
@@ -53,7 +49,7 @@ class PromotionSpec extends AnyFunSuite {
   }
 
   test("promotion invariance through the stored-table rewrite") {
-    val dir = Files.createTempDirectory("graft-promote").toString
+    val dir = graft.TestDirs.create("graft-promote").toString
     val layout = TableLayout(dir, "acme", "prod")
     Storage.append(logsBatch(120), layout, "logs") // spans 2 hours
 

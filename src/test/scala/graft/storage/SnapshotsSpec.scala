@@ -1,8 +1,5 @@
 package graft.storage
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,7 +25,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("time travel across appends; expiry; vacuum keeps referenced files") {
     val layout = TableLayout(
-      Files.createTempDirectory("graft_snap").toString, "t0", "default")
+      graft.TestDirs.create("graft_snap").toString, "t0", "default")
     Storage.append(batch(0 until 10), layout, "logs")
     val v1 = Snapshots.commit(spark, layout, "logs")
     Storage.append(batch(10 until 25), layout, "logs")

@@ -1,8 +1,5 @@
 package graft.storage
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +11,6 @@ class StorageSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.session
 
   private def logsBatch(n: Int, startNs: Long) = {
-    import spark.implicits._
     spark.range(n).select(
       (lit(startNs) + col("id") * 60L * 1000000000L).as("timestamp"),
       concat(lit("svc-"), pmod(col("id"), lit(3))).as("service_name"),
@@ -27,7 +23,7 @@ class StorageSpec extends AnyFunSuite {
   private val t0 = 1704067200L * 1000000000L // 2024-01-01T00:00:00Z
 
   test("append partitions by date_day/hour and prunes on read") {
-    val dir = Files.createTempDirectory("graft-store").toString
+    val dir = graft.TestDirs.create("graft-store").toString
     val layout = TableLayout(dir, "acme", "prod")
     Storage.append(logsBatch(180, t0), layout, "logs") // spans 3 hours
     val root = new java.io.File(s"$dir/acme/prod/logs/date_day=2024-01-01")
@@ -45,8 +41,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("trace point lookup prunes via the prefix shard and pushes the id") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-traces").toString
+    val dir = graft.TestDirs.create("graft-traces").toString
     val layout = TableLayout(dir, "acme", "prod")
     val spans = spark.range(64).select(
       md5(concat(lit("tr-"), (col("id") % 16).cast("string"))).as("trace_id"),
@@ -74,7 +69,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("compaction merges small files and sorts the partition") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = graft.TestDirs.create("graft-compact").toString
     val layout = TableLayout(dir, "acme", "prod")
     // three small appends into the same hour
     Storage.append(logsBatch(10, t0), layout, "logs")
@@ -93,7 +88,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("compaction racing a concurrent append loses neither side; snapshots stay linear") {
-    val dir = Files.createTempDirectory("graft-race").toString
+    val dir = graft.TestDirs.create("graft-race").toString
     val layout = TableLayout(dir, "acme", "prod")
     val hourDir = new java.io.File(s"$dir/acme/prod/logs/date_day=2024-01-01/hour=0")
     def allTs = spark.read.parquet(s"$dir/acme/prod/logs")
@@ -159,7 +154,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("two compactors racing DIFFERENT hours commit through one snapshot CAS window") {
-    val dir = Files.createTempDirectory("graft-race2").toString
+    val dir = graft.TestDirs.create("graft-race2").toString
     val layout = TableLayout(dir, "acme", "prod")
     // two hours, several small files each
     Storage.append(logsBatch(6, t0), layout, "logs")                    // hour 0
@@ -206,7 +201,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("a crash MID-publish (some staged files moved) recovers idempotently") {
-    val dir = Files.createTempDirectory("graft-midpub").toString
+    val dir = graft.TestDirs.create("graft-midpub").toString
     val layout = TableLayout(dir, "acme", "prod")
     Storage.append(logsBatch(8, t0), layout, "logs")
     Storage.append(logsBatch(8, t0 + 1000000L), layout, "logs")
@@ -240,7 +235,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("compaction planning only selects closed hours past the lateness allowance") {
-    val dir = Files.createTempDirectory("graft-closed").toString
+    val dir = graft.TestDirs.create("graft-closed").toString
     val layout = TableLayout(dir, "acme", "prod")
     // two small-file hours: hour 0 and hour 1 of Jan 1
     for (off <- Seq(0L, 1L))
@@ -258,7 +253,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("retention drops whole day partitions before the cutoff") {
-    val dir = Files.createTempDirectory("graft-retention").toString
+    val dir = graft.TestDirs.create("graft-retention").toString
     val layout = TableLayout(dir, "acme", "prod")
     Storage.append(logsBatch(5, t0), layout, "logs")                       // Jan 1
     Storage.append(logsBatch(5, t0 + 86400L * 1000000000L * 5), layout, "logs") // Jan 6
@@ -270,7 +265,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("absent table reads as an empty typed frame; unknown tenant errors") {
-    val dir = Files.createTempDirectory("graft-optional").toString
+    val dir = graft.TestDirs.create("graft-optional").toString
     val layout = TableLayout(dir, "acme", "prod")
     Storage.append(logsBatch(3, t0), layout, "logs") // provisions acme/prod
     // absent signal table → None / empty frame with the requested schema,
@@ -291,7 +286,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("orphan GC removes aged staging/backup/_temporary dirs, keeps fresh ones") {
-    val dir = Files.createTempDirectory("graft-gc").toString
+    val dir = graft.TestDirs.create("graft-gc").toString
     val layout = TableLayout(dir, "acme", "prod")
     Storage.append(logsBatch(5, t0), layout, "logs")
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -315,7 +310,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("ingest replay is idempotent via batch markers") {
-    val dir = Files.createTempDirectory("graft-ingest").toString
+    val dir = graft.TestDirs.create("graft-ingest").toString
     val layout = TableLayout(dir, "acme", "prod")
     val batch = logsBatch(7, t0)
     IngestSink.appendBatch(layout, "logs")(batch, 42L)
@@ -327,7 +322,7 @@ class StorageSpec extends AnyFunSuite {
 
   test("streaming ingest end-to-end with availableNow trigger") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = graft.TestDirs.create("graft-stream").toString
     val layout = TableLayout(dir, "acme", "prod")
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long](spark)
     input.addData(0L until 25L: _*)
@@ -367,7 +362,7 @@ class StorageSpec extends AnyFunSuite {
         } finally reader.close()
       }
     }
-    val dir = Files.createTempDirectory("graft-bloom").toString
+    val dir = graft.TestDirs.create("graft-bloom").toString
     val layout = TableLayout(dir, "acme", "prod")
     Storage.append(logsBatch(50, t0), layout, "logs")
     val hourDir = s"$dir/acme/prod/logs/date_day=2024-01-01/hour=0"
@@ -385,7 +380,7 @@ class StorageSpec extends AnyFunSuite {
     // frontier materializations) — the leak assertion below must count
     // only what THIS operator adds
     val preExisting = spark.sparkContext.getPersistentRDDs.keySet
-    val dir = Files.createTempDirectory("graft-tail").toString
+    val dir = graft.TestDirs.create("graft-tail").toString
     val layout = TableLayout(dir, "acme", "prod")
     // 6 days × 20 rows
     val rows = (0 until 120).map { i =>
@@ -417,7 +412,7 @@ class StorageSpec extends AnyFunSuite {
 
   test("ingest append honors the declared sort order in every file") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-declsort").toString
+    val dir = graft.TestDirs.create("graft-declsort").toString
     val layout = TableLayout(dir, "acme", "prod")
     // shuffled batch: the WRITE must produce files already in declared
     // order (timestamp, service_name, severity_text) — the honesty
@@ -450,7 +445,7 @@ class StorageSpec extends AnyFunSuite {
       .head.getLong(0)
     assert(z == 39L)
     // compaction with zorderBy clusters both dimensions into file order
-    val dir = Files.createTempDirectory("graft-z").toString
+    val dir = graft.TestDirs.create("graft-z").toString
     val layout = TableLayout(dir, "acme", "prod")
     // 60 rows, one hour, shuffled (user_id, timestamp-second) grid
     val rows = scala.util.Random.shuffle((0 until 60).toList).map { i =>
@@ -478,7 +473,7 @@ class StorageSpec extends AnyFunSuite {
 
   test("bucketed tables co-locate an equi join: no Exchange at query time") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-bucket").toString
+    val dir = graft.TestDirs.create("graft-bucket").toString
     val layout = TableLayout(dir, "acme", "prod")
     val facts = (0 until 500).map(i => (i.toLong % 97, s"span-$i")).toDF("trace_id", "span")
     val dims = (0L until 97L).map(k => (k, s"meta-$k")).toDF("trace_id", "meta")
@@ -503,7 +498,7 @@ class StorageSpec extends AnyFunSuite {
 
   test("binary media column round-trips through the append sink; footer stats stay bounded on large values") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-binary").toString
+    val dir = graft.TestDirs.create("graft-binary").toString
     val layout = TableLayout(dir, "acme", "prod")
     // an incompressible ~1 MiB payload (deterministic PRNG, so zstd
     // cannot shrink it away) next to tiny and empty payloads — the

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,7 +41,7 @@ class AnnMaintainSpec extends AnyFunSuite {
 
   test("batching invariance + correct frozen-centroid assignment") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_annm_").toString
+    val base = graft.TestDirs.create("graft_annm_").toString
     val cp = mkCentroids(base)
     val d2 = s"$base/two"; val d1 = s"$base/one"
     val in = MemoryStream[(Long, Seq[Long])](spark)
@@ -63,7 +62,7 @@ class AnnMaintainSpec extends AnyFunSuite {
   }
 
   test("replaying a batch id rewrites identical postings") {
-    val base = java.nio.file.Files.createTempDirectory("graft_annr_").toString
+    val base = graft.TestDirs.create("graft_annr_").toString
     val cp = mkCentroids(base)
     val dir = s"$base/idx"
     AnnMaintain.maintainBatch(dir, cp)(withNorm(vecs.take(2)), 0L)
@@ -81,8 +80,7 @@ class AnnMaintainSpec extends AnyFunSuite {
   }
 
   test("centroid refresh recovers recall on a drifted corpus; the swap is atomic") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_annref_").toString
+    val base = graft.TestDirs.create("graft_annref_").toString
     val cp = mkCentroids(base) // bootstrap: e1/e2 only — blind to drift
     val dir = s"$base/idx"
     AnnMaintain.maintainBatch(dir, cp)(withNorm(vecs), 0L)
@@ -165,7 +163,7 @@ class AnnMaintainSpec extends AnyFunSuite {
 
   test("a tombstone re-shape after a refresh keeps serving the refreshed centroids") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_annrs_").toString
+    val base = graft.TestDirs.create("graft_annrs_").toString
     val cp = mkCentroids(base)
     val dir = s"$base/idx"
     AnnMaintain.maintainBatch(dir, cp)(withNorm(Seq(
@@ -200,8 +198,7 @@ class AnnMaintainSpec extends AnyFunSuite {
   }
 
   test("refresh accepts a different k than bootstrap (the k ∝ √N scale path)") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_annk_").toString
+    val base = graft.TestDirs.create("graft_annk_").toString
     val cp = mkCentroids(base) // bootstrap k = 2
     val dir = s"$base/idx"
     // vectors spanning THREE directions — k=2 must merge two of them
@@ -233,7 +230,7 @@ class AnnMaintainSpec extends AnyFunSuite {
 
   test("a vector re-appended after a delete resurfaces (tombstones are source-bounded)") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_annre_").toString
+    val base = graft.TestDirs.create("graft_annre_").toString
     val cp = mkCentroids(base)
     val dir = s"$base/idx"
     AnnMaintain.maintainBatch(dir, cp)(withNorm(vecs), 0L)
@@ -251,7 +248,7 @@ class AnnMaintainSpec extends AnyFunSuite {
 
   test("a legacy store (postings written before `src` existed) keeps honoring tombstones") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_annleg_").toString
+    val base = graft.TestDirs.create("graft_annleg_").toString
     val cp = mkCentroids(base)
     val dir = s"$base/idx"
     AnnMaintain.maintainBatch(dir, cp)(withNorm(vecs), 0L)
@@ -272,7 +269,7 @@ class AnnMaintainSpec extends AnyFunSuite {
 
   test("tombstoned vectors vanish at read, then physically at compaction") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_annd_").toString
+    val base = graft.TestDirs.create("graft_annd_").toString
     val cp = mkCentroids(base)
     val dir = s"$base/idx"
     AnnMaintain.maintainBatch(dir, cp)(withNorm(vecs.take(2)), 0L)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The video band-index maintainer's laws (the q383/q384 law set, for
@@ -33,8 +31,8 @@ class BandMaintainSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("batching invariance: 3-batch store equals 1-batch store; bk encodes (f, band)") {
-    val d1 = java.nio.file.Files.createTempDirectory("graft_band1_").toString
-    val d3 = java.nio.file.Files.createTempDirectory("graft_band3_").toString
+    val d1 = graft.TestDirs.create("graft_band1_").toString
+    val d3 = graft.TestDirs.create("graft_band3_").toString
     BandMaintain.maintainBatch(d1)(toDF(fps), 0L)
     BandMaintain.maintainBatch(d3)(toDF(fps.take(2)), 0L)
     BandMaintain.maintainBatch(d3)(toDF(fps.slice(2, 4)), 1L)
@@ -49,7 +47,7 @@ class BandMaintainSpec extends AnyFunSuite {
   }
 
   test("replaying a batch id rewrites identical state; compaction changes nothing a probe sees") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bandrp_").toString
+    val dir = graft.TestDirs.create("graft_bandrp_").toString
     BandMaintain.maintainBatch(dir)(toDF(fps.take(3)), 0L)
     BandMaintain.maintainBatch(dir)(toDF(fps.drop(3)), 1L)
     val before = state(dir)
@@ -63,8 +61,8 @@ class BandMaintainSpec extends AnyFunSuite {
   }
 
   test("in-stream self-compaction bounds the store without changing the probe view") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bandsc_").toString
-    val flat = java.nio.file.Files.createTempDirectory("graft_bandfl_").toString
+    val dir = graft.TestDirs.create("graft_bandsc_").toString
+    val flat = graft.TestDirs.create("graft_bandfl_").toString
     for ((chunk, i) <- fps.grouped(1).zipWithIndex) {
       BandMaintain.maintainBatch(dir, compactEvery = 2)(toDF(chunk), i.toLong)
       BandMaintain.maintainBatch(flat)(toDF(chunk), i.toLong)
@@ -77,8 +75,8 @@ class BandMaintainSpec extends AnyFunSuite {
   }
 
   test("delete ≡ rebuild: tombstones hide immediately, purge physically; re-appends resurface") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_banddel_").toString
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft_bandrb_").toString
+    val dir = graft.TestDirs.create("graft_banddel_").toString
+    val rebuilt = graft.TestDirs.create("graft_bandrb_").toString
     BandMaintain.maintainBatch(dir)(toDF(fps), 0L)
     BandMaintain.maintainBatch(rebuilt)(toDF(fps.filterNot(_._1 == 2L)), 0L)
     import spark.implicits._

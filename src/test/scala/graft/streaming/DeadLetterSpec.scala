@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.storage.Storage.TableLayout
@@ -17,7 +15,7 @@ class DeadLetterSpec extends AnyFunSuite {
 
   test("a poison batch dead-letters after maxAttempts and then succeeds") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dl").toString
+    val dir = graft.TestDirs.create("graft-dl").toString
     val layout = TableLayout(dir, "acme", "prod")
     var appended = Seq.empty[Long]
     def write(df: DataFrame, id: Long): Unit = {

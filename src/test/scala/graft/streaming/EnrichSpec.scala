@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +17,7 @@ class EnrichSpec extends AnyFunSuite {
 
   test("events pick the version effective at their timestamp") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-enrich").toString
+    val dir = graft.TestDirs.create("graft-enrich").toString
 
     // svc-a owned by team-1 from t=0, team-2 from t=100; svc-b from t=50
     val dim = Seq(

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,7 +24,7 @@ class GorillaStreamSpec extends AnyFunSuite {
 
   test("stream-built blocks are bit-identical to batch blocks; late points revise") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gorstream_").toString
+    val dir = graft.TestDirs.create("graft_gorstream_").toString
     val in = MemoryStream[(String, Long, Long, Double)](spark)
     val stream = in.toDF().toDF("event_type", "us", "event_id", "value")
     val q = GorillaStream.start(stream, dir)
@@ -69,7 +68,7 @@ class GorillaStreamSpec extends AnyFunSuite {
 
   test("replaying a batch id rewrites identical state (exactly-once fold)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gorreplay_").toString
+    val dir = graft.TestDirs.create("graft_gorreplay_").toString
     val b0 = Seq(("click", 10L, 1L, 1.0), ("click", 20L, 2L, 2.0))
       .toDF("event_type", "us", "event_id", "value")
     val b1 = Seq(("click", 15L, 3L, 5.0))
@@ -94,7 +93,7 @@ class GorillaStreamSpec extends AnyFunSuite {
 
   test("in-stream self-compaction keeps the live set bounded without changing blocks") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gorself_").toString
+    val dir = graft.TestDirs.create("graft_gorself_").toString
     val in = MemoryStream[(String, Long, Long, Double)](spark)
     val q = GorillaStream.start(
       in.toDF().toDF("event_type", "us", "event_id", "value"), dir,
@@ -118,7 +117,7 @@ class GorillaStreamSpec extends AnyFunSuite {
 
   test("compaction bounds reads to O(live dirs); replay stays exactly-once across it") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gorcompact_").toString
+    val dir = graft.TestDirs.create("graft_gorcompact_").toString
     def pt(us: Long, id: Long, v: Double) =
       Seq(("click", us, id, v)).toDF("event_type", "us", "event_id", "value")
     // 6 batches, each revising the same day-0 block

@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,7 +26,7 @@ class HybridReadSpec extends AnyFunSuite {
   }
 
   test("hot rows appear at ack, drop at commit; no dup, no omission") {
-    val base = Files.createTempDirectory("graft-hybrid").toString
+    val base = graft.TestDirs.create("graft-hybrid").toString
     val layout = TableLayout(base, "acme", "prod")
 
     // batch 1 flushed (marker committed); batches 1+2 still resident hot
@@ -49,7 +46,7 @@ class HybridReadSpec extends AnyFunSuite {
   }
 
   test("first-run: hot-only table serves before any cold file exists") {
-    val base = Files.createTempDirectory("graft-hybrid2").toString
+    val base = graft.TestDirs.create("graft-hybrid2").toString
     val layout = TableLayout(base, "acme", "prod")
     new Path(s"$base/acme/prod").getFileSystem(
       spark.sparkContext.hadoopConfiguration).mkdirs(new Path(s"$base/acme/prod"))

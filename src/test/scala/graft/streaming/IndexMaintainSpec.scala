@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,8 +24,8 @@ class IndexMaintainSpec extends AnyFunSuite {
 
   test("batching invariance: 3-batch stream store ranks identically to 1-batch") {
     import spark.implicits._
-    val d3 = java.nio.file.Files.createTempDirectory("graft_idx3_").toString
-    val d1 = java.nio.file.Files.createTempDirectory("graft_idx1_").toString
+    val d3 = graft.TestDirs.create("graft_idx3_").toString
+    val d1 = graft.TestDirs.create("graft_idx1_").toString
     val in = MemoryStream[(Long, String)](spark)
     val q = IndexMaintain.start(in.toDF().toDF("doc_id", "text"), d3)
     try {
@@ -44,7 +43,7 @@ class IndexMaintainSpec extends AnyFunSuite {
 
   test("compaction folds batch dirs without changing the ranking; leftovers stay invisible") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxc_").toString
+    val dir = graft.TestDirs.create("graft_idxc_").toString
     IndexMaintain.maintainBatch(dir)(docs.take(2).toDF("doc_id", "text"), 0L)
     IndexMaintain.maintainBatch(dir)(docs.slice(2, 3).toDF("doc_id", "text"), 1L)
     IndexMaintain.maintainBatch(dir)(docs.drop(3).toDF("doc_id", "text"), 2L)
@@ -73,8 +72,8 @@ class IndexMaintainSpec extends AnyFunSuite {
 
   test("in-stream self-compaction bounds the store without changing the ranking") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxself_").toString
-    val d1 = java.nio.file.Files.createTempDirectory("graft_idxself1_").toString
+    val dir = graft.TestDirs.create("graft_idxself_").toString
+    val d1 = graft.TestDirs.create("graft_idxself1_").toString
     val in = MemoryStream[(Long, String)](spark)
     val q = IndexMaintain.start(in.toDF().toDF("doc_id", "text"), dir,
       compactEvery = 2)
@@ -91,7 +90,7 @@ class IndexMaintainSpec extends AnyFunSuite {
 
   test("a partial generation (no _SUCCESS) never masks its sources; the next compact sweeps it") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxpart_").toString
+    val dir = graft.TestDirs.create("graft_idxpart_").toString
     IndexMaintain.maintainBatch(dir)(docs.take(3).toDF("doc_id", "text"), 0L)
     IndexMaintain.maintainBatch(dir)(docs.drop(3).toDF("doc_id", "text"), 1L)
     val before = ranking(dir)
@@ -113,7 +112,7 @@ class IndexMaintainSpec extends AnyFunSuite {
 
   test("the sweep never deletes a batch appended after the fold's snapshot") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxrace_").toString
+    val dir = graft.TestDirs.create("graft_idxrace_").toString
     IndexMaintain.maintainBatch(dir)(docs.take(3).toDF("doc_id", "text"), 0L)
     IndexMaintain.maintainBatch(dir)(docs.slice(3, 4).toDF("doc_id", "text"), 1L)
     // a concurrent maintainer lands batch 5 between the fold's snapshot
@@ -131,8 +130,8 @@ class IndexMaintainSpec extends AnyFunSuite {
 
   test("delete ≡ rebuild: tombstones hide postings and correct stats; compaction purges physically") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxdel_").toString
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft_idxsurv_").toString
+    val dir = graft.TestDirs.create("graft_idxdel_").toString
+    val rebuilt = graft.TestDirs.create("graft_idxsurv_").toString
     IndexMaintain.maintainBatch(dir)(docs.take(3).toDF("doc_id", "text"), 0L)
     IndexMaintain.maintainBatch(dir)(docs.drop(3).toDF("doc_id", "text"), 1L)
     // the oracle: an index that NEVER saw docs 1 and 5
@@ -166,7 +165,7 @@ class IndexMaintainSpec extends AnyFunSuite {
 
   test("a document re-appended after a delete resurfaces (tombstones are source-bounded)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxre_").toString
+    val dir = graft.TestDirs.create("graft_idxre_").toString
     IndexMaintain.maintainBatch(dir)(docs.toDF("doc_id", "text"), 0L)
     IndexMaintain.deleteDocs(spark, dir, Seq(5L).toDF("doc_id"), 0L)
     assert(ranking(dir).forall(_._1 != 5L), "deleted doc still served")
@@ -190,7 +189,7 @@ class IndexMaintainSpec extends AnyFunSuite {
 
   test("a legacy store (postings written before `src` existed) keeps honoring tombstones") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxleg_").toString
+    val dir = graft.TestDirs.create("graft_idxleg_").toString
     IndexMaintain.maintainBatch(dir)(docs.toDF("doc_id", "text"), 0L)
     // simulate a pre-`src` on-disk store: rewrite the batch without the
     // column; it reads back NULL under the current schema. NULL must
@@ -215,7 +214,7 @@ class IndexMaintainSpec extends AnyFunSuite {
 
   test("replaying a batch id rewrites identical state") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxr_").toString
+    val dir = graft.TestDirs.create("graft_idxr_").toString
     IndexMaintain.maintainBatch(dir)(docs.take(3).toDF("doc_id", "text"), 0L)
     IndexMaintain.maintainBatch(dir)(docs.drop(3).toDF("doc_id", "text"), 1L)
     val before = ranking(dir)

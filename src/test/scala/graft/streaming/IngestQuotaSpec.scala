@@ -1,8 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,7 +26,7 @@ class IngestQuotaSpec extends AnyFunSuite {
   }
 
   test("rate budget: in-budget rows append, overage lands in _rejected, replay is stable") {
-    val base = Files.createTempDirectory("graft-quota").toString
+    val base = graft.TestDirs.create("graft-quota").toString
     val layout = TableLayout(base, "acme", "prod")
     val limits = IngestQuota.Limits(rowsPerBatch = Some(7))
 
@@ -52,7 +49,7 @@ class IngestQuotaSpec extends AnyFunSuite {
   }
 
   test("storage quota: at/over quota the whole batch is rejected; unlimited otherwise") {
-    val base = Files.createTempDirectory("graft-quota2").toString
+    val base = graft.TestDirs.create("graft-quota2").toString
     val layout = TableLayout(base, "acme", "prod")
 
     // unconfigured = unlimited

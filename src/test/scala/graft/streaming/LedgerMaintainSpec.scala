@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The exact-dedup ledger maintainer's laws (the fourth maintained
@@ -28,8 +26,8 @@ class LedgerMaintainSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1))).toSet
 
   test("batching invariance; replay idempotent; compaction transparent") {
-    val d1 = java.nio.file.Files.createTempDirectory("graft_led1_").toString
-    val d3 = java.nio.file.Files.createTempDirectory("graft_led3_").toString
+    val d1 = graft.TestDirs.create("graft_led1_").toString
+    val d3 = graft.TestDirs.create("graft_led3_").toString
     LedgerMaintain.maintainBatch(d1)(toDF(docs), 0L)
     LedgerMaintain.maintainBatch(d3)(toDF(docs.take(2)), 0L)
     LedgerMaintain.maintainBatch(d3)(toDF(docs.slice(2, 4)), 1L)
@@ -46,7 +44,7 @@ class LedgerMaintainSpec extends AnyFunSuite {
 
   test("delete ≡ rebuild; a hash survives through its other holder; re-appends resurface") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_leddel_").toString
+    val dir = graft.TestDirs.create("graft_leddel_").toString
     LedgerMaintain.maintainBatch(dir)(toDF(docs), 0L)
     LedgerMaintain.deleteDocs(spark, dir, Seq(2L, 5L).toDF("doc_id"), 0L)
     // doc 2's hash stays live through doc 4; doc 5's hash is gone

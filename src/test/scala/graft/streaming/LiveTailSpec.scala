@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.logql.Ast.Unsupported
@@ -17,7 +15,6 @@ class LiveTailSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.session
 
   test("tail applies the LogQL pipeline to a stream, appending matches") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[Line](spark)
     val table = LogsTable(
@@ -44,7 +41,6 @@ class LiveTailSpec extends AnyFunSuite {
   }
 
   test("buffered tail: per-poll work tracks NEW rows only; state is bounded") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[Line](spark)
     val table = LogsTable(
@@ -83,7 +79,6 @@ class LiveTailSpec extends AnyFunSuite {
   }
 
   test("order-dependent stages and non-line queries are rejected up front") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[Line](spark)
     val table = LogsTable(in.toDF(),

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -42,7 +41,7 @@ class LockstepFeedSpec extends AnyFunSuite {
 
   test("crash between lockstep appends: torn window per-store consistent, replay heals") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_lockstep_").toString
+    val base = graft.TestDirs.create("graft_lockstep_").toString
     // two NON-EMPTY stage files = two micro-batches (one per trigger)
     docs.take(3).toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$base/stage")

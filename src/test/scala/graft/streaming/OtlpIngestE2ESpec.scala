@@ -1,11 +1,8 @@
 package graft.streaming
 
 import java.io.ByteArrayOutputStream
-import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.logql.{Lowering, Parser}
@@ -58,7 +55,7 @@ class OtlpIngestE2ESpec extends AnyFunSuite {
 
   test("OTLP payload stream → decode → idempotent sink → stored LogQL answer") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-otlp-e2e").toString
+    val dir = graft.TestDirs.create("graft-otlp-e2e").toString
     val layout = TableLayout(dir, "acme", "prod")
     val t0 = 1704067200L * 1000000000L
 
@@ -98,7 +95,7 @@ class OtlpIngestE2ESpec extends AnyFunSuite {
 
   test("histogram points land in the stored layout and replay idempotently") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-hist-e2e").toString
+    val dir = graft.TestDirs.create("graft-hist-e2e").toString
     val layout = TableLayout(dir, "acme", "prod")
     val req = new Pb
     req.msg(1) { rm =>

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,7 +44,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
     // INTO an existing destination directory and returns true — a
     // racing loser would claim victory and nest its staging inside the
     // winner's committed generation. The CAS primitive must fail.
-    val root = java.nio.file.Files.createTempDirectory("graft_cas_").toString
+    val root = graft.TestDirs.create("graft_cas_").toString
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def mk(name: String, content: String): org.apache.hadoop.fs.Path = {
@@ -72,10 +71,8 @@ class RacingMaintainersSpec extends AnyFunSuite {
   test("racing BM25 compacts: one wins, ranking and purge equal the solo outcome") {
     import spark.implicits._
     for (round <- 1 to 3) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_race_idx${round}_").toString
-      val solo = java.nio.file.Files
-        .createTempDirectory(s"graft_race_solo${round}_").toString
+      val dir = graft.TestDirs.create(s"graft_race_idx${round}_").toString
+      val solo = graft.TestDirs.create(s"graft_race_solo${round}_").toString
       for (d <- Seq(dir, solo)) {
         IndexMaintain.maintainBatch(d)(docs.take(3).toDF("doc_id", "text"), 0L)
         IndexMaintain.maintainBatch(d)(docs.drop(3).toDF("doc_id", "text"), 1L)
@@ -108,11 +105,11 @@ class RacingMaintainersSpec extends AnyFunSuite {
 
   test("racing re-shapes of a committed generation advance the sub number, never rewrite in place") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_race_sub_").toString
+    val dir = graft.TestDirs.create("graft_race_sub_").toString
     IndexMaintain.maintainBatch(dir)(docs.take(3).toDF("doc_id", "text"), 0L)
     IndexMaintain.maintainBatch(dir)(docs.drop(3).toDF("doc_id", "text"), 1L)
     IndexMaintain.compact(spark, dir) // → compact-1
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft_race_rb_").toString
+    val rebuilt = graft.TestDirs.create("graft_race_rb_").toString
     IndexMaintain.maintainBatch(rebuilt)(
       docs.filter(_._1 != 5L).toDF("doc_id", "text"), 0L)
     // new tombstones force a re-shape of the already-committed generation
@@ -138,7 +135,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
 
   test("a batch appended after the fold snapshot is never folded-away NOR swept (r13 TOCTOU)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_toctou_").toString
+    val dir = graft.TestDirs.create("graft_toctou_").toString
     IndexMaintain.maintainBatch(dir)(docs.take(2).toDF("doc_id", "text"), 0L)
     IndexMaintain.maintainBatch(dir)(docs.slice(2, 4).toDF("doc_id", "text"), 1L)
     // the round-13 bug window: a batch landing between the fold's source
@@ -169,7 +166,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
   }
 
   test("casRename surfaces a non-race filesystem fault instead of reporting defeat") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cas_fault_").toString
+    val root = graft.TestDirs.create("graft_cas_fault_").toString
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // missing source + empty destination is a FAULT (nothing won): the
@@ -189,12 +186,12 @@ class RacingMaintainersSpec extends AnyFunSuite {
 
   test("store format stamp: writers stamp v2, readers refuse a future version, legacy reads fine") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt_").toString
+    val dir = graft.TestDirs.create("graft_fmt_").toString
     IndexMaintain.maintainBatch(dir)(docs.take(2).toDF("doc_id", "text"), 0L)
     assert(new java.io.File(s"$dir/postings/_format-v2").exists(),
       "write path must stamp the store format")
     // a store from the future must refuse loudly, not misread silently
-    val fut = java.nio.file.Files.createTempDirectory("graft_fmt_fut_").toString
+    val fut = graft.TestDirs.create("graft_fmt_fut_").toString
     IndexMaintain.maintainBatch(fut)(docs.take(2).toDF("doc_id", "text"), 0L)
     new java.io.File(s"$fut/postings/_format-v99").createNewFile()
     val e = intercept[IllegalStateException] {
@@ -204,7 +201,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
     intercept[IllegalStateException] { IndexMaintain.compact(spark, fut) }
     // an UNSTAMPED store is v1 legacy: readable, and the first fold
     // upgrades the stamp in place (v2 readers read v1 rows)
-    val leg = java.nio.file.Files.createTempDirectory("graft_fmt_leg_").toString
+    val leg = graft.TestDirs.create("graft_fmt_leg_").toString
     IndexMaintain.maintainBatch(leg)(docs.take(2).toDF("doc_id", "text"), 0L)
     IndexMaintain.maintainBatch(leg)(docs.slice(2, 4).toDF("doc_id", "text"), 1L)
     new java.io.File(s"$leg/postings/_format-v2").delete()
@@ -215,7 +212,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
 
   test("an orphaned centroid set from a failed refresh is never activated by a plain fold") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_orphan_").toString
+    val base = graft.TestDirs.create("graft_orphan_").toString
     Seq((0L, Seq(1000000L, 0L, 0L, 0L)), (1L, Seq(0L, 1000000L, 0L, 0L)))
       .toDF("c_id", "cv")
       .withColumn("cn", expr(
@@ -267,7 +264,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
 
   test("racing ANN centroid refreshes: one generation commits, pairing holds, at most two centroid dirs") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_race_ann_").toString
+    val base = graft.TestDirs.create("graft_race_ann_").toString
     Seq((0L, Seq(1000000L, 0L, 0L, 0L)), (1L, Seq(0L, 1000000L, 0L, 0L)))
       .toDF("c_id", "cv")
       .withColumn("cn", expr(
@@ -315,7 +312,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
     // v3-stamped store landed a live v2-format dir a v3 reader would
     // serve under v3 assumptions. The gate must run first: refusal with
     // ZERO dirs written.
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt_pre_").toString
+    val dir = graft.TestDirs.create("graft_fmt_pre_").toString
     new java.io.File(s"$dir/postings").mkdirs()
     new java.io.File(s"$dir/postings/_format-v99").createNewFile()
     intercept[IllegalStateException] {
@@ -327,7 +324,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/stats").exists(),
       "the stats store took a write before the postings-format refusal")
     // representative second family: the ledger maintainer shares the gate
-    val led = java.nio.file.Files.createTempDirectory("graft_fmt_pre_l_").toString
+    val led = graft.TestDirs.create("graft_fmt_pre_l_").toString
     new java.io.File(s"$led/ledger").mkdirs()
     new java.io.File(s"$led/ledger/_format-v99").createNewFile()
     intercept[IllegalStateException] {
@@ -346,7 +343,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
     // with bootstrap centroids (silent recall collapse). The stamp now
     // derives from the fold's own snapshot; this drives the exact
     // interleaving through the entry failpoint.
-    val base = java.nio.file.Files.createTempDirectory("graft_space_race_").toString
+    val base = graft.TestDirs.create("graft_space_race_").toString
     Seq((0L, Seq(1000000L, 0L, 0L, 0L)), (1L, Seq(0L, 1000000L, 0L, 0L)))
       .toDF("c_id", "cv")
       .withColumn("cn", expr(
@@ -397,7 +394,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
     // renamed, sources not yet swept) a reader must serve the identical
     // document set and ranking — a probe never sees a partial
     // generation or a double-counted source.
-    val dir = java.nio.file.Files.createTempDirectory("graft_read_fold_").toString
+    val dir = graft.TestDirs.create("graft_read_fold_").toString
     IndexMaintain.maintainBatch(dir)(docs.take(3).toDF("doc_id", "text"), 0L)
     IndexMaintain.maintainBatch(dir)(docs.slice(3, 5).toDF("doc_id", "text"), 1L)
     def served() = IndexMaintain.postings(spark, dir)
@@ -433,7 +430,7 @@ class RacingMaintainersSpec extends AnyFunSuite {
     // that AGREES — every served cell id is a centroid of the served
     // set. Before the CAS that is the bootstrap pair; after it, the
     // refreshed pair; never a mix.
-    val base = java.nio.file.Files.createTempDirectory("graft_read_refresh_").toString
+    val base = graft.TestDirs.create("graft_read_refresh_").toString
     Seq((0L, Seq(1000000L, 0L, 0L, 0L)), (1L, Seq(0L, 1000000L, 0L, 0L)))
       .toDF("c_id", "cv")
       .withColumn("cn", expr(

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +14,7 @@ class RecordingRuleSpec extends AnyFunSuite {
 
   test("closed windows record the batch rule's rows; open windows stay out") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_recrule_").toString
+    val base = graft.TestDirs.create("graft_recrule_").toString
     val layout = graft.storage.Storage.TableLayout(base, "acme", "prod")
     val in = MemoryStream[(Long, String, String, Double)](spark)
     val stream = in.toDF()

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,7 +24,7 @@ class RollupMaintainSpec extends AnyFunSuite {
   }
 
   test("micro-batch folds converge to the one-shot downsample; replay is a no-op") {
-    val dir = Files.createTempDirectory("graft-rollup").toString
+    val dir = graft.TestDirs.create("graft-rollup").toString
     val layout = TableLayout(dir, "acme", "prod")
     val fold = RollupMaintain.maintainBatch(layout, "rollup_1h", 3600L,
       Seq("service_name"), "event_id") _
@@ -65,7 +63,7 @@ class RollupMaintainSpec extends AnyFunSuite {
   }
 
   test("crash-window replay folds exactly once (stage/marker failpoints)") {
-    val dir = Files.createTempDirectory("graft-rollup-crash").toString
+    val dir = graft.TestDirs.create("graft-rollup-crash").toString
     val layout = TableLayout(dir, "acme", "prod")
     def fold(crashAt: String = "") = RollupMaintain.maintainBatch(
       layout, "rollup_1h", 3600L, Seq("service_name"), "event_id", crashAt) _
@@ -105,8 +103,7 @@ class RollupMaintainSpec extends AnyFunSuite {
   }
 
   test("tiered retention: raw samples expire, the rollup still answers the old window") {
-    import scala.util.chaining._
-    val dir = Files.createTempDirectory("graft-tier").toString
+    val dir = graft.TestDirs.create("graft-tier").toString
     val layout = TableLayout(dir, "acme", "prod")
     // raw samples across two days, written through the real storage path
     val raw = rows((100L, "a", 10.0, 1L), (200L, "a", 30.0, 2L),

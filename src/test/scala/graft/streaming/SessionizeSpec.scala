@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -17,7 +16,7 @@ class SessionizeSpec extends AnyFunSuite {
 
   test("sessions close on gap within and across micro-batches") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val dir = graft.TestDirs.create("graft-sess").toString
     val input = MemoryStream[Event](spark)
     // user 1: two sessions split by a 2540 s gap; user 2: one session.
     // Every asserted session is closed INLINE by a later event past the

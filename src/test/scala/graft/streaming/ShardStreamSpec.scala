@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{Tar, TfRecord}
@@ -38,7 +37,7 @@ class ShardStreamSpec extends AnyFunSuite {
       .collect().map(_.mkString("|")).sorted.toSeq
 
   test("tar shards: batch ≡ stream, late shard incremental, garbage skipped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tar-stream").toFile
+    val dir = graft.TestDirs.create("graft-tar-stream").toFile
     tarShard(dir, "s0.tar", Seq(
       ("0.txt", "alpha beta gamma"), ("1.txt", "delta"),
       ("0.json", "{\"skip\":1}"))) // non-.txt member filtered
@@ -67,7 +66,7 @@ class ShardStreamSpec extends AnyFunSuite {
   }
 
   test("tfrecord shards: batch ≡ stream with CRC-verified records") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tfr-stream").toFile
+    val dir = graft.TestDirs.create("graft-tfr-stream").toFile
     tfrShard(dir, "p0.tfrecord", Seq("one two", "three"))
     tfrShard(dir, "p1.tfrecord", Seq("four five six"))
     // corrupt one byte of a third shard: whole file must contribute 0

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shingle-index maintainer's laws — same set as its siblings:
@@ -27,8 +25,8 @@ class ShingleMaintainSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
 
   test("batching invariance incl. denormalized counts; replay; compaction transparent") {
-    val d1 = java.nio.file.Files.createTempDirectory("graft_shg1_").toString
-    val d3 = java.nio.file.Files.createTempDirectory("graft_shg3_").toString
+    val d1 = graft.TestDirs.create("graft_shg1_").toString
+    val d3 = graft.TestDirs.create("graft_shg3_").toString
     ShingleMaintain.maintainBatch(d1)(toDF(docs), 0L)
     for ((d, i) <- docs.zipWithIndex)
       ShingleMaintain.maintainBatch(d3)(toDF(Seq(d)), i.toLong)
@@ -47,8 +45,8 @@ class ShingleMaintainSpec extends AnyFunSuite {
 
   test("delete ≡ rebuild; re-appends resurface") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_shgdel_").toString
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft_shgrb_").toString
+    val dir = graft.TestDirs.create("graft_shgdel_").toString
+    val rebuilt = graft.TestDirs.create("graft_shgrb_").toString
     ShingleMaintain.maintainBatch(dir)(toDF(docs), 0L)
     ShingleMaintain.maintainBatch(rebuilt)(toDF(docs.filterNot(_._1 == 2L)), 0L)
     ShingleMaintain.deleteDocs(spark, dir, Seq(2L).toDF("doc_id"), 0L)

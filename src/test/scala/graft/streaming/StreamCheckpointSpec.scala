@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -37,7 +36,7 @@ class StreamCheckpointSpec extends AnyFunSuite {
   }
 
   test("a store stream started with a checkpoint commits there, not under the temp dir") {
-    val entry = Files.createTempDirectory("graft-stream-checkpoint").toFile
+    val entry = graft.TestDirs.create("graft-stream-checkpoint").toFile
     try {
       val stage = s"$entry/stage"
       spark.range(0, 30).selectExpr("id AS doc_id", "concat('doc ', id) AS text")
@@ -58,7 +57,7 @@ class StreamCheckpointSpec extends AnyFunSuite {
 
   test("a stream-built store creates no temporary checkpoint under java.io.tmpdir") {
     // a source of its own, so the stored entry is built here, not reused
-    val dir = Files.createTempDirectory("graft-stream-checkpoint-docs").toFile
+    val dir = graft.TestDirs.create("graft-stream-checkpoint-docs").toFile
     try {
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .write.parquet(s"$dir/documents.parquet")

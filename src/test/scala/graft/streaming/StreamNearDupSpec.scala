@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -16,7 +15,7 @@ class StreamNearDupSpec extends AnyFunSuite {
 
   test("near signatures match within and across batches; far ones don't") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-neardup").toString
+    val dir = graft.TestDirs.create("graft-neardup").toString
     val base = 0x0123456789ABCDEFL
     val input = MemoryStream[Doc](spark)
     // doc 2 = base with 2 bits flipped (near dup of 1, same batch);

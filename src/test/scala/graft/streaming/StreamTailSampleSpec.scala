@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +19,6 @@ class StreamTailSampleSpec extends AnyFunSuite {
 
   test("policies decide in priority order; decisions fire on the timeout") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-tailsample").toString
     val input = MemoryStream[Span](spark)
     val withWm = input.toDF()
       .withColumn("eventTime", timestamp_seconds(expr("tsNs div 1000000000")))

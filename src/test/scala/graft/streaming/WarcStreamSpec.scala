@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming WARC ingest: archives arriving as files drive micro-batch
@@ -34,7 +33,7 @@ class WarcStreamSpec extends AnyFunSuite {
   }
 
   test("batch ≡ stream on identical archives; late files picked up incrementally; garbage skipped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-stream").toFile
+    val dir = graft.TestDirs.create("graft-warc-stream").toFile
     archive(dir, "a1.warc", Seq(
       ("https://x.example/1", "200 OK", "<html><body><p>alpha &amp; beta</p></body></html>"),
       ("https://x.example/2", "404 Not Found", "<p>gone</p>"),
@@ -75,7 +74,7 @@ class WarcStreamSpec extends AnyFunSuite {
   }
 
   test("extraction plan is shuffle-free (per-archive flatMap + codegen'd clean chain)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-plan").toFile
+    val dir = graft.TestDirs.create("graft-warc-plan").toFile
     archive(dir, "a.warc", Seq(("https://x/", "200 OK", "<p>x</p>")))
     val plan = WarcStream.batch(spark, dir.toString + "/*.warc")
       .queryExecution.executedPlan.toString

@@ -1,6 +1,5 @@
 package graft.traceql
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structural TraceQL semantics over a crafted span tree (the oracle gate
