@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -33,25 +33,12 @@ object RefreshProof {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf10")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "100").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession("8")
 
-    // ---- the scaled vectors (ScaleProof's replication rule) ----------
+    // ---- the scaled vectors ------------------------------------------
     val marker = new java.io.File(dst, s"_built_${copies}x_embeddings")
     if (!marker.exists()) {
-      val base = spark.read.parquet(s"$src/embeddings.parquet")
-      val n = base.count()
-      (0 until copies).map(k =>
-          base.withColumn("vec_id", col("vec_id") + lit(k * n)))
-        .reduce(_ unionByName _)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dst/embeddings.parquet")
+      ScaleProof.replicate(spark, src, dst, "embeddings", Seq("vec_id"), copies)
       marker.getParentFile.mkdirs()
       java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
     }

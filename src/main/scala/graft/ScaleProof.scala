@@ -18,20 +18,25 @@ import org.apache.spark.sql.functions._
   * is the interesting direction for a scale test.
   */
 object ScaleProof {
+  /** the replication rule the proof mains share: `copies` copies of
+    * `src/table` land at `dst/table`, copy k shifting every id column by
+    * k·N (N = the source row count). */
+  private[graft] def replicate(spark: SparkSession, src: String, dst: String,
+      table: String, idCols: Seq[String], copies: Int): Unit = {
+    val base = spark.read.parquet(s"$src/$table.parquet")
+    val n = base.count()
+    (0 until copies).map { k =>
+      idCols.foldLeft(base)((d, c) => d.withColumn(c, col(c) + lit(k * n)))
+    }.reduce(_ unionByName _)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dst/$table.parquet")
+    System.err.println(s"[scale] $table: $n -> ${n * copies}")
+  }
+
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession("8")
 
     // ---- build the scaled tables (idempotent per (src, copies)) --------
     // SPARK_GRAFT_SCALE_TABLES narrows which tables replicate (comma
@@ -43,20 +48,9 @@ object ScaleProof {
     val marker = new java.io.File(dst,
       s"_built_${copies}x_${tables.toSeq.sorted.mkString("_")}")
     if (!marker.exists()) {
-      def replicate(table: String, idCols: Seq[String]): Unit = if (tables(table)) {
-        val base = spark.read.parquet(s"$src/$table.parquet")
-        val n = base.count()
-        val copiesDf = (0 until copies).map { k =>
-          idCols.foldLeft(base)((d, c) =>
-            d.withColumn(c, col(c) + lit(k * n)))
-        }.reduce(_ unionByName _)
-        copiesDf.write.mode(SaveMode.Overwrite)
-          .parquet(s"$dst/$table.parquet")
-        System.err.println(s"[scale] $table: $n -> ${n * copies}")
-      }
-      replicate("documents", Seq("doc_id"))
-      replicate("embeddings", Seq("vec_id"))
-      replicate("events", Seq("event_id"))
+      for ((table, idCol) <- Seq("documents" -> "doc_id",
+          "embeddings" -> "vec_id", "events" -> "event_id") if tables(table))
+        replicate(spark, src, dst, table, Seq(idCol), copies)
       marker.getParentFile.mkdirs()
       java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
     }

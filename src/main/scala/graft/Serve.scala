@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev/demo serving main: starts the HTTP shell (auth-enabled) on a
   * fixed port and blocks — `runMain graft.Serve` then drive it with a
   * browser or curl. Not part of the driver contract; exists so the
@@ -15,15 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Serve {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession("4")
     val adminKey = sys.env.getOrElse("SPARK_GRAFT_ADMIN_KEY", "sk-root")
     val tenantKey = sys.env.getOrElse("SPARK_GRAFT_TENANT_KEY", "sk-acme")
     val shell = new graft.api.HttpShell(spark, dir,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -42,29 +42,13 @@ object WeekProof {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_week_sf")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession("8")
 
-    // ---- scaled corpora (ScaleProof's replication rule) --------------
+    // ---- scaled corpora ----------------------------------------------
     val marker = new java.io.File(dst, s"_built_${copies}x_docs_vecs")
     if (!marker.exists()) {
-      def replicate(table: String, idCol: String): Unit = {
-        val base = spark.read.parquet(s"$src/$table.parquet")
-        val n = base.count()
-        (0 until copies).map(k =>
-            base.withColumn(idCol, col(idCol) + lit(k * n)))
-          .reduce(_ unionByName _)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dst/$table.parquet")
-      }
-      replicate("documents", "doc_id")
-      replicate("embeddings", "vec_id")
+      ScaleProof.replicate(spark, src, dst, "documents", Seq("doc_id"), copies)
+      ScaleProof.replicate(spark, src, dst, "embeddings", Seq("vec_id"), copies)
       marker.getParentFile.mkdirs()
       java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
     }
@@ -154,13 +138,9 @@ object WeekProof {
     }
     def probeBm25(): DataFrame =
       IndexMaintain.bm25(spark, tdir, Seq("stream", "hash", "big"))
-    def probeBands(): DataFrame = fpRows(
-        delta.select(col("did").as("doc_id"), col("text")))
-      .select(col("doc_id").as("did"), col("fp").as("dfp"), explode(array(
-        (lit(0L) * 32768 + col("b1")).as("k0"),
-        (lit(1L) * 32768 + col("b2")).as("k1"),
-        (lit(2L) * 32768 + col("b3")).as("k2"),
-        (lit(3L) * 32768 + col("b4")).as("k3"))).as("bk"))
+    def probeBands(): DataFrame = BandMaintain.bandRows(fpRows(
+        delta.select(col("did").as("doc_id"), col("text"))))
+      .select(col("doc_id").as("did"), col("fp").as("dfp"), col("bk"))
       .join(BandMaintain.bands(spark, bdir), Seq("bk"))
       .select(col("did"), col("doc_id"),
         expr("bit_count(dfp ^ fp)").cast("long").as("hd")).distinct()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.streaming.BandMaintain
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.MediaRow
 
@@ -538,15 +539,56 @@ object MultimodalOps {
         .repartition(k, pmod(col("media_id"), lit(k)))
     }
 
-  /** codec-dispatching luma decode for the cross-codec fingerprint. */
-  private def lumaFrames(kind: String, bytes: Array[Byte])
-      : (Int, Vector[Array[Int]]) = kind match {
+  /** the video near-dup family's perceptual hash over DECODED luma
+    * planes (motion compensation reconstructs the inter frames): each
+    * 16×16 macroblock's luma is sampled at its center (MB-flat content —
+    * the sample IS the block value), and the signs of horizontal
+    * neighbor differences over the first four MB columns fill one band
+    * per frame, three bits per MB row for height/16 rows — 12 bits for
+    * the 64×64 MPEG streams, 9 for the 64×48 H.264 and cross-codec
+    * streams (the dHash shape over the macroblock grid). The four frame
+    * bands pack into a 60-bit fingerprint: (b1..b4, fp). */
+  private def frameFp(width: Int, height: Int, planes: Seq[Array[Int]])
+      : (Long, Long, Long, Long, Long) = {
+    val bands = Array.tabulate(4) { f =>
+      val y = planes(f)
+      var band = 0L
+      for (by <- 0 until height / 16; c <- 0 until 3) {
+        val l = y((by * 16 + 8) * width + c * 16 + 8)
+        val r = y((by * 16 + 8) * width + (c + 1) * 16 + 8)
+        if (r > l) band |= 1L << (by * 3 + c)
+      }
+      band
+    }
+    val fp = bands.zipWithIndex.map { case (b, f) => b << (f * 15) }
+      .reduce(_ | _)
+    (bands(0), bands(1), bands(2), bands(3), fp)
+  }
+
+  /** decode an MPEG-1 (`kind` "mpeg") or H.264 payload and hash its
+    * luma planes ([[frameFp]]). */
+  private def mediaFp(kind: String, bytes: Array[Byte])
+      : (Long, Long, Long, Long, Long) = kind match {
     case "mpeg" =>
       val d = graft.multimodal.Mpeg1.decode(bytes).get
-      (d.width, d.frames.map(_.y))
+      frameFp(d.width, d.height, d.frames.map(_.y))
     case _ =>
       val d = graft.multimodal.H264.decode(bytes).get
-      (d.width, d.frames.map(_.y))
+      frameFp(d.width, d.height, d.frames.map(_.y))
+  }
+
+  /** the cross-codec corpus fingerprinted through each row's own codec:
+    * (doc_id, kind, b1..b4, fp). Shared by q400's pairs and q401's
+    * maintained index. */
+  private def crossCodecFingerprints(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    s.read.parquet(storedCrossCodecPath(s, dir))
+      .select(col("media_id"), col("kind"), col("bytes"))
+      .as[(Long, String, Array[Byte])]
+      .map { case (id, kind, bytes) =>
+        val (b1, b2, b3, b4, fp) = mediaFp(kind, bytes)
+        (id, kind, b1, b2, b3, b4, fp)
+      }.toDF("doc_id", "kind", "b1", "b2", "b3", "b4", "fp")
   }
 
   /** q401's probe plane: for most groups the CORPUS scene (the role-0/1
@@ -572,122 +614,75 @@ object MultimodalOps {
   private def crossCodecIndexStore(s: SparkSession, dir: String): String =
     graft.storage.LocalCache.stored("xcodec_idx", dir) { base =>
       val store = s"$base/store"
-      import s.implicits._
-      val fps = s.read.parquet(storedCrossCodecPath(s, dir))
-        .select(col("media_id"), col("kind"), col("bytes"))
-        .as[(Long, String, Array[Byte])]
-        .map { case (id, kind, bytes) =>
-          val (width, frames) = lumaFrames(kind, bytes)
-          val bands = Array.tabulate(4) { f =>
-            val y = frames(f)
-            var band = 0L
-            for (by <- 0 until 3; c <- 0 until 3) {
-              val l = y((by * 16 + 8) * width + c * 16 + 8)
-              val r = y((by * 16 + 8) * width + (c + 1) * 16 + 8)
-              if (r > l) band |= 1L << (by * 3 + c)
-            }
-            band
-          }
-          (id, bands(0), bands(1), bands(2), bands(3),
-            bands.zipWithIndex.map { case (b, f) => b << (f * 15) }
-              .reduce(_ | _))
-        }.toDF("doc_id", "b1", "b2", "b3", "b4", "fp")
-      graft.streaming.BandMaintain.maintainBatch(store)(fps, 0L)
+      val fps = crossCodecFingerprints(s, dir)
+      BandMaintain.maintainBatch(store)(fps, 0L)
       // the migration: retire every MPEG original (role 0 ⇔ id%9==0)
-      graft.streaming.BandMaintain.deleteDocs(s, store,
+      BandMaintain.deleteDocs(s, store,
         fps.filter(pmod(col("doc_id"), lit(9)) === 0)
           .select(col("doc_id")), 0L)
-      graft.streaming.BandMaintain.compact(s, store)
+      BandMaintain.compact(s, store)
     } + "/store"
-
-  /** decode a stored H.264 payload and hash each reconstructed frame's
-    * MB grid into a 9-bit gradient-sign band (center-sampled 16×16
-    * blocks, horizontal neighbor signs — the [[videoFp]] shape on the
-    * 4×3 grid); four frame bands pack into one fingerprint. */
-  private def h264Fp(bytes: Array[Byte]): (Long, Long, Long, Long, Long) = {
-    val d = graft.multimodal.H264.decode(bytes).get
-    val bands = Array.tabulate(4) { f =>
-      val y = d.frames(f).y
-      var band = 0L
-      for (by <- 0 until 3; c <- 0 until 3) {
-        val l = y((by * 16 + 8) * d.width + c * 16 + 8)
-        val r = y((by * 16 + 8) * d.width + (c + 1) * 16 + 8)
-        if (r > l) band |= 1L << (by * 3 + c)
-      }
-      band
-    }
-    val fp = bands.zipWithIndex.map { case (b, f) => b << (f * 15) }
-      .reduce(_ | _)
-    (bands(0), bands(1), bands(2), bands(3), fp)
-  }
-
-  /** per-frame perceptual hash over the DECODED pictures (the video leg
-    * of the near-dup family): motion compensation reconstructs frames
-    * 1–3, each 16×16 macroblock's luma is sampled at its center
-    * (MB-flat content — the sample IS the block value), horizontal
-    * neighbor differences sign into one 12-bit band per frame (the
-    * dHash shape over the macroblock grid), and the four frame bands
-    * pack into a 60-bit fingerprint — the frame-sampled signature a
-    * video-corpus dedup keys on. Shares q371's band/cluster machinery:
-    * columns (doc_id, b1..b4, fp). */
-  /** decode an MPEG-1 payload and hash each reconstructed frame's
-    * macroblock grid into a 12-bit gradient-sign band (sampling each
-    * 16×16 block's luma at its center — MB-flat content, the sample IS
-    * the block value); returns (b1..b4, packed 60-bit fp). */
-  private def videoFp(bytes: Array[Byte]): (Long, Long, Long, Long, Long) = {
-    val d = graft.multimodal.Mpeg1.decode(bytes).get
-    val bands = Array.tabulate(4) { f =>
-      val y = d.frames(f).y
-      var band = 0L
-      for (by <- 0 until 4; c <- 0 until 3) {
-        val l = y((by * 16 + 8) * d.width + c * 16 + 8)
-        val r = y((by * 16 + 8) * d.width + (c + 1) * 16 + 8)
-        if (r > l) band |= 1L << (by * 3 + c)
-      }
-      band
-    }
-    val fp = bands.zipWithIndex.map { case (b, f) => b << (f * 15) }
-      .reduce(_ | _)
-    (bands(0), bands(1), bands(2), bands(3), fp)
-  }
 
   // private[graft]: PlanSpec pins the kind pushdown + pruned ReadSchema
   // on THIS frame — the plan that executes when audioClusters
   // checkpoints it (the final q390 plan reads the checkpointed RDD, so
   // the parquet scan is no longer visible there)
-  private[graft] def videoFingerprints(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def videoFingerprints(s: SparkSession, dir: String): DataFrame =
+    storedFingerprints(s, storedVideoPath(s, dir), "mpeg")
+
+  /** the stored `kind` payloads at `path`, decoded and hashed
+    * ([[mediaFp]]): (doc_id, b1..b4, fp). The kind predicate stays
+    * RELATIONAL (pushed to the parquet scan) and only (media_id, bytes)
+    * cross the encoder boundary; the stored files give the decode its
+    * splits (measured: a decode repartition changes nothing — the cost
+    * is the per-row inter-frame decode itself, scan-bound by design). */
+  private def storedFingerprints(s: SparkSession, path: String, kind: String)
+      : DataFrame = {
     import s.implicits._
-    // the kind predicate stays RELATIONAL (pushed to the parquet scan)
-    // and only (media_id, bytes) cross the encoder boundary; the
-    // append-sink files give the decode its splits (measured: a decode
-    // repartition changes nothing — the cost is the per-row inter-frame
-    // decode itself, scan-bound by design)
-    s.read.parquet(storedVideoPath(s, dir))
-      .where(col("kind") === "mpeg")
+    s.read.parquet(path)
+      .where(col("kind") === kind)
       .select(col("media_id"), col("bytes"))
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
-        val (b1, b2, b3, b4, fp) = videoFp(bytes)
+        val (b1, b2, b3, b4, fp) = mediaFp(kind, bytes)
         (id, b1, b2, b3, b4, fp)
       }.toDF("doc_id", "b1", "b2", "b3", "b4", "fp")
   }
 
-  /** q392's arriving drop, fingerprinted in flight: the delta videos
-    * encode → decode → hash inside the probe plan (new data has no
-    * stored copy yet — the corpus side is what must never be re-read). */
-  private def deltaVideoFingerprints(s: SparkSession, dir: String): DataFrame = {
+  /** an arriving drop of MPEG videos, fingerprinted in flight: one video
+    * per lane doc (doc_id % 3 = 1), id shifted by `shift`, content from
+    * `plan`, encode → decode → hash inside the probe plan (new data has
+    * no stored copy yet — the corpus side is what must never be
+    * re-read). Columns (did, b1..b4, fp). */
+  private def laneVideoFingerprints(s: SparkSession, dir: String, shift: Long,
+      plan: Long => (Int, Int, Seq[graft.multimodal.Mpeg1.FramePlan]))
+      : DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
       .filter(pmod(col("doc_id"), lit(3)) === 1)
       .select(col("doc_id")).as[Long]
       .map { id =>
-        val did = id + 50000000L
-        val (w, h, frames) = deltaVideoPlan(did)
+        val did = id + shift
+        val (w, h, frames) = plan(did)
         val (b1, b2, b3, b4, fp) =
-          videoFp(graft.multimodal.Mpeg1.encode(w, h, frames))
+          mediaFp("mpeg", graft.multimodal.Mpeg1.encode(w, h, frames))
         (did, b1, b2, b3, b4, fp)
       }.toDF("did", "b1", "b2", "b3", "b4", "fp")
   }
+
+  /** the ids of a probe drop, without fingerprinting it: lane docs
+    * (doc_id % m = r) shifted by `shift`, as `did`. A projection of the
+    * fingerprint frame would re-run its encode → decode → hash closure
+    * (a `Dataset.map` Catalyst cannot prune) just to produce ids. */
+  private def dropIds(s: SparkSession, dir: String, m: Int, r: Int,
+      shift: Long): DataFrame =
+    Tables.documents(s, dir)
+      .filter(pmod(col("doc_id"), lit(m)) === r)
+      .select((col("doc_id") + shift).as("did"))
+
+  /** q392's arriving drop (ids +50,000,000). */
+  private def deltaVideoFingerprints(s: SparkSession, dir: String): DataFrame =
+    laneVideoFingerprints(s, dir, 50000000L, deltaVideoPlan)
 
   /** q394's probe drop — the SECOND drop, arriving after the index has
     * lived through an append and a retention sweep (probe ids shift by
@@ -707,30 +702,81 @@ object MultimodalOps {
     else (64, 64, videoFrames(g, mix = 7, off = 12, _ => 0))
   }
 
-  private def probeVideoFingerprints(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir)
-      .filter(pmod(col("doc_id"), lit(3)) === 1)
-      .select(col("doc_id")).as[Long]
-      .map { id =>
-        val pid = id + 90000000L
-        val (w, h, frames) = probeVideoPlan(pid)
-        val (b1, b2, b3, b4, fp) =
-          videoFp(graft.multimodal.Mpeg1.encode(w, h, frames))
-        (pid, b1, b2, b3, b4, fp)
-      }.toDF("did", "b1", "b2", "b3", "b4", "fp")
+  private def probeVideoFingerprints(s: SparkSession, dir: String): DataFrame =
+    laneVideoFingerprints(s, dir, 90000000L, probeVideoPlan)
+
+  /** the corpus videos' band rows (bk, doc_id, fp): every corpus video's
+    * four frame bands, decoded at index BUILD time only. */
+  private def corpusVideoBands(s: SparkSession, dir: String): DataFrame =
+    BandMaintain.bandRows(videoFingerprints(s, dir))
+      .select(col("bk"), col("doc_id"), col("fp"))
+
+  /** band-equality candidates of probe band rows (did, fp, bk) against
+    * index frames (bk, doc_id, fp), each index joined on its own (so a
+    * bucketed index scan stays co-located), confirmed at Hamming ≤
+    * maxHd: (did, dfp, doc_id, fp, hd). A join hint — a broadcast of
+    * the small probe side — rides on the `probe` frame. */
+  private def bandMatches(probe: DataFrame, index: Seq[DataFrame],
+      maxHd: Long): DataFrame = {
+    val p = probe.select(col("did"), col("fp").as("dfp"), col("bk"))
+    index.map(_.join(p, Seq("bk"))
+        .select(col("did"), col("dfp"), col("doc_id"), col("fp")))
+      .reduce(_ unionByName _).distinct()
+      .withColumn("hd", expr("bit_count(dfp ^ fp)").cast("long"))
+      .filter(col("hd") <= maxHd)
   }
 
-  /** explode (id, b1..b4, fp) fingerprints into band-key rows
-    * (did, dfp, bk) — the probe side of every band-index join. */
-  private def bandRows(fps: DataFrame, idCol: String): DataFrame =
-    fps.select(col(idCol).as("did"), col("fp").as("dfp"), explode(array(
-        struct(lit(0L).as("f"), col("b1").as("band")),
-        struct(lit(1L).as("f"), col("b2").as("band")),
-        struct(lit(2L).as("f"), col("b3").as("band")),
-        struct(lit(3L).as("f"), col("b4").as("band")))).as("e"))
-      .select(col("did"), col("dfp"),
-        (col("e.f") * 32768 + col("e.band")).as("bk"))
+  /** the probe classifier: each probe id in `ids` (did) classifies
+    * exact (min hd = 0) / near (0 < min hd ≤ maxHd) / new against the
+    * [[bandMatches]] of its band rows, carrying the min matching doc
+    * (−1 when new). Columns (did, status, dup_of). */
+  private def classifyProbes(ids: DataFrame, probe: DataFrame,
+      index: Seq[DataFrame], maxHd: Long): DataFrame = {
+    val best = bandMatches(probe, index, maxHd).groupBy(col("did"))
+      .agg(min(col("hd")).as("min_hd"), min(col("doc_id")).as("dup_of"))
+    ids.join(best, Seq("did"), "left")
+      .select(col("did"),
+        when(col("min_hd") === 0, "exact")
+          .when(col("min_hd").isNotNull, "near")
+          .otherwise("new").as("status"),
+        coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
+  }
+
+  /** drop 1's survivors against `index`: the delta videos with no
+    * Hamming ≤ 2 band match (class `new`), as fingerprints (did, b1..b4,
+    * fp) ready to append. */
+  private def deltaSurvivors(s: SparkSession, dir: String,
+      index: DataFrame): DataFrame = {
+    val d1 = deltaVideoFingerprints(s, dir)
+    val matched = bandMatches(BandMaintain.bandRows(d1), Seq(index), 2)
+      .select(col("did")).distinct()
+    d1.join(matched, Seq("did"), "left_anti")
+  }
+
+  /** near-dup pairs over band rows (doc_id, fp, bk, carried columns):
+    * the band self-join on bk with a < b — candidates come from band
+    * equality alone, never all-pairs — distinct pairs, Hamming ≤ maxHd
+    * confirmed. Columns (media_a, media_b, c_a, c_b for each carried c,
+    * hamming_dist). */
+  private def bandPairs(bands: DataFrame, maxHd: Long,
+      carry: Seq[String] = Nil): DataFrame = {
+    def side(t: String) = bands.select(
+      Seq(col("bk"), col("doc_id").as(t), col("fp").as(s"f$t")) ++
+        carry.map(c => col(c).as(s"${c}_$t")): _*)
+    side("a").join(side("b"), Seq("bk")).filter(col("a") < col("b"))
+      .select(Seq(col("a").as("media_a"), col("b").as("media_b")) ++
+        carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))) :+
+        expr("bit_count(fa ^ fb)").cast("long").as("hamming_dist"): _*)
+      .distinct()
+      .filter(col("hamming_dist") <= maxHd)
+  }
+
+  /** near-dup pairs over the stored H.264 corpus at `path` (q399 intra,
+    * q405 motion-recoded): decode once, then [[bandPairs]] at Hamming ≤ 2
+    * (q390's video confirm threshold). */
+  private def h264Pairs(s: SparkSession, path: String): DataFrame =
+    bandPairs(BandMaintain.bandRows(storedFingerprints(s, path, "h264")
+      .localCheckpoint()), maxHd = 2) // decode once: both join sides read this
 
   /** the STORED corpus band index behind q392 (the q379 discipline for
     * perceptual hashes): every corpus video's four frame bands land ONCE
@@ -744,15 +790,8 @@ object MultimodalOps {
     def table(base: String) =
       s"video_band_idx_${Integer.toHexString(base.hashCode & 0x7fffffff)}"
     val base = graft.storage.LocalCache.stored("video_band_idx", dir) { base =>
-      val fps = videoFingerprints(s, dir)
-      val bands = fps.select(col("doc_id"), col("fp"), explode(array(
-          struct(lit(0L).as("f"), col("b1").as("band")),
-          struct(lit(1L).as("f"), col("b2").as("band")),
-          struct(lit(2L).as("f"), col("b3").as("band")),
-          struct(lit(3L).as("f"), col("b4").as("band")))).as("e"))
-        .select((col("e.f") * 32768 + col("e.band")).as("bk"),
-          col("doc_id"), col("fp"))
-      graft.storage.Storage.writeBucketed(bands, layout(base), table(base), "bk", 8)
+      graft.storage.Storage.writeBucketed(corpusVideoBands(s, dir),
+        layout(base), table(base), "bk", 8)
     }
     s.table(graft.storage.Storage.registerBucketed(s, layout(base), table(base),
       "bk BIGINT, doc_id BIGINT, fp BIGINT", "bk", 8))
@@ -786,22 +825,13 @@ object MultimodalOps {
       s"video_lx_${part}_${Integer.toHexString(base.hashCode & 0x7fffffff)}"
     val base = graft.storage.LocalCache.stored("video_idx_lifecycle", dir) { base =>
       // build: decode the corpus ONCE
-      val cbands = bandRows(videoFingerprints(s, dir), "doc_id")
-        .select(col("bk"), col("did").as("doc_id"), col("dfp").as("fp"))
-      graft.storage.Storage.writeBucketed(cbands, layout(base),
-        table(base, "corpus"), "bk", 8)
+      graft.storage.Storage.writeBucketed(corpusVideoBands(s, dir),
+        layout(base), table(base, "corpus"), "bk", 8)
       val idx = s.table(s"tenant0_vlx_${table(base, "corpus")}")
       // drop 1: classify against the fresh index; survivors append
-      val d1 = deltaVideoFingerprints(s, dir)
-      val d1bands = bandRows(d1, "did")
-      val matched = d1bands.join(idx, Seq("bk"))
-        .select(col("did"), col("dfp"), col("fp")).distinct()
-        .filter(expr("bit_count(dfp ^ fp)").cast("long") <= 2)
-        .select(col("did")).distinct()
-      val survivors = d1.join(matched, Seq("did"), "left_anti")
       graft.storage.Storage.writeBucketed(
-        bandRows(survivors, "did")
-          .select(col("bk"), col("did").as("doc_id"), col("dfp").as("fp")),
+        BandMaintain.bandRows(deltaSurvivors(s, dir, idx))
+          .select(col("bk"), col("did").as("doc_id"), col("fp")),
         layout(base), table(base, "delta"), "bk", 8)
       // retention: the expired cohort's audit rows mask the index
       graft.storage.Storage.writeBucketed(
@@ -842,29 +872,23 @@ object MultimodalOps {
           StructField("b3", LongType), StructField("b4", LongType),
           StructField("fp", LongType))))
         .option("maxFilesPerTrigger", "1").parquet(stage)
-      graft.streaming.BandMaintain.start(stream, store,
+      BandMaintain.start(stream, store,
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
         checkpoint = Some(s"$base/checkpoint")).awaitTermination()
       // drop 1: classify against the MAINTAINED store; survivors
       // append as the next batch (ids are +50M — never in the corpus)
-      val d1 = deltaVideoFingerprints(s, dir)
-      val matched = bandRows(d1, "did")
-        .join(graft.streaming.BandMaintain.bands(s, store), Seq("bk"))
-        .select(col("did"), col("dfp"), col("fp")).distinct()
-        .filter(expr("bit_count(dfp ^ fp)").cast("long") <= 2)
-        .select(col("did")).distinct()
-      graft.streaming.BandMaintain.maintainBatch(store)(
-        d1.join(matched, Seq("did"), "left_anti")
+      BandMaintain.maintainBatch(store)(
+        deltaSurvivors(s, dir, BandMaintain.bands(s, store))
           .withColumnRenamed("did", "doc_id"), 2L)
       // retention: the expired corpus cohort tombstones the index
-      graft.streaming.BandMaintain.deleteDocs(s, store,
+      BandMaintain.deleteDocs(s, store,
         s.read.parquet(stage)
           .filter(pmod(expr("doc_id div 9"), lit(3)) === 0)
           .select(col("doc_id")), 0L)
-      graft.streaming.BandMaintain.compact(s, store)
+      BandMaintain.compact(s, store)
     } + "/store"
 
-  /** the DuckDB twin of [[audioFingerprints]] + [[audioFpEdges]]: ends in
+  /** the DuckDB twin of [[audioFingerprints]] + q351's [[bandPairs]]: ends in
     * `fps(doc_id, fp)` and `aedges(a, b, hd)` with a < b, hd ≤ 6. Shared
     * by the q351 pair oracle and the q371 cluster oracle. */
   private val audioFpCteSql: String =
@@ -1375,31 +1399,6 @@ object MultimodalOps {
     (bands(0), bands(1), bands(2), bands(3), fp)
   }
 
-  /** confirmed near-dup edges over [[audioFingerprints]]: exact-band
-    * equality candidates (the LSH shape — never all-pairs), Hamming ≤ 6
-    * confirm. Columns (media_a, media_b, hamming_dist), media_a < media_b. */
-  private def audioFpEdges(s: SparkSession, dir: String): DataFrame =
-    audioFpEdgesFrom(audioFingerprints(s, dir))
-
-  private def audioFpEdgesFrom(fps: DataFrame, maxHd: Long = 6): DataFrame = {
-    val bandRows = fps.select(col("doc_id"), col("fp"), explode(array(
-        struct(lit(1).as("f"), col("b1").as("band")),
-        struct(lit(2).as("f"), col("b2").as("band")),
-        struct(lit(3).as("f"), col("b3").as("band")),
-        struct(lit(4).as("f"), col("b4").as("band")))).as("e"))
-      .select(col("doc_id"), col("fp"), col("e.f").as("f"),
-        col("e.band").as("band"))
-    bandRows.as("x").join(bandRows.as("y"),
-        col("x.f") === col("y.f") && col("x.band") === col("y.band") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("media_a"), col("y.doc_id").as("media_b"),
-        col("x.fp").as("fpa"), col("y.fp").as("fpb"))
-      .distinct()
-      .select(col("media_a"), col("media_b"),
-        expr("bit_count(fpa ^ fpb)").cast("long").as("hamming_dist"))
-      .filter(col("hamming_dist") <= maxHd)
-  }
-
   /** cluster + survivor rollup over a fingerprint frame (doc_id, b1..b4,
     * fp): band-join edges → connected components → one row
     * per cluster (singletons labeled by their own id), survivor = min
@@ -1414,7 +1413,7 @@ object MultimodalOps {
     // corpus: measured at sf0.1, the un-checkpointed shape decoded the
     // whole corpus twice per run.
     val fps = fps0.localCheckpoint()
-    val edges = audioFpEdgesFrom(fps, maxHd)
+    val edges = bandPairs(BandMaintain.bandRows(fps), maxHd)
       .select(col("media_a").as("u"), col("media_b").as("v"))
       .localCheckpoint()
     val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
@@ -1701,8 +1700,7 @@ object MultimodalOps {
     // Hamming ≤ 6. The oracle restates the synthesis, the WHT, the
     // banding, and the join in SQL.
     "q351_audio_fingerprint_neardup" -> ((s, dir) =>
-      audioFpEdges(s, dir)
-        .select(col("media_a"), col("media_b"), col("hamming_dist"))),
+      bandPairs(BandMaintain.bandRows(audioFingerprints(s, dir)), maxHd = 6)),
 
     // AUDIO NEAR-DUP CLUSTERS + SURVIVORS (the q351 lesson, BASELINE.md
     // r10: PAIR-LIST near-dup reporting is quadratic within dup
@@ -1755,29 +1753,11 @@ object MultimodalOps {
     // video classifies exact (hd = 0) / near (0 < hd ≤ 2) / new,
     // carrying the min corpus match. The oracle restates both content
     // planes, the hashes, and the classification.
-    "q392_video_dedup_delta" -> ((s, dir) => {
-      val idx = videoBandIndex(s, dir)
-      val delta = deltaVideoFingerprints(s, dir)
-      val dbands = delta.select(col("did"), col("fp").as("dfp"), explode(array(
-          struct(lit(0L).as("f"), col("b1").as("band")),
-          struct(lit(1L).as("f"), col("b2").as("band")),
-          struct(lit(2L).as("f"), col("b3").as("band")),
-          struct(lit(3L).as("f"), col("b4").as("band")))).as("e"))
-        .select(col("did"), col("dfp"),
-          (col("e.f") * 32768 + col("e.band")).as("bk"))
-      val cand = dbands.join(idx, Seq("bk"))
-        .select(col("did"), col("dfp"), col("doc_id"), col("fp")).distinct()
-        .withColumn("hd", expr("bit_count(dfp ^ fp)").cast("long"))
-        .filter(col("hd") <= 2) // q390's video confirm threshold
-      val best = cand.groupBy(col("did"))
-        .agg(min(col("hd")).as("min_hd"), min(col("doc_id")).as("dup_of"))
-      delta.select(col("did")).join(best, Seq("did"), "left")
-        .select(col("did"),
-          when(col("min_hd") === 0, "exact")
-            .when(col("min_hd").isNotNull, "near")
-            .otherwise("new").as("status"),
-          coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
-    }),
+    "q392_video_dedup_delta" -> ((s, dir) =>
+      classifyProbes(dropIds(s, dir, 3, 1, 50000000L),
+        BandMaintain.bandRows(deltaVideoFingerprints(s, dir)),
+        Seq(videoBandIndex(s, dir)),
+        maxHd = 2)), // q390's video confirm threshold
 
     // VIDEO INDEX LIFECYCLE (VERDICT r12 #2): the maintained band index
     // — built once, grown by a drop-1 survivor append, masked by a
@@ -1794,27 +1774,10 @@ object MultimodalOps {
     // join, and the classification.
     "q394_video_index_lifecycle" -> ((s, dir) => {
       val (corpus, delta, dead) = videoLifecycleIndex(s, dir)
-      val liveCorpus = corpus.join(dead, Seq("bk", "doc_id"), "left_anti")
-      val pbands = bandRows(probeVideoFingerprints(s, dir), "did")
-      def cands(ix: DataFrame) = pbands.join(ix, Seq("bk"))
-        .select(col("did"), col("dfp"), col("doc_id"), col("fp"))
-      val cand = cands(liveCorpus).unionByName(cands(delta)).distinct()
-        .withColumn("hd", expr("bit_count(dfp ^ fp)").cast("long"))
-        .filter(col("hd") <= 2) // q390's video confirm threshold
-      val best = cand.groupBy(col("did"))
-        .agg(min(col("hd")).as("min_hd"), min(col("doc_id")).as("dup_of"))
-      // the left side only needs the probe IDS — deriving them from the
-      // documents table avoids a second full encode→decode→hash pass
-      // over the probe drop (the ids are doc_id + 90M by construction)
-      Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(3)) === 1)
-        .select((col("doc_id") + 90000000L).as("did"))
-        .join(best, Seq("did"), "left")
-        .select(col("did"),
-          when(col("min_hd") === 0, "exact")
-            .when(col("min_hd").isNotNull, "near")
-            .otherwise("new").as("status"),
-          coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
+      classifyProbes(dropIds(s, dir, 3, 1, 90000000L),
+        BandMaintain.bandRows(probeVideoFingerprints(s, dir)),
+        Seq(corpus.join(dead, Seq("bk", "doc_id"), "left_anti"), delta),
+        maxHd = 2)
     }),
 
     // VIDEO INDEX STREAMING MAINTAINER (VERDICT r13 #3): q394's
@@ -1825,26 +1788,10 @@ object MultimodalOps {
     // probe time: the (small) probe band rows broadcast into the
     // bk-clustered store scan, and the corpus was decoded exactly once,
     // at ingest.
-    "q397_video_index_stream" -> ((s, dir) => {
-      val store = streamedVideoStore(s, dir)
-      val idx = graft.streaming.BandMaintain.bands(s, store)
-      val pbands = bandRows(probeVideoFingerprints(s, dir), "did")
-      val cand = idx.join(broadcast(pbands), Seq("bk"))
-        .select(col("did"), col("dfp"), col("doc_id"), col("fp")).distinct()
-        .withColumn("hd", expr("bit_count(dfp ^ fp)").cast("long"))
-        .filter(col("hd") <= 2) // q390's video confirm threshold
-      val best = cand.groupBy(col("did"))
-        .agg(min(col("hd")).as("min_hd"), min(col("doc_id")).as("dup_of"))
-      Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(3)) === 1)
-        .select((col("doc_id") + 90000000L).as("did"))
-        .join(best, Seq("did"), "left")
-        .select(col("did"),
-          when(col("min_hd") === 0, "exact")
-            .when(col("min_hd").isNotNull, "near")
-            .otherwise("new").as("status"),
-          coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
-    }),
+    "q397_video_index_stream" -> ((s, dir) =>
+      classifyProbes(dropIds(s, dir, 3, 1, 90000000L),
+        broadcast(BandMaintain.bandRows(probeVideoFingerprints(s, dir))),
+        Seq(BandMaintain.bands(s, streamedVideoStore(s, dir))), maxHd = 2)),
 
     // H.264 INTRA ROUND TRIP (VERDICT r13 #5 — the dominant real-crawl
     // codec's tractable core): per doc a 4-frame IDR stream (Baseline,
@@ -1884,36 +1831,8 @@ object MultimodalOps {
     // are brightness-lifted re-encodes of their group's role-0 content
     // (sign-invariant → hd 0); role-2 docs are re-authored. Never
     // all-pairs: candidates come from the band join alone.
-    "q399_h264_dedup_pairs" -> ((s, dir) => {
-      import s.implicits._
-      val fps = s.read.parquet(storedH264Path(s, dir))
-        .where(col("kind") === "h264")
-        .select(col("media_id"), col("bytes"))
-        .as[(Long, Array[Byte])]
-        .map { case (id, bytes) =>
-          val (b1, b2, b3, b4, fp) = h264Fp(bytes)
-          (id, b1, b2, b3, b4, fp)
-        }.toDF("doc_id", "b1", "b2", "b3", "b4", "fp")
-        .localCheckpoint() // decode once: both join sides read this
-      val bands = fps.select(col("doc_id"), col("fp"), explode(array(
-          struct(lit(0L).as("f"), col("b1").as("band")),
-          struct(lit(1L).as("f"), col("b2").as("band")),
-          struct(lit(2L).as("f"), col("b3").as("band")),
-          struct(lit(3L).as("f"), col("b4").as("band")))).as("e"))
-        .select(col("doc_id"), col("fp"), col("e.f").as("f"),
-          col("e.band").as("band"))
-      val x = bands.select(col("doc_id").as("a"), col("fp").as("fa"),
-        col("f"), col("band"))
-      val y = bands.select(col("doc_id").as("b"), col("fp").as("fb"),
-        col("f"), col("band"))
-      x.join(y, Seq("f", "band")).filter(col("a") < col("b"))
-        .select(col("a"), col("b"),
-          expr("bit_count(fa ^ fb)").cast("long").as("hd"))
-        .distinct()
-        .filter(col("hd") <= 2) // q390's video confirm threshold
-        .select(col("a").as("media_a"), col("b").as("media_b"),
-          col("hd").as("hamming_dist"))
-    }),
+    "q399_h264_dedup_pairs" -> ((s, dir) =>
+      h264Pairs(s, storedH264Path(s, dir))),
 
     // CROSS-CODEC NEAR-DUP (the codec-agnostic dedup a crawl corpus
     // needs): the same scene stored as MPEG-1 and as H.264 — different
@@ -1922,48 +1841,10 @@ object MultimodalOps {
     // reconstruct exactly. Role-0 (MPEG) ↔ role-1 (H.264) pairs confirm
     // at hd 0; the oracle is one closed plane formula regardless of
     // codec, plus the role → kind mapping.
-    "q400_crosscodec_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val fps = s.read.parquet(storedCrossCodecPath(s, dir))
-        .select(col("media_id"), col("kind"), col("bytes"))
-        .as[(Long, String, Array[Byte])]
-        .map { case (id, kind, bytes) =>
-          val (width, frames) = lumaFrames(kind, bytes)
-          val bands = Array.tabulate(4) { f =>
-            val y = frames(f)
-            var band = 0L
-            for (by <- 0 until 3; c <- 0 until 3) {
-              val l = y((by * 16 + 8) * width + c * 16 + 8)
-              val r = y((by * 16 + 8) * width + (c + 1) * 16 + 8)
-              if (r > l) band |= 1L << (by * 3 + c)
-            }
-            band
-          }
-          val fp = bands.zipWithIndex.map { case (b, f) => b << (f * 15) }
-            .reduce(_ | _)
-          (id, kind, bands(0), bands(1), bands(2), bands(3), fp)
-        }.toDF("doc_id", "kind", "b1", "b2", "b3", "b4", "fp")
-        .localCheckpoint() // decode once: both join sides read this
-      val bands = fps.select(col("doc_id"), col("kind"), col("fp"),
-          explode(array(
-            struct(lit(0L).as("f"), col("b1").as("band")),
-            struct(lit(1L).as("f"), col("b2").as("band")),
-            struct(lit(2L).as("f"), col("b3").as("band")),
-            struct(lit(3L).as("f"), col("b4").as("band")))).as("e"))
-        .select(col("doc_id"), col("kind"), col("fp"),
-          col("e.f").as("f"), col("e.band").as("band"))
-      val x = bands.select(col("doc_id").as("a"), col("kind").as("kind_a"),
-        col("fp").as("fa"), col("f"), col("band"))
-      val y = bands.select(col("doc_id").as("b"), col("kind").as("kind_b"),
-        col("fp").as("fb"), col("f"), col("band"))
-      x.join(y, Seq("f", "band")).filter(col("a") < col("b"))
-        .select(col("a"), col("kind_a"), col("b"), col("kind_b"),
-          expr("bit_count(fa ^ fb)").cast("long").as("hd"))
-        .distinct()
-        .filter(col("hd") <= 2)
-        .select(col("a").as("media_a"), col("b").as("media_b"),
-          col("kind_a"), col("kind_b"), col("hd").as("hamming_dist"))
-    }),
+    "q400_crosscodec_dedup" -> ((s, dir) =>
+      bandPairs(BandMaintain.bandRows(crossCodecFingerprints(s, dir)
+        .localCheckpoint()), // decode once: both join sides read this
+        maxHd = 2, carry = Seq("kind"))),
 
     // CROSS-CODEC INDEX MIGRATION (q400 × q394): the maintained band
     // index holds BOTH codecs' fingerprints; the MPEG originals are
@@ -1976,7 +1857,6 @@ object MultimodalOps {
     "q401_crosscodec_index_migrate" -> ((s, dir) => {
       import s.implicits._
       val store = crossCodecIndexStore(s, dir)
-      val idx = graft.streaming.BandMaintain.bands(s, store)
       val probes = Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(9)) === 0)
         .select(col("doc_id")).as[Long]
@@ -1987,25 +1867,12 @@ object MultimodalOps {
             graft.multimodal.H264.FramePlan((bx, by) =>
               graft.multimodal.H264.MbI16(v(f, bx, by))))
           val (b1, b2, b3, b4, fp) =
-            h264Fp(graft.multimodal.H264.encode(64, 48, frames))
+            mediaFp("h264", graft.multimodal.H264.encode(64, 48, frames))
           (pid, b1, b2, b3, b4, fp)
         }.toDF("did", "b1", "b2", "b3", "b4", "fp")
-      // bandRows' bk = f·2¹⁵ + band is exactly BandMaintain's key
-      val cand = idx.join(broadcast(bandRows(probes, "did")), Seq("bk"))
-        .select(col("did"), col("dfp"), col("doc_id"), col("fp")).distinct()
-        .withColumn("hd", expr("bit_count(dfp ^ fp)").cast("long"))
-        .filter(col("hd") <= 2)
-      val best = cand.groupBy(col("did"))
-        .agg(min(col("hd")).as("min_hd"), min(col("doc_id")).as("dup_of"))
-      Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(9)) === 0)
-        .select((col("doc_id") + 70000000L).as("did"))
-        .join(best, Seq("did"), "left")
-        .select(col("did"),
-          when(col("min_hd") === 0, "exact")
-            .when(col("min_hd").isNotNull, "near")
-            .otherwise("new").as("status"),
-          coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
+      classifyProbes(dropIds(s, dir, 9, 0, 70000000L),
+        broadcast(BandMaintain.bandRows(probes)),
+        Seq(BandMaintain.bands(s, store)), maxHd = 2)
     }),
 
     // MOTION-COMPENSATED H.264 round-trip census (the moving-scene
@@ -2047,36 +1914,8 @@ object MultimodalOps {
     // so the motion-recoded duplicate still collides at hd 0; the
     // re-authored role-2 docs do not. Candidates come from the band
     // join alone — never all-pairs.
-    "q405_h264_motion_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val fps = s.read.parquet(storedH264MotionPath(s, dir))
-        .where(col("kind") === "h264")
-        .select(col("media_id"), col("bytes"))
-        .as[(Long, Array[Byte])]
-        .map { case (id, bytes) =>
-          val (b1, b2, b3, b4, fp) = h264Fp(bytes)
-          (id, b1, b2, b3, b4, fp)
-        }.toDF("doc_id", "b1", "b2", "b3", "b4", "fp")
-        .localCheckpoint() // decode once: both join sides read this
-      val bands = fps.select(col("doc_id"), col("fp"), explode(array(
-          struct(lit(0L).as("f"), col("b1").as("band")),
-          struct(lit(1L).as("f"), col("b2").as("band")),
-          struct(lit(2L).as("f"), col("b3").as("band")),
-          struct(lit(3L).as("f"), col("b4").as("band")))).as("e"))
-        .select(col("doc_id"), col("fp"), col("e.f").as("f"),
-          col("e.band").as("band"))
-      val x = bands.select(col("doc_id").as("a"), col("fp").as("fa"),
-        col("f"), col("band"))
-      val y = bands.select(col("doc_id").as("b"), col("fp").as("fb"),
-        col("f"), col("band"))
-      x.join(y, Seq("f", "band")).filter(col("a") < col("b"))
-        .select(col("a"), col("b"),
-          expr("bit_count(fa ^ fb)").cast("long").as("hd"))
-        .distinct()
-        .filter(col("hd") <= 2)
-        .select(col("a").as("media_a"), col("b").as("media_b"),
-          col("hd").as("hamming_dist"))
-    }),
+    "q405_h264_motion_dedup" -> ((s, dir) =>
+      h264Pairs(s, storedH264MotionPath(s, dir))),
 
     // CABAC ROUND-TRIP census: the stored streams are entropy-coded
     // with the clause-9.3 arithmetic engine (context models, UEG0

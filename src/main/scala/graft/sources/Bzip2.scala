@@ -86,7 +86,13 @@ object Bzip2 {
 
   /** bzip2-compress `data` at compression level 1..9 (block size =
     * level × 100000; inputs larger than one block split). */
-  def compress(data: Array[Byte], level: Int = 1): Array[Byte] = {
+  def compress(data: Array[Byte], level: Int = 1): Array[Byte] =
+    compressWith(data, level, rotationOrder)
+
+  /** [[compress]] with the BWT's rotation sort passed in, so a test can
+    * pin the output against a reference sort. */
+  private[sources] def compressWith(data: Array[Byte], level: Int,
+      order: Array[Byte] => Array[Int]): Array[Byte] = {
     require(level >= 1 && level <= 9)
     val blockSize = level * 100000
     val bw = new BW
@@ -105,7 +111,7 @@ object Bzip2 {
       orig.foreach(b => bcrc = crcUpd(bcrc, b))
       val blockCrc = crcFin(bcrc)
       streamCrc = ((streamCrc << 1) | (streamCrc >>> 31)) ^ blockCrc
-      writeBlock(bw, rle1Encode(orig), blockCrc)
+      writeBlock(bw, rle1Encode(orig), blockCrc, order)
       off = end
     }
     bw.put(0x177245L, 24); bw.put(0x385090L, 24) // end-of-stream magic
@@ -113,21 +119,47 @@ object Bzip2 {
     bw.flush()
   }
 
-  private def writeBlock(bw: BW, rle1: Array[Byte], blockCrc: Int): Unit = {
-    val n = rle1.length
-    // ---- BWT (rotation sort; fixture-scale inputs) ----
-    val idx = Array.range(0, n)
-    val sorted = idx.sortWith { (a, b) =>
-      var k = 0
-      var r = 0
-      while (k < n && r == 0) {
-        val ca = rle1((a + k) % n) & 0xFF
-        val cb = rle1((b + k) % n) & 0xFF
-        r = Integer.compare(ca, cb)
-        k += 1
+  /** the BWT's rotation order: the start indices of the cyclic
+    * rotations of `s` in ascending unsigned-byte order, equal rotations
+    * (a periodic block) by index. Prefix doubling over cyclic ranks:
+    * the round for k sorts every i by (rank of its k-prefix, rank of the
+    * k-prefix at i + k), giving the ranks of the 2k-prefixes, until the
+    * ranks are all distinct or 2k covers the block — O(n log² n) on any
+    * input. The sort key packs (rank, next rank, index) into one Long,
+    * 21 bits each, so equal prefixes fall back to index order. */
+  private[sources] def rotationOrder(s: Array[Byte]): Array[Int] = {
+    val n = s.length
+    require(n < (1 << 21), s"block of $n bytes exceeds the packed sort key")
+    val mask = (1L << 21) - 1
+    val rank = Array.tabulate(n)(i => s(i) & 0xFF)
+    val keys = new Array[Long](n)
+    var k = 1
+    var done = n == 0
+    while (!done) {
+      var i = 0
+      while (i < n) {
+        keys(i) = (rank(i).toLong << 42) | (rank((i + k) % n).toLong << 21) | i
+        i += 1
       }
-      if (r != 0) r < 0 else a < b
+      java.util.Arrays.sort(keys)
+      var r = 0
+      i = 0
+      while (i < n) {
+        if (i > 0 && (keys(i) >>> 21) != (keys(i - 1) >>> 21)) r += 1
+        rank((keys(i) & mask).toInt) = r
+        i += 1
+      }
+      done = r == n - 1 || 2L * k >= n
+      k *= 2
     }
+    keys.map(x => (x & mask).toInt)
+  }
+
+  private def writeBlock(bw: BW, rle1: Array[Byte], blockCrc: Int,
+      order: Array[Byte] => Array[Int]): Unit = {
+    val n = rle1.length
+    // ---- BWT ----
+    val sorted = order(rle1)
     val bwt = new Array[Byte](n)
     var origPtr = -1
     var i = 0

@@ -26,6 +26,11 @@ import org.apache.spark.sql.types._
   * or re-decodes, and a probe broadcasts its (small) band rows into the
   * bk-sorted store scan — the q394 shape, stream-built.
   *
+  * BandMaintain owns the band key: [[bandRows]] is the only encoding
+  * of (f, band) as bk, used by the store's fold and by every probe and
+  * pair join over band rows, so a stored key and a probe key cannot
+  * drift apart.
+  *
   * Store lifecycle laws shared with the other maintainers: see
   * `src/main/scala/graft/streaming/README.md`. Reference shape:
   * `/root/reference/src/writer/src/processor.rs:31-46` (micro-batch
@@ -46,19 +51,25 @@ object BandMaintain {
     BatchStore.stampFormat(batch.sparkSession, s"$dir/bands")
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
       compact(batch.sparkSession, dir, upTo = batchId - 1)
-    batch.select(col("doc_id").cast(LongType), col("fp").cast(LongType),
-        explode(array(
-          struct(lit(0L).as("f"), col("b1").cast(LongType).as("band")),
-          struct(lit(1L).as("f"), col("b2").cast(LongType).as("band")),
-          struct(lit(2L).as("f"), col("b3").cast(LongType).as("band")),
-          struct(lit(3L).as("f"), col("b4").cast(LongType).as("band")))).as("e"))
-      .select((col("e.f") * 32768 + col("e.band")).as("bk"),
-        col("doc_id"), col("fp"))
+    bandRows(batch)
+      .select(col("bk"), col("doc_id").cast(LongType), col("fp").cast(LongType))
       // src = the batch that wrote the row: a tombstone kills only rows
       // whose source existed at delete time (src ≤ its covers)
       .withColumn("src", lit(batchId))
       .sortWithinPartitions(col("bk")) // row-group stats prune bk probes
       .write.mode("overwrite").parquet(s"$dir/bands/batch-$batchId")
+  }
+
+  /** THE band key: explode (…, b1..b4, fp) fingerprints into one row
+    * per frame band, keeping every other column and replacing b1..b4
+    * by bk = f·2¹⁵ + band (f = 0..3). Every band fits in 15 bits
+    * (audio 15, MPEG 12, H.264 9), so bk equality is (f, band)
+    * equality. */
+  def bandRows(fps: DataFrame): DataFrame = {
+    val bands = Seq("b1", "b2", "b3", "b4")
+    fps.select(fps.columns.filterNot(bands.contains).map(col).toSeq :+
+      explode(array(bands.zipWithIndex.map { case (b, f) =>
+        lit(f * 32768L) + col(b).cast(LongType) }: _*)).as("bk"): _*)
   }
 
   /** `checkpoint`: where the query commits. A stored entry passes a

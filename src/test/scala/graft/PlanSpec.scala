@@ -147,6 +147,32 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("incremental video dedup fingerprints its drop once (ids come from the documents table)") {
+    // the probe ids must not be a projection of the fingerprint frame:
+    // Catalyst cannot prune a Dataset.map, so that projection re-runs
+    // the encode → decode → hash closure just to produce ids
+    val plan = operators.MultimodalOps.queries("q392_video_dedup_delta")(spark, dir)
+      .queryExecution.executedPlan.toString
+    assert(plan.linesIterator.count(_.contains("MapElements")) == 1,
+      s"q392 runs its fingerprint closure more than once:\n$plan")
+  }
+
+  test("media near-dup pairs are ONE band self-join, never a product (q351/q399/q400/q405)") {
+    // candidates come from band-key equality alone: one equi-join on bk
+    // per query, and no cartesian or nested-loop fallback at any size
+    val bandJoin = """.*(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) \[bk#\d+L\], \[bk#\d+L\].*""".r
+    for (q <- Seq("q351_audio_fingerprint_neardup", "q399_h264_dedup_pairs",
+        "q400_crosscodec_dedup", "q405_h264_motion_dedup")) {
+      val plan = operators.MultimodalOps.queries(q)(spark, dir)
+        .queryExecution.executedPlan.toString
+      assert(plan.linesIterator.count(bandJoin.matches) == 1,
+        s"$q is not exactly one band self-join:\n$plan")
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"),
+        s"$q regressed to a product join:\n$plan")
+    }
+  }
+
   test("union-scan selectors push metric_name into BOTH stored tables") {
     val df = operators.PromQLOps.queries("q88_promql_union_scan")(spark, dir)
     val plan = df.queryExecution.executedPlan.toString

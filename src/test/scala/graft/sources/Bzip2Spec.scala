@@ -113,6 +113,39 @@ class Bzip2Spec extends AnyFunSuite {
     assert(Bzip2.decompress(bad).isEmpty)
   }
 
+  /** the rotation sort `writeBlock` used before prefix doubling: a
+    * byte-at-a-time comparator, equal rotations by index. */
+  private def comparatorOrder(s: Array[Byte]): Array[Int] = {
+    val n = s.length
+    Array.range(0, n).sortWith { (a, b) =>
+      var k = 0
+      var r = 0
+      while (k < n && r == 0) {
+        r = Integer.compare(s((a + k) % n) & 0xFF, s((b + k) % n) & 0xFF)
+        k += 1
+      }
+      if (r != 0) r < 0 else a < b
+    }
+  }
+
+  test("prefix-doubling rotation sort writes the comparator sort's bytes") {
+    val rnd = new scala.util.Random(11)
+    val block1 = 100000 * 4 / 5 - 64 // one level-1 chunk
+    val cases = Seq(
+      "random" -> Array.fill[Byte](20000)(rnd.nextInt(256).toByte),
+      "one byte" -> Array.fill[Byte](5000)(0x61),
+      "period 3" -> ("abc" * 700).getBytes("UTF-8"),
+      "period 7, binary" -> Array.tabulate[Byte](3000)(i => (i % 7 * 37).toByte),
+      "level-1 block" -> Array.fill[Byte](block1)(rnd.nextInt(256).toByte),
+      "single" -> Array[Byte](42))
+    for ((name, c) <- cases) {
+      assert(java.util.Arrays.equals(
+        Bzip2.rotationOrder(c), comparatorOrder(c)), name)
+      assert(java.util.Arrays.equals(Bzip2.compress(c, 1),
+        Bzip2.compressWith(c, 1, comparatorOrder)), name)
+    }
+  }
+
   test("bit-flip fuzz never crashes") {
     val z = Bzip2.compress(textish(2500), 1)
     var seed = 67L

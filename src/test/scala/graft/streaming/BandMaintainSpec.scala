@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The video band-index maintainer's laws (the q383/q384 law set, for
@@ -44,6 +45,22 @@ class BandMaintainSpec extends AnyFunSuite {
     assert(state(d1).contains((3L * 32768 + 300L, 1L, 0x0fL)))
     // the shared band co-locates docs 1 and 2 under one key
     assert(state(d1).filter(_._1 == 7L).map(_._2) == Set(1L, 2L))
+    // probe side: band rows from the shared key function join the
+    // stored rows on bk — including the widest band (0x7FFF) at f = 3
+    import spark.implicits._
+    val wide = graft.TestDirs.create("graft_bandwide_").toString
+    BandMaintain.maintainBatch(wide)(
+      Seq((6L, 1L, 2L, 3L, 0x7FFFL, 0x1L)).toDF("doc_id", "b1", "b2", "b3", "b4", "fp"), 0L)
+    assert(state(wide).contains((3L * 32768 + 0x7FFFL, 6L, 0x1L)))
+    val probe = Seq((90L, 7L, 999L, 999L, 300L, 0x0fL),
+        (91L, 50L, 51L, 52L, 0x7FFFL, 0x3L))
+      .toDF("did", "b1", "b2", "b3", "b4", "fp")
+    def hits(dir: String) = BandMaintain.bandRows(probe)
+      .join(BandMaintain.bands(spark, dir), Seq("bk"))
+      .select(col("did"), col("doc_id")).as[(Long, Long)].collect().toSet
+    assert(hits(d1) == Set((90L, 1L), (90L, 2L)),
+      "probe bk differs from the stored bk")
+    assert(hits(wide) == Set((91L, 6L)), "band 0x7FFF at f = 3 did not join")
   }
 
   test("replaying a batch id rewrites identical state; compaction changes nothing a probe sees") {
