@@ -9,10 +9,10 @@ import graft.functions.{JaroWinklerSim, LogfmtMap}
 /** SparkSessionExtensions entry point — registers graft's native
   * expressions with the SQL function registry, so the pure-SQL surface
   * (`spark.sql(...)`, `SqlSurface`, JDBC users) sees them alongside the
-  * Column API:
-  *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)   // code
-  *   --conf spark.sql.extensions=graft.GraftExtensions            // config
+  * Column API, and injects graft's optimizer rules. `HarnessSession`
+  * builds every session with it (the mains, the shell's served clone and
+  * the test session); a deployment outside those sets
+  * `--conf spark.sql.extensions=graft.GraftExtensions`.
   *
   * Injection happens per-session at build time — no global registry
   * mutation, safe with multiple concurrent sessions on a cluster. */
@@ -32,7 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   import org.apache.spark.sql.catalyst.expressions.Expression
 
-  private[graft] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (new FunctionIdentifier("logfmt_map"),
       new ExpressionInfo(classOf[LogfmtMap].getName, "logfmt_map"),
       (children: Seq[Expression]) =>
@@ -49,22 +49,4 @@ object GraftExtensions {
           case other => throw new IllegalArgumentException(
             s"jaro_winkler_sim expects 2 arguments, got ${other.size}")
         }))
-
-  /** Idempotently register graft's functions + optimizer rule on an
-    * ALREADY-BUILT session. `withExtensions` only takes effect when the
-    * builder actually constructs the session; in a shared-JVM test run
-    * `getOrCreate()` may return a session another suite built first, so
-    * suites that need the SQL surface call this instead of relying on
-    * builder-time injection. Session-scoped (functionRegistry +
-    * experimentalMethods), no global state. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (id, info, builder) =>
-      reg.registerFunction(id, info, builder)
-    }
-    val em = spark.experimental
-    for (rule <- Seq(graft.plans.PromotedAttrRule, graft.plans.PartitionBoundRule))
-      if (!em.extraOptimizations.contains(rule))
-        em.extraOptimizations = em.extraOptimizations :+ rule
-  }
 }

@@ -1,10 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** The session the inventory harness mains (Bench, Verify, ExplainDump,
-  * JobProfile) run in, so a dumped plan or profile is the benched plan.
-  * `SPARK_GRAFT_CPUS` sets the local core count (default `defaultCpus`)
-  * and the shuffle partition count; `extra` adds a main's own settings. */
+/** The one session builder: every main (Bench, Verify, ExplainDump,
+  * JobProfile, Serve, the Proof mains) and the test session run in it,
+  * with `GraftExtensions` installed, so a dumped plan or profile is the
+  * benched and served plan. `SPARK_GRAFT_CPUS` sets the local core count
+  * (default `defaultCpus`) and the shuffle partition count; `extra` adds
+  * a caller's own settings and overrides these. */
 object HarnessSession {
   def apply(defaultCpus: String, extra: (String, String)*): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
@@ -36,6 +38,7 @@ object HarnessSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "256k"))
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
     val spark = extra.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

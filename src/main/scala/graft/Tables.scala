@@ -16,9 +16,6 @@ import org.apache.spark.sql.functions._
   * microseconds, so every oracle-visible timestamp derives from `ts_us`.
   */
 object Tables {
-  /** Epoch seconds for 2024-01-01T00:00:00Z — start of the events range. */
-  val EventsEpochStart: Long = 1704067200L
-
   /** Inferred parquet schema per physical path. The testdata is immutable
     * within a run, so the footer-derived schema never changes for a given
     * path — but without this cache EVERY `load` call pays a driver-side

@@ -140,7 +140,6 @@ final class HttpShell(spark: SparkSession, dir: String, nowNs: Long,
       }
       b.tryAcquire(cost)
     }
-    private[api] def tracked: Int = buckets.size
   }
   private val queryBuckets = queryRatePerSec.map(new TenantBuckets(_))
   private val ingestBuckets = ingestBytesPerSec.map(new TenantBuckets(_))

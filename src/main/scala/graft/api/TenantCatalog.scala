@@ -531,15 +531,11 @@ object TenantCatalog {
     * instance-admin keys (they act on the tenant named in the path /
     * header). `scopes=None` = legacy unrestricted key (auth/mod.rs
     * can_ingest/can_read: absent scopes allow everything; present
-    * scopes must contain the exact `<signal>:read|write`). */
+    * scopes must contain the exact `<signal>:read|write`); `HttpShell`
+    * enforces the scopes in its request check. */
   final case class Principal(tenant: Option[String],
       scopes: Option[Seq[String]], datasetId: Option[String],
-      isAdmin: Boolean) {
-    def canIngest(signal: String): Boolean =
-      scopes.forall(_.contains(s"$signal:write"))
-    def canRead(signal: String): Boolean =
-      scopes.forall(_.contains(s"$signal:read"))
-  }
+      isAdmin: Boolean)
 
   final case class Tenant(id: String, name: String,
       defaultDataset: Option[String])

@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column handling: image/audio/video as opaque binary columns
   * with typed metadata, processed batch-wise per partition.
@@ -23,13 +22,6 @@ import org.apache.spark.sql.types._
   * features — honest, never a guess.
   */
 object Multimodal {
-
-  /** media table schema: opaque payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("kind", StringType),     // image | audio | video
-    StructField("bytes", BinaryType),    // opaque payload
-    StructField("meta", MapType(StringType, StringType))))
 
   final case class MediaRow(media_id: Long, kind: String, bytes: Array[Byte],
       meta: Map[String, String])

@@ -328,15 +328,11 @@ object LogQLOps {
 
     // PromotedAttrRule end-to-end: the RAW surface probes the attribute
     // containers with the canonical coalesce — the optimizer rule
-    // (injected per-session here via experimental.extraOptimizations,
-    // normally via GraftExtensions) resolves the promoted key to the
-    // materialized label_region column (pushdown-able), leaves the
-    // unpromoted env probe alone, and the DuckDB twin checks promotion
-    // invariance on the VALUES.
+    // (installed in every session by GraftExtensions) resolves the
+    // promoted key to the materialized label_region column
+    // (pushdown-able), leaves the unpromoted env probe alone, and the
+    // DuckDB twin checks promotion invariance on the VALUES.
     "q221_promoted_rule_probe" -> ((s, dir) => {
-      if (!s.experimental.extraOptimizations.contains(graft.plans.PromotedAttrRule))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.PromotedAttrRule
       val df = graft.SignalTables.storedPromotedLogs(s, dir)
       def probe(k: String) = coalesce(
         element_at(col("log_attributes"), k),

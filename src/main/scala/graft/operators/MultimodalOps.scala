@@ -614,14 +614,19 @@ object MultimodalOps {
   private def crossCodecIndexStore(s: SparkSession, dir: String): String =
     graft.storage.LocalCache.stored("xcodec_idx", dir) { base =>
       val store = s"$base/store"
-      val fps = crossCodecFingerprints(s, dir)
-      BandMaintain.maintainBatch(store)(fps, 0L)
-      // the migration: retire every MPEG original (role 0 ⇔ id%9==0)
-      BandMaintain.deleteDocs(s, store,
-        fps.filter(pmod(col("doc_id"), lit(9)) === 0)
-          .select(col("doc_id")), 0L)
+      BandMaintain.maintainBatch(store)(crossCodecFingerprints(s, dir), 0L)
+      BandMaintain.deleteDocs(s, store, crossCodecRetiredIds(s, dir), 0L)
       BandMaintain.compact(s, store)
     } + "/store"
+
+  /** the migration's retirements: every MPEG original (role 0 ⇔
+    * id%9==0), read from the stored `media_id` column — a projection of
+    * the fingerprint frame would decode the whole corpus again, since
+    * Catalyst cannot prune a `Dataset.map`. */
+  private[graft] def crossCodecRetiredIds(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(storedCrossCodecPath(s, dir))
+      .filter(pmod(col("media_id"), lit(9)) === 0)
+      .select(col("media_id").as("doc_id"))
 
   // private[graft]: PlanSpec pins the kind pushdown + pruned ReadSchema
   // on THIS frame — the plan that executes when audioClusters

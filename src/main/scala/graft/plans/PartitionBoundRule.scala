@@ -51,12 +51,13 @@ object PartitionBoundRule extends Rule[LogicalPlan] {
 
   /** one conjunct → the day bound it implies, if any.
     *
-    * The bound is wrapped `IsNull(date_day) OR bound`: frames like
-    * HybridRead.hotColdUnion carry NULL date_day on the hot (unflushed)
-    * side, where a bare `date_day >= d` would evaluate to NULL and drop
-    * the row. Partition VALUES on the file index are never null, so the
-    * IsNull arm costs nothing for directory pruning, while the predicate
-    * stays a true consequence of the timestamp window for every row. */
+    * The bound is wrapped `IsNull(date_day) OR bound`: a frame that
+    * unions stored rows with rows not yet written carries NULL date_day
+    * on the unwritten side, where a bare `date_day >= d` would evaluate
+    * to NULL and drop the row. Partition VALUES on the file index are
+    * never null, so the IsNull arm costs nothing for directory pruning,
+    * while the predicate stays a true consequence of the timestamp
+    * window for every row. */
   private def dayBound(e: Expression, ts: Attribute, dd: Attribute): Option[Expression] = {
     def lo(v: Long) = Or(IsNull(dd), GreaterThanOrEqual(dd, Literal(epochDay(v), DateType)))
     def hi(v: Long) = Or(IsNull(dd), LessThanOrEqual(dd, Literal(epochDay(v), DateType)))

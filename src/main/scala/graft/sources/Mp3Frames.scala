@@ -24,7 +24,6 @@ object Mp3Frames {
   val Bitrates: Array[Int] =
     Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
   val SampleRates: Array[Int] = Array(44100, 48000, 32000)
-  val SamplesPerFrame = 1152
   val MaxFrames = 1 << 22
 
   final case class Census(nFrames: Int, id3v2Bytes: Int, hasId3v1: Boolean,

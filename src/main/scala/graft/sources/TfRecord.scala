@@ -109,11 +109,6 @@ object TfRecord {
   final case class Feature(bytes: Vector[Array[Byte]],
       floats: Vector[Float], ints: Vector[Long])
 
-  private def vlen(v: Long): Int = {
-    var n = 1; var x = v
-    while ((x & ~0x7FL) != 0) { n += 1; x >>>= 7 }
-    n
-  }
   private def putVarint(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
     var x = v
     while ((x & ~0x7FL) != 0) { out.write((x & 0x7F).toInt | 0x80); x >>>= 7 }
@@ -281,7 +276,4 @@ object TfRecord {
       case _: ArrayIndexOutOfBoundsException => None
     }
   }
-
-  /** serialized size helper mirrored by the SQL oracle: varint length. */
-  def varintLen(v: Long): Int = vlen(v)
 }

@@ -157,28 +157,10 @@ object Storage {
           struct(col("timestamp"), col(tieCol).cast("long"))).as("vlast"),
         // the merge keys that make cells ASSOCIATIVE: two cells of the
         // same bucket combine exactly (sum/min/max are algebraic; vlast
-        // resolves by (tlast, tielast)) — what incremental maintenance
-        // (streaming.RollupMaintain) needs to fold micro-batches in
+        // resolves by (tlast, tielast)) — what re-aggregating cells into
+        // coarser buckets needs
         max(struct(col("timestamp").as("t"), col(tieCol).cast("long").as("k")))
           .as("_lastkey"))
-      .withColumn("tlast", col("_lastkey.t"))
-      .withColumn("tielast", col("_lastkey.k"))
-      .drop("_lastkey")
-      .withColumn("date_day", to_date(timestamp_seconds(col("bucket_start"))))
-
-  /** merge cells of the same (bucket, series) — associative and
-    * commutative, so any batching of the raw stream folds to the same
-    * rollup: n/vsum add, vmin/vmax min/max, vlast follows the greatest
-    * (tlast, tielast). */
-  def mergeCells(cells: DataFrame, seriesCols: Seq[String]): DataFrame =
-    cells.groupBy((col("bucket_start") +: seriesCols.map(col)): _*)
-      .agg(
-        sum(col("n")).as("n"),
-        sum(col("vsum")).as("vsum"),
-        min(col("vmin")).as("vmin"),
-        max(col("vmax")).as("vmax"),
-        max_by(col("vlast"), struct(col("tlast"), col("tielast"))).as("vlast"),
-        max(struct(col("tlast").as("t"), col("tielast").as("k"))).as("_lastkey"))
       .withColumn("tlast", col("_lastkey.t"))
       .withColumn("tielast", col("_lastkey.k"))
       .drop("_lastkey")

@@ -17,11 +17,11 @@ import org.apache.spark.sql.types.StructType
   *   - the next compact sweeps any stranded dir (partial generations
   *     included — their id can never exceed the new generation's,
   *     because batch dirs only accumulate).
-  * Single-maintainer convention for compaction (RollupMaintain's);
-  * appends are replay-safe because a batch overwrites only its own dir,
-  * and the sweep deletes ONLY dirs at or below the folded generation —
-  * a batch appended concurrently with the fold is always newer and is
-  * never touched.
+  * Single-maintainer convention for compaction; appends are
+  * replay-safe because a batch overwrites only its own dir, and the
+  * sweep deletes ONLY dirs at or below the folded generation — a batch
+  * appended concurrently with the fold is always newer and is never
+  * touched.
   *
   * `upTo` bounds which batches a fold may consume — the replay-safety
   * knob for maintainers whose batches READ BACK prior state

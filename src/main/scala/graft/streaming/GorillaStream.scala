@@ -13,8 +13,7 @@ import graft.storage.Gorilla
   * reference engine's metrics domain actually runs (points arrive
   * forever; blocks must stay finite and current).
   *
-  * Per micro-batch the maintenance is bounded, the RollupMaintain
-  * discipline one level down:
+  * Per micro-batch the maintenance is bounded:
   *   1. group the batch's points by (event_type, day);
   *   2. read back ONLY the touched keys' LATEST block revisions,
   *      decompress them (per-block cost — a block is one day of one
@@ -26,12 +25,12 @@ import graft.storage.Gorilla
   * revision per key — the read-back in step 2 scans the newest
   * generation plus the batches since it, not every dir ever written.
   *
-  * Revisions make LATE POINTS honest (the StreamTailSample pattern): a
-  * point for an already-written day lands as a higher revision of that
-  * block — consumers take max(revision) per key and see the corrected
-  * block; nothing is silently dropped or double-kept. [[latest]] also
+  * Revisions make LATE POINTS honest: a point for an already-written
+  * day lands as a higher revision of that block — consumers take
+  * max(revision) per key and see the corrected block; nothing is
+  * silently dropped or double-kept. [[latest]] also
   * derives the CLOSED flag from the global high-water mark (day end +
-  * lateness passed — the CompactionScheduler closed-hour gate at day
+  * lateness passed — `Storage`'s closed-hour compaction gate at day
   * granularity): closed blocks are final unless a late revision
   * supersedes them, which the revision column makes visible.
   *

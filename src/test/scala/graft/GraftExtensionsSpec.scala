@@ -1,42 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions entry point makes graft's native expressions visible to
-  * the pure-SQL surface of a session built with them.
-  *
-  * Extensions only apply when the builder actually CREATES the session, so
-  * this suite must not inherit another suite's default session from
-  * `getOrCreate` (suites share one forked JVM) — it clears the default
-  * before building and closes its session after, leaving the next suite to
-  * build its own.
+  * the pure-SQL surface of a session built with them — the shared test
+  * session, which `HarnessSession` builds with `GraftExtensions`.
   */
-class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraftExtensionsSpec extends AnyFunSuite {
 
-  private var prior: Option[SparkSession] = None
-
-  private lazy val spark = {
-    prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = {
-    // hand the JVM back the way we found it: the extended session is not
-    // the default for later suites
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    prior.foreach(SparkSession.setDefaultSession)
-    super.afterAll()
-  }
+  private lazy val spark = graft.TestSpark.session
 
   test("logfmt_map is callable from SQL in an extended session") {
     val got = spark.sql(

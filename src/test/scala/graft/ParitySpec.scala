@@ -111,4 +111,36 @@ class ParitySpec extends AnyFunSuite {
     assert(streams.contains(""""resultType":"streams""""))
     assert(streams.contains(""""severity_text":"error""""))
   }
+
+  test("q327 tail-sampling summary equals a per-trace fold of its policy") {
+    // the batch sampler against the same policy folded in Scala:
+    // per-trace facts, the exact ceil(0.95 n) wall bound, then error →
+    // slow → probabilistic (md5('ts:' || trace_id) coin < 10) → drop
+    val spans = SignalViews.tracesGen2Df(spark, dir)
+      .select(col("trace_id"), col("timestamp"), col("duration_nanos"),
+        (col("status_code") === "ERROR").as("is_error"))
+      .collect()
+    val traces = spans.groupBy(_.getString(0)).toSeq.map { case (id, ss) =>
+      (id, ss.length.toLong, ss.exists(_.getBoolean(3)),
+        ss.map(r => r.getLong(1) + r.getLong(2)).max - ss.map(_.getLong(1)).min)
+    }
+    val p95 = traces.map(t => (t._4, t._1)).sorted
+      .apply((traces.size * 95 + 99) / 100 - 1)._1
+    def coin(id: String): Long = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"ts:$id".getBytes("UTF-8"))
+      java.lang.Long.parseLong(d.map("%02x".format(_)).mkString.take(15), 16) % 100
+    }
+    val expected = traces.groupBy { case (id, _, err, wall) =>
+      if (err) "error" else if (wall >= p95) "slow"
+      else if (coin(id) < 10) "probabilistic" else "drop"
+    }.map { case (reason, ts) =>
+      (reason, ts.size.toLong, ts.map(_._2).sum, ts.map(_._4).max)
+    }.toSet
+    val got = operators.TraceOps.queries("q327_tail_sampling")(spark, dir)
+      .select("reason", "n_traces", "n_spans", "max_wall_ns").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(expected.size >= 3, s"policy fold hit too few reasons: $expected")
+    assert(got == expected)
+  }
 }

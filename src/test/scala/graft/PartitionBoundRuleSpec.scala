@@ -14,11 +14,7 @@ import graft.storage.Storage.TableLayout
   * must never change results. */
 class PartitionBoundRuleSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = graft.TestSpark.session
-    GraftExtensions.register(s)
-    s
-  }
+  private lazy val spark = graft.TestSpark.session
 
   private val t0 = 1704067200L * 1000000000L // 2024-01-01 UTC
 
@@ -77,10 +73,11 @@ class PartitionBoundRuleSpec extends AnyFunSuite {
 
   test("NULL date_day rows (hybrid hot side) survive the injected bound") {
     import spark.implicits._
-    // HybridRead.hotColdUnion nulls the hive partition columns on the hot
-    // (unflushed) side; a bare `date_day >= d` conjunct would evaluate to
-    // NULL and silently drop every hot row. The injected bound must be
-    // null-safe: IsNull(date_day) OR bound.
+    // a frame unioning stored rows with rows not yet written carries NULL
+    // hive partition columns on the unwritten (hot) side; a bare
+    // `date_day >= d` conjunct would evaluate to NULL and silently drop
+    // every hot row. The injected bound must be null-safe:
+    // IsNull(date_day) OR bound.
     val cold = spark.read.parquet(tablePath)
     val hotTs = t0 + 4L * 86400L * 1000000000L + 999L // inside the window
     val hot = Seq((hotTs, 9999L, "svc", "info", "hot line", Map("k" -> "v")))

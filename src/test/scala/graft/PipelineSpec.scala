@@ -340,6 +340,39 @@ class PipelineSpec extends AnyFunSuite {
     assert(stray.count() == 0, "a real tag survived extraction")
   }
 
+  test("WARC responses parse and strip to clean text; a malformed archive yields no records") {
+    // the q346 chain on a hand-built archive: ISO 28500 framing
+    // (Warc.parse), the HTTP split of each response, htmlStripped
+    import spark.implicits._
+    val crlf = "\r\n"
+    def rec(typ: String, payload: String, extra: String = ""): String =
+      s"WARC/1.0${crlf}WARC-Type: $typ${crlf}WARC-Record-ID: <urn:uuid:$typ>$crlf$extra" +
+        s"Content-Length: ${payload.getBytes("UTF-8").length}$crlf$crlf$payload$crlf$crlf"
+    def response(uri: String, status: String, html: String): String =
+      rec("response", s"HTTP/1.1 $status${crlf}Content-Type: text/html$crlf$crlf$html",
+        s"WARC-Target-URI: $uri$crlf")
+    val archive = rec("warcinfo", s"software: graft$crlf") +
+      response("https://x.example/1", "200 OK",
+        "<html><body><p>alpha &amp; beta</p></body></html>") +
+      response("https://x.example/2", "404 Not Found", "<p>gone</p>") +
+      response("https://x.example/3", "200 OK", "<script>no()</script><p>gamma</p>") +
+      response("https://y.example/", "200 OK", "<h1>delta</h1><!-- hidden -->")
+    val recs = graft.sources.Warc.parse(archive.getBytes("UTF-8")).get
+    assert(recs.length == 5)
+    val pages = recs.filter(_.warcType.contains("response")).map { r =>
+      val (status, _, body) = graft.sources.Warc.httpResponse(r.payload).get
+      (r.targetUri.getOrElse(""), status, new String(body, "UTF-8"))
+    }
+    val clean = PipelineOps.htmlStripped(pages.toDF("target_uri", "status", "html"))
+      .select("target_uri", "status", "clean").collect()
+      .map(r => r.getString(0) -> (r.getInt(1), r.getString(2))).toMap
+    assert(clean("https://x.example/1") == (200 -> "alpha & beta"))
+    assert(clean("https://x.example/2")._1 == 404)
+    assert(clean("https://x.example/3") == (200 -> "gamma"), "script content leaked")
+    assert(clean("https://y.example/") == (200 -> "delta"), "comment content leaked")
+    assert(graft.sources.Warc.parse("WARC/9.9\r\ngarbage".getBytes("UTF-8")).isEmpty)
+  }
+
   test("boilerplate removal strips template lines, keeps content (q336)") {
     val dir = "/root/testdata/sf0.001"
     val out = PipelineOps.queries("q336_boilerplate_lines")(spark, dir)

@@ -157,6 +157,19 @@ class PlanSpec extends AnyFunSuite {
       s"q392 runs its fingerprint closure more than once:\n$plan")
   }
 
+  test("the cross-codec index build fingerprints its corpus once (retired ids come from the stored table)") {
+    // the q401 build appends the fingerprint frame, then retires the MPEG
+    // originals; a retirement list projected from that frame would
+    // decode → hash the whole corpus a second time
+    val plan = operators.MultimodalOps.crossCodecRetiredIds(spark, dir)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("MapElements"),
+      s"retired ids re-run the fingerprint closure:\n$plan")
+    val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+    assert(readSchema.contains("media_id") && !readSchema.contains("bytes"),
+      s"retired ids read more than media_id:\n$plan")
+  }
+
   test("media near-dup pairs are ONE band self-join, never a product (q351/q399/q400/q405)") {
     // candidates come from band-key equality alone: one equi-join on bk
     // per query, and no cartesian or nested-loop fallback at any size

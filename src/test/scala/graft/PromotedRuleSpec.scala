@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.storage.AttrPromotion
@@ -11,31 +9,11 @@ import graft.storage.AttrPromotion
   * the promoted `label_<key>` column inside the optimizer — filters reach
   * the parquet scan as pushed filters, results are unchanged (promotion
   * invariance), and unpromoted keys / non-canonical probe orders are left
-  * alone. Needs a session BUILT with GraftExtensions (same JVM-sharing
-  * care as GraftExtensionsSpec). */
-class PromotedRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
+  * alone. Runs in the shared test session, which `HarnessSession`
+  * builds with GraftExtensions. */
+class PromotedRuleSpec extends AnyFunSuite {
 
-  private var prior: Option[SparkSession] = None
-
-  private lazy val spark = {
-    prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.maxMetadataStringLength", "4000")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    prior.foreach(SparkSession.setDefaultSession)
-    super.afterAll()
-  }
+  private lazy val spark = graft.TestSpark.session
 
   /** small gen-2-shaped table with region promoted, env not. */
   private lazy val tablePath: String = {

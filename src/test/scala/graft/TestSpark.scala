@@ -4,35 +4,22 @@ import org.apache.spark.sql.SparkSession
 
 /** ONE SparkSession for the whole sbt-test JVM (r16, VERDICT #2).
   *
-  * Every suite used to carry its own `SparkSession.builder()…local[2]…`
-  * block — but `Test / fork := true` runs all suites sequentially in one
-  * JVM and `getOrCreate()` reuses the first active session, so the
-  * WHOLE 104-file suite silently ran on 2 cores with 2 shuffle
-  * partitions (whichever suite touched Spark first won). This object
-  * makes the sharing explicit and sizes the session for the test box:
-  * 8 cores (tiny fixtures gain nothing past that — task overhead
-  * dominates), 4 shuffle partitions, and the codegen cache sized so
-  * 870+ distinct specs don't evict each other's compiled plans.
-  *
-  * Suites that genuinely need a PRIVATE session (extension injection:
-  * GraftExtensionsSpec, PromotedRuleSpec) still build their own and
-  * clear the default session around it.
+  * Every suite used to build its own `local[2]` session — but
+  * `Test / fork := true` runs all suites sequentially in one JVM and
+  * `getOrCreate()` reuses the first active session, so the WHOLE
+  * 104-file suite silently ran on 2 cores with 2 shuffle partitions
+  * (whichever suite touched Spark first won). This object makes the
+  * sharing explicit and builds it through `HarnessSession`, so every
+  * suite runs the production settings and Catalyst extensions, sized
+  * for the test box: 8 cores at most (tiny fixtures gain nothing past
+  * that — task overhead dominates) and 4 shuffle partitions.
   */
 object TestSpark {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master(s"local[${math.min(8, Runtime.getRuntime.availableProcessors())}]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.maxMetadataStringLength", "4000")
-    .config("spark.sql.codegen.cache.maxEntries", "8192")
-    // manifest-listed reads (q323/q330: hundreds of EXPLICIT file
-    // paths) must not trigger a distributed listing job — one task
-    // per local file costs ~60 ms of task deserialization to run a
-    // microsecond stat. Driver-side listing is right for local-FS
-    // layouts up to this bound; object-store deployments would lower
-    // it back toward the 32 default.
-    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    val cores = math.min(8, Runtime.getRuntime.availableProcessors())
+    HarnessSession(cores.toString,
+      "spark.master" -> s"local[$cores]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.maxMetadataStringLength" -> "4000")
+  }
 }

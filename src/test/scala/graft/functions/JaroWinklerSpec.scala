@@ -40,11 +40,8 @@ class JaroWinklerSpec extends AnyFunSuite {
   }
 
   test("codegen, interpreted, and SQL-registered paths agree") {
-    // getOrCreate may hand back a session another suite built (shared
-    // JVM), where builder-time extensions never apply — register on
-    // whatever session we actually get.
+    // the shared test session is built with GraftExtensions
     val spark = graft.TestSpark.session
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val pairs = Seq(("MARTHA", "MARHTA"), ("DIXON", "DICKSONX"),
       ("Customer#000000001", "Supplier#000000001"), ("", "x"))

@@ -264,6 +264,37 @@ class StorageSpec extends AnyFunSuite {
     assert(remaining.select("date_day").distinct().head.get(0).toString == "2024-01-06")
   }
 
+  test("tiered retention: raw samples expire, the rollup still answers the old window") {
+    val dir = graft.TestDirs.create("graft-tier").toString
+    val layout = TableLayout(dir, "acme", "prod")
+    // raw samples across two days, written through the real storage path
+    val raw = spark.createDataFrame(Seq(
+        (100L, "a", 10.0, 1L), (200L, "a", 30.0, 2L), (90000L, "a", 2.0, 3L)))
+      .toDF("off_s", "service_name", "value", "event_id")
+      .select((lit(t0) + col("off_s") * 1000000000L).as("timestamp"),
+        lit("m").as("metric_name"), col("service_name"), col("value"),
+        col("event_id"))
+    Storage.append(Storage.withPartitionCols(raw), layout, "metrics_raw")
+    // the hourly rollup of the same rows, in day partitions
+    Storage.downsample(raw, 3600L, Seq("metric_name", "service_name"), "event_id")
+      .write.partitionBy("date_day").parquet(layout.path("rollup_1h"))
+
+    // raw tier keeps 1 day: day 1 expires
+    val dropped = Storage.applyRetention(spark, layout, "metrics_raw", "2024-01-02")
+    assert(dropped.nonEmpty, "day-1 raw partition must expire")
+    val rawDays = spark.read.parquet(layout.path("metrics_raw"))
+      .select("date_day").distinct().collect().map(_.get(0).toString).toSet
+    assert(rawDays == Set("2024-01-02"), s"raw tier must hold only the fresh day: $rawDays")
+
+    // the rollup tier still answers day 1 (the q270 rewrite's long-history source)
+    val cells = spark.read.parquet(layout.path("rollup_1h"))
+      .filter(col("date_day") === "2024-01-01")
+    assert(cells.count() == 1)
+    val c = cells.select("n", "vmax").head
+    assert(c.getLong(0) == 2L && c.getDouble(1) == 30.0,
+      "day-1 history must survive in cell form")
+  }
+
   test("absent table reads as an empty typed frame; unknown tenant errors") {
     val dir = graft.TestDirs.create("graft-optional").toString
     val layout = TableLayout(dir, "acme", "prod")
